@@ -10,8 +10,9 @@ the Spark engine:
 - warehouse init (W5, sources.bootstrap.init_warehouse)
 - collector tick: watermark fetch → validate → delta-append to the bronze
   parquet table (only fresh rows are written — never a rewrite of history)
-- shipper tick: cursor query → ordered ship with retries → cursor table
-  swap (atomic temp-dir rename, the parquet stand-in for W2's upsert)
+- shipper tick: cursor query → ordered NDJSON batches with retries →
+  cursor table swap (atomic temp-dir rename, the parquet stand-in for
+  W2's upsert)
 - informer tick: metadata count + latest-timestamp gauges
 - /metrics (Prometheus text) and /health endpoints on a ThreadingHTTPServer
 - error policies per loop (T8): collector raises out of ``run_loops`` —
@@ -23,6 +24,7 @@ from __future__ import annotations
 import datetime as dt
 import http.server
 import threading
+import time
 from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
@@ -119,6 +121,7 @@ class Service:
         """Fetch since watermark, validate, append ONLY the fresh delta."""
         if self.transport is None:  # no API wiring: collector disabled,
             return 0  # same creds-gating posture as the shipper
+        t0 = time.perf_counter()
         watermark = self._watermark()
         pages = list(
             fetch_event_pages(
@@ -147,6 +150,10 @@ class Service:
         self.metrics.inc(
             "cf_audit_event_collector_events_collected_total", float(n)
         )
+        self.metrics.inc(
+            "cf_audit_event_collector_collect_duration_total",
+            time.perf_counter() - t0,
+        )
         self.totals.collected += n
         self._loop_logs[self.collector_tick].info(
             "collected", {"events": n, "watermark": watermark.isoformat()}
@@ -156,9 +163,7 @@ class Service:
     def shipper_tick(self) -> int:
         if self.sender is None:  # creds absent: shipper disabled
             return 0
-        import time as _time
-
-        t0 = _time.perf_counter()
+        t0 = time.perf_counter()
         batch_df = self.store.unshipped_events(
             SHIPPER_NAME, self.cfg.ship_batch_cap
         )
@@ -173,9 +178,10 @@ class Service:
         if last_ok is not None:
             from paas_auditor_spark.functions.timecross import parse_wall
 
-            # W2: cursor advances only to the last success (T4 monotone);
-            # the timestamp comes from the wall-clock string twin, not
-            # the process-tz-converted datetime object
+            # W2: cursor advances only to the last event of the last
+            # acknowledged batch (T4 monotone); the timestamp comes from
+            # the wall-clock string twin, not the process-tz-converted
+            # datetime object
             self.store.upsert_cursor(
                 SHIPPER_NAME, parse_wall(last_ok["created_at_s"]), last_ok["guid"]
             )
@@ -183,7 +189,7 @@ class Service:
 
         self.metrics.inc(
             f"{_mname(SHIPPER_NAME)}_ship_duration_total",
-            _time.perf_counter() - t0,
+            time.perf_counter() - t0,
         )
         self.totals.shipped += shipped
         self._loop_logs[self.shipper_tick].info("shipped", {"events": shipped})
@@ -394,6 +400,14 @@ class Service:
     def stop(self) -> None:  # T7
         self._stop.set()
 
+    def _tick_failed(self, tick, ex: Exception) -> None:
+        """Error path shared by both loop drivers: log the failure in the
+        loop's session and count collector failures in the reference's
+        ``cf_audit_event_collector_errors_total``."""
+        if tick == self.collector_tick:
+            self.metrics.inc("cf_audit_event_collector_errors_total")
+        self._loop_logs[tick].error("tick.failed", ex)
+
     def run_loops(self, max_ticks: int | None = None) -> None:
         """Drive all three loops round-robin in tick order (deterministic
         single-threaded form — tests and batch backfills; a deployment
@@ -406,14 +420,14 @@ class Service:
             except Exception as ex:
                 # fail-fast policy, but LOGGED before propagating, like the
                 # reference's logger.Error + os.Exit(1) (main.go:92-97)
-                self._loop_logs[self.collector_tick].error("tick.failed", ex)
+                self._tick_failed(self.collector_tick, ex)
                 raise
             for tick in (self.shipper_tick, self.informer_tick):
                 try:
                     tick()
                 except Exception as ex:  # shipper policy: log and continue
                     # (shipper.go:111-115 logs the error, next tick retries)
-                    self._loop_logs[tick].error("tick.failed", ex)
+                    self._tick_failed(tick, ex)
             ticks += 1
             if max_ticks is not None and ticks >= max_ticks:
                 break
@@ -467,9 +481,7 @@ class Service:
                 interval,
                 self._stop.is_set,
                 on_error=policy,
-                on_exception=lambda ex, t=tick: self._loop_logs[t].error(
-                    "tick.failed", ex
-                ),
+                on_exception=lambda ex, t=tick: self._tick_failed(t, ex),
             )
             t = threading.Thread(
                 target=lambda lp=loop: [None for _ in lp], daemon=True

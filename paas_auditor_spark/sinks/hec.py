@@ -6,21 +6,26 @@
 The reference ships events to Splunk HEC with a driver-side loop — one
 POST per event, retry/backoff, ≤8192 events per 15 s tick
 (cf_audit_events_to_splunk_shipper.go:52-225) ≈ 546 events/s ceiling.
-This sink is the scale form of the same contract: executors POST
-per-partition NDJSON batches concurrently, so throughput is
-partitions × batch-rate instead of one serial loop, with the same
-HEC envelope ({"event": …, "sourcetype": …, "source": …},
-shipper.go:187-192) and the same retry envelope (3 retries, backoff
-100 ms → 2 s ×2 + jitter, shipper.go:62-86).
+Both delivery paths here send NDJSON batches instead, cut by one shared
+generator, :func:`hec_batches` (≤ ``HEC_BATCH_EVENTS`` events or about
+``HEC_BATCH_BYTES`` of body per POST), with the same HEC envelope
+({"event": …, "sourcetype": …, "source": …}, shipper.go:187-192) and the
+same retry envelope (3 retries, backoff 100 ms → 2 s ×2 + jitter,
+shipper.go:62-86):
+
+- streaming/ship.py is the strictly-ordered stop-on-failure path: one
+  driver-side loop over ordered batches, the cursor committed at the last
+  event of the last acknowledged batch;
+- this sink is the parallel-throughput path: executors POST
+  per-partition batches concurrently, so throughput is
+  partitions × batch-rate instead of one serial loop.
 
 Delivery is at-least-once, exactly like the reference: a failed task or
 replayed micro-batch re-POSTs its rows (HEC consumers dedup on the
 event's guid field downstream).  Ordering is preserved WITHIN a
 partition; for the reference's global oldest-first ship order (O4),
 feed this sink from ``repartitionByRange`` output or a
-single-partition cursor batch — the streaming shipper pipeline
-(streaming/ship.py) remains the strictly-ordered stop-on-failure path,
-this sink is the parallel-throughput path.
+single-partition cursor batch, or use the ordered shipper.
 
 Register per-session: ``spark.dataSource.register(SplunkHecDataSource)``.
 
@@ -28,7 +33,8 @@ Options: ``url`` (HEC collector endpoint), ``token`` (sent as
 ``Authorization: Splunk <token>``; accepts the reference's
 ``SPLUNK_API_KEY`` value), ``sourcetype`` (default ``cf-audit-event``),
 ``source`` (default ``spark``), ``batch_size`` (events per POST,
-default 100), ``max_retries`` (default 3), ``retry_base_s`` (default
+default ``HEC_BATCH_EVENTS``; the byte bound always applies),
+``max_retries`` (default 3), ``retry_base_s`` (default
 0.1 — set 0 in tests), ``timeout_s`` (default 2, shipper.go:62).
 """
 
@@ -40,6 +46,8 @@ import random
 import time
 import urllib.error
 import urllib.request
+from collections.abc import Callable, Iterable, Iterator
+from typing import TypeVar
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -47,6 +55,39 @@ from pyspark.sql.datasource import (
     DataSourceWriter,
     WriterCommitMessage,
 )
+
+
+T = TypeVar("T")
+
+HEC_BATCH_EVENTS = 100
+# Splunk Cloud rejects HEC bodies over 1 MB; half that leaves room for
+# a batch of large-metadata events
+HEC_BATCH_BYTES = 512 * 1024
+
+
+def hec_batches(
+    items: Iterable[T],
+    envelope: Callable[[T], str] = lambda item: item,
+    max_events: int = HEC_BATCH_EVENTS,
+) -> Iterator[list[T]]:
+    """Cut ``items`` into consecutive, order-preserving batches for one
+    NDJSON POST each: a batch ends at ``max_events`` items or before its
+    ``"\\n"``-joined envelopes would pass ``HEC_BATCH_BYTES`` (UTF-8),
+    whichever comes first.  A larger envelope goes alone."""
+    batch: list[T] = []
+    size = 0
+    for item in items:
+        n = len(envelope(item).encode())
+        if batch and size + 1 + n > HEC_BATCH_BYTES:
+            yield batch
+            batch, size = [], 0
+        size += n + 1 if batch else n
+        batch.append(item)
+        if len(batch) >= max_events:
+            yield batch
+            batch, size = [], 0
+    if batch:
+        yield batch
 
 
 @dataclasses.dataclass
@@ -105,29 +146,24 @@ def _write_rows(rows, options: dict) -> HecCommit:
     token = options.get("token", "")
     sourcetype = options.get("sourcetype", "cf-audit-event")
     source = options.get("source", "spark")
-    batch_size = int(options.get("batch_size", 100))
+    batch_size = int(options.get("batch_size", HEC_BATCH_EVENTS))
 
-    buf: list[str] = []
+    envelopes = (
+        json.dumps(
+            {
+                "event": row.asDict(recursive=True),
+                "sourcetype": sourcetype,
+                "source": source,
+            },
+            default=str,
+        )
+        for row in rows
+    )
     events = posts = 0
-
-    def flush() -> None:
-        nonlocal posts
-        if buf:
-            _post_batch(url, token, "\n".join(buf).encode(), options)
-            posts += 1
-            buf.clear()
-
-    for row in rows:
-        envelope = {
-            "event": row.asDict(recursive=True),
-            "sourcetype": sourcetype,
-            "source": source,
-        }
-        buf.append(json.dumps(envelope, default=str))
-        events += 1
-        if len(buf) >= batch_size:
-            flush()
-    flush()
+    for batch in hec_batches(envelopes, max_events=batch_size):
+        _post_batch(url, token, "\n".join(batch).encode(), options)
+        events += len(batch)
+        posts += 1
     return HecCommit(events=events, posts=posts)
 
 
@@ -167,4 +203,11 @@ class SplunkHecDataSource(DataSource):
         return HecStreamWriter(self.options)
 
 
-__all__ = ["HecBatchWriter", "HecStreamWriter", "SplunkHecDataSource"]
+__all__ = [
+    "HEC_BATCH_BYTES",
+    "HEC_BATCH_EVENTS",
+    "HecBatchWriter",
+    "HecStreamWriter",
+    "SplunkHecDataSource",
+    "hec_batches",
+]

@@ -3,19 +3,24 @@
 Re-expresses the reference shipper
 (pkg/shippers/cf_audit_events_to_splunk_shipper.go:52-225):
 
-- W3 per-event HTTP sink with exponential-backoff retry
-  (shipper.go:62-86: 100ms→2s, exponent 2, jitter 500ms, 3 retries)
-- W4 oldest-first ship loop, break on first failure, commit cursor to the
-  last successful (created_at, guid) (shipper.go:117-170)
-- T4 at-least-once: the cursor advances only on success; events sharing the
-  cursor timestamp may re-ship.
+- W3 HTTP sink with exponential-backoff retry (shipper.go:62-86: 100ms→2s,
+  exponent 2, jitter 500ms, 3 retries), fed ordered NDJSON batches: the
+  collected rows are cut by ``sinks.hec.hec_batches`` (≤100 events or
+  about 512 KiB of body) and each batch is one POST, where the reference
+  makes one POST per event
+- W4 oldest-first ship loop, break on the first batch that still fails
+  after its retries, commit the cursor to the last event of the last
+  acknowledged batch (shipper.go:117-170)
+- T4 at-least-once: the cursor advances only on success, so a failed batch
+  is re-sent whole on the next tick — re-ships are bounded by one batch
+  (plus events sharing the cursor timestamp).
 
 Scale notes (SURVEY.md §7 hard-part 3): total ship order + stop-on-failure
 implies sequential delivery of the ≤8192-event batch, so the loop runs
-driver-side over the collected batch — identical to the reference, whose
-shipper is equally single-threaded.  Payload serialization stays
-distributed (the envelope column is computed by executors before collect).
-For unordered sinks, swap the loop for foreachPartition fan-out.
+driver-side over the collected batch — single-threaded like the
+reference's shipper.  Payload serialization stays distributed (the
+envelope column is computed by executors before collect).  For unordered
+sinks, use the parallel ``splunk_hec`` sink (sinks/hec.py).
 """
 
 from __future__ import annotations
@@ -34,6 +39,7 @@ from paas_auditor_spark.operators.cursor import (
     unshipped_events,
     upsert_cursor,
 )
+from paas_auditor_spark.sinks.hec import hec_batches
 from paas_auditor_spark.streaming.metrics import MetricsRegistry
 
 Sender = Callable[[str], None]  # raises on delivery failure
@@ -129,16 +135,20 @@ def ship_rows(
     logger=None,
 ):
     """Ordered stop-on-failure delivery loop (W4) over collected payload
-    rows.  Returns ``(shipped, last_ok_row, failed)``.  ``logger`` (a
-    ``logs.JsonLogger`` session) observes the first failure — the
-    reference logs it before breaking (shipper.go:125-130)."""
+    rows, one NDJSON POST per ``hec_batches`` batch.  Returns
+    ``(shipped, last_ok_row, failed)``: ``last_ok_row`` is the last row of
+    the last acknowledged batch.  ``logger`` (a ``logs.JsonLogger``
+    session) observes the first failure — the reference logs it before
+    breaking (shipper.go:125-130)."""
     retry = retry or RetryPolicy()
     shipped = 0
     last_ok = None
     failed = False
-    for row in rows:
+    for batch in hec_batches(rows, lambda row: row["payload"]):
         try:
-            retry.send_with_retry(sender, row["payload"])
+            retry.send_with_retry(
+                sender, "\n".join(row["payload"] for row in batch)
+            )
         except Exception as ex:
             failed = True
             if metrics:
@@ -147,11 +157,15 @@ def ship_rows(
                 logger.error(
                     "ship.failed",
                     ex,
-                    {"guid": row["guid"], "shipped_before_failure": shipped},
+                    {
+                        "guid": batch[0]["guid"],
+                        "batch_events": len(batch),
+                        "shipped_before_failure": shipped,
+                    },
                 )
             break
-        shipped += 1
-        last_ok = row
+        shipped += len(batch)
+        last_ok = batch[-1]
     if metrics:
         metrics.inc(f"{_mname(shipper_name)}_events_shipped_total", shipped)
         if last_ok is not None:
@@ -183,9 +197,10 @@ def ship_unshipped(
 ) -> ShipResult:
     """One shipper tick: query → ordered ship → cursor advance.
 
-    Mirrors shipper.go:106-170: on the first delivery failure stop; if at
-    least one event shipped, commit the cursor at the last success so the
-    next tick resumes from there (at-least-once, monotone cursor).
+    Mirrors shipper.go:106-170: on the first failed batch stop; if at
+    least one batch shipped, commit the cursor at the last event of the
+    last acknowledged batch so the next tick resumes from there
+    (at-least-once, monotone cursor).
     """
     t0 = time.perf_counter()
     cursor_ts, shipped_id = effective_cursor(cursors_df, shipper_name)

@@ -180,6 +180,11 @@ def _events_df(spark, n=3):
 NO_SLEEP = RetryPolicy(sleep=lambda s: None, max_retries=3)
 
 
+def _envelopes(bodies: list[str]) -> list[str]:
+    """The HEC envelopes in NDJSON bodies, in send order."""
+    return [line for body in bodies for line in body.split("\n")]
+
+
 def test_ship_happy_path(spark):
     metrics = MetricsRegistry()
     sent: list[str] = []
@@ -188,14 +193,16 @@ def test_ship_happy_path(spark):
         sent.append, retry=NO_SLEEP, metrics=metrics,
     )
     assert res.shipped == 3 and not res.failed
+    assert len(sent) == 1  # three events, one NDJSON body
+    env = _envelopes(sent)
     # chronological ship order (O4) with the HEC envelope shape (P13)
-    assert '"sourcetype":"cf-audit-event"' in sent[0]
-    assert sent[0] < sent[1] < sent[2]  # guids UUID(int=i) sort with time here
+    assert '"sourcetype":"cf-audit-event"' in env[0]
+    assert env[0] < env[1] < env[2]  # guids UUID(int=i) sort with time here
     # full-fidelity payload: all 13 event fields in json.Marshal order
     # (shipper.go:24-28,187-192 ships the whole cfclient.Event)
     import json as _json
 
-    p0 = _json.loads(sent[0])
+    p0 = _json.loads(env[0])
     assert p0["source"] == "test"
     ev = p0["event"]
     assert list(ev.keys()) == [
@@ -220,24 +227,29 @@ def test_ship_happy_path(spark):
 
 
 def test_ship_stop_on_failure_then_reship(spark):
-    events = _events_df(spark, 3)
+    """250 events ship as batches 0-99, 100-199, 200-249; batch 2 fails
+    after its retries, so the tick stops there (W4) with the cursor at
+    the last event of batch 1, and the next tick re-ships from event 100."""
+    events = _events_df(spark, 250)
     calls: list[str] = []
 
     def flaky(payload: str) -> None:
         calls.append(payload)
-        if str(uuid.UUID(int=1)) in payload:
+        if str(uuid.UUID(int=100)) in payload:
             raise RuntimeError("splunk 500")
 
     res = ship_unshipped(
         events, empty_cursors(spark), "cf-audit-events-to-splunk",
         flaky, retry=NO_SLEEP,
     )
-    # first event shipped, second failed after retries, third never tried (W4)
-    assert res.shipped == 1 and res.failed
+    # batch 1 shipped, batch 2 failed after retries, batch 3 never tried
+    assert res.shipped == 100 and res.failed
     # 1 success + (1 initial + 3 retries) for the failure
     assert len(calls) == 5
+    assert not any(str(uuid.UUID(int=200)) in c for c in calls)
     ts, sid = effective_cursor(res.cursors_df, "cf-audit-events-to-splunk")
-    assert sid == str(uuid.UUID(int=0))  # cursor at last success
+    # cursor at the last event of the last acknowledged batch
+    assert (ts, sid) == (BASE + dt.timedelta(seconds=99), str(uuid.UUID(int=99)))
 
     # next tick: events ≥ cursor-ts excluding exactly shipped_id re-ship
     # (P7 boundary semantics, at-least-once T4)
@@ -246,9 +258,70 @@ def test_ship_stop_on_failure_then_reship(spark):
         events, res.cursors_df, "cf-audit-events-to-splunk",
         sent2.append, retry=NO_SLEEP,
     )
-    assert res2.shipped == 2 and not res2.failed
-    assert str(uuid.UUID(int=1)) in sent2[0]
-    assert str(uuid.UUID(int=2)) in sent2[1]
+    assert res2.shipped == 150 and not res2.failed
+    assert len(sent2) == 2
+    import json as _json
+
+    guids = [_json.loads(e)["event"]["guid"] for e in _envelopes(sent2)]
+    assert guids == [str(uuid.UUID(int=i)) for i in range(100, 250)]
+
+
+def test_ship_batch_bounds(spark):
+    """Batches end at HEC_BATCH_EVENTS events or before HEC_BATCH_BYTES of
+    body; order holds across bodies and every envelope is the
+    ``build_payloads`` payload, byte for byte."""
+    import json as _json
+
+    from paas_auditor_spark.sinks.hec import HEC_BATCH_BYTES, HEC_BATCH_EVENTS
+    from paas_auditor_spark.streaming.ship import build_payloads, ship_rows
+
+    assert HEC_BATCH_EVENTS == 100
+    events = _events_df(spark, 250)
+    sent: list[str] = []
+    res = ship_unshipped(
+        events, empty_cursors(spark), "cf-audit-events-to-splunk",
+        sent.append, retry=NO_SLEEP,
+    )
+    assert res.shipped == 250 and not res.failed
+    assert [len(b.split("\n")) for b in sent] == [100, 100, 50]
+    want = [
+        r["payload"]
+        for r in build_payloads(events.orderBy("created_at", "guid"), "test")
+        .collect()
+    ]
+    assert _envelopes(sent) == want
+    assert [_json.loads(e)["event"]["guid"] for e in _envelopes(sent)] == [
+        str(uuid.UUID(int=i)) for i in range(250)
+    ]
+
+    def row(i: int, pad: int) -> dict:
+        return {
+            "guid": f"g{i}",
+            "payload": _json.dumps({"event": {"guid": f"g{i}", "pad": "x" * pad}}),
+        }
+
+    def ship(rows) -> list[str]:
+        bodies: list[str] = []
+        shipped, last_ok, failed = ship_rows(
+            rows, bodies.append, "s", retry=NO_SLEEP
+        )
+        assert shipped == len(rows) and not failed
+        assert last_ok is rows[-1]
+        assert _envelopes(bodies) == [r["payload"] for r in rows]
+        return bodies
+
+    # a run of large events splits on the byte bound: two ~200 KiB
+    # envelopes fit in one body, a third would not
+    big = [row(i, 200 * 1024) for i in range(5)]
+    bodies = ship(big)
+    assert [len(b.split("\n")) for b in bodies] == [2, 2, 1]
+    assert all(len(b.encode()) <= HEC_BATCH_BYTES for b in bodies)
+    # one event above the bound ships alone, between its neighbours' bodies
+    huge = row(2, HEC_BATCH_BYTES)
+    assert len(huge["payload"]) > HEC_BATCH_BYTES
+    bodies = ship([row(0, 10), row(1, 10), huge, row(3, 10)])
+    assert [len(b.split("\n")) for b in bodies] == [2, 1, 1]
+    assert bodies[1] == huge["payload"]
 
 
 def test_retry_backoff_recovers():

@@ -18,7 +18,6 @@ Skipped (not failed) when the URL is unset or psycopg2 is not installed.
 
 from __future__ import annotations
 
-import json
 import os
 import uuid
 
@@ -40,7 +39,7 @@ def test_postgres_service_end_to_end(spark):
     Postgres: DDL bootstrap (W5), ON CONFLICT ingest + overlap re-fetch
     (W1/T3), shipper CTE (J1-J4), cursor upsert (W2) — the same scenario
     test_runner.py::test_service_jdbc_store_end_to_end pins on DuckDB."""
-    from test_runner import PageServer
+    from test_runner import PageServer, hec_events
 
     from paas_auditor_spark.config import EngineConfig
     from paas_auditor_spark.runner import SHIPPER_NAME, Service
@@ -81,5 +80,5 @@ def test_postgres_service_end_to_end(spark):
     assert cur.fetchall() == [(SHIPPER_NAME, str(uuid.UUID(int=4)))]
     con.close()
 
-    guids = [json.loads(p)["event"]["guid"] for p in sent]
+    guids = [e["event"]["guid"] for e in hec_events(sent)]
     assert len(guids) == len(set(guids)) == 5

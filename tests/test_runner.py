@@ -3,6 +3,7 @@ init, collect→ship→inform ticks, cursor persistence, /metrics + /health."""
 
 from __future__ import annotations
 
+import contextlib
 import datetime as dt
 import json
 import urllib.request
@@ -61,6 +62,46 @@ class PageServer:
         }
 
 
+def hec_events(bodies) -> list[dict]:
+    """The HEC envelopes in NDJSON bodies, parsed, in send order."""
+    return [json.loads(line) for body in bodies for line in body.split("\n")]
+
+
+@contextlib.contextmanager
+def fake_hec():
+    """Loopback HEC collector: yields ``(url, posts)``; every POST is
+    recorded as ``{"auth": ..., "body": ...}`` and answered 200."""
+    import http.server
+    import threading
+
+    posts: list[dict] = []
+
+    class Hec(http.server.BaseHTTPRequestHandler):
+        def do_POST(self):  # noqa: N802
+            length = int(self.headers.get("Content-Length", "0"))
+            posts.append(
+                {
+                    "auth": self.headers.get("Authorization"),
+                    "body": self.rfile.read(length).decode(),
+                }
+            )
+            self.send_response(200)
+            self.end_headers()
+            self.wfile.write(b"{}")
+
+        def log_message(self, *args):
+            pass
+
+    server = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Hec)
+    threading.Thread(target=server.serve_forever, daemon=True).start()
+    try:
+        host, port = server.server_address
+        yield f"http://{host}:{port}/hec", posts
+    finally:
+        server.shutdown()
+        server.server_close()
+
+
 def test_service_end_to_end(spark, tmp_path):
     transport = PageServer([0, 1, 2])
     sent: list[str] = []
@@ -91,7 +132,7 @@ def test_service_end_to_end(spark, tmp_path):
     events = spark.read.parquet(svc.paths["cf_audit_events"])
     assert events.count() == 5
     assert events.select("guid").distinct().count() == 5
-    guids = [json.loads(p)["event"]["guid"] for p in sent]
+    guids = [e["event"]["guid"] for e in hec_events(sent)]
     assert len(guids) == len(set(guids)) == 5
 
     # metrics + health endpoints (main.go:75-86)
@@ -206,36 +247,12 @@ def test_shipper_from_reference_env_vars(spark, tmp_path):
     reference's own manifest names — SPLUNK_HEC_ENDPOINT_URL +
     SPLUNK_API_KEY (main_config.go:61-62) — must start the shipper and
     POST with the Splunk auth header."""
-    import http.server
-    import threading
-
     from paas_auditor_spark.__main__ import resolve_sender
 
-    posts: list[dict] = []
-
-    class Hec(http.server.BaseHTTPRequestHandler):
-        def do_POST(self):  # noqa: N802
-            length = int(self.headers.get("Content-Length", "0"))
-            posts.append(
-                {
-                    "auth": self.headers.get("Authorization"),
-                    "body": self.rfile.read(length).decode(),
-                }
-            )
-            self.send_response(200)
-            self.end_headers()
-            self.wfile.write(b"{}")
-
-        def log_message(self, *args):
-            pass
-
-    server = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Hec)
-    threading.Thread(target=server.serve_forever, daemon=True).start()
-    try:
-        host, port = server.server_address
+    with fake_hec() as (url, posts):
         sender = resolve_sender(
             {
-                "SPLUNK_HEC_ENDPOINT_URL": f"http://{host}:{port}/hec",
+                "SPLUNK_HEC_ENDPOINT_URL": url,
                 "SPLUNK_API_KEY": "ref-key",
             }
         )
@@ -257,12 +274,166 @@ def test_shipper_from_reference_env_vars(spark, tmp_path):
         )
         svc.run_loops(max_ticks=1)
         assert svc.totals.shipped == 2
-        assert len(posts) == 2
+        assert len(posts) == 1  # both events in one NDJSON batch
         assert all(p["auth"] == "Splunk ref-key" for p in posts)
-        assert all(json.loads(p["body"])["sourcetype"] == "cf-audit-event"
-                   for p in posts)
+        envelopes = hec_events(p["body"] for p in posts)
+        assert len(envelopes) == 2
+        assert all(e["sourcetype"] == "cf-audit-event" for e in envelopes)
+
+
+def test_service_tick_posts_ordered_batches(spark, tmp_path):
+    """One Service tick over 250 events through the real HTTP sender is
+    exactly three POSTs (100/100/50) carrying the events in order — a
+    slide back to one POST per event fails here."""
+    from paas_auditor_spark.__main__ import resolve_sender
+
+    with fake_hec() as (url, posts):
+        cfg = EngineConfig()
+        cfg.pagination_wait_s = 0.0
+        svc = Service(
+            spark,
+            warehouse_dir=str(tmp_path / "whbatch"),
+            transport=PageServer(range(250)),
+            sender=resolve_sender(
+                {"SPLUNK_HEC_ENDPOINT_URL": url, "SPLUNK_API_KEY": "k"}
+            ),
+            cfg=cfg,
+        )
+        svc.run_loops(max_ticks=1)
+        assert svc.totals.shipped == 250
+        assert len(posts) == 3
+        assert [len(p["body"].split("\n")) for p in posts] == [100, 100, 50]
+        guids = [e["event"]["guid"] for e in hec_events(p["body"] for p in posts)]
+        assert guids == [str(uuid.UUID(int=i)) for i in range(250)]
+
+
+def test_service_batch_failure_delivery_contract(spark, tmp_path):
+    """Fault on the batched shipper with a real ParquetStore: every
+    attempt at batch 2 fails during tick 1 (HEC took the body but the
+    response never came back), tick 2 is healthy.  The delivery contract
+    holds: every event delivered, no duplicate stored rows, a cursor that
+    only moves forward, and at most one batch re-shipped."""
+    import urllib.parse
+
+    from paas_auditor_spark.sinks.hec import HEC_BATCH_EVENTS
+    from paas_auditor_spark.sources.paginated_http import TIME_FORMAT
+
+    class FilteringPageServer(PageServer):
+        """Honours ``q=timestamp>`` like the CF API.  A source that ignores
+        it makes the collector re-append old events — a separate known
+        defect of the watermark-bounded anti-join, not under test here."""
+
+        def __call__(self, url: str) -> dict:
+            q = urllib.parse.parse_qs(urllib.parse.urlparse(url).query)["q"][0]
+            since = dt.datetime.strptime(q.split(">", 1)[1], TIME_FORMAT)
+            page = super().__call__(url)
+            page["resources"] = [
+                r for r in page["resources"]
+                if dt.datetime.strptime(
+                    r["metadata"]["created_at"], TIME_FORMAT
+                ) > since
+            ]
+            page["total_results"] = len(page["resources"])
+            return page
+
+    delivered: list[str] = []  # every body that reached the collector
+    tick = {"n": 1}
+
+    def hec(payload: str) -> None:
+        delivered.append(payload)
+        if tick["n"] == 1 and str(uuid.UUID(int=100)) in payload:
+            raise TimeoutError("HEC response timed out")
+
+    cfg = EngineConfig()
+    cfg.pagination_wait_s = 0.0
+    svc = Service(
+        spark,
+        warehouse_dir=str(tmp_path / "whfault"),
+        transport=FilteringPageServer(range(250)),
+        sender=hec,
+        cfg=cfg,
+    )
+
+    def cursor():
+        rows = spark.read.parquet(svc.paths[CURSORS_TABLE]).collect()
+        assert len(rows) == 1
+        return rows[0]["updated_at"], rows[0]["shipped_id"]
+
+    svc.run_loops(max_ticks=1)
+    assert svc.totals.shipped == 100
+    c1 = cursor()
+    assert c1 == (BASE + dt.timedelta(seconds=99), str(uuid.UUID(int=99)))
+    # batch 3 was never tried after batch 2 failed
+    assert not any(str(uuid.UUID(int=200)) in b for b in delivered)
+
+    tick["n"] = 2
+    svc.run_loops(max_ticks=1)  # overlap re-fetch, nothing new
+    c2 = cursor()
+    assert c2 == (BASE + dt.timedelta(seconds=249), str(uuid.UUID(int=249)))
+    assert c2[0] >= c1[0]
+
+    events = spark.read.parquet(svc.paths["cf_audit_events"])
+    assert events.count() == events.select("guid").distinct().count() == 250
+    from collections import Counter
+
+    counts = Counter(e["event"]["guid"] for e in hec_events(delivered))
+    assert set(counts) == {str(uuid.UUID(int=i)) for i in range(250)}
+    reshipped = {g for g, n in counts.items() if n > 1}
+    assert reshipped == {str(uuid.UUID(int=i)) for i in range(100, 200)}
+    assert len(reshipped) <= HEC_BATCH_EVENTS
+    assert svc.totals.shipped == 250
+
+
+# the threaded collector's fail-fast exit is the behaviour under test
+@pytest.mark.filterwarnings("ignore::pytest.PytestUnhandledThreadExceptionWarning")
+def test_collector_metrics_scraped_after_good_and_failing_tick(spark, tmp_path):
+    """/metrics shows the collector's duration after a good tick and its
+    error counter after a failing one, under both loop drivers."""
+    cfg = EngineConfig()
+    cfg.pagination_wait_s = 0.0
+    transport = PageServer([0, 1])
+    svc = Service(
+        spark, warehouse_dir=str(tmp_path / "whm"), transport=transport, cfg=cfg
+    )
+    server = svc.serve_metrics(port=0)
+
+    def scrape() -> dict[str, float]:
+        port = server.server_address[1]
+        text = urllib.request.urlopen(
+            f"http://127.0.0.1:{port}/metrics"
+        ).read().decode()
+        return {k: float(v) for k, v in (ln.split() for ln in text.splitlines())}
+
+    try:
+        svc.run_loops(max_ticks=1)
+        m = scrape()
+        assert m["cf_audit_event_collector_events_collected_total"] == 2
+        assert m["cf_audit_event_collector_collect_duration_total"] > 0
+        assert m["cf_audit_event_collector_errors_total"] == 0
+
+        def down(url: str) -> dict:
+            raise ConnectionError("CF API down")
+
+        svc.transport = down
+        with pytest.raises(ConnectionError):
+            svc.run_loops(max_ticks=1)
+        m2 = scrape()
+        assert m2["cf_audit_event_collector_errors_total"] == 1
+        assert (
+            m2["cf_audit_event_collector_collect_duration_total"]
+            == m["cf_audit_event_collector_collect_duration_total"]
+        )
+
+        # threaded deployment: the collector thread dies on its error
+        # (fail-fast policy) after counting it
+        (thread,) = svc.run_threaded(loops=("collector",))
+        thread.join(timeout=60)
+        assert not thread.is_alive()
+        assert scrape()["cf_audit_event_collector_errors_total"] == 2
     finally:
+        svc.stop()
         server.shutdown()
+        server.server_close()
 
 
 def test_cursor_swap_crash_recovery(spark, tmp_path):
@@ -342,10 +513,10 @@ def test_service_jdbc_store_end_to_end(spark, tmp_path):
     con.close()
     assert n == 5
 
-    guids = [json.loads(p)["event"]["guid"] for p in sent]
+    guids = [e["event"]["guid"] for e in hec_events(sent)]
     assert len(guids) == len(set(guids)) == 5
     # full 13-field envelope also on the DB path (P13)
-    ev = json.loads(sent[0])["event"]
+    ev = hec_events(sent)[0]["event"]
     assert ev["actor_username"] == "u-0" and ev["metadata"] == {"request": "r0"}
     # informer gauges read through the store
     svc.informer_tick()
@@ -918,10 +1089,11 @@ def test_service_soak_ticks_compaction_restart(
     assert events.count() == len(all_ids)
     assert events.select("guid").distinct().count() == len(all_ids)
     want_guids = {str(uuid.UUID(int=i)) for i in all_ids}
-    got_guids = {json.loads(p)["event"]["guid"] for p in sent}
+    shipped = hec_events(sent)
+    got_guids = {e["event"]["guid"] for e in shipped}
     assert got_guids == want_guids  # every event shipped ≥ once
     # duplicates only from the at-least-once re-ship after the outage
-    assert len(sent) >= len(want_guids)
+    assert len(shipped) >= len(want_guids)
 
     # collector dataset: folds + restart are invisible — bit-identical
     # to a one-shot filter over the distinct union of keys
