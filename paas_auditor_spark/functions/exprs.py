@@ -133,26 +133,9 @@ def sql_doubles_2d(rows) -> str:
     return "array(" + ",".join(sql_doubles(row) for row in rows) + ")"
 
 
-def sql_longs(values) -> str:
-    """SQL text of an ``array<bigint>`` literal."""
-    return (
-        "array(" + ",".join(f"CAST({int(x)} AS BIGINT)" for x in values) + ")"
-    )
-
-
 def lit_doubles(values) -> Column:
     """``array<double>`` literal via one parsed SQL string."""
     return F.expr(sql_doubles(values))
-
-
-def lit_doubles_2d(rows) -> Column:
-    """``array<array<double>>`` literal via one parsed SQL string."""
-    return F.expr(sql_doubles_2d(rows))
-
-
-def lit_longs(values) -> Column:
-    """``array<bigint>`` literal via one parsed SQL string."""
-    return F.expr(sql_longs(values))
 
 
 def let(value: Column, body: Callable[[Column], Column]) -> Column:

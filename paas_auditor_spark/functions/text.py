@@ -159,13 +159,6 @@ def logistic_quality_score(text: Column) -> Column:
     return F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 4)
 
 
-def lang_id_score(text: Column, lang: str) -> Column:
-    """Marker-hit count for one language profile."""
-    markers = LANG_MARKERS[lang]
-    toks = tokens(F.lower(text))
-    return F.size(F.filter(toks, lambda t: t.isin(*markers))).cast("long")
-
-
 def lang_id(text: Column) -> Column:
     """Heuristic language ID: argmax marker-profile hit count, 'und' when no
     profile matches.  Pure column expressions → stays JVM-side.  The token
@@ -194,7 +187,6 @@ __all__ = [
     "bpe_ish_token_count",
     "fingerprint",
     "lang_id",
-    "lang_id_score",
     "logistic_quality_score",
     "ngrams",
     "normalized_text",

@@ -205,14 +205,6 @@ def _reject_foreign_schemes(schemes: set, scheme: str) -> None:
         )
 
 
-def _check_scheme(words_df: DataFrame, scheme: str = BLOOM_SCHEME) -> None:
-    """Reject a words table built under a different (or unversioned)
-    bit-position scheme than the one the caller will PROBE with."""
-    _require_scheme_column(words_df, scheme)
-    schemes = {r["scheme"] for r in words_df.select("scheme").distinct().collect()}
-    _reject_foreign_schemes(schemes, scheme)
-
-
 def _scheme_and_geometry(
     words_df: DataFrame, scheme: str = BLOOM_SCHEME
 ) -> set[tuple[int, int]]:

@@ -1,7 +1,7 @@
 """Deduplication operator family for the training-data pipeline surface.
 
 Reference parity: the reference's only dedup is keyed ON CONFLICT DO NOTHING
-(store.go:92, handled by operators.ingest.idempotent_append).  This module
+(store.go:92, handled by operators.ingest.ingest_delta).  This module
 adds the LLM-data dedup ladder: exact, near-dup MinHash+LSH, SimHash, and
 n-gram Jaccard — all as DataFrame compositions.
 

@@ -4,15 +4,18 @@ Reference behavior being re-expressed:
 - S4 envelope decode + flatten (pkg/fetchers/cf_audit_event_fetcher.go:71-81)
 - P8 event-time validity CHECK (create_cf_audit_events.sql:26-30)
 - T2 incremental watermark with 5s overlap re-read
-  (pkg/collectors/cf_audit_event_collector.go:36,92-104)
+  (pkg/collectors/cf_audit_event_collector.go:36,92-104) — computed by
+  ``runner.Service._watermark``
 - W1/T3 idempotent insert: ON CONFLICT (guid) DO NOTHING
   (pkg/db/store.go:73-100) — overlap re-reads never duplicate.
 
-Scale notes (SURVEY.md §7 hard-part 1): the anti-join against the target
-must NOT scan full history.  Incoming batches only ever overlap the cursor
-window (watermark − 5 s), so we bound the anti-join's right side with the
-same range filter — on a date-partitioned table that is partition pruning,
-making dedup O(batch + overlap-window) regardless of history size.  The
+Scale notes (SURVEY.md §7 hard-part 1): the anti-join against the store
+must not scan full history.  ``ingest_delta`` bounds its right side by
+the batch's own oldest event, so only stored keys a batch row could
+collide with are read — on a date-partitioned table that is partition
+pruning.  With a source that honours ``timestamp>`` the batch starts
+after the watermark and the window is the 5 s overlap; a source that
+returns old rows widens the window instead of duplicating them.  The
 small bounded side is broadcast so no shuffle of the batch is needed.
 """
 
@@ -23,8 +26,8 @@ import datetime as dt
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from paas_auditor_spark.operators.cursor import EPOCH_TS
 from paas_auditor_spark.schemas import EVENTS_ENVELOPE
+from paas_auditor_spark.streaming.metrics import MetricsRegistry
 
 
 def normalize_envelope(raw_df: DataFrame, payload_col: str = "payload") -> DataFrame:
@@ -85,59 +88,22 @@ def validate_events(
     return df.filter(cond), df.filter(~cond)
 
 
-def ingest_watermark(
-    target_df: DataFrame,
-    ts_col: str = "created_at",
-    overlap_s: float = 5.0,
-) -> dt.datetime:
-    """Next-fetch start time: max(created_at) − overlap, epoch when empty.
-
-    Parity with reference cf_audit_event_collector.go:36,92-104 including
-    the year<1970 guard (T2).  A single MAX aggregate — parquet footer
-    statistics make this a metadata-only scan under AQE.
-    """
-    from paas_auditor_spark.functions.timecross import parse_wall, ts_string
-
-    # wall-clock string collect — a datetime-object collect would shift
-    # by the process-tz offset on a non-UTC host (functions/timecross.py)
-    row = target_df.agg(ts_string(F.max(ts_col)).alias("mx")).first()
-    mx = parse_wall(row["mx"])
-    if mx is None:
-        return EPOCH_TS
-    wm = mx - dt.timedelta(seconds=overlap_s)
-    if wm.year < 1970:
-        return EPOCH_TS
-    return wm
-
-
-def idempotent_merge(
+def idempotent_append(
     target_df: DataFrame,
     batch_df: DataFrame,
     key_col: str = "guid",
     ts_col: str = "created_at",
     window_floor: dt.datetime | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """W1/T3 merge returning ``(new_target, fresh)``.
+) -> DataFrame:
+    """W1/T3 over DataFrames: ``target`` plus the batch rows whose key is
+    not already present — ``INSERT ... ON CONFLICT (guid) DO NOTHING``
+    (reference store.go:87-93) as in-batch dedup, then a left-anti join.
 
-    Semantics of ``INSERT ... ON CONFLICT (guid) DO NOTHING`` per page
-    (reference store.go:87-93): in-batch dedup first (first occurrence
-    wins is irrelevant — guid collisions carry identical rows), then a
-    left-anti join against the target.
-
-    ``window_floor`` bounds the anti-join's target side: batches produced by
-    the watermark fetch can only collide inside the overlap window, so at
-    scale pass ``window_floor=watermark`` and the anti-join right side
-    becomes a pruned scan, broadcast to the batch.
-
-    ``fresh`` is ``localCheckpoint``'d (lazy): counting it and then acting
-    on the union computes the anti-join once — the collected-rows metric is
-    O(batch), never a rescan of history (the reference likewise counts only
-    the page it just stored, cf_audit_event_collector.go:67-68).
+    ``window_floor`` bounds the anti-join's target side to rows at or
+    after it, so the right side becomes a pruned scan, broadcast to the
+    batch.  Null keys are dropped: a NULL key never matches the
+    anti-join (NULL ≠ NULL) and would re-append on every re-read.
     """
-    # defense in depth behind validate_events' NOT NULL check: a NULL
-    # key never matches the anti-join (NULL ≠ NULL), so a null-key row
-    # would count as "fresh" on every overlap re-read and duplicate
-    # unboundedly — the reference's NOT NULL PK rejects it at the DB
     deduped = batch_df.filter(F.col(key_col).isNotNull()).dropDuplicates(
         [key_col]
     )
@@ -153,29 +119,48 @@ def idempotent_merge(
         )
     existing_keys = F.broadcast(existing.select(key_col).distinct())
     fresh = deduped.join(existing_keys, on=key_col, how="left_anti")
-    fresh = fresh.localCheckpoint(eager=False)
-    return target_df.unionByName(fresh), fresh
+    # lazy checkpoint: repeated actions on the result run the anti-join once
+    return target_df.unionByName(fresh.localCheckpoint(eager=False))
 
 
-def idempotent_append(
-    target_df: DataFrame,
-    batch_df: DataFrame,
-    key_col: str = "guid",
-    ts_col: str = "created_at",
-    window_floor: dt.datetime | None = None,
-) -> DataFrame:
-    """Append batch rows whose key is not already present (W1/T3) — the
-    union-only view of :func:`idempotent_merge`."""
-    merged, _fresh = idempotent_merge(
-        target_df, batch_df, key_col=key_col, ts_col=ts_col, window_floor=window_floor
-    )
-    return merged
+def ingest_delta(
+    batch_df: DataFrame, store, metrics: MetricsRegistry | None = None
+) -> int:
+    """Store the batch's fresh events once; return how many were fresh.
+
+    The one ingest step of the service path — the collector tick and the
+    streaming ``foreachBatch`` sink both call it.  Validation drops
+    epoch-or-older and null-guid rows, in-batch duplicates collapse, and
+    a broadcast left-anti join against the store's keys since the
+    batch's own oldest event removes everything already stored, however
+    old the source's rows are.  The fresh rows are checkpointed so the
+    count and the append run the anti-join once.
+    """
+    from paas_auditor_spark.functions.timecross import parse_wall, ts_string
+
+    valid, _quarantine = validate_events(batch_df)
+    # checkpointed so the floor read below decodes and dedups the batch
+    # once; the anti-join then reads the materialized rows
+    deduped = valid.dropDuplicates(["guid"]).localCheckpoint(eager=False)
+    # wall-clock string collect — a datetime-object collect would shift
+    # by the process-tz offset on a non-UTC host (functions/timecross.py)
+    lo = deduped.agg(ts_string(F.min("created_at")).alias("lo")).first()["lo"]
+    if lo is None:
+        return 0
+    fresh = deduped.join(
+        F.broadcast(store.overlap_keys_df(parse_wall(lo))), "guid", "left_anti"
+    ).localCheckpoint(eager=False)
+    n = fresh.count()
+    if n:
+        store.append_events(fresh)
+    if metrics is not None:
+        metrics.inc("cf_audit_event_collector_events_collected_total", float(n))
+    return n
 
 
 __all__ = [
     "idempotent_append",
-    "idempotent_merge",
-    "ingest_watermark",
+    "ingest_delta",
     "normalize_envelope",
     "validate_events",
 ]

@@ -8,11 +8,12 @@ shipper error logs and continues.  ``Service`` reproduces that contract on
 the Spark engine:
 
 - warehouse init (W5, sources.bootstrap.init_warehouse)
-- collector tick: watermark fetch → validate → delta-append to the bronze
-  parquet table (only fresh rows are written — never a rewrite of history)
-- shipper tick: cursor query → ordered NDJSON batches with retries →
-  cursor table swap (atomic temp-dir rename, the parquet stand-in for
-  W2's upsert)
+- collector tick: watermark fetch → ``operators.ingest.ingest_delta``
+  (validate → dedup → anti-join → append; only fresh rows are written —
+  never a rewrite of history, never a second copy of a stored event)
+- shipper tick: ``streaming.ship.ship_tick`` — cursor query → ordered
+  NDJSON batches with retries → cursor commit (on parquet an atomic
+  temp-dir rename, the stand-in for W2's upsert)
 - informer tick: metadata count + latest-timestamp gauges
 - /metrics (Prometheus text) and /health endpoints on a ThreadingHTTPServer
 - error policies per loop (T8): collector raises out of ``run_loops`` —
@@ -28,12 +29,11 @@ import time
 from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from paas_auditor_spark.config import EngineConfig
 from paas_auditor_spark.logs import JsonLogger
 from paas_auditor_spark.operators.cursor import EPOCH_TS
-from paas_auditor_spark.operators.ingest import validate_events
+from paas_auditor_spark.operators.ingest import ingest_delta
 from paas_auditor_spark.sources.paginated_http import (
     Transport,
     fetch_event_pages,
@@ -42,7 +42,7 @@ from paas_auditor_spark.sources.paginated_http import (
 from paas_auditor_spark.stores import ParquetStore
 from paas_auditor_spark.streaming.metrics import MetricsRegistry
 from paas_auditor_spark.streaming.pipeline import scheduler_loop
-from paas_auditor_spark.streaming.ship import Sender, build_payloads, ship_rows
+from paas_auditor_spark.streaming.ship import Sender, ship_tick
 
 SHIPPER_NAME = "cf-audit-events-to-splunk"
 
@@ -118,7 +118,7 @@ class Service:
         return EPOCH_TS if wm.year < 1970 else wm
 
     def collector_tick(self) -> int:
-        """Fetch since watermark, validate, append ONLY the fresh delta."""
+        """Fetch since the watermark and store ONLY the fresh delta."""
         if self.transport is None:  # no API wiring: collector disabled,
             return 0  # same creds-gating posture as the shipper
         t0 = time.perf_counter()
@@ -132,23 +132,8 @@ class Service:
                 self.cfg.pagination_wait_s,
             )
         )
-        batch = pages_to_dataframe(self.spark, pages)
-        valid, _quarantine = validate_events(batch, ts_col="created_at")
-        # same dedup shape as idempotent_merge (in-batch dropDuplicates +
-        # watermark-bounded anti-join), but keeping only the fresh side so
-        # the write is a delta append, never a history rewrite.  The DB-API
-        # store's ON CONFLICT insert backstops the same guarantee
-        # transactionally (W1).
-        deduped = valid.dropDuplicates(["guid"])
-        overlap_keys = self.store.overlap_keys_df(watermark)
-        fresh = deduped.join(
-            F.broadcast(overlap_keys), "guid", "left_anti"
-        ).localCheckpoint(eager=False)  # count + write = two actions
-        n = fresh.count()
-        if n:
-            self.store.append_events(fresh)
-        self.metrics.inc(
-            "cf_audit_event_collector_events_collected_total", float(n)
+        n = ingest_delta(
+            pages_to_dataframe(self.spark, pages), self.store, self.metrics
         )
         self.metrics.inc(
             "cf_audit_event_collector_collect_duration_total",
@@ -163,33 +148,14 @@ class Service:
     def shipper_tick(self) -> int:
         if self.sender is None:  # creds absent: shipper disabled
             return 0
-        t0 = time.perf_counter()
-        batch_df = self.store.unshipped_events(
-            SHIPPER_NAME, self.cfg.ship_batch_cap
-        )
-        rows = build_payloads(batch_df, self.cfg.deploy_env).collect()
-        shipped, last_ok, _failed = ship_rows(
-            rows,
+        shipped = ship_tick(
+            self.store,
             self.sender,
             SHIPPER_NAME,
+            self.cfg.deploy_env,
+            self.cfg.ship_batch_cap,
             metrics=self.metrics,
             logger=self._loop_logs[self.shipper_tick],
-        )
-        if last_ok is not None:
-            from paas_auditor_spark.functions.timecross import parse_wall
-
-            # W2: cursor advances only to the last event of the last
-            # acknowledged batch (T4 monotone); the timestamp comes from
-            # the wall-clock string twin, not the process-tz-converted
-            # datetime object
-            self.store.upsert_cursor(
-                SHIPPER_NAME, parse_wall(last_ok["created_at_s"]), last_ok["guid"]
-            )
-        from paas_auditor_spark.streaming.ship import _mname
-
-        self.metrics.inc(
-            f"{_mname(SHIPPER_NAME)}_ship_duration_total",
-            time.perf_counter() - t0,
         )
         self.totals.shipped += shipped
         self._loop_logs[self.shipper_tick].info("shipped", {"events": shipped})

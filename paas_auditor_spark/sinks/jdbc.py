@@ -8,22 +8,16 @@ Reference parity targets (SURVEY.md §2.6):
   (store.go:262-287).
 
 Spark's built-in JDBC writer is append-only — ON CONFLICT is not
-expressible through ``df.write.jdbc`` — so this module provides the two
-scale-correct strategies:
-
-1. **Stage-and-merge** (`idempotent_append_jdbc`): dedupe the batch on the
-   key, left-anti join against the destination's key set (read back with
-   the key range pushed down into the remote query so only the overlap
-   window's keys travel), then a parallel partitioned append.
-   Effectively-once under a single logical writer — which the reference
-   also assumes (one collector process).
-2. **Per-partition statement execution** (`execute_partitionwise`): the
-   strict ON CONFLICT parity path.  Each executor partition opens one
-   DB-API connection from an injectable factory, plays its rows through
-   ``executemany`` in bounded batches, and commits once per partition —
-   the Spark analog of the reference's transaction-per-page.  With an
-   ON CONFLICT statement this is idempotent under retries of a partition
-   task, which is exactly Spark's task-retry contract.
+expressible through ``df.write.jdbc`` — so W1 runs as **per-partition
+statement execution** (`execute_partitionwise`): each executor partition
+opens one DB-API connection from an injectable factory, plays its rows
+through ``executemany`` in bounded batches, and commits once per
+partition — the Spark analog of the reference's transaction-per-page.
+With an ON CONFLICT statement this is idempotent under retries of a
+partition task, which is exactly Spark's task-retry contract.
+``stores.DbApiStore`` writes the service path's events through it,
+behind the same ``operators.ingest.ingest_delta`` anti-join as the
+parquet store.
 
 I/O is injectable throughout so the logic is testable without a live
 Postgres; the statement path is exercised against DuckDB (DB-API
@@ -32,12 +26,10 @@ compatible, supports ON CONFLICT) in tests.
 
 from __future__ import annotations
 
-import re
 from collections.abc import Callable, Mapping
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 def dbapi_factory(module_name: str, *args, **kwargs) -> Callable[[], object]:
@@ -69,104 +61,6 @@ class JdbcTarget:
         for k, v in self.options.items():
             rw = rw.option(k, v)
         return rw
-
-
-_SQL_IDENT = re.compile(
-    r"[A-Za-z_][A-Za-z0-9_]*(\.[A-Za-z_][A-Za-z0-9_]*)*\Z"
-)
-
-
-def _ident(name: str) -> str:
-    """Validate a config-sourced SQL identifier before interpolation —
-    the dbtable subquery below is string-built, so reject anything that
-    could escape it (quotes, spaces, comments)."""
-    if not name or not _SQL_IDENT.match(name):
-        raise ValueError(f"invalid SQL identifier: {name!r}")
-    return name
-
-
-def read_keys_jdbc(
-    spark: SparkSession,
-    target: JdbcTarget,
-    key_col: str,
-    ts_col: str | None = None,
-    ts_floor=None,
-) -> DataFrame:
-    """Key projection of the destination, with the overlap window pushed
-    down into the remote query (a ``dbtable`` subquery, so the database —
-    not Spark — filters; the wire carries keys only).
-
-    Identifiers are validated (no quoting characters can pass) and the
-    time floor is rendered through an explicit ISO formatter — config
-    values cannot break out of the generated subquery.
-    """
-    predicate = ""
-    if ts_col and ts_floor is not None:
-        if hasattr(ts_floor, "isoformat"):
-            floor_str = ts_floor.isoformat(sep=" ")
-        else:
-            floor_str = str(ts_floor)
-            if "'" in floor_str or "\\" in floor_str:
-                raise ValueError(f"invalid time floor literal: {floor_str!r}")
-        predicate = f" WHERE {_ident(ts_col)} >= '{floor_str}'"
-    subq = (
-        f"(SELECT {_ident(key_col)} FROM {_ident(target.table)}{predicate})"
-        " AS existing_keys"
-    )
-    return target.apply(spark.read.format("jdbc")).option("dbtable", subq).load()
-
-
-def write_append_jdbc(
-    df: DataFrame,
-    target: JdbcTarget,
-    batch_size: int = 10_000,
-    num_partitions: int | None = None,
-) -> None:
-    """Plain parallel append: one JDBC connection per partition, rows
-    grouped into ``batchsize`` inserts.  ``num_partitions`` caps the
-    connection count — at 1000 executors an uncapped append is a
-    1000-connection stampede on the database."""
-    if num_partitions is not None:
-        df = df.coalesce(num_partitions)
-    (
-        target.apply(df.write.format("jdbc"))
-        .option("dbtable", target.table)
-        .option("batchsize", str(batch_size))
-        .mode("append")
-        .save()
-    )
-
-
-def idempotent_append_jdbc(
-    batch_df: DataFrame,
-    key_col: str,
-    ts_col: str,
-    read_existing: Callable[[], DataFrame],
-    write: Callable[[DataFrame], None],
-    broadcast_existing: bool = True,
-) -> DataFrame:
-    """W1 semantics on an append-only JDBC writer: stage-and-merge.
-
-    In-batch ``dropDuplicates(key)`` + left-anti join against the
-    destination keys (``read_existing`` should push the batch's time floor
-    down — see ``read_keys_jdbc``) then append via ``write``.  Returns the
-    fresh rows that were written (for observability).
-
-    The existing-keys side is bounded by the overlap window (the reference
-    re-reads at most 5 s of history — T2), so it stays broadcastable at any
-    destination size; pass ``broadcast_existing=False`` if a huge backfill
-    makes the window wide.
-    """
-    deduped = batch_df.dropDuplicates([key_col])
-    existing = read_existing().select(key_col)
-    if broadcast_existing:
-        existing = F.broadcast(existing)
-    fresh = deduped.join(existing, on=key_col, how="left_anti")
-    # localCheckpoint: `write` consumes fresh and the caller may count it;
-    # without it the anti-join would re-run per action
-    fresh = fresh.localCheckpoint(eager=False)
-    write(fresh)
-    return fresh
 
 
 def execute_partitionwise(
@@ -242,8 +136,5 @@ __all__ = [
     "JdbcTarget",
     "dbapi_factory",
     "execute_partitionwise",
-    "idempotent_append_jdbc",
-    "read_keys_jdbc",
     "upsert_cursor_jdbc",
-    "write_append_jdbc",
 ]

@@ -543,8 +543,8 @@ def avro_stream(
     files into the landing zone and each micro-batch picks up at most
     ``max_files_per_trigger`` of them (the jsonl replay source's
     file-count rate limiting, S3/T5).  Pair with the collector
-    choreography (``stream_to_bronze``/``foreachBatch`` hooks) for the
-    sink; file-source checkpointing makes replays exactly the committed
+    choreography (``streaming.pipeline.store_sink`` or another
+    ``foreachBatch`` hook) for the sink; file-source checkpointing makes replays exactly the committed
     batches the atomic commit protocol already suppresses."""
     files = (
         spark.readStream.format("binaryFile")

@@ -14,8 +14,7 @@ destination those scans become:
   and column pruning into the generated remote SQL; verified in tests via
   the plan's ``PushedFilters`` for parquet and documented here for JDBC
   (same Catalyst machinery).
-- **dbtable subqueries** for anything the pushdown can't express (e.g. the
-  keys-only overlap read — sinks.jdbc.read_keys_jdbc).
+- **dbtable subqueries** for anything the pushdown can't express.
 
 No JDBC driver jar ships in this environment, so this module stays a thin,
 documented composition of the built-in reader; the logic that matters

@@ -56,7 +56,7 @@ def stream_envelope_jsonl(
     max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """Streaming replay: unbounded DataFrame of decoded events; pair with
-    ``stream_to_bronze``/``stream_to_store`` choreography for the sink."""
+    ``streaming.pipeline.store_sink`` (foreachBatch) for the sink."""
     raw = (
         spark.readStream.option("maxFilesPerTrigger", max_files_per_trigger)
         .text(path)

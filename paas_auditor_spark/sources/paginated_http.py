@@ -7,8 +7,8 @@ between pages (rate limit), decode the envelope (S4) per page.
 
 The transport is injectable (any ``url -> dict`` callable) so tests drive
 the pager with canned pages exactly like the reference's httpmock suite
-(cf_audit_event_fetcher_test.go:202-236); a requests-backed transport is
-provided behind an import-try for real deployments.
+(cf_audit_event_fetcher_test.go:202-236); ``uaa_transport`` is the
+authenticated urllib transport for real deployments.
 
 Scale notes: pagination is inherently sequential (next_url chaining), so
 the pager runs driver-side and hands page batches to Spark — the same
@@ -185,24 +185,6 @@ def uaa_transport(
     return get
 
 
-def requests_transport(token: str | None = None, timeout_s: float = 30.0) -> Transport:
-    """Real-HTTP transport, gated behind an import-try (requests may be
-    absent; tests inject fakes)."""
-    import requests  # noqa: PLC0415
-
-    session = requests.Session()
-    if token:
-        session.headers["Authorization"] = f"bearer {token}"
-
-    def get(url: str) -> dict:
-        resp = session.get(url, timeout=timeout_s)
-        if resp.status_code != 200:
-            raise RuntimeError(f"non-200 from events API: {resp.status_code}")
-        return resp.json()
-
-    return get
-
-
 __all__ = [
     "TIME_FORMAT",
     "Transport",
@@ -210,6 +192,5 @@ __all__ = [
     "discover_token_url",
     "fetch_event_pages",
     "pages_to_dataframe",
-    "requests_transport",
     "uaa_transport",
 ]

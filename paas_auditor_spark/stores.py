@@ -92,19 +92,17 @@ class ParquetStore:
         return parse_wall(row["mx"]) or EPOCH_TS
 
     def overlap_keys_df(self, floor: dt.datetime) -> DataFrame:
+        """Stored guids at or after ``floor``.  Keys are unique in the
+        store and feed a broadcast anti-join, so no distinct is needed."""
         from paas_auditor_spark.functions.timecross import wall_string
 
-        return (
-            self.events_df()
-            .filter(
-                F.col("created_at")
-                >= F.lit(wall_string(floor)).cast(
-                    self.events_df().schema["created_at"].dataType
-                )
+        events = self.events_df()
+        return events.filter(
+            F.col("created_at")
+            >= F.lit(wall_string(floor)).cast(
+                events.schema["created_at"].dataType
             )
-            .select("guid")
-            .distinct()
-        )
+        ).select("guid")
 
     def event_count(self) -> int:
         from paas_auditor_spark.operators.stats import approx_count

@@ -1,90 +1,30 @@
-"""Micro-batch ingest pipeline: collector tick + Structured Streaming dress.
+"""Micro-batch ingest pipeline: Structured Streaming dress around the one
+ingest step.
 
-Batch-incremental core (T1/T2/T3 in SURVEY.md §2.7, reference
-pkg/collectors/cf_audit_event_collector.go:30-104):
+The collector's work (T1/T2/T3 in SURVEY.md §2.7, reference
+pkg/collectors/cf_audit_event_collector.go:30-104) is
 
     watermark = max(created_at) − 5s  (epoch when empty)
     pages     = paginated fetch since watermark
-    batch     = normalize + validate
-    target    = idempotent_append(target, batch)   # guid dedup
+    stored   += ingest_delta(batch, store)   # validate, guid dedup, append
 
-``collect_once`` is that tick as a pure function over DataFrames, usable
-both from a scheduler loop and from ``foreachBatch``.  ``stream_to_bronze``
-is the Structured Streaming wrapper: file-source micro-batches with
-rate limiting (maxFilesPerTrigger — the reference's page pacing analog,
-S3/T5), foreachBatch dedup-append into a bronze parquet table, and the
-collector's fail-fast error policy (T8).
+``runner.Service.collector_tick`` runs it as a scheduled loop tick.  Here
+the same ``operators.ingest.ingest_delta`` runs as a ``foreachBatch`` sink
+(``store_sink``) under two streaming sources: rate-limited parquet files
+(``stream_to_store``, maxFilesPerTrigger — the reference's page pacing
+analog, S3/T5) and the CF API itself (``stream_api_to_store``).  Sink
+errors fail the query — the collector's fail-fast policy (T8).
 """
 
 from __future__ import annotations
 
-import datetime as dt
 import time
 from collections.abc import Callable, Iterator
-from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
-from paas_auditor_spark.operators.ingest import (
-    idempotent_merge,
-    ingest_watermark,
-    normalize_envelope,
-    validate_events,
-)
-from paas_auditor_spark.sources.paginated_http import (
-    Transport,
-    fetch_event_pages,
-    pages_to_dataframe,
-)
+from paas_auditor_spark.operators.ingest import ingest_delta
 from paas_auditor_spark.streaming.metrics import MetricsRegistry
-
-
-@dataclass
-class CollectResult:
-    target_df: DataFrame
-    collected: int
-    watermark: dt.datetime
-
-
-def collect_once(
-    spark: SparkSession,
-    target_df: DataFrame,
-    transport: Transport,
-    base_url: str = "http://cc.example.invalid",
-    page_size: int = 100,
-    wait_s: float = 0.0,
-    overlap_s: float = 5.0,
-    key_col: str = "guid",
-    ts_col: str = "created_at",
-    metrics: MetricsRegistry | None = None,
-) -> CollectResult:
-    """One collector tick (reference cf_audit_event_collector.go:30-88).
-
-    Errors propagate (fail-fast, T8 collector policy — main.go:90-98 exits
-    on collector error; the caller decides process policy).
-    """
-    t0 = time.perf_counter()
-    watermark = ingest_watermark(target_df, ts_col=ts_col, overlap_s=overlap_s)
-    pages = list(
-        fetch_event_pages(transport, base_url, watermark, page_size, wait_s)
-    )
-    batch = pages_to_dataframe(spark, pages)
-    valid, _quarantine = validate_events(batch, ts_col=ts_col)
-    new_target, fresh = idempotent_merge(
-        target_df, valid, key_col=key_col, ts_col=ts_col, window_floor=watermark
-    )
-    # O(batch): fresh is localCheckpoint'd by idempotent_merge, so this one
-    # bounded action materializes the anti-join once and later actions on
-    # new_target reuse it — never a before/after count of full history
-    # (reference counts only the stored page, collector.go:67-68)
-    collected = fresh.count()
-    if metrics:
-        metrics.inc("cf_audit_event_collector_events_collected_total", collected)
-        metrics.inc(
-            "cf_audit_event_collector_collect_duration_total",
-            time.perf_counter() - t0,
-        )
-    return CollectResult(new_target, collected, watermark)
 
 
 def informer_tick(
@@ -121,8 +61,8 @@ def deduped_stream(
     at-least-once stream via ``dropDuplicatesWithinWatermark``.
 
     The engine's default ingest dedup is the foreachBatch anti-join
-    (``stream_to_bronze``), which consults the bronze table itself and so
-    survives restarts with no dedup state at all.  This variant is the
+    (``store_sink``), which consults the store itself and so survives
+    restarts with no dedup state at all.  This variant is the
     built-in alternative when the sink is not itself queryable (e.g. the
     JDBC statement path): per-key state in the state store, evicted once
     the watermark passes — the watermark delay mirrors the reference's 5 s
@@ -135,131 +75,34 @@ def deduped_stream(
     )
 
 
-def stream_to_bronze(
-    spark: SparkSession,
-    source_dir: str,
-    bronze_dir: str,
-    checkpoint_dir: str,
-    schema,
-    key_col: str = "guid",
-    ts_col: str = "created_at",
-    max_files_per_trigger: int = 1,
-    trigger_processing_time: str | None = None,
-    available_now: bool = False,
-    metrics: MetricsRegistry | None = None,
-):
-    """Structured Streaming ingest: file micro-batches → dedup → bronze.
-
-    ``available_now=True`` runs the backfill mode: process everything
-    already in the source (still rate-limited into micro-batches by
-    maxFilesPerTrigger, still exactly the same dedup sink), then stop —
-    the catch-up-after-downtime semantics of the reference's first
-    collector tick, with the stream's checkpoint carrying the watermark
-    forward into the next run.
-
-    - rate limiting via maxFilesPerTrigger (S3/T5 backpressure analog)
-    - foreachBatch: in-batch dropDuplicates + left-anti vs bronze (T3) —
-      the same idempotent-append semantics as the batch path, but the
-      anti-join right side is bounded by the batch's own time window so
-      state never grows with history (SURVEY.md §7 hard-part 1)
-    - per-batch collected-event counts come from ``df.observe`` (A4): the
-      count rides the write job itself, no second scan of the batch
-    - returns the StreamingQuery; caller stops it (T7 graceful shutdown)
-    """
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        import os
-
-        from paas_auditor_spark.functions.timecross import ts_string
-
-        deduped = batch_df.dropDuplicates([key_col])
-        # wall-clock string round trip — an object collect+relit only
-        # cancels for TIMESTAMP columns; for TIMESTAMP_NTZ it shifts by
-        # the process-tz offset (functions/timecross.py)
-        bounds = deduped.agg(ts_string(F.min(ts_col)).alias("lo")).first()
-        if bounds["lo"] is None:
-            return
-        # first-batch detection is an explicit existence check, NOT a broad
-        # except: a corrupt file / transient FS error during the bronze read
-        # must propagate (collector fail-fast policy T8), or duplicates
-        # would silently skip the anti-join and break idempotence (T3).
-        # (On an object store / Delta deployment this check is the catalog's
-        # table-exists; the local stand-in is the directory listing.)
-        if os.path.isdir(bronze_dir) and any(
-            not f.startswith((".", "_")) for f in os.listdir(bronze_dir)
-        ):
-            bronze = spark.read.parquet(bronze_dir)
-            existing = (
-                bronze.filter(
-                    F.col(ts_col)
-                    >= F.lit(bounds["lo"]).cast(
-                        bronze.schema[ts_col].dataType
-                    )
-                )
-                .select(key_col)
-                .distinct()
-            )
-            fresh = deduped.join(
-                F.broadcast(existing), on=key_col, how="left_anti"
-            )
-        else:
-            fresh = deduped  # first batch: bronze does not exist yet
-        # persist the ingest ordering key (SURVEY §1.2: the id SERIAL
-        # analog is (ingest_batch_id, created_at, guid)); epoch_id is the
-        # streaming batch sequence, monotone under checkpoint recovery
-        from paas_auditor_spark.operators.sequence import stamp_ingest_batch
-
-        obs = Observation()
-        fresh = stamp_ingest_batch(fresh, epoch_id)
-        fresh = fresh.observe(obs, F.count(F.lit(1)).alias("n"))
-        fresh.write.mode("append").parquet(bronze_dir)
-        if metrics:
-            metrics.inc(
-                "cf_audit_event_collector_events_collected_total",
-                float(obs.get["n"]),
-            )
-
-    writer = stream.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_processing_time:
-        writer = writer.trigger(processingTime=trigger_processing_time)
-    return writer.start()
-
-
 def stream_to_store(
     spark: SparkSession,
     source_dir: str,
     store,
     checkpoint_dir: str,
     schema,
-    key_col: str = "guid",
-    ts_col: str = "created_at",
     max_files_per_trigger: int = 1,
     trigger_processing_time: str | None = None,
+    available_now: bool = False,
     metrics: MetricsRegistry | None = None,
 ):
-    """Structured Streaming ingest into any engine store — the north-star
-    "Structured Streaming from CF events → JDBC sink to Postgres" wired
-    end-to-end.
+    """Structured Streaming ingest from parquet files into any engine store
+    — the north-star "Structured Streaming from CF events → JDBC sink to
+    Postgres" wired end-to-end.
 
-    Same micro-batch choreography as ``stream_to_bronze`` (rate-limited
-    file source, in-batch dedup, overlap-bounded anti-join), but the sink
-    is the pluggable store: with ``stores.DbApiStore`` every batch lands
-    through partition-wise ``INSERT … ON CONFLICT DO NOTHING`` (W1), so
-    the database enforces exactly the idempotence the anti-join
-    pre-filters — a retried/replayed micro-batch (Spark's at-least-once
-    foreachBatch contract) is harmless twice over (T3).
+    Rate-limited file micro-batches (maxFilesPerTrigger) go through
+    ``store_sink``.  With ``stores.DbApiStore`` every batch lands through
+    partition-wise ``INSERT … ON CONFLICT DO NOTHING`` (W1), so the
+    database enforces exactly the idempotence the anti-join pre-filters —
+    a retried/replayed micro-batch (Spark's at-least-once foreachBatch
+    contract) is harmless twice over (T3).
+
+    ``available_now=True`` runs the backfill mode: process everything
+    already in the source (still rate-limited into micro-batches), then
+    stop — the catch-up-after-downtime semantics of the reference's first
+    collector tick, with the stream's checkpoint carrying the position
+    forward into the next run.  Returns the StreamingQuery; the caller
+    stops it (T7 graceful shutdown).
     """
     stream = (
         spark.readStream.schema(schema)
@@ -267,51 +110,21 @@ def stream_to_store(
         .parquet(source_dir)
     )
     writer = stream.writeStream.foreachBatch(
-        store_sink(store, key_col, ts_col, metrics)
+        store_sink(store, metrics)
     ).option("checkpointLocation", checkpoint_dir)
-    if trigger_processing_time:
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    elif trigger_processing_time:
         writer = writer.trigger(processingTime=trigger_processing_time)
     return writer.start()
 
 
-def store_sink(
-    store,
-    key_col: str = "guid",
-    ts_col: str = "created_at",
-    metrics: MetricsRegistry | None = None,
-):
-    """foreachBatch sink into a pluggable store: in-batch dedup →
-    overlap-bounded broadcast anti-join → idempotent append."""
-    from pyspark.sql import functions as F
+def store_sink(store, metrics: MetricsRegistry | None = None):
+    """foreachBatch sink into a pluggable store: ``ingest_delta`` per
+    micro-batch."""
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        from paas_auditor_spark.functions.timecross import (
-            parse_wall,
-            ts_string,
-        )
-
-        deduped = batch_df.dropDuplicates([key_col])
-        bounds = deduped.agg(ts_string(F.min(ts_col)).alias("lo")).first()
-        if bounds["lo"] is None:
-            return
-        floor = parse_wall(bounds["lo"])
-        # localCheckpoint so the anti-join runs ONCE: the store write and
-        # the metrics count both read the materialized micro-batch —
-        # O(batch) per tick, never O(history).  (An Observation can't
-        # carry the count here: the DB-API store's partition-wise write
-        # is an RDD action, which never completes DataFrame observation
-        # metrics — sinks/jdbc.py:216.)
-        fresh = deduped.join(
-            F.broadcast(store.overlap_keys_df(floor)),
-            on=key_col,
-            how="left_anti",
-        ).localCheckpoint()
-        store.append_events(fresh)
-        if metrics:
-            metrics.inc(
-                "cf_audit_event_collector_events_collected_total",
-                float(fresh.count()),
-            )
+        ingest_delta(batch_df, store, metrics)
 
     return sink
 
@@ -330,9 +143,8 @@ def stream_api_to_store(
 ):
     """The north-star pipeline FULLY native: ``spark.readStream.format
     ("cf_events")`` (watermark-offset micro-batches straight off the CF
-    API — sources/datasource.py) → in-batch dedup → overlap-bounded
-    anti-join → pluggable store append (parquet warehouse or DB-API
-    ON CONFLICT).  The reference's collector loop (fetch → dedup →
+    API — sources/datasource.py) → ``store_sink``, i.e. ``ingest_delta``
+    into a pluggable store (parquet warehouse or DB-API ON CONFLICT).  The reference's collector loop (fetch → dedup →
     insert, cf_audit_event_collector.go:30-70) as ONE Structured
     Streaming query: offsets checkpoint the watermark, retries replay
     micro-batches, and the store's idempotence absorbs the at-least-once
@@ -386,12 +198,9 @@ def scheduler_loop(
 
 
 __all__ = [
-    "CollectResult",
-    "collect_once",
     "informer_tick",
     "scheduler_loop",
     "store_sink",
     "stream_api_to_store",
-    "stream_to_bronze",
     "stream_to_store",
 ]

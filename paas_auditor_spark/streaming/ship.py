@@ -1,6 +1,9 @@
 """Ordered stop-on-failure shipper with cursor commit.
 
-Re-expresses the reference shipper
+``ship_tick`` is the one ship step of the service path
+(``runner.Service.shipper_tick`` calls it): store cursor query → payload
+build → ordered delivery (``ship_rows``) → cursor commit.  It
+re-expresses the reference shipper
 (pkg/shippers/cf_audit_events_to_splunk_shipper.go:52-225):
 
 - W3 HTTP sink with exponential-backoff retry (shipper.go:62-86: 100ms→2s,
@@ -13,7 +16,8 @@ Re-expresses the reference shipper
   acknowledged batch (shipper.go:117-170)
 - T4 at-least-once: the cursor advances only on success, so a failed batch
   is re-sent whole on the next tick — re-ships are bounded by one batch
-  (plus events sharing the cursor timestamp).
+  (plus events sharing the cursor timestamp).  A cursor commit that fails
+  after delivery re-ships that whole tick, as in the reference.
 
 Scale notes (SURVEY.md §7 hard-part 3): total ship order + stop-on-failure
 implies sequential delivery of the ≤8192-event batch, so the loop runs
@@ -34,11 +38,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from paas_auditor_spark.functions.json_utils import event_json, splunk_envelope
-from paas_auditor_spark.operators.cursor import (
-    effective_cursor,
-    unshipped_events,
-    upsert_cursor,
-)
 from paas_auditor_spark.sinks.hec import hec_batches
 from paas_auditor_spark.streaming.metrics import MetricsRegistry
 
@@ -73,20 +72,7 @@ class RetryPolicy:
                 backoff *= self.exponent
 
 
-@dataclass
-class ShipResult:
-    shipped: int
-    cursors_df: DataFrame
-    failed: bool
-
-
-def build_payloads(
-    batch_df: DataFrame,
-    deploy_env: str,
-    ts_col: str = "created_at",
-    id_col: str = "guid",
-    event_type_col: str = "event_type",
-) -> DataFrame:
+def build_payloads(batch_df: DataFrame, deploy_env: str) -> DataFrame:
     """(guid, created_at, payload) for a ship batch — the full-fidelity P13
     envelope (all 13 event fields + raw metadata, json.Marshal order;
     shipper.go:24-28,187-192).  Missing columns (synthetic test frames)
@@ -99,9 +85,9 @@ def build_payloads(
         return F.col(name) if name in cols else F.lit("")
 
     evt = event_json(
-        F.col(id_col),
-        F.col(ts_col),
-        F.col(event_type_col),
+        F.col("guid"),
+        F.col("created_at"),
+        F.col("event_type"),
         _c("actor"),
         _c("actor_type"),
         _c("actor_name"),
@@ -116,12 +102,12 @@ def build_payloads(
     from paas_auditor_spark.functions.timecross import ts_string
 
     return batch_df.select(
-        F.col(id_col).cast("string").alias("guid"),
+        F.col("guid").cast("string").alias("guid"),
         # the event time travels ONLY as the JVM-rendered wall-clock
         # string: no driver-side consumer reads a datetime object, and
         # collecting one would convert via the process tz — the exact
         # bug functions/timecross.py exists to prevent
-        ts_string(F.col(ts_col)).alias("created_at_s"),
+        ts_string(F.col("created_at")).alias("created_at_s"),
         splunk_envelope(evt, deploy_env).alias("payload"),
     )
 
@@ -181,64 +167,44 @@ def ship_rows(
     return shipped, last_ok, failed
 
 
-def ship_unshipped(
-    events_df: DataFrame,
-    cursors_df: DataFrame,
-    shipper_name: str,
+def ship_tick(
+    store,
     sender: Sender,
-    deploy_env: str = "test",
-    batch_cap: int = 8192,
-    ts_col: str = "created_at",
-    id_col: str = "guid",
-    event_type_col: str = "event_type",
+    name: str,
+    deploy_env: str,
+    cap: int,
     retry: RetryPolicy | None = None,
     metrics: MetricsRegistry | None = None,
     logger=None,
-) -> ShipResult:
-    """One shipper tick: query → ordered ship → cursor advance.
+) -> int:
+    """One shipper tick: cursor query → ordered ship → cursor advance;
+    returns the events shipped.
 
     Mirrors shipper.go:106-170: on the first failed batch stop; if at
-    least one batch shipped, commit the cursor at the last event of the
-    last acknowledged batch so the next tick resumes from there
+    least one batch shipped, commit the cursor (W2) at the last event of
+    the last acknowledged batch so the next tick resumes from there
     (at-least-once, monotone cursor).
     """
-    t0 = time.perf_counter()
-    cursor_ts, shipped_id = effective_cursor(cursors_df, shipper_name)
-    batch_df = build_payloads(
-        unshipped_events(
-            events_df, cursor_ts, shipped_id, batch_cap,
-            ts_col=ts_col, id_col=id_col,
-        ),
-        deploy_env,
-        ts_col=ts_col,
-        id_col=id_col,
-        event_type_col=event_type_col,
-    )
-    batch = batch_df.collect()  # ≤ batch_cap rows, ship order preserved
-    shipped, last_ok, failed = ship_rows(
-        batch,
-        sender,
-        shipper_name,
-        retry=retry,
-        metrics=metrics,
-        logger=logger,
-    )
-    new_cursors = cursors_df
-    if last_ok is not None:
-        from paas_auditor_spark.functions.timecross import parse_wall
+    from paas_auditor_spark.functions.timecross import parse_wall
 
-        new_cursors = upsert_cursor(
-            cursors_df,
-            shipper_name,
-            parse_wall(last_ok["created_at_s"]),
-            last_ok["guid"],
+    t0 = time.perf_counter()
+    rows = build_payloads(
+        store.unshipped_events(name, cap), deploy_env
+    ).collect()  # ≤ cap rows, ship order preserved
+    shipped, last_ok, _failed = ship_rows(
+        rows, sender, name, retry=retry, metrics=metrics, logger=logger
+    )
+    if last_ok is not None:
+        # the timestamp comes from the wall-clock string twin, not a
+        # process-tz-converted datetime object
+        store.upsert_cursor(
+            name, parse_wall(last_ok["created_at_s"]), last_ok["guid"]
         )
     if metrics:
         metrics.inc(
-            f"{_mname(shipper_name)}_ship_duration_total",
-            time.perf_counter() - t0,
+            f"{_mname(name)}_ship_duration_total", time.perf_counter() - t0
         )
-    return ShipResult(shipped=shipped, cursors_df=new_cursors, failed=failed)
+    return shipped
 
 
 def _mname(shipper_name: str) -> str:
@@ -250,8 +216,7 @@ def _mname(shipper_name: str) -> str:
 __all__ = [
     "RetryPolicy",
     "Sender",
-    "ShipResult",
     "build_payloads",
     "ship_rows",
-    "ship_unshipped",
+    "ship_tick",
 ]

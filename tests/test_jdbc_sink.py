@@ -8,40 +8,6 @@ import duckdb
 from paas_auditor_spark.sinks import jdbc
 
 
-def test_idempotent_append_jdbc_stage_and_merge(spark, tmp_path):
-    target_dir = str(tmp_path / "dest")
-    batch1 = spark.createDataFrame(
-        [(1, "2024-01-01", "a"), (2, "2024-01-02", "b"), (2, "2024-01-02", "b")],
-        ["guid", "created_at", "payload"],
-    )
-
-    def read_existing():
-        try:
-            return spark.read.parquet(target_dir)
-        except Exception:
-            return spark.createDataFrame([], batch1.schema)
-
-    def write(df):
-        df.write.mode("append").parquet(target_dir)
-
-    fresh1 = jdbc.idempotent_append_jdbc(
-        batch1, "guid", "created_at", read_existing, write
-    )
-    assert fresh1.count() == 2  # in-batch dup collapsed
-
-    # overlap re-read: one old guid, one new — only the new row lands
-    batch2 = spark.createDataFrame(
-        [(2, "2024-01-02", "b"), (3, "2024-01-03", "c")],
-        ["guid", "created_at", "payload"],
-    )
-    fresh2 = jdbc.idempotent_append_jdbc(
-        batch2, "guid", "created_at", read_existing, write
-    )
-    assert [r["guid"] for r in fresh2.collect()] == [3]
-    final = spark.read.parquet(target_dir)
-    assert sorted(r["guid"] for r in final.collect()) == [1, 2, 3]
-
-
 def test_execute_partitionwise_on_conflict_duckdb(spark, tmp_path):
     db = str(tmp_path / "dest.duckdb")
     con = duckdb.connect(db)

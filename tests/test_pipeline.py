@@ -19,19 +19,19 @@ from paas_auditor_spark.operators.cursor import (
 )
 from paas_auditor_spark.operators.ingest import (
     idempotent_append,
-    ingest_watermark,
+    ingest_delta,
     normalize_envelope,
     validate_events,
 )
-from paas_auditor_spark.schemas import CF_AUDIT_EVENT
 from paas_auditor_spark.sources.paginated_http import (
     build_events_url,
     fetch_event_pages,
     pages_to_dataframe,
 )
 from paas_auditor_spark.streaming.metrics import COUNTERS, GAUGES, MetricsRegistry
-from paas_auditor_spark.streaming.pipeline import collect_once, informer_tick
-from paas_auditor_spark.streaming.ship import RetryPolicy, ship_unshipped
+from paas_auditor_spark.stores import ParquetStore
+from paas_auditor_spark.streaming.pipeline import informer_tick
+from paas_auditor_spark.streaming.ship import RetryPolicy, ship_tick
 
 BASE = dt.datetime(2024, 3, 1, 12, 0, 0)
 
@@ -125,30 +125,35 @@ def test_envelope_normalization(spark):
 # --- collector (reference cf_audit_event_collector_test.go) ---------------
 
 
-def _empty_target(spark):
-    return spark.createDataFrame([], schema=CF_AUDIT_EVENT)
+def _service(spark, tmp_path, transport=None):
+    from paas_auditor_spark.config import EngineConfig
+    from paas_auditor_spark.runner import Service
 
-
-def test_collect_once_then_overlap_reingest(spark):
-    metrics = MetricsRegistry()
-    server1 = PageServer(make_pages([[0, 1, 2], [3, 4]]))
-    res1 = collect_once(
-        spark, _empty_target(spark), server1, metrics=metrics
+    cfg = EngineConfig()
+    cfg.pagination_wait_s = 0.0
+    return Service(
+        spark, warehouse_dir=str(tmp_path / "wh"), transport=transport, cfg=cfg
     )
-    assert res1.collected == 5
-    assert res1.watermark == EPOCH_TS  # empty table → epoch backfill (T2)
+
+
+def test_service_collect_then_overlap_reingest(spark, tmp_path):
+    server1 = PageServer(make_pages([[0, 1, 2], [3, 4]]))
+    svc = _service(spark, tmp_path, server1)
+    assert svc.collector_tick() == 5
+    # empty table → epoch backfill (T2)
+    assert "q=timestamp>1970-01-01T00:00:00Z&" in server1.requests[0]
 
     # second tick re-fetches an overlapping window (events 3,4 again + 5,6)
     server2 = PageServer(make_pages([[3, 4, 5, 6]]))
-    res2 = collect_once(spark, res1.target_df, server2, metrics=metrics)
-    assert res2.collected == 2  # only the genuinely new events land (T3/W1)
-    assert res2.target_df.count() == 7
-    assert res2.target_df.select("guid").distinct().count() == 7
-    # watermark = max - 5s (collector.go:36)
-    assert res2.watermark == BASE + dt.timedelta(seconds=4) - dt.timedelta(seconds=5)
-    assert metrics.get("cf_audit_event_collector_events_collected_total") == 7
-    # source-side pushdown uses the watermark (S2)
-    assert "timestamp>" in server2.requests[0]
+    svc.transport = server2
+    assert svc.collector_tick() == 2  # only the genuinely new events land
+    events = svc.store.events_df()
+    assert events.count() == 7
+    assert events.select("guid").distinct().count() == 7
+    # source-side pushdown (S2) of watermark = max - 5s (collector.go:36)
+    watermark = BASE + dt.timedelta(seconds=4) - dt.timedelta(seconds=5)
+    assert f"timestamp>{watermark:%Y-%m-%dT%H:%M:%SZ}&" in server2.requests[0]
+    assert svc.metrics.get("cf_audit_event_collector_events_collected_total") == 7
 
 
 def test_validate_events_quarantines_epoch(spark):
@@ -165,8 +170,8 @@ def test_validate_events_quarantines_epoch(spark):
     assert quarantined.count() == 1
 
 
-def test_ingest_watermark_empty_is_epoch(spark):
-    assert ingest_watermark(_empty_target(spark)) == EPOCH_TS
+def test_service_watermark_empty_is_epoch(spark, tmp_path):
+    assert _service(spark, tmp_path)._watermark() == EPOCH_TS
 
 
 # --- shipper (reference cf_audit_events_to_splunk_shipper_test.go) --------
@@ -177,6 +182,16 @@ def _events_df(spark, n=3):
     return pages_to_dataframe(spark, pages)
 
 
+SHIPPER = "cf-audit-events-to-splunk"
+ERRORS = "cf_audit_events_to_splunk_shipper_errors_total"
+
+
+def _stored(spark, tmp_path, events) -> ParquetStore:
+    store = ParquetStore(spark, str(tmp_path / "wh"))
+    store.append_events(events)
+    return store
+
+
 NO_SLEEP = RetryPolicy(sleep=lambda s: None, max_retries=3)
 
 
@@ -185,14 +200,16 @@ def _envelopes(bodies: list[str]) -> list[str]:
     return [line for body in bodies for line in body.split("\n")]
 
 
-def test_ship_happy_path(spark):
+def test_ship_happy_path(spark, tmp_path):
     metrics = MetricsRegistry()
     sent: list[str] = []
-    res = ship_unshipped(
-        _events_df(spark), empty_cursors(spark), "cf-audit-events-to-splunk",
-        sent.append, retry=NO_SLEEP, metrics=metrics,
+    store = _stored(spark, tmp_path, _events_df(spark))
+    shipped = ship_tick(
+        store, sent.append, SHIPPER, "test", 8192,
+        retry=NO_SLEEP, metrics=metrics,
     )
-    assert res.shipped == 3 and not res.failed
+    assert shipped == 3
+    assert metrics.get(ERRORS) == 0
     assert len(sent) == 1  # three events, one NDJSON body
     env = _envelopes(sent)
     # chronological ship order (O4) with the HEC envelope shape (P13)
@@ -219,18 +236,19 @@ def test_ship_happy_path(spark):
     assert ev["organization_guid"] == ""  # NULL → '' on read (store.go:219)
     assert ev["space_guid"] == str(uuid.UUID(int=20_000))
     assert ev["metadata"] == {"request": "r0"}  # raw JSONB passthrough
-    ts, sid = effective_cursor(res.cursors_df, "cf-audit-events-to-splunk")
+    ts, sid = store.effective_cursor(SHIPPER)
     assert ts == BASE + dt.timedelta(seconds=2)
     assert sid == str(uuid.UUID(int=2))
     assert metrics.get(
         "cf_audit_events_to_splunk_shipper_events_shipped_total") == 3
 
 
-def test_ship_stop_on_failure_then_reship(spark):
+def test_ship_stop_on_failure_then_reship(spark, tmp_path):
     """250 events ship as batches 0-99, 100-199, 200-249; batch 2 fails
     after its retries, so the tick stops there (W4) with the cursor at
     the last event of batch 1, and the next tick re-ships from event 100."""
-    events = _events_df(spark, 250)
+    store = _stored(spark, tmp_path, _events_df(spark, 250))
+    metrics = MetricsRegistry()
     calls: list[str] = []
 
     def flaky(payload: str) -> None:
@@ -238,27 +256,26 @@ def test_ship_stop_on_failure_then_reship(spark):
         if str(uuid.UUID(int=100)) in payload:
             raise RuntimeError("splunk 500")
 
-    res = ship_unshipped(
-        events, empty_cursors(spark), "cf-audit-events-to-splunk",
-        flaky, retry=NO_SLEEP,
+    shipped = ship_tick(
+        store, flaky, SHIPPER, "test", 8192, retry=NO_SLEEP, metrics=metrics
     )
     # batch 1 shipped, batch 2 failed after retries, batch 3 never tried
-    assert res.shipped == 100 and res.failed
+    assert shipped == 100 and metrics.get(ERRORS) == 1
     # 1 success + (1 initial + 3 retries) for the failure
     assert len(calls) == 5
     assert not any(str(uuid.UUID(int=200)) in c for c in calls)
-    ts, sid = effective_cursor(res.cursors_df, "cf-audit-events-to-splunk")
+    ts, sid = store.effective_cursor(SHIPPER)
     # cursor at the last event of the last acknowledged batch
     assert (ts, sid) == (BASE + dt.timedelta(seconds=99), str(uuid.UUID(int=99)))
 
     # next tick: events ≥ cursor-ts excluding exactly shipped_id re-ship
     # (P7 boundary semantics, at-least-once T4)
     sent2: list[str] = []
-    res2 = ship_unshipped(
-        events, res.cursors_df, "cf-audit-events-to-splunk",
-        sent2.append, retry=NO_SLEEP,
+    shipped2 = ship_tick(
+        store, sent2.append, SHIPPER, "test", 8192,
+        retry=NO_SLEEP, metrics=metrics,
     )
-    assert res2.shipped == 150 and not res2.failed
+    assert shipped2 == 150 and metrics.get(ERRORS) == 1
     assert len(sent2) == 2
     import json as _json
 
@@ -266,7 +283,7 @@ def test_ship_stop_on_failure_then_reship(spark):
     assert guids == [str(uuid.UUID(int=i)) for i in range(100, 250)]
 
 
-def test_ship_batch_bounds(spark):
+def test_ship_batch_bounds(spark, tmp_path):
     """Batches end at HEC_BATCH_EVENTS events or before HEC_BATCH_BYTES of
     body; order holds across bodies and every envelope is the
     ``build_payloads`` payload, byte for byte."""
@@ -277,12 +294,15 @@ def test_ship_batch_bounds(spark):
 
     assert HEC_BATCH_EVENTS == 100
     events = _events_df(spark, 250)
+    store = _stored(spark, tmp_path, events)
+    metrics = MetricsRegistry()
     sent: list[str] = []
-    res = ship_unshipped(
-        events, empty_cursors(spark), "cf-audit-events-to-splunk",
-        sent.append, retry=NO_SLEEP,
+    shipped = ship_tick(
+        store, sent.append, SHIPPER, "test", 8192,
+        retry=NO_SLEEP, metrics=metrics,
     )
-    assert res.shipped == 250 and not res.failed
+    assert shipped == 250
+    assert metrics.get(ERRORS) == 0
     assert [len(b.split("\n")) for b in sent] == [100, 100, 50]
     want = [
         r["payload"]
@@ -824,32 +844,24 @@ def test_delete_keys_keeps_null_key_rows(spark, tmp_path):
     assert left.filter(F.col("guid").isNull()).count() == 1
 
 
-def test_null_guid_rows_quarantined_and_never_reappended(spark):
+def test_null_guid_rows_quarantined_and_never_reappended(spark, tmp_path):
     """A null-guid event fails validation (reference: guid NOT NULL PK),
-    and even if one reaches the merge, the anti-join guard keeps it from
-    re-appending on every overlap re-read (NULL never equals NULL)."""
-    from pyspark.sql import Row
-
-    from paas_auditor_spark.operators.ingest import idempotent_merge
-
-    schema = "guid string, created_at timestamp, event_type string"
-    base = dt.datetime(2024, 3, 1, 12, 0, 0)
-    batch = spark.createDataFrame(
-        [
-            Row(guid="g1", created_at=base, event_type="a"),
-            Row(guid=None, created_at=base, event_type="x"),
-        ],
-        schema,
+    so ``ingest_delta`` never stores it — not on the first pass, and not
+    on a re-read, where a NULL key could never match the anti-join
+    (NULL never equals NULL)."""
+    null_guid = make_event(2)
+    null_guid["metadata"]["guid"] = None
+    batch = pages_to_dataframe(
+        spark,
+        [{"total_results": 2, "total_pages": 1, "next_url": None,
+          "resources": [make_event(1), null_guid]}],
     )
     valid, quarantined = validate_events(batch, ts_col="created_at")
     assert valid.count() == 1
     assert quarantined.count() == 1
 
-    target = spark.createDataFrame([], schema)
-    t1, fresh1 = idempotent_merge(target, batch, key_col="guid",
-                                  ts_col="created_at")
-    t2, fresh2 = idempotent_merge(t1, batch, key_col="guid",
-                                  ts_col="created_at")
-    # the null-guid row lands zero times; g1 exactly once
-    assert t2.count() == 1
-    assert fresh2.count() == 0
+    store = ParquetStore(spark, str(tmp_path / "wh"))
+    assert ingest_delta(batch, store) == 1
+    assert ingest_delta(batch, store) == 0
+    # the null-guid row lands zero times; event 1 exactly once
+    assert store.events_df().count() == 1

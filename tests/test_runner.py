@@ -310,31 +310,11 @@ def test_service_tick_posts_ordered_batches(spark, tmp_path):
 def test_service_batch_failure_delivery_contract(spark, tmp_path):
     """Fault on the batched shipper with a real ParquetStore: every
     attempt at batch 2 fails during tick 1 (HEC took the body but the
-    response never came back), tick 2 is healthy.  The delivery contract
-    holds: every event delivered, no duplicate stored rows, a cursor that
-    only moves forward, and at most one batch re-shipped."""
-    import urllib.parse
-
+    response never came back), tick 2 is healthy.  The source ignores
+    ``q=timestamp>``, so tick 2 re-reads every event.  The delivery
+    contract holds: every event delivered, no duplicate stored rows, a
+    cursor that only moves forward, and at most one batch re-shipped."""
     from paas_auditor_spark.sinks.hec import HEC_BATCH_EVENTS
-    from paas_auditor_spark.sources.paginated_http import TIME_FORMAT
-
-    class FilteringPageServer(PageServer):
-        """Honours ``q=timestamp>`` like the CF API.  A source that ignores
-        it makes the collector re-append old events — a separate known
-        defect of the watermark-bounded anti-join, not under test here."""
-
-        def __call__(self, url: str) -> dict:
-            q = urllib.parse.parse_qs(urllib.parse.urlparse(url).query)["q"][0]
-            since = dt.datetime.strptime(q.split(">", 1)[1], TIME_FORMAT)
-            page = super().__call__(url)
-            page["resources"] = [
-                r for r in page["resources"]
-                if dt.datetime.strptime(
-                    r["metadata"]["created_at"], TIME_FORMAT
-                ) > since
-            ]
-            page["total_results"] = len(page["resources"])
-            return page
 
     delivered: list[str] = []  # every body that reached the collector
     tick = {"n": 1}
@@ -349,7 +329,7 @@ def test_service_batch_failure_delivery_contract(spark, tmp_path):
     svc = Service(
         spark,
         warehouse_dir=str(tmp_path / "whfault"),
-        transport=FilteringPageServer(range(250)),
+        transport=PageServer(range(250)),
         sender=hec,
         cfg=cfg,
     )
@@ -382,6 +362,135 @@ def test_service_batch_failure_delivery_contract(spark, tmp_path):
     assert reshipped == {str(uuid.UUID(int=i)) for i in range(100, 200)}
     assert len(reshipped) <= HEC_BATCH_EVENTS
     assert svc.totals.shipped == 250
+
+
+def test_collector_never_reappends_rows_older_than_watermark(spark, tmp_path):
+    """A source that ignores ``q=timestamp>`` returns, on every tick, rows
+    older than the fetch watermark; each is stored once (ON CONFLICT
+    (guid) DO NOTHING, store.go:92)."""
+    cfg = EngineConfig()
+    cfg.pagination_wait_s = 0.0
+    svc = Service(
+        spark, warehouse_dir=str(tmp_path / "whold"),
+        transport=PageServer(range(20)), cfg=cfg,
+    )
+    svc.run_loops(max_ticks=1)
+    svc.run_loops(max_ticks=1)
+    events = spark.read.parquet(svc.paths["cf_audit_events"])
+    assert events.count() == events.select("guid").distinct().count() == 20
+    assert svc.totals.collected == 20
+
+
+class PagedSource:
+    """CF ``/v2/events`` stand-in over events ``0..visible-1``: pages of
+    100 chained by ``next_url``, honouring ``q=timestamp>`` unless
+    ``ignore_filter``; ``fail_page`` answers that page once with a 503."""
+
+    def __init__(self, ignore_filter: bool = False, fail_page: int | None = None):
+        self.visible = 0
+        self.ignore_filter = ignore_filter
+        self.fail_page = fail_page
+
+    def __call__(self, url: str) -> dict:
+        import urllib.error
+        import urllib.parse
+
+        from paas_auditor_spark.sources.paginated_http import TIME_FORMAT
+
+        query = urllib.parse.parse_qs(urllib.parse.urlparse(url).query)
+        since = dt.datetime.strptime(query["q"][0].split(">", 1)[1], TIME_FORMAT)
+        page = int(query.get("page", ["1"])[0])
+        if page == self.fail_page:
+            self.fail_page = None
+            raise urllib.error.HTTPError(url, 503, "Service Unavailable", {}, None)
+        ids = [
+            i for i in range(self.visible)
+            if self.ignore_filter or BASE + dt.timedelta(seconds=i) > since
+        ]
+        more = page * 100 < len(ids)
+        return {
+            "total_results": len(ids),
+            "total_pages": -(-len(ids) // 100),
+            "next_url": (
+                f"/v2/events?q={query['q'][0]}&page={page + 1}" if more else None
+            ),
+            "resources": [_resource(i) for i in ids[(page - 1) * 100:page * 100]],
+        }
+
+
+@pytest.mark.parametrize(
+    "fault", ["hec_timeout", "cf_5xx", "old_rows", "commit_crash"]
+)
+def test_service_delivery_contract_under_faults(spark, tmp_path, fault):
+    """The delivery contract under each injected fault, over three
+    ``Service`` ticks sharing one warehouse: 200 events visible at tick 1,
+    250 from tick 2.
+
+    - ``hec_timeout``: every attempt at HEC batch 2 times out in tick 1;
+    - ``cf_5xx``: CF page 2 answers 503 in tick 1, the collector raises
+      (fail-fast) and the next tick recovers;
+    - ``old_rows``: the source ignores ``q=timestamp>``;
+    - ``commit_crash``: the cursor commit fails once after tick 2 shipped
+      its one batch, as if the process died between the HEC ack and the
+      commit.  Re-ships are bounded by that tick's delivery, one batch here.
+
+    Contract: every event delivered, stored rows equal distinct guids,
+    the cursor only moves forward, at most one batch re-shipped."""
+    import urllib.error
+    from collections import Counter
+
+    from paas_auditor_spark.sinks.hec import HEC_BATCH_EVENTS
+    from paas_auditor_spark.stores import ParquetStore
+
+    tick = {"n": 0}
+    delivered: list[str] = []
+
+    def hec(payload: str) -> None:
+        delivered.append(payload)
+        if (
+            fault == "hec_timeout" and tick["n"] == 1
+            and str(uuid.UUID(int=100)) in payload
+        ):
+            raise TimeoutError("HEC response timed out")
+
+    class Store(ParquetStore):
+        crashes = int(fault == "commit_crash")
+
+        def upsert_cursor(self, *args) -> None:
+            if tick["n"] == 2 and self.crashes:
+                self.crashes -= 1
+                raise OSError("killed before the cursor commit")
+            super().upsert_cursor(*args)
+
+    cfg = EngineConfig()
+    cfg.pagination_wait_s = 0.0
+    source = PagedSource(
+        ignore_filter=fault == "old_rows",
+        fail_page=2 if fault == "cf_5xx" else None,
+    )
+    svc = Service(
+        spark, store=Store(spark, str(tmp_path / "wh")), transport=source,
+        sender=hec, cfg=cfg,
+    )
+    cursors = []
+    for n, visible in ((1, 200), (2, 250), (3, 250)):
+        tick["n"], source.visible = n, visible
+        if fault == "cf_5xx" and n == 1:
+            with pytest.raises(urllib.error.HTTPError):
+                svc.run_loops(max_ticks=1)
+        else:
+            svc.run_loops(max_ticks=1)
+        cursors.append(svc.store.effective_cursor(SHIPPER_NAME))
+
+    events = svc.store.events_df()
+    assert events.count() == events.select("guid").distinct().count() == 250
+    counts = Counter(e["event"]["guid"] for e in hec_events(delivered))
+    assert set(counts) == {str(uuid.UUID(int=i)) for i in range(250)}
+    assert cursors == sorted(cursors)
+    assert cursors[-1] == (
+        BASE + dt.timedelta(seconds=249), str(uuid.UUID(int=249))
+    )
+    assert len([g for g, k in counts.items() if k > 1]) <= HEC_BATCH_EVENTS
 
 
 # the threaded collector's fail-fast exit is the behaviour under test

@@ -1,4 +1,4 @@
-"""Structured Streaming ingest: micro-batch file source → dedup → bronze
+"""Structured Streaming ingest: micro-batch file source → dedup → store
 (T1/T3/T5/T7 semantics through the real streaming engine)."""
 
 from __future__ import annotations
@@ -8,7 +8,8 @@ import uuid
 import pytest
 
 from paas_auditor_spark.schemas import CF_AUDIT_EVENT
-from paas_auditor_spark.streaming.pipeline import stream_to_bronze
+from paas_auditor_spark.stores import ParquetStore
+from paas_auditor_spark.streaming.pipeline import stream_to_store
 
 BASE = dt.datetime(2024, 3, 1, 12, 0, 0)
 
@@ -27,9 +28,9 @@ def _rows(ids):
     ]
 
 
-def test_stream_to_bronze_dedups_across_microbatches(spark, tmp_path):
+def test_stream_to_store_dedups_across_microbatches(spark, tmp_path):
     src = str(tmp_path / "src")
-    bronze = str(tmp_path / "bronze")
+    store = ParquetStore(spark, str(tmp_path / "wh"))
     ckpt = str(tmp_path / "ckpt")
 
     # two source files with overlapping guids; maxFilesPerTrigger=1 forces
@@ -41,30 +42,17 @@ def test_stream_to_bronze_dedups_across_microbatches(spark, tmp_path):
         1
     ).write.mode("append").parquet(src)
 
-    q = stream_to_bronze(
-        spark, src, bronze, ckpt, CF_AUDIT_EVENT, max_files_per_trigger=1
+    q = stream_to_store(
+        spark, src, store, ckpt, CF_AUDIT_EVENT, max_files_per_trigger=1
     )
     try:
         q.processAllAvailable()
     finally:
         q.stop()  # graceful shutdown (T7)
 
-    out = spark.read.parquet(bronze)
+    out = store.events_df()
     assert out.count() == 5
     assert out.select("guid").distinct().count() == 5
-    # the persisted ingest ordering key (id SERIAL analog, SURVEY §1.2):
-    # each micro-batch stamped with its epoch id, two distinct batches here
-    assert "ingest_batch_id" in out.columns
-    assert out.select("ingest_batch_id").distinct().count() == 2
-    # dense global sequence over (batch, created_at, guid) is 1..5 and
-    # respects insertion order (earlier batch strictly precedes later)
-    from paas_auditor_spark.operators.sequence import assign_ingest_sequence
-
-    seq = assign_ingest_sequence(out).collect()
-    assert sorted(r["ingest_seq"] for r in seq) == [1, 2, 3, 4, 5]
-    by_seq = sorted(seq, key=lambda r: r["ingest_seq"])
-    batches = [r["ingest_batch_id"] for r in by_seq]
-    assert batches == sorted(batches)
 
 
 def test_windowed_counts_streaming_matches_batch(spark, tmp_path):
@@ -300,11 +288,8 @@ def test_available_now_backfill_drains_then_stops(spark, tmp_path):
     only new files, never re-appending the old ones."""
     import datetime as dt
 
-    from paas_auditor_spark.schemas import CF_AUDIT_EVENT
-    from paas_auditor_spark.streaming.pipeline import stream_to_bronze
-
     src = str(tmp_path / "an_src")
-    bronze = str(tmp_path / "an_bronze")
+    store = ParquetStore(spark, str(tmp_path / "an_wh"))
     ckpt = str(tmp_path / "an_ckpt")
     base = dt.datetime(2024, 1, 1)
 
@@ -319,13 +304,13 @@ def test_available_now_backfill_drains_then_stops(spark, tmp_path):
         "overwrite"
     ).parquet(src)
 
-    q = stream_to_bronze(
-        spark, src, bronze, ckpt, CF_AUDIT_EVENT,
+    q = stream_to_store(
+        spark, src, store, ckpt, CF_AUDIT_EVENT,
         max_files_per_trigger=1, available_now=True,
     )
     q.awaitTermination(120)  # availableNow terminates by itself
     assert not q.isActive
-    first = spark.read.parquet(bronze)
+    first = store.events_df()
     assert first.count() == 4  # dup dropped
     assert first.select("guid").distinct().count() == 4
 
@@ -333,13 +318,13 @@ def test_available_now_backfill_drains_then_stops(spark, tmp_path):
     spark.createDataFrame(
         [mk("g9", 9), mk("g2", 2)], CF_AUDIT_EVENT
     ).coalesce(1).write.mode("append").parquet(src)
-    q2 = stream_to_bronze(
-        spark, src, bronze, ckpt, CF_AUDIT_EVENT,
+    q2 = stream_to_store(
+        spark, src, store, ckpt, CF_AUDIT_EVENT,
         max_files_per_trigger=1, available_now=True,
     )
     q2.awaitTermination(120)
-    out = spark.read.parquet(bronze)
-    # 4 + g9: the windowed anti-join's bronze slice reaches back to the
+    out = store.events_df()
+    # 4 + g9: the windowed anti-join's store slice reaches back to the
     # new batch's min ts (minute 2), so the re-sent g2 dedups across runs
     assert out.count() == 5
     assert out.filter("guid = 'g9'").count() == 1
