@@ -3,13 +3,14 @@ Cloud Foundry API + Splunk HEC, configured via the reference's env vars
 (main_config.go:15-108: CF_API_ADDRESS, SPLUNK_HEC_ENDPOINT_URL,
 SPLUNK_HEC_AUTH_TOKEN, *_SCHEDULE, FETCHER_PAGINATION_WAIT_TIME).
 
-Network transports are urllib-based (stdlib only); every piece is the same
-injectable used by the test fakes.
+The CF transport for both collector modes is
+``sources.paginated_http.resolve_transport`` (re-exported here); the
+Splunk sender is urllib-based.  Every piece is the same injectable the
+test fakes use.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import signal
 import sys
@@ -18,24 +19,10 @@ import urllib.request
 from paas_auditor_spark.config import EngineConfig
 from paas_auditor_spark.runner import Service
 from paas_auditor_spark.session import get_spark
-
-
-def _http_transport(url: str) -> dict:
-    with urllib.request.urlopen(url, timeout=30) as resp:  # noqa: S310
-        return json.load(resp)
-
-
-def _bearer_transport(token: str):
-    """Static-token transport (reference CF_TOKEN mode, client.go:343-344)."""
-
-    def get(url: str) -> dict:
-        req = urllib.request.Request(
-            url, headers={"Authorization": f"bearer {token}"}
-        )
-        with urllib.request.urlopen(req, timeout=30) as resp:  # noqa: S310
-            return json.load(resp)
-
-    return get
+from paas_auditor_spark.sources.paginated_http import (
+    CF_AUTH_ENV,
+    resolve_transport,
+)
 
 
 def _splunk_sender(endpoint: str, token: str):
@@ -53,44 +40,13 @@ def _splunk_sender(endpoint: str, token: str):
     return send
 
 
-def resolve_transport(environ, base_url: str):
-    """CF auth — the reference's go-cfclient mode switch (client.go:342-352):
-    static CF_TOKEN first, then CF_CLIENT_ID client-credentials, then
-    CF_USERNAME/CF_PASSWORD password grant (main_config.go:42-47); with no
-    creds at all, unauthenticated (the test/synthetic path)."""
-    client_id = environ.get("CF_CLIENT_ID", "")
-    client_secret = environ.get("CF_CLIENT_SECRET", "")
-    username = environ.get("CF_USERNAME", "")
-    password = environ.get("CF_PASSWORD", "")
-    if environ.get("CF_TOKEN"):
-        return _bearer_transport(environ["CF_TOKEN"])
-    if client_id and client_secret:
-        from paas_auditor_spark.sources.paginated_http import (
-            discover_token_url,
-            uaa_transport,
-        )
-
-        return uaa_transport(
-            environ.get("CF_TOKEN_URL") or discover_token_url(base_url),
-            client_id,
-            client_secret,
-        )
-    if username:
-        from paas_auditor_spark.sources.paginated_http import (
-            discover_token_url,
-            uaa_transport,
-        )
-
-        # go-cfclient runs the password grant as the public "cf" client
-        # with an empty secret (client.go:155-165)
-        return uaa_transport(
-            environ.get("CF_TOKEN_URL") or discover_token_url(base_url),
-            "cf",
-            "",
-            username=username,
-            password=password,
-        )
-    return _http_transport
+def stream_source_options(environ, cfg: EngineConfig) -> dict:
+    """``cf_events`` options for streaming mode: the CF credentials that
+    are set (the source resolves them like loop mode's
+    ``resolve_transport``) and the loop's page pacing."""
+    options: dict = {k: environ[k] for k in CF_AUTH_ENV if environ.get(k)}
+    options["wait_s"] = cfg.pagination_wait_s
+    return options
 
 
 def resolve_sender(environ):
@@ -153,30 +109,12 @@ def main() -> int:
     # fully native Structured Streaming pipeline (readStream cf_events →
     # store; streaming/pipeline.py::stream_api_to_store): offsets
     # checkpoint the watermark, the store's idempotence absorbs overlap
-    # re-reads.  Shipper + informer loops run unchanged beside it.
+    # re-reads.  The source fetches with the same CF client, credentials
+    # and page pacing as loop mode.  Shipper + informer loops run
+    # unchanged beside it.
     collector_query = None
     if os.environ.get("ENGINE_MODE", "").lower() == "streaming":
         from paas_auditor_spark.streaming.pipeline import stream_api_to_store
-
-        # auth flows to the native source: UAA client-credentials (the
-        # reader acquires + refreshes its own bearer token) or a static
-        # CF_TOKEN — NOT the loop-mode transport, which is unused here.
-        client_id = os.environ.get("CF_CLIENT_ID", "")
-        client_secret = os.environ.get("CF_CLIENT_SECRET", "")
-        source_auth: dict = {}
-        if client_id and client_secret:
-            from paas_auditor_spark.sources.paginated_http import (
-                discover_token_url,
-            )
-
-            source_auth = {
-                "client_id": client_id,
-                "client_secret": client_secret,
-                "token_url": os.environ.get("CF_TOKEN_URL")
-                or discover_token_url(base_url),
-            }
-        elif os.environ.get("CF_TOKEN"):
-            source_auth = {"token": os.environ["CF_TOKEN"]}
 
         collector_query = stream_api_to_store(
             spark,
@@ -187,7 +125,7 @@ def main() -> int:
                 "COLLECTOR_TRIGGER", "120 seconds"
             ),
             metrics=service.metrics,
-            extra_options=source_auth or None,
+            extra_options=stream_source_options(os.environ, cfg),
         )
         # streaming mode is the one that runs foreachBatch collectors, so
         # the maintenance loop rides along (no-op until a dataset is

@@ -1,7 +1,7 @@
-"""Ingest operators: envelope normalization, validation, idempotent append.
+"""Ingest operators: validation, idempotent append, the one ingest step.
 
-Reference behavior being re-expressed:
-- S4 envelope decode + flatten (pkg/fetchers/cf_audit_event_fetcher.go:71-81)
+Reference behavior being re-expressed (the S4 envelope decode that feeds
+this step is ``sources.paginated_http.decode_resource``):
 - P8 event-time validity CHECK (create_cf_audit_events.sql:26-30)
 - T2 incremental watermark with 5s overlap re-read
   (pkg/collectors/cf_audit_event_collector.go:36,92-104) — computed by
@@ -26,41 +26,7 @@ import datetime as dt
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from paas_auditor_spark.schemas import EVENTS_ENVELOPE
 from paas_auditor_spark.streaming.metrics import MetricsRegistry
-
-
-def normalize_envelope(raw_df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Decode the /v2/events JSON envelope into flat event rows.
-
-    Parity with reference cf_audit_event_fetcher.go:71-81: decode
-    ``EventsResponse``, explode ``resources``, and flatten ``metadata.guid``
-    / ``metadata.created_at`` into the entity (the envelope's Meta wins over
-    the entity's own fields, which the reference ignores).
-    All JVM-side expressions — no Python in the hot path.
-    """
-    parsed = raw_df.select(
-        F.from_json(F.col(payload_col), EVENTS_ENVELOPE).alias("env")
-    )
-    resources = parsed.select(F.explode("env.resources").alias("r"))
-    return resources.select(
-        F.col("r.metadata.guid").alias("guid"),
-        F.to_timestamp("r.metadata.created_at").alias("created_at"),
-        F.col("r.entity.type").alias("event_type"),
-        F.col("r.entity.actor").alias("actor"),
-        F.col("r.entity.actor_type").alias("actor_type"),
-        F.col("r.entity.actor_name").alias("actor_name"),
-        F.col("r.entity.actor_username").alias("actor_username"),
-        F.col("r.entity.actee").alias("actee"),
-        F.col("r.entity.actee_type").alias("actee_type"),
-        F.col("r.entity.actee_name").alias("actee_name"),
-        # '' -> NULL on write, reference store.go:91 (P3)
-        F.nullif(F.col("r.entity.organization_guid"), F.lit("")).alias(
-            "organization_guid"
-        ),
-        F.nullif(F.col("r.entity.space_guid"), F.lit("")).alias("space_guid"),
-        F.to_json("r.entity.metadata").alias("metadata"),
-    )
 
 
 def validate_events(
@@ -161,6 +127,5 @@ def ingest_delta(
 __all__ = [
     "idempotent_append",
     "ingest_delta",
-    "normalize_envelope",
     "validate_events",
 ]

@@ -4720,7 +4720,7 @@ def q_avro_bronze_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     microsecond and value BIT that went into the Avro bytes came back
     out (DuckDB never sees an Avro byte — the WAV-audio certification
     pattern).  Bronze motivation: the reference's envelope dump/replay
-    surface (cf_audit_event_fetcher.go:22-35, sources/jsonl.py) widened
+    surface (cf_audit_event_fetcher.go:22-35) widened
     to the Avro landing-zone format CDC/Kafka pipelines actually
     ship."""
     from paas_auditor_spark.sources.avro_io import avro_scan

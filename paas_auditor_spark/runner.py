@@ -32,12 +32,12 @@ from pyspark.sql import SparkSession
 
 from paas_auditor_spark.config import EngineConfig
 from paas_auditor_spark.logs import JsonLogger
-from paas_auditor_spark.operators.cursor import EPOCH_TS
 from paas_auditor_spark.operators.ingest import ingest_delta
 from paas_auditor_spark.sources.paginated_http import (
     Transport,
     fetch_event_pages,
     pages_to_dataframe,
+    watermark,
 )
 from paas_auditor_spark.stores import ParquetStore
 from paas_auditor_spark.streaming.metrics import MetricsRegistry
@@ -111,11 +111,11 @@ class Service:
     # -- ticks ------------------------------------------------------------
 
     def _watermark(self) -> dt.datetime:
-        """max(created_at) − overlap, epoch default + year<1970 guard (T2,
-        reference cf_audit_event_collector.go:36,92-104)."""
-        latest = self.store.latest_event_time()
-        wm = latest - dt.timedelta(seconds=self.cfg.watermark_overlap_s)
-        return EPOCH_TS if wm.year < 1970 else wm
+        """max(created_at) − overlap over the store (T2, reference
+        cf_audit_event_collector.go:36,92-104)."""
+        return watermark(
+            self.store.latest_event_time(), self.cfg.watermark_overlap_s
+        )
 
     def collector_tick(self) -> int:
         """Fetch since the watermark and store ONLY the fresh delta."""

@@ -4,10 +4,8 @@ Mirrors the reference's data model (SURVEY.md §1):
 
 - ``CF_AUDIT_EVENT``: the event-table schema
   (reference pkg/db/sql/create_cf_audit_events.sql:1-32) — 12 scalar fields,
-  event-time timestamp, raw-JSON metadata string.
-- ``EVENTS_ENVELOPE``: the paginated HTTP response envelope
-  (reference vendor/github.com/cloudfoundry-community/go-cfclient/events.go:12-23,
-  Meta at vendor/.../types.go:3-8).
+  event-time timestamp, raw-JSON metadata string.  The /v2/events envelope
+  is decoded into these columns by ``sources.paginated_http``.
 - ``SHIPPER_CURSOR``: per-sink ship-progress state
   (reference pkg/db/sql/create_shipper_cursors.sql:1-18).
 
@@ -40,56 +38,6 @@ CF_AUDIT_EVENT = T.StructType(
         T.StructField("space_guid", T.StringType(), True),
         # raw JSON string for byte-faithful round-trip (JSONB in reference)
         T.StructField("metadata", T.StringType(), True),
-    ]
-)
-
-# reference vendor/.../types.go:3-8
-ENVELOPE_META = T.StructType(
-    [
-        T.StructField("guid", T.StringType(), True),
-        T.StructField("url", T.StringType(), True),
-        T.StructField("created_at", T.StringType(), True),
-        T.StructField("updated_at", T.StringType(), True),
-    ]
-)
-
-# reference vendor/.../events.go:26-41 — all scalar fields are strings
-ENVELOPE_ENTITY = T.StructType(
-    [
-        T.StructField("type", T.StringType(), True),
-        T.StructField("actor", T.StringType(), True),
-        T.StructField("actor_type", T.StringType(), True),
-        T.StructField("actor_name", T.StringType(), True),
-        T.StructField("actor_username", T.StringType(), True),
-        T.StructField("actee", T.StringType(), True),
-        T.StructField("actee_type", T.StringType(), True),
-        T.StructField("actee_name", T.StringType(), True),
-        T.StructField("timestamp", T.StringType(), True),
-        T.StructField("organization_guid", T.StringType(), True),
-        T.StructField("space_guid", T.StringType(), True),
-        T.StructField("metadata", T.MapType(T.StringType(), T.StringType()), True),
-    ]
-)
-
-# reference vendor/.../events.go:12-23
-EVENTS_ENVELOPE = T.StructType(
-    [
-        T.StructField("total_results", T.IntegerType(), True),
-        T.StructField("total_pages", T.IntegerType(), True),
-        T.StructField("prev_url", T.StringType(), True),
-        T.StructField("next_url", T.StringType(), True),
-        T.StructField(
-            "resources",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("metadata", ENVELOPE_META, True),
-                        T.StructField("entity", ENVELOPE_ENTITY, True),
-                    ]
-                )
-            ),
-            True,
-        ),
     ]
 )
 

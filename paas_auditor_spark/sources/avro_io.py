@@ -3,8 +3,8 @@ the Spark plumbing (distributed scan, per-partition sink).
 
 The bronze landing zone of a real ingestion pipeline is often Avro
 (Kafka Connect, Debezium, CDC dumps), and the reference's bronze
-surface is the same envelope-file shape its JSONL replay path covers
-(cf_audit_event_fetcher.go:22-35; see ``sources/jsonl.py``).  The
+surface is the /v2/events envelope its fetcher decodes
+(cf_audit_event_fetcher.go:22-35).  The
 ``spark-avro`` connector jar is absent in this environment, so — the
 PPM-image / WAV-audio convention — the CODEC is implemented here from
 the public Apache Avro 1.12 specification (binary encoding + object
@@ -541,7 +541,7 @@ def avro_stream(
     """Streaming Avro bronze ingestion: the same block decode as
     ``avro_scan`` over an UNBOUNDED binaryFile source — drop container
     files into the landing zone and each micro-batch picks up at most
-    ``max_files_per_trigger`` of them (the jsonl replay source's
+    ``max_files_per_trigger`` of them (``stream_to_store``'s
     file-count rate limiting, S3/T5).  Pair with the collector
     choreography (``streaming.pipeline.store_sink`` or another
     ``foreachBatch`` hook) for the sink; file-source checkpointing makes replays exactly the committed

@@ -1,304 +1,85 @@
-"""CF audit events as a NATIVE Spark data source (Python DataSource API,
-Spark 4): ``spark.read.format("cf_events").option("base_url", …).load()``.
+"""CF audit events as a native Structured Streaming source (Python
+DataSource API, Spark 4): ``spark.readStream.format("cf_events")``.
 
-This lifts the S1 paginated scan from a driver-side pager into a
-first-class source the planner understands:
+An offset adapter over the CF client in ``sources/paginated_http.py``:
+each micro-batch fetches through the same transport, ``next_url`` pager,
+decoder and watermark rule as the loop-mode collector, so both modes
+store the same rows.  Options:
 
-- **Partitioned parallel fetch**: planning probes page 1 for
-  ``total_pages`` and splits the page range into ``InputPartition``s —
-  executors fetch page ranges concurrently (the reference walks
-  ``next_url`` serially at ≤500 events/s; page-numbered fetch is the
-  parallel form of the same API, cf_audit_event_fetcher.go:33-57).
-- **Native predicate pushdown (S2)**: a ``created_at > X`` / ``>= X``
-  filter is claimed in ``pushFilters`` and becomes the API's
-  ``q=timestamp>…`` parameter — the source transfers only the watermark
-  window.  The filter is ALSO returned to Spark (partial pushdown), so
-  boundary semantics are re-verified engine-side and a lying server
-  cannot corrupt results.
-- **Politeness**: per-request pacing within a partition via ``wait_s``
-  (reference fetcher.go:55); overall concurrency is bounded by the
-  number of partitions.
-
-Python-side JSON decode is deliberate here: the API fetch is the
-bottleneck (network + the reference's 100-events/page envelope), so the
-decode rides inside the same I/O-bound task — unlike file scans, there
-is no JVM fast path being given up.  Auth: pass ``token`` (or wire
-``sources.paginated_http.uaa_transport``'s token) — sent as a Bearer
-header.
+- ``base_url`` (required), ``page_size`` (default 100);
+- ``wait_s``: pause between pages (default 0; the CLI passes
+  ``FETCHER_PAGINATION_WAIT_TIME``);
+- ``since``: first watermark (default the epoch), ``overlap_s``: the
+  watermark overlap (default 5 s);
+- the CLI's credential names (``CF_TOKEN``, ``CF_CLIENT_ID``,
+  ``CF_CLIENT_SECRET``, ``CF_USERNAME``, ``CF_PASSWORD``,
+  ``CF_TOKEN_URL``), resolved by ``paginated_http.resolve_transport``.
 
 Register per-session:  ``spark.dataSource.register(CfEventsDataSource)``.
 """
 
 from __future__ import annotations
 
-import datetime as dt
-import json
-import time
-import urllib.error
-import urllib.request
+from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    GreaterThan,
-    GreaterThanOrEqual,
-    InputPartition,
-    SimpleDataSourceStreamReader,
+from paas_auditor_spark.operators.cursor import EPOCH_TS
+from paas_auditor_spark.sources.paginated_http import (
+    EVENT_ROWS,
+    TIME_FORMAT,
+    decode_pages,
+    fetch_event_pages,
+    parse_created,
+    resolve_transport,
+    watermark,
 )
-
-from paas_auditor_spark.schemas import CF_AUDIT_EVENT
-
-TIME_FORMAT = "%Y-%m-%dT%H:%M:%SZ"
-EPOCH_STR = "1970-01-01T00:00:00Z"
-
-
-class _PageRange(InputPartition):
-    def __init__(self, start: int, end: int, preloaded: list | None = None):
-        self.start = start
-        self.end = end
-        # resources of page `start`, already fetched by the planning
-        # probe — carried into the partition so page 1 is requested
-        # exactly once per load (the streaming reader's discipline)
-        self.preloaded = preloaded
-
-
-def _parse_created(created) -> dt.datetime | None:
-    """Tolerant RFC3339 parse: canonical ``...Z`` fast path, then
-    fromisoformat for fractional-second / numeric-offset variants
-    (normalized to naive UTC).  Unparseable values become None — the
-    row is quarantined by validate_events downstream instead of the
-    whole scan task (and, on retry, the job) dying on one bad record."""
-    if not created:
-        return None
-    try:
-        return dt.datetime.strptime(created, TIME_FORMAT)
-    except ValueError:
-        pass
-    try:
-        parsed = dt.datetime.fromisoformat(created.replace("Z", "+00:00"))
-    except ValueError:
-        return None
-    if parsed.tzinfo is not None:
-        parsed = parsed.astimezone(dt.timezone.utc).replace(tzinfo=None)
-    return parsed
-
-
-def _flatten(resource: dict) -> tuple:
-    """One envelope resource → a CF_AUDIT_EVENT tuple (same field mapping
-    as operators/ingest.normalize_envelope; '' → NULL for org/space)."""
-    meta = resource.get("metadata") or {}
-    ent = resource.get("entity") or {}
-    ts = _parse_created(meta.get("created_at"))
-    return (
-        meta.get("guid"),
-        ts,
-        ent.get("type"),
-        ent.get("actor"),
-        ent.get("actor_type"),
-        ent.get("actor_name"),
-        ent.get("actor_username"),
-        ent.get("actee"),
-        ent.get("actee_type"),
-        ent.get("actee_name"),
-        ent.get("organization_guid") or None,
-        ent.get("space_guid") or None,
-        json.dumps(ent.get("metadata"), sort_keys=True)
-        if ent.get("metadata") is not None
-        else None,
-    )
-
-
-class CfEventsReader(DataSourceReader):
-    def __init__(self, options):
-        self.base_url = options["base_url"].rstrip("/")
-        self.page_size = int(options.get("page_size", 100))
-        self.pages_per_partition = int(options.get("pages_per_partition", 8))
-        self.wait_s = float(options.get("wait_s", 0.0))
-        self.timeout_s = float(options.get("timeout_s", 30.0))
-        self.token = options.get("token")
-        # UAA client-credentials (reference main_config.go:42-46): when
-        # set, the reader acquires its own bearer token and refreshes it
-        # once on 401 — each executor task holds at most one token.
-        self.token_url = options.get("token_url")
-        self.client_id = options.get("client_id")
-        self.client_secret = options.get("client_secret")
-        self.max_retries = int(options.get("max_retries", 3))
-        self.retry_backoff_s = float(options.get("retry_backoff_s", 0.5))
-        self.since: str | None = None
-
-    # -- S2: claim the time predicate for the API query --------------------
-
-    def pushFilters(self, filters):
-        for f in filters:
-            if (
-                isinstance(f, (GreaterThan, GreaterThanOrEqual))
-                and f.attribute == ("created_at",)
-                and isinstance(f.value, dt.datetime)
-            ):
-                # the API operator is STRICT (q=timestamp>); a >= filter
-                # must back off one second so boundary-timestamp rows are
-                # still transferred — Spark's re-verify (below) trims the
-                # over-fetch exactly.
-                floor = f.value
-                if isinstance(f, GreaterThanOrEqual):
-                    floor = floor - dt.timedelta(seconds=1)
-                self.since = floor.strftime(TIME_FORMAT)
-            # yield EVERYTHING back (partial pushdown): the source narrows
-            # the transfer, Spark re-verifies the exact boundary.
-            yield f
-
-    # -- fetch plumbing -----------------------------------------------------
-
-    def _url(self, page: int) -> str:
-        q = f"&q=timestamp>{self.since}" if self.since else ""
-        return (
-            f"{self.base_url}/v2/events?results-per-page={self.page_size}"
-            f"&page={page}{q}"
-        )
-
-    def _acquire_token(self) -> None:
-        """client_credentials grant against the UAA token endpoint."""
-        import urllib.parse
-
-        body = urllib.parse.urlencode(
-            {
-                "grant_type": "client_credentials",
-                "client_id": self.client_id,
-                "client_secret": self.client_secret,
-            }
-        ).encode()
-        req = urllib.request.Request(
-            self.token_url,
-            data=body,
-            headers={"Content-Type": "application/x-www-form-urlencoded"},
-            method="POST",
-        )
-        with urllib.request.urlopen(req, timeout=self.timeout_s) as resp:
-            self.token = json.loads(resp.read().decode("utf-8"))[
-                "access_token"
-            ]
-
-    def _fetch(self, url: str) -> dict:
-        """GET with the shipper's retry envelope (W3 parity): transient
-        failures (5xx, timeouts, connection resets) back off and retry up
-        to ``max_retries``; 4xx are permanent and raise immediately —
-        except one 401 when UAA creds are configured, which refreshes the
-        bearer token and retries (expired-token path, S1)."""
-        if self.token is None and self.client_id and self.token_url:
-            self._acquire_token()
-        refreshed = False
-        attempt = 0
-        while True:
-            req = urllib.request.Request(url)
-            if self.token:
-                req.add_header("Authorization", f"Bearer {self.token}")
-            try:
-                with urllib.request.urlopen(
-                    req, timeout=self.timeout_s
-                ) as resp:
-                    return json.loads(resp.read().decode("utf-8"))
-            except urllib.error.HTTPError as e:
-                if (
-                    e.code == 401
-                    and not refreshed
-                    and self.client_id
-                    and self.token_url
-                ):
-                    refreshed = True
-                    self._acquire_token()
-                    continue
-                # 429 backs off and retries like 5xx — a rate-limited
-                # parallel scan must slow down, not abort the job
-                if (
-                    e.code < 500 and e.code != 429
-                ) or attempt >= self.max_retries:
-                    raise
-            except (urllib.error.URLError, TimeoutError):
-                if attempt >= self.max_retries:
-                    raise
-            attempt += 1
-            time.sleep(self.retry_backoff_s * (2 ** (attempt - 1)))
-
-    # -- planning + execution ----------------------------------------------
-
-    def partitions(self):
-        first = self._fetch(self._url(1))
-        total = int(first.get("total_pages") or 1)
-        step = self.pages_per_partition
-        return [
-            _PageRange(
-                s,
-                min(s + step - 1, total),
-                preloaded=first.get("resources", []) if s == 1 else None,
-            )
-            for s in range(1, total + 1, step)
-        ]
-
-    def read(self, partition: _PageRange):
-        start = partition.start
-        if partition.preloaded is not None:
-            for resource in partition.preloaded:
-                yield _flatten(resource)
-            start += 1
-        for page in range(start, partition.end + 1):
-            if self.wait_s and page != partition.start:
-                time.sleep(self.wait_s)  # reference pacing (S3)
-            doc = self._fetch(self._url(page))
-            for resource in doc.get("resources", []):
-                yield _flatten(resource)
 
 
 class CfEventsStreamReader(SimpleDataSourceStreamReader):
-    """The collector loop as a NATIVE streaming source:
-    ``spark.readStream.format("cf_events")`` micro-batches the API with
-    the reference's exact watermark discipline (T2).
+    """The collector loop as a native streaming source, with the
+    reference's watermark discipline (T2).
 
     Offsets are the watermark itself: ``{"since": <rfc3339>, "max_seen":
-    <rfc3339>}``.  Each trigger fetches ``timestamp > since``; the next
-    offset's ``since`` backs off ``overlap_s`` (default 5 s) from the
-    max event time seen — the reference's overlap re-read
+    <rfc3339>, "n": <rows>}``.  Each trigger fetches ``timestamp > since``;
+    the next offset's ``since`` is ``paginated_http.watermark`` of the max
+    event time seen — the reference's overlap re-read
     (cf_audit_event_collector.go:36).  Boundary rows therefore arrive
-    at-least-once BY DESIGN; pair with ``dropDuplicatesWithinWatermark``
-    or the store's ON CONFLICT insert for the reference's
-    effectively-once result (T3).  ``readBetweenOffsets`` replays a
-    committed range by refetching and capping at the range's
+    at-least-once by design; the store's idempotent ingest gives the
+    reference's effectively-once result (T3).  ``readBetweenOffsets``
+    replays a committed range by refetching and capping at the range's
     ``max_seen`` — recovery needs no source-side state."""
 
     def __init__(self, options):
-        self.inner = CfEventsReader(options)
-        self.inner.since = options.get("since", EPOCH_STR)
+        self.base_url = options["base_url"].rstrip("/")
+        self.page_size = int(options.get("page_size", 100))
+        self.wait_s = float(options.get("wait_s", 0.0))
+        self.since = options.get("since", EPOCH_TS.strftime(TIME_FORMAT))
+        if parse_created(self.since) is None:
+            raise ValueError(f"cf_events: unparseable since {self.since!r}")
         self.overlap_s = float(options.get("overlap_s", 5.0))
+        self.transport = resolve_transport(options, self.base_url)
 
     def initialOffset(self) -> dict:  # noqa: N802
-        return {
-            "since": self.inner.since,
-            "max_seen": self.inner.since,
-            "n": 0,
-        }
+        return {"since": self.since, "max_seen": self.since, "n": 0}
 
     def _fetch_all(self, since: str) -> list[tuple]:
-        """All pages for one watermark window — page 1 is fetched ONCE
-        (its resources come straight from the total_pages probe, never a
-        second request).  Rows without a parseable created_at are dropped
-        here: they cannot order against the watermark, and the batch path
-        quarantines them anyway (P8)."""
-        self.inner.since = since
-        first = self.inner._fetch(self.inner._url(1))
-        rows = [_flatten(r) for r in first.get("resources", [])]
-        total = int(first.get("total_pages") or 1)
-        for page in range(2, total + 1):
-            if self.inner.wait_s:
-                time.sleep(self.inner.wait_s)
-            doc = self.inner._fetch(self.inner._url(page))
-            rows.extend(_flatten(r) for r in doc.get("resources", []))
-        return [r for r in rows if r[1] is not None]
+        """All rows newer than ``since``.  Rows without a parseable
+        created_at are dropped here: they cannot order against the
+        watermark, and the loop path quarantines them anyway (P8)."""
+        pages = fetch_event_pages(
+            self.transport,
+            self.base_url,
+            parse_created(since),
+            self.page_size,
+            self.wait_s,
+        )
+        return [r for r in decode_pages(pages) if r[1] is not None]
 
     def read(self, start: dict):
         rows = self._fetch_all(start["since"])
         if not rows:
             return iter(()), start
         max_seen = max(r[1] for r in rows)
-        prev_max = dt.datetime.strptime(start["max_seen"], TIME_FORMAT)
+        prev_max = parse_created(start["max_seen"])
         # Spark's contract: a non-empty batch MUST advance the offset.  A
         # fetch that merely re-read the overlap window (same max AND same
         # row count as last trigger) carries nothing new — report no
@@ -308,9 +89,7 @@ class CfEventsStreamReader(SimpleDataSourceStreamReader):
         if max_seen <= prev_max and len(rows) == start.get("n", 0):
             return iter(()), start
         hi = max(max_seen, prev_max)
-        wm = hi - dt.timedelta(seconds=self.overlap_s)
-        if wm.year < 1970:  # reference epoch guard (T2)
-            wm = dt.datetime(1970, 1, 1)
+        wm = watermark(hi, self.overlap_s)
         end = {
             "since": wm.strftime(TIME_FORMAT),
             "max_seen": hi.strftime(TIME_FORMAT),
@@ -320,10 +99,8 @@ class CfEventsStreamReader(SimpleDataSourceStreamReader):
         return iter(rows), end
 
     def readBetweenOffsets(self, start: dict, end: dict):  # noqa: N802
-        cap = dt.datetime.strptime(end["max_seen"], TIME_FORMAT)
-        return iter(
-            r for r in self._fetch_all(start["since"]) if r[1] <= cap
-        )
+        cap = parse_created(end["max_seen"])
+        return iter(r for r in self._fetch_all(start["since"]) if r[1] <= cap)
 
 
 class CfEventsDataSource(DataSource):
@@ -332,13 +109,10 @@ class CfEventsDataSource(DataSource):
         return "cf_events"
 
     def schema(self):
-        return CF_AUDIT_EVENT
-
-    def reader(self, schema):
-        return CfEventsReader(self.options)
+        return EVENT_ROWS
 
     def simpleStreamReader(self, schema):  # noqa: N802
         return CfEventsStreamReader(self.options)
 
 
-__all__ = ["CfEventsDataSource", "CfEventsReader", "CfEventsStreamReader"]
+__all__ = ["CfEventsDataSource", "CfEventsStreamReader"]

@@ -12,8 +12,12 @@ pkg/collectors/cf_audit_event_collector.go:30-104) is
 the same ``operators.ingest.ingest_delta`` runs as a ``foreachBatch`` sink
 (``store_sink``) under two streaming sources: rate-limited parquet files
 (``stream_to_store``, maxFilesPerTrigger — the reference's page pacing
-analog, S3/T5) and the CF API itself (``stream_api_to_store``).  Sink
-errors fail the query — the collector's fail-fast policy (T8).
+analog, S3/T5) and the CF API itself (``stream_api_to_store``, whose
+``cf_events`` source fetches with the loop's CF client,
+``sources/paginated_http.py``).  Deduplication is the store anti-join in
+``ingest_delta`` in every mode; there is no separate streaming dedup
+state.  Sink errors fail the query — the collector's fail-fast policy
+(T8).
 """
 
 from __future__ import annotations
@@ -48,30 +52,6 @@ def informer_tick(
     metrics.set(
         "informer_latest_cf_audit_event_timestamp",
         epoch_utc(latest_event_time(target_df, ts_col)),
-    )
-
-
-def deduped_stream(
-    stream_df: DataFrame,
-    key_col: str = "guid",
-    ts_col: str = "created_at",
-    watermark: str = "5 seconds",
-) -> DataFrame:
-    """T3 as a *native* streaming operator: exactly-once-per-key on an
-    at-least-once stream via ``dropDuplicatesWithinWatermark``.
-
-    The engine's default ingest dedup is the foreachBatch anti-join
-    (``store_sink``), which consults the store itself and so survives
-    restarts with no dedup state at all.  This variant is the
-    built-in alternative when the sink is not itself queryable (e.g. the
-    JDBC statement path): per-key state in the state store, evicted once
-    the watermark passes — the watermark delay mirrors the reference's 5 s
-    re-read overlap (T2, cf_audit_event_collector.go:36), which is exactly
-    the window in which duplicates can arrive.  State is bounded by
-    (keys within watermark), not history — SURVEY.md §7 hard-part 1.
-    """
-    return stream_df.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        [key_col]
     )
 
 
@@ -141,14 +121,16 @@ def stream_api_to_store(
     metrics: MetricsRegistry | None = None,
     extra_options: dict | None = None,
 ):
-    """The north-star pipeline FULLY native: ``spark.readStream.format
+    """The north-star pipeline fully native: ``spark.readStream.format
     ("cf_events")`` (watermark-offset micro-batches straight off the CF
     API — sources/datasource.py) → ``store_sink``, i.e. ``ingest_delta``
-    into a pluggable store (parquet warehouse or DB-API ON CONFLICT).  The reference's collector loop (fetch → dedup →
-    insert, cf_audit_event_collector.go:30-70) as ONE Structured
-    Streaming query: offsets checkpoint the watermark, retries replay
-    micro-batches, and the store's idempotence absorbs the at-least-once
-    edges (T2/T3/W1)."""
+    into a pluggable store (parquet warehouse or DB-API ON CONFLICT).
+    The reference's collector loop (fetch → dedup → insert,
+    cf_audit_event_collector.go:30-70) as one Structured Streaming query:
+    offsets checkpoint the watermark, retries replay micro-batches, and
+    the store's idempotence absorbs the at-least-once edges (T2/T3/W1).
+    ``extra_options`` go to the source as-is: credentials under the CLI's
+    ``CF_*`` names and ``wait_s`` page pacing (sources/datasource.py)."""
     from paas_auditor_spark.sources.datasource import CfEventsDataSource
 
     spark.dataSource.register(CfEventsDataSource)

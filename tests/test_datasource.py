@@ -1,6 +1,8 @@
-"""Native cf_events Spark DataSource (Python DataSource API): partitioned
-page fetch on executors, created_at predicate pushed into the API query,
-auth header, envelope flattening parity."""
+"""The CF events client shared by both collector modes
+(sources/paginated_http.py: transport, pager, decoder, watermark) and the
+native ``cf_events`` streaming source built on it (sources/datasource.py):
+retry envelope, UAA auth, envelope flattening, watermark offsets, and
+cross-mode parity of what is stored and shipped."""
 
 from __future__ import annotations
 
@@ -40,7 +42,8 @@ def _resource(i: int, sec: float | None = None) -> dict:
 
 
 class PagedEventsServer:
-    """Serves /v2/events with page= pagination; records every query."""
+    """Serves /v2/events pages chained by ``next_url`` (as the CF API
+    does), honouring ``q=timestamp>``; records every query."""
 
     def __init__(self, n_events: int, page_size_cap: int = 10) -> None:
         self.n_events = n_events
@@ -50,6 +53,7 @@ class PagedEventsServer:
         self.fail_code = 500  # status for those failures
         self.extra: list[tuple] = []  # (guid_int, sec_offset) late arrivals
         self.include_invalid = False  # add one resource w/o created_at
+        self.transform = lambda r: r  # rewrite each served resource
         outer = self
 
         class Handler(http.server.BaseHTTPRequestHandler):
@@ -81,16 +85,21 @@ class PagedEventsServer:
                     ]
                 total_pages = max(1, -(-len(pairs) // per))
                 chunk = pairs[(page - 1) * per : page * per]
-                resources = [_resource(i, s_) for i, s_ in chunk]
+                resources = [outer.transform(_resource(i, s_)) for i, s_ in chunk]
                 if outer.include_invalid and page == 1:
                     resources.append(
                         {"metadata": {"guid": "no-ts"}, "entity": {}}
                     )
+                nxt = None
+                if page < total_pages:
+                    nxt = f"/v2/events?page={page + 1}&results-per-page={per}"
+                    if "q" in qs:
+                        nxt += f"&q={qs['q'][0]}"
                 body = json.dumps(
                     {
                         "total_results": len(pairs),
                         "total_pages": total_pages,
-                        "next_url": None,
+                        "next_url": nxt,
                         "resources": resources,
                     }
                 ).encode()
@@ -114,61 +123,41 @@ class PagedEventsServer:
 def registered(spark):
     from paas_auditor_spark.sources.datasource import CfEventsDataSource
 
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     spark.dataSource.register(CfEventsDataSource)
-    yield spark
-    spark.conf.unset("spark.sql.python.filterPushdown.enabled")
+    return spark
 
 
-def test_datasource_partitioned_fetch_and_flatten(registered):
-    spark = registered
+def _stream_reader(**options):
+    from paas_auditor_spark.sources.datasource import CfEventsStreamReader
+
+    return CfEventsStreamReader(options)
+
+
+def test_datasource_fetch_and_flatten():
+    """The stream reader pages through the shared client: the static
+    token rides every request as the one bearer spelling, each page is
+    requested once, and resources flatten like the loop path."""
     server = PagedEventsServer(n_events=25, page_size_cap=10)
     try:
-        df = (
-            spark.read.format("cf_events")
-            .option("base_url", server.url)
-            .option("page_size", 10)
-            .option("pages_per_partition", 1)
-            .option("token", "tok-123")
-            .load()
+        reader = _stream_reader(
+            base_url=server.url, page_size="10", CF_TOKEN="tok-123"
         )
-        rows = {r["guid"]: r for r in df.collect()}
+        batch, end = reader.read(reader.initialOffset())
+        rows = {r[0]: r for r in batch}
     finally:
         server.close()
     assert len(rows) == 25
     r0 = rows[str(uuid.UUID(int=0))]
-    assert r0["created_at"] == BASE
-    assert r0["organization_guid"] is None  # '' -> NULL (P3)
-    assert r0["space_guid"] == "sp-0"
-    assert json.loads(r0["metadata"]) == {"request": "r0"}
-    # bearer token on every request; 3 pages -> 3 single-page partitions,
-    # and the planning probe's page-1 payload rides into partition 1 so
-    # page 1 is requested exactly ONCE
-    assert all(q["auth"] == "Bearer tok-123" for q in server.queries)
+    assert r0[1] == BASE.replace(tzinfo=dt.timezone.utc)
+    assert r0[10] is None  # organization_guid '' -> NULL (P3)
+    assert r0[11] == "sp-0"
+    assert json.loads(r0[12]) == {"request": "r0"}
+    assert all(q["auth"] == "bearer tok-123" for q in server.queries)
     pages_seen = sorted(int(q.get("page", "1")) for q in server.queries)
     assert pages_seen == [1, 2, 3]
-
-
-def test_datasource_pushes_time_predicate_to_api(registered):
-    spark = registered
-    server = PagedEventsServer(n_events=30, page_size_cap=10)
-    try:
-        df = (
-            spark.read.format("cf_events")
-            .option("base_url", server.url)
-            .option("page_size", 10)
-            .load()
-            .filter(F.col("created_at") > F.lit(BASE + dt.timedelta(seconds=19)))
-        )
-        got = sorted(r["guid"] for r in df.collect())
-    finally:
-        server.close()
-    # S2: the API saw q=timestamp>… on every fetch, so only the watermark
-    # window was transferred — and Spark re-verified the boundary.
-    assert all(
-        q.get("q", "").startswith("timestamp>") for q in server.queries
-    )
-    assert got == sorted(str(uuid.UUID(int=i)) for i in range(20, 30))
+    # the offset is the watermark: max event time − 5 s overlap
+    assert end["max_seen"] == "2024-03-01T12:00:24Z"
+    assert end["since"] == "2024-03-01T12:00:19Z"
 
 
 def test_datasource_streaming_watermark_offsets(registered, tmp_path):
@@ -206,21 +195,39 @@ def test_datasource_streaming_watermark_offsets(registered, tmp_path):
     assert total >= 12 and total <= 12 + 6
 
 
-def test_datasource_retries_transient_errors(registered):
-    """5xx responses retry with backoff (W3 envelope); the read succeeds
-    once the server recovers."""
-    spark = registered
+def test_datasource_retries_transient_errors():
+    """5xx responses retry with backoff from 0.5 s, doubling (W3
+    envelope); the fetch succeeds once the server recovers.  A fourth
+    consecutive failure propagates, and a non-transient 4xx raises at
+    once."""
+    import urllib.error
+
+    from paas_auditor_spark.sources.paginated_http import (
+        fetch_event_pages,
+        http_transport,
+    )
+
     server = PagedEventsServer(n_events=5, page_size_cap=10)
     server.fail_next = 2  # first two requests 500
+    sleeps: list[float] = []
+    transport = http_transport(sleep=sleeps.append)
     try:
-        df = (
-            spark.read.format("cf_events")
-            .option("base_url", server.url)
-            .option("page_size", 10)
-            .option("retry_backoff_s", 0.01)
-            .load()
-        )
-        assert df.count() == 5
+        pages = list(fetch_event_pages(transport, server.url, BASE, wait_s=0))
+        assert sum(len(p["resources"]) for p in pages) == 4  # > BASE
+        assert sleeps == [0.5, 1.0]
+
+        sleeps.clear()
+        server.fail_next = 4
+        with pytest.raises(urllib.error.HTTPError) as err:
+            transport(f"{server.url}/v2/events")
+        assert err.value.code == 500
+        assert sleeps == [0.5, 1.0, 2.0]
+
+        sleeps.clear()
+        server.fail_next, server.fail_code = 1, 404
+        with pytest.raises(urllib.error.HTTPError) as err:
+            transport(f"{server.url}/v2/events")
+        assert err.value.code == 404 and sleeps == []
     finally:
         server.close()
 
@@ -262,29 +269,6 @@ def test_native_api_to_store_pipeline(registered, tmp_path):
     # the DB absorbed the overlap re-read: exactly one row per event
     assert (n, nd) == (9, 9)
     assert metrics.get("cf_audit_event_collector_events_collected_total") == 9
-
-
-def test_datasource_gte_pushdown_keeps_boundary_row(registered):
-    """A >= filter must NOT be narrowed to the API's strict timestamp> at
-    the same instant — the source backs the floor off 1s and Spark trims
-    the over-fetch, so the boundary-timestamp event survives."""
-    spark = registered
-    server = PagedEventsServer(n_events=30, page_size_cap=10)
-    try:
-        df = (
-            spark.read.format("cf_events")
-            .option("base_url", server.url)
-            .option("page_size", 10)
-            .load()
-            .filter(
-                F.col("created_at") >= F.lit(BASE + dt.timedelta(seconds=20))
-            )
-        )
-        got = sorted(r["guid"] for r in df.collect())
-    finally:
-        server.close()
-    # event 20 sits exactly on the boundary and must be included
-    assert got == sorted(str(uuid.UUID(int=i)) for i in range(20, 30))
 
 
 def test_datasource_streaming_late_arrival_not_starved(registered, tmp_path):
@@ -354,7 +338,7 @@ class UaaEventsServer:
 
             def do_GET(self):  # noqa: N802
                 auth = (self.headers.get("Authorization") or "")
-                tok = auth.removeprefix("Bearer ")
+                tok = auth.removeprefix("bearer ")
                 if tok not in outer.uses:
                     self._json(401, {"error": "invalid_token"})
                     return
@@ -369,10 +353,13 @@ class UaaEventsServer:
                 ids = list(range(outer.n_events))
                 total_pages = max(1, -(-len(ids) // per))
                 chunk = ids[(page - 1) * per : page * per]
+                nxt = None
+                if page < total_pages:
+                    nxt = f"/v2/events?page={page + 1}&results-per-page={per}"
                 self._json(200, {
                     "total_results": len(ids),
                     "total_pages": total_pages,
-                    "next_url": None,
+                    "next_url": nxt,
                     "resources": [_resource(i) for i in chunk],
                 })
 
@@ -387,26 +374,23 @@ class UaaEventsServer:
         self.httpd.shutdown()
 
 
-def test_datasource_uaa_acquires_and_refreshes_token(registered):
-    """client-credentials options: the reader fetches a bearer token
-    before the first request and transparently refreshes when the API
-    starts returning 401 (expiry) — S1 auth parity for the native
-    source."""
-    spark = registered
+def test_datasource_uaa_acquires_and_refreshes_token():
+    """Client-credentials options under the CLI's CF_* names: the reader
+    fetches a bearer token before the first request and transparently
+    refreshes when the API starts returning 401 (expiry) — S1 auth parity
+    for the native source."""
     # 5 pages of 10 events; tokens die after 2 uses → ≥2 token grants
     server = UaaEventsServer(n_events=50, token_uses=2)
     try:
-        df = (
-            spark.read.format("cf_events")
-            .option("base_url", server.url)
-            .option("page_size", 10)
-            .option("pages_per_partition", 10)  # single partition: serial uses
-            .option("token_url", server.url + "/oauth/token")
-            .option("client_id", "paas-auditor")
-            .option("client_secret", "s3cret")
-            .load()
+        reader = _stream_reader(
+            base_url=server.url,
+            page_size="10",
+            CF_TOKEN_URL=server.url + "/oauth/token",
+            CF_CLIENT_ID="paas-auditor",
+            CF_CLIENT_SECRET="s3cret",
         )
-        assert df.count() == 50
+        batch, _ = reader.read(reader.initialOffset())
+        assert len(list(batch)) == 50
     finally:
         server.close()
     assert server.token_posts >= 2  # initial grant + at least one refresh
@@ -414,38 +398,150 @@ def test_datasource_uaa_acquires_and_refreshes_token(registered):
 
 def test_parse_created_tolerates_variants():
     """Non-canonical timestamps become rows with NULL created_at (to be
-    quarantined downstream), never a task-killing ValueError."""
-    import datetime as dt
+    quarantined downstream), never a task-killing ValueError.  Parsed
+    times are timezone-aware UTC."""
+    from paas_auditor_spark.sources.paginated_http import parse_created
 
-    from paas_auditor_spark.sources.datasource import _parse_created
-
-    assert _parse_created("2026-01-01T00:00:00Z") == dt.datetime(2026, 1, 1)
-    assert _parse_created("2026-01-01T00:00:00.123Z") == dt.datetime(
-        2026, 1, 1, 0, 0, 0, 123000
+    utc = dt.timezone.utc
+    assert parse_created("2026-01-01T00:00:00Z") == dt.datetime(
+        2026, 1, 1, tzinfo=utc
     )
-    # numeric offset normalizes to UTC wall clock
-    assert _parse_created("2026-01-01T05:30:00+05:30") == dt.datetime(
-        2026, 1, 1
+    assert parse_created("2026-01-01T00:00:00.123Z") == dt.datetime(
+        2026, 1, 1, 0, 0, 0, 123000, tzinfo=utc
     )
-    assert _parse_created("not-a-time") is None
-    assert _parse_created("") is None
-    assert _parse_created(None) is None
+    # numeric offset normalizes to UTC
+    assert parse_created("2026-01-01T05:30:00+05:30") == dt.datetime(
+        2026, 1, 1, tzinfo=utc
+    )
+    assert parse_created("2026-01-01T05:30:00+05:30").tzinfo == utc
+    assert parse_created("not-a-time") is None
+    assert parse_created("") is None
+    assert parse_created(None) is None
 
 
-def test_rate_limit_429_retries_then_succeeds(registered):
+def test_rate_limit_429_retries_then_succeeds():
     """A 429 backs off and retries like a 5xx — one rate-limit response
-    must not abort the scan (the parallel fetch is the thing being
-    rate-limited)."""
+    must not abort the fetch."""
+    from paas_auditor_spark.sources.paginated_http import (
+        fetch_event_pages,
+        http_transport,
+    )
+
     server = PagedEventsServer(n_events=5, page_size_cap=10)
     server.fail_next = 2
     server.fail_code = 429
+    sleeps: list[float] = []
     try:
-        df = (
-            registered.read.format("cf_events")
-            .option("base_url", server.url)
-            .option("retry_backoff_s", "0")
-            .load()
+        pages = list(
+            fetch_event_pages(
+                http_transport(sleep=sleeps.append), server.url,
+                dt.datetime(1970, 1, 1), wait_s=0,
+            )
         )
-        assert df.count() == 5
     finally:
         server.close()
+    assert sum(len(p["resources"]) for p in pages) == 5
+    assert sleeps == [0.5, 1.0]
+
+
+def test_decoder_stores_utc_under_non_utc_process_tz(spark):
+    """created_at is decoded timezone-aware, so the stored instant does
+    not move with the process timezone: 12:00Z stays 12:00 under
+    Asia/Kolkata (a naive datetime would be stored as 06:30)."""
+    import os
+    import time
+
+    from paas_auditor_spark.sources.paginated_http import pages_to_dataframe
+
+    old = os.environ.get("TZ")
+    os.environ["TZ"] = "Asia/Kolkata"
+    time.tzset()
+    try:
+        df = pages_to_dataframe(spark, [{"resources": [_resource(0)]}])
+        got = df.select(
+            F.date_format("created_at", "yyyy-MM-dd HH:mm:ss").alias("s")
+        ).first()["s"]
+    finally:
+        if old is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = old
+        time.tzset()
+    assert got == "2024-03-01 12:00:00"
+
+
+NESTED = {"request": {"name": "my-app", "instances": 2}, "index": 3}
+
+
+def _nested_event_3(resource: dict) -> dict:
+    """Event 3 with nested, numeric metadata and a +05:30 created_at
+    (the same instant as its canonical 12:00:03Z)."""
+    if resource["metadata"]["guid"] == str(uuid.UUID(int=3)):
+        resource["metadata"]["created_at"] = "2024-03-01T17:30:03+05:30"
+        resource["entity"]["metadata"] = NESTED
+    return resource
+
+
+def test_both_collector_modes_store_and_ship_the_same_rows(registered, tmp_path):
+    """Loop mode (Service.collector_tick) and streaming mode
+    (stream_api_to_store) read one fake CF through the same client and
+    store identical rows in all 13 columns; nested metadata survives as
+    JSON into the store and into the HEC payload."""
+    from paas_auditor_spark.__main__ import resolve_transport
+    from paas_auditor_spark.config import EngineConfig
+    from paas_auditor_spark.runner import Service
+    from paas_auditor_spark.stores import ParquetStore
+    from paas_auditor_spark.streaming.pipeline import stream_api_to_store
+
+    spark = registered
+    server = PagedEventsServer(n_events=12, page_size_cap=5)
+    server.transform = _nested_event_3
+    cfg = EngineConfig()
+    cfg.pagination_wait_s = 0.0
+    bodies: list[str] = []
+    svc = Service(
+        spark,
+        warehouse_dir=str(tmp_path / "loop"),
+        transport=resolve_transport({}, server.url),
+        sender=bodies.append,
+        cfg=cfg,
+        base_url=server.url,
+    )
+    stream_store = ParquetStore(spark, str(tmp_path / "stream"))
+    try:
+        assert svc.collector_tick() == 12
+        assert svc.shipper_tick() == 12
+        q = stream_api_to_store(
+            spark, server.url, stream_store, str(tmp_path / "ckpt"),
+            page_size=5,
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+    finally:
+        server.close()
+
+    def rows(store):
+        df = store.events_df()
+        assert len(df.columns) == 13
+        return [tuple(r) for r in df.orderBy("guid").collect()]
+
+    loop_rows, stream_rows = rows(svc.store), rows(stream_store)
+    assert len(loop_rows) == 12
+    assert loop_rows == stream_rows
+    by_guid = {r[0]: r for r in loop_rows}
+    guid3 = str(uuid.UUID(int=3))
+    assert json.loads(by_guid[guid3][12]) == NESTED
+    events = {
+        e["guid"]: e
+        for e in (
+            json.loads(line)["event"]
+            for body in bodies
+            for line in body.split("\n")
+            if line
+        )
+    }
+    assert len(events) == 12
+    assert events[guid3]["metadata"] == NESTED
+    assert events[guid3]["created_at"] == "2024-03-01T12:00:03Z"

@@ -20,11 +20,12 @@ from paas_auditor_spark.operators.cursor import (
 from paas_auditor_spark.operators.ingest import (
     idempotent_append,
     ingest_delta,
-    normalize_envelope,
     validate_events,
 )
 from paas_auditor_spark.sources.paginated_http import (
+    EVENT_ROWS,
     build_events_url,
+    decode_resource,
     fetch_event_pages,
     pages_to_dataframe,
 )
@@ -120,6 +121,26 @@ def test_envelope_normalization(spark):
     assert r0["organization_guid"] is None  # '' -> NULL (P3)
     assert r0["space_guid"] == str(uuid.UUID(int=20_000))
     assert '"request": "r0"' in r0["metadata"] or '"request":"r0"' in r0["metadata"]
+    # the frame is exactly the decoder's rows, in the decoder's columns
+    assert df.schema == EVENT_ROWS
+    assert tuple(decode_resource(make_event(0))) == (
+        r0["guid"], BASE.replace(tzinfo=dt.timezone.utc), *tuple(r0)[2:]
+    )
+
+
+def test_decoder_keeps_nested_metadata_and_missing_fields():
+    """Nested and numeric metadata stay JSON (not strings of JSON), and a
+    resource missing entity fields decodes to NULLs for validation to
+    judge instead of failing the batch."""
+    import json
+
+    event = make_event(1)
+    event["entity"]["metadata"] = {"request": {"instances": 2}, "index": 3}
+    del event["entity"]["actor"]
+    row = decode_resource(event)
+    assert json.loads(row[12]) == {"request": {"instances": 2}, "index": 3}
+    assert row[3] is None
+    assert all(f.nullable for f in EVENT_ROWS.fields)
 
 
 # --- collector (reference cf_audit_event_collector_test.go) ---------------
@@ -544,73 +565,6 @@ def test_export_ordered_total_order_across_files(spark, sf_dir, tmp_path):
     for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
         assert hi1 < lo2  # disjoint, increasing across files
     assert total == events.count()
-
-
-# --- JSONL dump/replay source (S4 over files) -----------------------------
-
-
-def test_jsonl_replay_equals_live_fetch(spark, tmp_path):
-    """A dumped page file replayed through read_envelope_jsonl decodes to
-    exactly the rows the live fetch path produces."""
-    import json
-
-    from paas_auditor_spark.sources.jsonl import read_envelope_jsonl
-
-    pages = make_pages([[0, 1], [2]])
-    dump = tmp_path / "dump.jsonl"
-    dump.write_text("\n".join(json.dumps(p) for p in pages) + "\n")
-
-    live = pages_to_dataframe(spark, pages)
-    replay = read_envelope_jsonl(spark, str(dump))
-    live_rows = sorted(map(tuple, live.collect()))
-    replay_rows = sorted(map(tuple, replay.collect()))
-    assert replay_rows == live_rows and len(replay_rows) == 3
-
-
-def test_jsonl_streaming_replay_paced(spark, tmp_path):
-    """Streaming replay: two dump files, one file per trigger, all rows
-    land exactly once through the bronze choreography."""
-    import json
-
-    from paas_auditor_spark.sources.jsonl import stream_envelope_jsonl
-
-    src = tmp_path / "dumps"
-    src.mkdir()
-    (src / "a.jsonl").write_text(json.dumps(make_pages([[0, 1]])[0]) + "\n")
-    (src / "b.jsonl").write_text(json.dumps(make_pages([[2, 3]])[0]) + "\n")
-
-    events = stream_envelope_jsonl(spark, str(src), max_files_per_trigger=1)
-    q = (
-        events.writeStream.format("memory")
-        .queryName("jsonl_replay")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        # one file per micro-batch: at least 2 batches committed
-        assert len(q.recentProgress) >= 2
-    finally:
-        q.stop()
-    out = spark.sql("SELECT guid FROM jsonl_replay")
-    assert out.count() == 4 and out.distinct().count() == 4
-
-
-def test_jsonl_replay_quarantines_malformed_lines(spark, tmp_path):
-    import json
-
-    from paas_auditor_spark.sources.jsonl import read_envelope_jsonl
-
-    dump = tmp_path / "dump.jsonl"
-    dump.write_text(
-        json.dumps(make_pages([[0, 1]])[0])
-        + "\n"
-        + "{not json at all\n"
-        + '{"valid_json": "but not an envelope"}\n'
-    )
-    events, bad = read_envelope_jsonl(spark, str(dump), with_quarantine=True)
-    assert events.count() == 2
-    assert bad.count() == 2  # both non-envelope lines kept addressable
 
 
 def test_clustered_write_makes_row_group_stats_selective(spark, sf_dir, tmp_path):

@@ -149,40 +149,6 @@ def test_stateful_sessionization_matches_batch_rule(spark, tmp_path):
     assert out == {1: 1, 2: 2}
 
 
-def test_deduped_stream_within_watermark(spark, tmp_path):
-    """Native bounded-state dedup: duplicate guids arriving within the
-    watermark window are suppressed by dropDuplicatesWithinWatermark."""
-    from paas_auditor_spark.streaming.pipeline import deduped_stream
-
-    src = str(tmp_path / "dsrc")
-    spark.createDataFrame(_rows([0, 1, 2]), schema=CF_AUDIT_EVENT).coalesce(
-        1
-    ).write.mode("overwrite").parquet(src)
-    spark.createDataFrame(_rows([2, 3]), schema=CF_AUDIT_EVENT).coalesce(
-        1
-    ).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(CF_AUDIT_EVENT)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    deduped = deduped_stream(stream, watermark="10 minutes")
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("dedup_within_wm")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    out = spark.sql("SELECT guid FROM dedup_within_wm")
-    assert out.count() == 4
-    assert out.distinct().count() == 4
-
-
 def test_stream_to_jdbc_store_dedups_and_upserts(spark, tmp_path):
     """North-star path end-to-end in streaming mode: file micro-batches →
     dedup → DbApiStore (partition-wise ON CONFLICT inserts into DuckDB).

@@ -238,3 +238,54 @@ def test_discover_token_url(cf):
         discover_token_url("http://127.0.0.1:1", timeout_s=0.2)
         == "http://127.0.0.1:1/oauth/token"
     )
+
+
+def test_stream_reader_uses_password_grant(cf):
+    """Streaming mode honours CF_USERNAME/CF_PASSWORD: the cf_events
+    reader resolves the same transport as loop mode, discovers the token
+    endpoint, runs the password grant and sends its bearer token."""
+    from paas_auditor_spark.sources.datasource import CfEventsStreamReader
+
+    reader = CfEventsStreamReader(
+        {"base_url": cf.url, "CF_USERNAME": "admin", "CF_PASSWORD": "pw1"}
+    )
+    start = reader.initialOffset()
+    batch, end = reader.read(start)
+    assert list(batch) == [] and end == start
+    assert "grant_type=password" in cf.token_posts[0]["form"]
+    assert "username=admin" in cf.token_posts[0]["form"]
+    assert cf.event_gets == ["bearer tok-1"]
+
+
+def test_cli_stream_options_carry_credentials_and_pacing(cf, monkeypatch):
+    """ENGINE_MODE=streaming hands the source the CF credentials that are
+    set and FETCHER_PAGINATION_WAIT_TIME as ``wait_s``; the reader then
+    pauses that long between pages."""
+    import time
+
+    from paas_auditor_spark.__main__ import stream_source_options
+    from paas_auditor_spark.config import EngineConfig
+    from paas_auditor_spark.sources.datasource import CfEventsStreamReader
+
+    monkeypatch.setenv("FETCHER_PAGINATION_WAIT_TIME", "150ms")
+    environ = {
+        "CF_USERNAME": "admin",
+        "CF_PASSWORD": "pw1",
+        "CF_CLIENT_ID": "",
+        "SPLUNK_API_KEY": "not-a-cf-option",
+    }
+    options = stream_source_options(environ, EngineConfig())
+    assert options == {"CF_USERNAME": "admin", "CF_PASSWORD": "pw1", "wait_s": 0.15}
+
+    # three chained pages: two pacing waits between them
+    pages = iter(
+        [{"next_url": "/v2/events?page=2"}, {"next_url": "/v2/events?page=3"}, {}]
+    )
+    reader = CfEventsStreamReader(
+        {"base_url": cf.url, **{k: str(v) for k, v in options.items()}}
+    )
+    assert reader.wait_s == 0.15
+    reader.transport = lambda url: next(pages)
+    t0 = time.perf_counter()
+    reader.read(reader.initialOffset())
+    assert time.perf_counter() - t0 >= 0.3
