@@ -5,8 +5,9 @@ SPLUNK_HEC_AUTH_TOKEN, *_SCHEDULE, FETCHER_PAGINATION_WAIT_TIME).
 
 The CF transport for both collector modes is
 ``sources.paginated_http.resolve_transport`` (re-exported here); the
-Splunk sender is urllib-based.  Every piece is the same injectable the
-test fakes use.
+Splunk sender is ``streaming.ship.hec_sender``.  Every piece is the same
+injectable the test fakes use.  The process exits 1 when the collector
+fails.
 """
 
 from __future__ import annotations
@@ -14,7 +15,6 @@ from __future__ import annotations
 import os
 import signal
 import sys
-import urllib.request
 
 from paas_auditor_spark.config import EngineConfig
 from paas_auditor_spark.runner import Service
@@ -23,21 +23,7 @@ from paas_auditor_spark.sources.paginated_http import (
     CF_AUTH_ENV,
     resolve_transport,
 )
-
-
-def _splunk_sender(endpoint: str, token: str):
-    def send(payload: str) -> None:
-        req = urllib.request.Request(
-            endpoint,
-            data=payload.encode(),
-            headers={"Authorization": f"Splunk {token}"},
-            method="POST",
-        )
-        with urllib.request.urlopen(req, timeout=2) as resp:  # noqa: S310
-            if not 200 <= resp.status < 300:  # 2xx = success (shipper.go:214)
-                raise RuntimeError(f"splunk status {resp.status}")
-
-    return send
+from paas_auditor_spark.streaming.ship import hec_sender
 
 
 def stream_source_options(environ, cfg: EngineConfig) -> dict:
@@ -59,7 +45,7 @@ def resolve_sender(environ):
         "SPLUNK_HEC_AUTH_TOKEN", ""
     )
     if splunk_url and splunk_key:
-        return _splunk_sender(splunk_url, splunk_key)
+        return hec_sender(splunk_url, splunk_key)
     return None
 
 
@@ -127,12 +113,7 @@ def main() -> int:
             metrics=service.metrics,
             extra_options=stream_source_options(os.environ, cfg),
         )
-        # streaming mode is the one that runs foreachBatch collectors, so
-        # the maintenance loop rides along (no-op until a dataset is
-        # registered via service.register_collector_dataset)
-        threads = service.run_threaded(
-            loops=("shipper", "informer", "maintenance")
-        )
+        threads = service.run_threaded(loops=("shipper", "informer"))
     else:
         threads = service.run_threaded()
     try:
@@ -142,7 +123,9 @@ def main() -> int:
         if collector_query is not None:
             collector_query.stop()
         server.shutdown()
-    return 0
+    # a failed collector stopped the service: exit non-zero, like the
+    # reference's os.Exit(1) (main.go:92-97)
+    return 1 if service.collector_error is not None else 0
 
 
 if __name__ == "__main__":

@@ -61,10 +61,3 @@ class EngineConfig:
     deploy_env: str = field(
         default_factory=lambda: os.environ.get("DEPLOY_ENV", "dev")
     )
-    # maintenance tick (ENGINE addition, no reference analog: the
-    # reference has no accumulating per-batch datasets; the engine's
-    # collector families do, and their small-file fold runs as a fourth
-    # scheduled loop)
-    maintenance_schedule_s: float = field(
-        default_factory=lambda: _env_seconds("ENGINE_MAINTENANCE_SCHEDULE", 600.0)
-    )

@@ -110,10 +110,8 @@ class GenerationSupersededError(RuntimeError):
 
 
 def _check_generation_stable(path: str, root: str, batch_id: int) -> None:
-    """Post-publish guard (ADVICE r7): the runner's per-dataset lock
-    makes commit-vs-compact mutual exclusion structural for hooks wired
-    through ``register_collector_dataset``, but a RAW hook racing a
-    manual ``compact_batches`` had only a docstring contract.  This
+    """Post-publish guard (ADVICE r7): a hook racing a ``compact_batches``
+    that does not share its lock has only a docstring contract.  This
     post-publish pointer read covers every publish that completes AFTER
     the fold's flip; its complement is the fold-side post-flip
     ``_rescue_unfolded`` sweep, which moves every publish that landed
@@ -426,8 +424,8 @@ def _rescue_unfolded(old_root: str, new_root: str) -> int:
             # fix-review: e.g. the marker link failed with ENOSPC after
             # the attempt dir moved) — every caller of this sweep is
             # about to delete old_root, so silence here would be
-            # permanent batch loss.  Raise; the maintenance tick logs
-            # and retries, with old_root intact.
+            # permanent batch loss.  Raise; the caller's next fold
+            # retries, with old_root intact.
             raise RuntimeError(
                 f"committed batch {src!r} (id {bid} above the live "
                 f"floor {floor}) could not be rescued into "
@@ -815,8 +813,8 @@ def vacuum_superseded(
             except ValueError:
                 # not one of ours (e.g. an operator-created gen-backup):
                 # tolerate it like _rescue_unfolded tolerates foreign
-                # batch-* names — with the maintenance loop always armed,
-                # raising here would fail EVERY subsequent tick (ADVICE r8)
+                # batch-* names — with vacuums on a schedule, raising
+                # here would fail EVERY subsequent run (ADVICE r8)
                 continue
             if n < cur_n:
                 superseded.append((n, full))

@@ -8030,16 +8030,12 @@ def _oracle_minhash_gate_tombstoned_md5(threshold: float = 0.5) -> str:
 
 
 def _minhash_md5_folded_index_cached(spark: SparkSession, sf_dir: str) -> str:
-    """The md5 gate index AFTER maintenance has applied the takedowns:
-    same collector batches as _minhash_md5_index_cached, but the fold
-    runs WITH the tombstone relation (minhash_fold(tombstone_path=…) —
-    the exact wiring Service.maintenance_tick uses for a dataset
-    registered with both a fold and a tombstone_path), so the stored
-    parts hold only survivors and representation has shifted on disk.
-    This is the deployment steady state at the reference's 15 s shipper
-    cadence (pkg/shippers/cf_audit_events_to_splunk_shipper.go:104):
-    takedowns are reclaimed by the next maintenance fold, and every
-    probe after that pays ZERO reconciliation."""
+    """The md5 gate index AFTER a fold has applied the takedowns: same
+    collector batches as _minhash_md5_index_cached, but the fold runs
+    WITH the tombstone relation (minhash_fold(tombstone_path=…), called
+    here directly), so the stored parts hold only survivors and
+    representation has shifted on disk.  Takedowns are reclaimed by the
+    next fold, and every probe after that pays ZERO reconciliation."""
     from paas_auditor_spark.operators.dedup import (
         minhash_fold,
         minhash_index_collector,
@@ -8076,8 +8072,8 @@ def _minhash_md5_folded_index_cached(spark: SparkSession, sf_dir: str) -> str:
 def q_minhash_gate_folded_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DELETION support for the persisted near-dup gate in its
     DEPLOYMENT STEADY STATE (r10 verdict task #1): the tombstones were
-    applied by the maintenance fold (minhash_fold(tombstone_path=…) —
-    the Service.maintenance_tick wiring), so the probe sees a clean
+    applied by a fold (minhash_fold(tombstone_path=…), called directly
+    when the index is built), so the probe sees a clean
     folded index and takes the zero-reconciliation short circuit: band
     filter on the stored _is_rep/_occ flags + stored membership, no
     aggregation, no window, no anti-join, no delta stages.  Same gate
@@ -12224,11 +12220,11 @@ REGISTRY: dict[str, QuerySpec] = {
     "minhash_gate_tombstoned_md5": QuerySpec(
         q_minhash_gate_tombstoned_md5, _oracle_minhash_gate_tombstoned_md5()
     ),
-    # same slice + same oracle, but the tombstones were applied by the
-    # maintenance FOLD — the probe measures the zero-reconciliation
-    # deployment steady state (r10 verdict task #1); agreement of the
-    # two entries under one oracle certifies fold-time application ≡
-    # read-time reconciliation ≡ never-indexed
+    # same slice + same oracle, but the tombstones were applied by a
+    # FOLD (minhash_fold) — the probe measures the zero-reconciliation
+    # steady state; agreement of the two entries under one oracle
+    # certifies fold-time application ≡ read-time reconciliation ≡
+    # never-indexed
     "minhash_gate_folded_md5": QuerySpec(
         q_minhash_gate_folded_md5, _oracle_minhash_gate_tombstoned_md5()
     ),

@@ -16,8 +16,9 @@ the Spark engine:
   temp-dir rename, the stand-in for W2's upsert)
 - informer tick: metadata count + latest-timestamp gauges
 - /metrics (Prometheus text) and /health endpoints on a ThreadingHTTPServer
-- error policies per loop (T8): collector raises out of ``run_loops`` —
-  the process-exit analog; shipper/informer log and continue
+- error policies per loop (T8): a collector error raises out of
+  ``run_loops`` and stops every ``run_threaded`` loop — the process-exit
+  analog; shipper/informer errors are logged and the loop continues
 """
 
 from __future__ import annotations
@@ -41,7 +42,6 @@ from paas_auditor_spark.sources.paginated_http import (
 )
 from paas_auditor_spark.stores import ParquetStore
 from paas_auditor_spark.streaming.metrics import MetricsRegistry
-from paas_auditor_spark.streaming.pipeline import scheduler_loop
 from paas_auditor_spark.streaming.ship import Sender, ship_tick
 
 SHIPPER_NAME = "cf-audit-events-to-splunk"
@@ -98,15 +98,10 @@ class Service:
             self.collector_tick: self.logger.session("collector"),
             self.shipper_tick: self.logger.session("shipper"),
             self.informer_tick: self.logger.session("informer"),
-            self.maintenance_tick: self.logger.session("maintenance"),
         }
-        # (path, parts, protocol, min_batches, lock) per registered
-        # collector dataset — see register_collector_dataset
-        self._collector_datasets: list[tuple] = []
-        # fold-artifact on-disk size per generation batch-0 (immutable
-        # once committed) — saves the volume guard an O(files) walk of
-        # the artifact every maintenance tick
-        self._fold_base_bytes: dict[str, int] = {}
+        # set when the threaded collector fails: the service stops and
+        # ``python -m paas_auditor_spark`` exits 1 (main.go:92-97)
+        self.collector_error: Exception | None = None
 
     # -- ticks ------------------------------------------------------------
 
@@ -174,193 +169,6 @@ class Service:
             epoch_utc(self.store.latest_event_time()),
         )
 
-    def register_collector_dataset(
-        self,
-        path: str,
-        write_hook,
-        parts: tuple[str, ...] = ("",),
-        protocol: str = "rename",
-        min_batches: int = 16,
-        tombstone_path: str | None = None,
-        tombstone_id_col: str = "doc_id",
-        fold=None,
-        max_delta_fraction: float | None = None,
-    ):
-        """Enroll a collector dataset (bloom words / histograms /
-        postings) in the maintenance loop and return the hook WRAPPED in
-        the dataset's compaction lock.
-
-        compact_batches' single-writer contract says compaction must not
-        race the appender; taking one lock around both the per-batch
-        commit (the returned hook) and the fold (maintenance_tick) makes
-        that structural instead of a calling convention — a micro-batch
-        in flight delays the fold, never interleaves with it.
-        ``min_batches`` is the churn guard: fold only once that many
-        batch directories have accumulated in the live generation.
-
-        ``tombstone_path`` (doc-keyed indexes only — postings, the
-        MinHash band index) enrolls the dataset's DELETION relation:
-        every maintenance fold then also physically drops rows whose
-        ``tombstone_id_col`` is tombstoned (``apply_tombstones_fold``'s
-        transform).  No extra fold is scheduled for deletions — between
-        folds the readers' read-time anti-join already makes takedowns
-        effective, so fold-time application riding the regular churn
-        cadence is exactly the reclamation policy a 100 TB index wants.
-
-        ``fold`` (optional, ``fn(spark, tombstone_path) -> int``)
-        replaces the generic ``compact_batches`` call for datasets
-        whose fold MATERIALIZES read-side artifacts — the MinHash gate
-        index passes ``minhash_fold`` here so every maintenance tick
-        also rewrites the global collapse and band flags (the r10
-        probe reads them instead of re-aggregating the index).  The
-        callable receives this dataset's ``tombstone_path`` (or None)
-        as its second argument, so the physical-reclamation promise
-        above holds BY CONSTRUCTION for custom folds too — a fold that
-        ignored a registered tombstone relation would silently leave
-        takedown data on disk forever (r10 advice; results would stay
-        correct via the read-time anti-join, but reclamation is the
-        point of fold-time application).  It runs under the dataset
-        lock and must use ``defer_delete=True`` to keep the
-        reader-grace discipline.
-
-        ``max_delta_fraction`` (optional) adds a DATA-VOLUME churn
-        guard alongside the batch-count one: once a folded generation
-        exists, fold as soon as the unfolded batch dirs' on-disk bytes
-        exceed this fraction of the fold artifact's — so fold cadence
-        follows ingest volume, not tick count.  Motivated by the
-        measured probe-cost-vs-delta curve of the MinHash gate
-        (SURVEY §6: ~0.7 s per 1% unfolded at the 100× index): a
-        volume guard keeps read-side reconciliation cost bounded even
-        when batches are few but large.  The count guard still applies
-        (whichever trips first); the FIRST fold always goes through
-        ``min_batches`` (before a generation exists there is no folded
-        baseline to compare against)."""
-        lock = threading.Lock()
-        self._collector_datasets.append(
-            (path, parts, protocol, min_batches, lock,
-             tombstone_path, tombstone_id_col, fold, max_delta_fraction)
-        )
-
-        def locked_hook(batch_df, batch_id):
-            with lock:
-                write_hook(batch_df, batch_id)
-
-        return locked_hook
-
-    def maintenance_tick(self) -> int:
-        """Fold every registered collector dataset whose live generation
-        has accumulated ``min_batches`` batch dirs (the engine's fourth
-        loop — the reference has no per-batch datasets to maintain, the
-        engine's incremental filters/sketches/indexes do).  Error policy
-        is log-and-continue like the shipper: a failed fold leaves the
-        dataset correct (whole-generations-or-nothing) and the next tick
-        retries.
-
-        Reader-safe delete discipline: each tick first VACUUMS
-        generations superseded by an earlier tick, then folds with
-        ``defer_delete=True`` — so a query that resolved the previous
-        generation just before a flip gets one full maintenance interval
-        to finish before its files disappear (the table-format vacuum
-        pattern; compact_batches' docstring names the FileNotFound race
-        an immediate delete would invite).  The vacuum also reaps
-        crash-orphaned generations and tmp build dirs.  Returns the
-        number of batch dirs folded."""
-        import os
-
-        from paas_auditor_spark.operators.atomic import (
-            anti_join_tombstones,
-            collector_root,
-            compact_batches,
-            tombstone_ids,
-            vacuum_superseded,
-        )
-
-        def _dir_bytes(d: str) -> int:
-            total = 0
-            for r, _dirs, files in os.walk(d):
-                for f in files:
-                    try:
-                        total += os.path.getsize(os.path.join(r, f))
-                    except OSError:
-                        pass  # racing a writer/vacuum: size is advisory
-            return total
-
-        folded = 0
-        for (path, parts, protocol, min_batches, lock,
-             tomb_path, tomb_id_col, fold,
-             max_delta_fraction) in self._collector_datasets:
-            vacuum_superseded(path)
-            root = collector_root(path)
-            if not os.path.isdir(root):
-                continue
-            batch_dirs = [
-                d for d in os.listdir(root) if d.startswith("batch-")
-            ]
-            # once a folded generation exists its batch-0 is the fold
-            # ARTIFACT, not ingest churn — counting it toward
-            # min_batches would make every post-fold count trip one
-            # delta batch early (r10 advice)
-            delta_dirs = (
-                [d for d in batch_dirs if d != "batch-0"]
-                if root != path
-                else batch_dirs
-            )
-            trip = len(delta_dirs) >= min_batches
-            if (
-                not trip
-                and max_delta_fraction is not None
-                and root != path  # a folded generation exists
-                and delta_dirs  # something beyond the artifact
-            ):
-                art = os.path.join(root, "batch-0")
-                if os.path.isdir(art):
-                    # the artifact is immutable once committed (a new
-                    # fold lands in a NEW generation dir), so its size
-                    # is walked once per generation, not per tick
-                    base = self._fold_base_bytes.get(art)
-                    if base is None:
-                        base = _dir_bytes(art)
-                        self._fold_base_bytes[art] = base
-                    delta = sum(
-                        _dir_bytes(os.path.join(root, d))
-                        for d in delta_dirs
-                    )
-                    trip = base > 0 and delta > max_delta_fraction * base
-            if not trip:
-                continue
-            if fold is not None:
-                with lock:
-                    folded += fold(self.spark, tomb_path)
-                continue
-            transform = None
-            if tomb_path is not None:
-                doomed = tombstone_ids(self.spark, tomb_path, protocol)
-                if doomed is not None:
-                    transform = (
-                        lambda part, df, _d=doomed, _c=tomb_id_col:
-                        anti_join_tombstones(df, _d, _c)
-                    )
-            with lock:
-                folded += compact_batches(
-                    self.spark,
-                    path,
-                    parts=parts,
-                    protocol=protocol,
-                    defer_delete=True,
-                    transform=transform,
-                )
-        if self._fold_base_bytes:
-            # drop cache entries for generations the vacuum reclaimed
-            self._fold_base_bytes = {
-                k: v for k, v in self._fold_base_bytes.items()
-                if os.path.isdir(k)
-            }
-        if folded:
-            self._loop_logs[self.maintenance_tick].info(
-                "compacted", {"batch_dirs": folded}
-            )
-        return folded
-
     # -- loops / service --------------------------------------------------
 
     def stop(self) -> None:  # T7
@@ -398,62 +206,66 @@ class Service:
             if max_ticks is not None and ticks >= max_ticks:
                 break
 
+    def _collector_failed(self, ex: Exception) -> None:
+        """The threaded collector's fail-fast path: the reference exits the
+        process (main.go:92-97), so the whole service stops and records
+        the failure instead of running on without a collector."""
+        self._tick_failed(self.collector_tick, ex)
+        self.collector_error = ex
+        self.stop()
+
     def run_threaded(
-        self,
-        loops: tuple[str, ...] = (
-            "collector",
-            "shipper",
-            "informer",
-            "maintenance",
-        ),
+        self, loops: tuple[str, ...] = ("collector", "shipper", "informer")
     ) -> list[threading.Thread]:
         """Reference deployment shape: three daemon loops on their own
-        cadences (T1), stopped via ``stop()`` (T7).  ``loops`` selects a
-        subset — the streaming deployment replaces the collector loop with
-        a Structured Streaming query and runs only shipper+informer here."""
+        cadences (T1), stopped via ``stop()`` (T7), which also ends a
+        loop's wait between ticks.  ``loops`` selects a subset — the
+        streaming deployment replaces the collector loop with a Structured
+        Streaming query and runs only shipper+informer here.  A collector
+        error stops every loop; shipper and informer errors are logged
+        and the loop continues (shipper.go:111-115)."""
         specs = []
         if "collector" in loops:
             specs.append(
-                (self.collector_tick, self.cfg.collector_schedule_s, "raise")
-            )
-        if "informer" in loops:
-            specs.append(
-                (self.informer_tick, self.cfg.informer_schedule_s, "continue")
+                (
+                    self.collector_tick,
+                    self.cfg.collector_schedule_s,
+                    self._collector_failed,
+                )
             )
         if self.sender is not None and "shipper" in loops:
             # main.go:110-121 creds gate
-            specs.insert(
-                min(1, len(specs)),
-                (self.shipper_tick, self.cfg.shipper_schedule_s, "continue"),
-            )
-        if "maintenance" in loops:
-            # ALWAYS armed (maintenance_tick no-ops over an empty dataset
-            # list): the streaming deployment calls run_threaded BEFORE its
-            # collector datasets register their hooks, so gating on
-            # _collector_datasets being non-empty at call time left the
-            # fourth loop permanently dead in the deployed path — batch
-            # dirs of a later-registered dataset accumulated unboundedly.
             specs.append(
                 (
-                    self.maintenance_tick,
-                    self.cfg.maintenance_schedule_s,
-                    "continue",
+                    self.shipper_tick,
+                    self.cfg.shipper_schedule_s,
+                    lambda ex: self._tick_failed(self.shipper_tick, ex),
                 )
             )
-        threads = []
-        for tick, interval, policy in specs:
-            loop = scheduler_loop(
-                tick,
-                interval,
-                self._stop.is_set,
-                on_error=policy,
-                on_exception=lambda ex, t=tick: self._tick_failed(t, ex),
+        if "informer" in loops:
+            specs.append(
+                (
+                    self.informer_tick,
+                    self.cfg.informer_schedule_s,
+                    lambda ex: self._tick_failed(self.informer_tick, ex),
+                )
             )
-            t = threading.Thread(
-                target=lambda lp=loop: [None for _ in lp], daemon=True
-            )
+
+        def loop(tick, interval_s: float, on_exception) -> None:
+            # the reference's loop shape: time.After + ctx.Done (T1/T7/T8)
+            while not self._stop.is_set():
+                try:
+                    tick()
+                except Exception as ex:
+                    on_exception(ex)
+                self._stop.wait(interval_s)
+
+        threads = [
+            threading.Thread(target=loop, args=spec, daemon=True)
+            for spec in specs
+        ]
+        for t in threads:
             t.start()
-            threads.append(t)
         return threads
 
     def serve_metrics(self, port: int = 0) -> http.server.ThreadingHTTPServer:

@@ -1,11 +1,10 @@
 """JDBC sink family: the reference's Postgres write path at Spark scale.
 
-Reference parity targets (SURVEY.md §2.6):
-- W1 idempotent batch insert — row-by-row ``INSERT … ON CONFLICT DO
-  NOTHING`` keyed on guid, one transaction per fetched page
-  (store.go:73-100, conflict clause :92).
-- W2 keyed single-row cursor upsert — ``INSERT … ON CONFLICT DO UPDATE``
-  (store.go:262-287).
+Reference parity target (SURVEY.md §2.6): W1 idempotent batch insert —
+row-by-row ``INSERT … ON CONFLICT DO NOTHING`` keyed on guid, one
+transaction per fetched page (store.go:73-100, conflict clause :92).  The
+W2 cursor upsert is one driver-side statement in
+``stores.DbApiStore.upsert_cursor``.
 
 Spark's built-in JDBC writer is append-only — ON CONFLICT is not
 expressible through ``df.write.jdbc`` — so W1 runs as **per-partition
@@ -26,10 +25,9 @@ compatible, supports ON CONFLICT) in tests.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Mapping
-from dataclasses import dataclass, field
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def dbapi_factory(module_name: str, *args, **kwargs) -> Callable[[], object]:
@@ -46,21 +44,6 @@ def dbapi_factory(module_name: str, *args, **kwargs) -> Callable[[], object]:
         return importlib.import_module(module_name).connect(*args, **kwargs)
 
     return _connect
-
-
-@dataclass(frozen=True)
-class JdbcTarget:
-    """Connection descriptor for a JDBC destination table."""
-
-    url: str
-    table: str
-    options: Mapping[str, str] = field(default_factory=dict)  # user/password/driver
-
-    def apply(self, rw):
-        rw = rw.option("url", self.url)
-        for k, v in self.options.items():
-            rw = rw.option(k, v)
-        return rw
 
 
 def execute_partitionwise(
@@ -111,30 +94,7 @@ def execute_partitionwise(
     projected.foreachPartition(run)
 
 
-def upsert_cursor_jdbc(
-    spark: SparkSession,
-    name: str,
-    updated_at,
-    shipped_id: str,
-    statement: str,
-    conn_factory: Callable[[], object],
-) -> None:
-    """W2: single-row keyed cursor upsert through the statement path.
-
-    The cursor is one row — no partitioning question; the single-partition
-    dataframe keeps the commit on an executor (same code path as bulk),
-    with the ON CONFLICT DO UPDATE statement giving last-writer-wins
-    atomicity on the database side (store.go:271-279).
-    """
-    row_df = spark.createDataFrame(
-        [(name, updated_at, shipped_id)], ["name", "updated_at", "shipped_id"]
-    ).coalesce(1)
-    execute_partitionwise(row_df, statement, conn_factory)
-
-
 __all__ = [
-    "JdbcTarget",
     "dbapi_factory",
     "execute_partitionwise",
-    "upsert_cursor_jdbc",
 ]

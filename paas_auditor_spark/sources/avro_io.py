@@ -541,11 +541,12 @@ def avro_stream(
     """Streaming Avro bronze ingestion: the same block decode as
     ``avro_scan`` over an UNBOUNDED binaryFile source — drop container
     files into the landing zone and each micro-batch picks up at most
-    ``max_files_per_trigger`` of them (``stream_to_store``'s
-    file-count rate limiting, S3/T5).  Pair with the collector
-    choreography (``streaming.pipeline.store_sink`` or another
-    ``foreachBatch`` hook) for the sink; file-source checkpointing makes replays exactly the committed
-    batches the atomic commit protocol already suppresses."""
+    ``max_files_per_trigger`` of them (the file source's
+    ``maxFilesPerTrigger`` rate limit, S3/T5).  Pair it with a
+    ``foreachBatch`` hook for the sink (``streaming.pipeline.store_sink``
+    for the event store, or a collector hook); file-source checkpointing
+    makes replays exactly the committed batches the atomic commit
+    protocol already suppresses."""
     files = (
         spark.readStream.format("binaryFile")
         .option("maxFilesPerTrigger", max_files_per_trigger)

@@ -1,10 +1,8 @@
 """Pipeline observability: the reference's 9 metrics (README.md:45-58),
-same names, backed by a plain dict registry with optional prometheus_client
-export (W6/T6 in SURVEY.md §2.6/§2.7).
-
-In streaming mode these are fed from a StreamingQueryListener /
-``df.observe`` rather than driver-side counters, so the numbers survive
-distributed execution.
+same names, in a plain thread-safe dict registry (W6/T6 in SURVEY.md
+§2.6/§2.7).  The service's ticks and the streaming collector's
+``foreachBatch`` sink update it on the driver, and ``render_text`` is what
+``/metrics`` serves.
 """
 
 from __future__ import annotations
@@ -51,16 +49,6 @@ class MetricsRegistry:
     def get(self, name: str) -> float:
         with self._lock:
             return self.values[name]
-
-    def export_prometheus(self):
-        """Optional bridge to prometheus_client, gated behind import-try."""
-        try:
-            from prometheus_client import Counter, Gauge  # noqa: F401
-        except ImportError:
-            return None
-        # registration left to the deployment wrapper; the dict above is the
-        # source of truth either way
-        return dict(self.values)
 
     def render_text(self) -> str:
         """Prometheus text exposition (what /metrics would serve)."""

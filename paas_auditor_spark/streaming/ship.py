@@ -1,4 +1,5 @@
-"""Ordered stop-on-failure shipper with cursor commit.
+"""Ordered stop-on-failure shipper with cursor commit: the one Splunk HEC
+client.
 
 ``ship_tick`` is the one ship step of the service path
 (``runner.Service.shipper_tick`` calls it): store cursor query → payload
@@ -6,11 +7,12 @@ build → ordered delivery (``ship_rows``) → cursor commit.  It
 re-expresses the reference shipper
 (pkg/shippers/cf_audit_events_to_splunk_shipper.go:52-225):
 
-- W3 HTTP sink with exponential-backoff retry (shipper.go:62-86: 100ms→2s,
-  exponent 2, jitter 500ms, 3 retries), fed ordered NDJSON batches: the
-  collected rows are cut by ``sinks.hec.hec_batches`` (≤100 events or
-  about 512 KiB of body) and each batch is one POST, where the reference
-  makes one POST per event
+- W3 HTTP sink: ``hec_sender`` makes one POST per call, and
+  ``send_with_retry`` wraps it in the reference's backoff envelope
+  (shipper.go:62-86: 100ms→2s, exponent 2, jitter 500ms, 3 retries).  It
+  is fed ordered NDJSON batches: the collected rows are cut by
+  ``hec_batches`` (≤100 events or about 512 KiB of body) and each batch
+  is one POST, where the reference makes one POST per event
 - W4 oldest-first ship loop, break on the first batch that still fails
   after its retries, commit the cursor to the last event of the last
   acknowledged batch (shipper.go:117-170)
@@ -23,53 +25,103 @@ Scale notes (SURVEY.md §7 hard-part 3): total ship order + stop-on-failure
 implies sequential delivery of the ≤8192-event batch, so the loop runs
 driver-side over the collected batch — single-threaded like the
 reference's shipper.  Payload serialization stays distributed (the
-envelope column is computed by executors before collect).  For unordered
-sinks, use the parallel ``splunk_hec`` sink (sinks/hec.py).
+envelope column is computed by executors before collect).
 """
 
 from __future__ import annotations
 
 import random
 import time
-from collections.abc import Callable
-from dataclasses import dataclass
+import urllib.request
+from collections.abc import Callable, Iterable, Iterator
+from typing import TypeVar
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from paas_auditor_spark.functions.json_utils import event_json, splunk_envelope
-from paas_auditor_spark.sinks.hec import hec_batches
 from paas_auditor_spark.streaming.metrics import MetricsRegistry
 
 Sender = Callable[[str], None]  # raises on delivery failure
+T = TypeVar("T")
+
+HEC_BATCH_EVENTS = 100
+# Splunk Cloud rejects HEC bodies over 1 MB; half that leaves room for
+# a batch of large-metadata events
+HEC_BATCH_BYTES = 512 * 1024
+
+# reference shipper.go:62-86 backoff envelope
+SEND_RETRIES = 3
+BACKOFF_S = 0.1
+MAX_BACKOFF_S = 2.0
+BACKOFF_FACTOR = 2.0
+JITTER_S = 0.5
+# HTTP client timeout (shipper.go:62)
+TIMEOUT_S = 2.0
 
 
-@dataclass
-class RetryPolicy:
-    """Reference shipper.go:62-86 backoff envelope."""
+def hec_batches(
+    items: Iterable[T],
+    envelope: Callable[[T], str] = lambda item: item,
+    max_events: int = HEC_BATCH_EVENTS,
+) -> Iterator[list[T]]:
+    """Cut ``items`` into consecutive, order-preserving batches for one
+    NDJSON POST each: a batch ends at ``max_events`` items or before its
+    ``"\\n"``-joined envelopes would pass ``HEC_BATCH_BYTES`` (UTF-8),
+    whichever comes first.  A larger envelope goes alone."""
+    batch: list[T] = []
+    size = 0
+    for item in items:
+        n = len(envelope(item).encode())
+        if batch and size + 1 + n > HEC_BATCH_BYTES:
+            yield batch
+            batch, size = [], 0
+        size += n + 1 if batch else n
+        batch.append(item)
+        if len(batch) >= max_events:
+            yield batch
+            batch, size = [], 0
+    if batch:
+        yield batch
 
-    initial_backoff_s: float = 0.1
-    max_backoff_s: float = 2.0
-    exponent: float = 2.0
-    jitter_s: float = 0.5
-    max_retries: int = 3
-    sleep: Callable[[float], None] = time.sleep
-    rng: random.Random | None = None
 
-    def send_with_retry(self, sender: Sender, payload: str) -> None:
-        rng = self.rng or random
-        backoff = self.initial_backoff_s
-        attempt = 0
-        while True:
-            try:
-                sender(payload)
-                return
-            except Exception:
-                attempt += 1
-                if attempt > self.max_retries:
-                    raise
-                self.sleep(min(backoff, self.max_backoff_s) + rng.uniform(0, self.jitter_s))
-                backoff *= self.exponent
+def hec_sender(url: str, token: str) -> Sender:
+    """The HEC ``Sender``: one POST of ``body`` to ``url`` with
+    ``Authorization: Splunk <token>``, no retry (``send_with_retry`` adds
+    it).  A non-2xx status raises (shipper.go:214)."""
+
+    def send(body: str) -> None:
+        req = urllib.request.Request(
+            url,
+            data=body.encode(),
+            headers={"Authorization": f"Splunk {token}"},
+            method="POST",
+        )
+        with urllib.request.urlopen(req, timeout=TIMEOUT_S) as resp:  # noqa: S310
+            if not 200 <= resp.status < 300:
+                raise RuntimeError(f"splunk status {resp.status}")
+
+    return send
+
+
+def send_with_retry(
+    sender: Sender, body: str, sleep: Callable[[float], None] = time.sleep
+) -> None:
+    """Send ``body``, retrying failures ``SEND_RETRIES`` times with the
+    reference's backoff: 100 ms doubling to at most 2 s, plus up to 0.5 s
+    of jitter.  The last failure propagates."""
+    backoff = BACKOFF_S
+    attempt = 0
+    while True:
+        try:
+            sender(body)
+            return
+        except Exception:
+            attempt += 1
+            if attempt > SEND_RETRIES:
+                raise
+            sleep(min(backoff, MAX_BACKOFF_S) + random.uniform(0, JITTER_S))
+            backoff *= BACKOFF_FACTOR
 
 
 def build_payloads(batch_df: DataFrame, deploy_env: str) -> DataFrame:
@@ -116,7 +168,7 @@ def ship_rows(
     rows,
     sender: Sender,
     shipper_name: str,
-    retry: RetryPolicy | None = None,
+    sleep: Callable[[float], None] = time.sleep,
     metrics: MetricsRegistry | None = None,
     logger=None,
 ):
@@ -126,14 +178,13 @@ def ship_rows(
     the last acknowledged batch.  ``logger`` (a ``logs.JsonLogger``
     session) observes the first failure — the reference logs it before
     breaking (shipper.go:125-130)."""
-    retry = retry or RetryPolicy()
     shipped = 0
     last_ok = None
     failed = False
     for batch in hec_batches(rows, lambda row: row["payload"]):
         try:
-            retry.send_with_retry(
-                sender, "\n".join(row["payload"] for row in batch)
+            send_with_retry(
+                sender, "\n".join(row["payload"] for row in batch), sleep
             )
         except Exception as ex:
             failed = True
@@ -173,7 +224,7 @@ def ship_tick(
     name: str,
     deploy_env: str,
     cap: int,
-    retry: RetryPolicy | None = None,
+    sleep: Callable[[float], None] = time.sleep,
     metrics: MetricsRegistry | None = None,
     logger=None,
 ) -> int:
@@ -192,7 +243,7 @@ def ship_tick(
         store.unshipped_events(name, cap), deploy_env
     ).collect()  # ≤ cap rows, ship order preserved
     shipped, last_ok, _failed = ship_rows(
-        rows, sender, name, retry=retry, metrics=metrics, logger=logger
+        rows, sender, name, sleep=sleep, metrics=metrics, logger=logger
     )
     if last_ok is not None:
         # the timestamp comes from the wall-clock string twin, not a
@@ -214,9 +265,13 @@ def _mname(shipper_name: str) -> str:
 
 
 __all__ = [
-    "RetryPolicy",
+    "HEC_BATCH_BYTES",
+    "HEC_BATCH_EVENTS",
     "Sender",
     "build_payloads",
+    "hec_batches",
+    "hec_sender",
+    "send_with_retry",
     "ship_rows",
     "ship_tick",
 ]

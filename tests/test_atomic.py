@@ -471,7 +471,7 @@ def _ptr_tmp(tmp_path, gen):
 
 def test_vacuum_retains_reader_grace_generations(spark, tmp_path):
     """VERDICT r7 #5: a reader that resolved generation n keeps its
-    files through TWO further maintenance ticks (vacuum-then-fold), not
+    files through TWO further vacuum-then-fold rounds, not
     one — vacuum retains the newest ``retain`` superseded generations,
     so long scans can't hit FileNotFound one flip after resolving."""
     from pyspark.sql import functions as F
@@ -642,8 +642,8 @@ def test_vacuum_rescues_unfolded_batch_and_spares_fresh_orphans(
 
 def test_vacuum_tolerates_foreign_generation_names(spark, tmp_path):
     """ADVICE r8: vacuum_superseded parses gen-* ids; an operator-created
-    directory like gen-backup must be tolerated (skipped), not crash the
-    always-armed maintenance tick with a ValueError."""
+    directory like gen-backup must be tolerated (skipped), not crash
+    every scheduled vacuum with a ValueError."""
     from paas_auditor_spark.operators.atomic import vacuum_superseded
 
     os.makedirs(tmp_path / "gen-0")
@@ -696,7 +696,7 @@ def test_marker_rescue_migrates_past_racer_scaffolding(tmp_path):
 def test_compact_tolerates_foreign_batch_names(spark, tmp_path):
     """r9 review (reproduced pre-fix): compact_batches crashed with
     ValueError on an operator-created batch-backup dir, permanently
-    failing the always-armed maintenance tick under both protocols."""
+    failing every scheduled fold under both protocols."""
     from pyspark.sql import functions as F
 
     from paas_auditor_spark.operators.atomic import compact_batches
@@ -873,3 +873,142 @@ def test_tombstone_fold_steady_state_noop(spark, tmp_path):
         ).collect()
     }
     assert left == set(range(8, 30))
+
+
+@pytest.mark.parametrize(
+    "crash_point", ["gen_renamed_no_flip", "flipped_no_cleanup"]
+)
+def test_restart_after_kill_during_fold(
+    spark, tmp_path, monkeypatch, crash_point
+):
+    """A kill IN THE MIDDLE of a fold (``vacuum_superseded`` then
+    ``compact_batches(defer_delete=True)``), at both kill windows a real
+    SIGKILL can hit — (a) after the new generation dir is renamed into
+    place but before the CURRENT pointer flips (readers must keep
+    resolving the OLD generation; the orphan gen must not wedge later
+    folds), and (b) after the flip but before the post-flip
+    rescue/cleanup sweep (readers resolve the NEW generation; stale v1
+    batch dirs must be vacuumed, not double-counted).  After restart:
+    reads bit-identical to a one-shot filter, the next fold succeeds,
+    and pre-kill batch ids stay replay-suppressed."""
+    from pyspark.sql import functions as F
+
+    from paas_auditor_spark.operators import atomic
+    from paas_auditor_spark.operators.bloom import (
+        bloom_assemble,
+        bloom_words,
+        bloom_words_collector,
+        bloom_words_read,
+    )
+
+    m, k = 1 << 13, 3
+    path = str(tmp_path / "words")
+
+    def fold() -> int:
+        # vacuum what an earlier fold superseded, then fold with the
+        # reader-grace delete discipline
+        atomic.vacuum_superseded(path)
+        return atomic.compact_batches(spark, path, defer_delete=True)
+
+    def keys(lo, hi):
+        return spark.range(lo, hi).select(
+            F.concat(F.lit("w"), F.col("id").cast("string")).alias("k")
+        )
+
+    def assembled():
+        return bytes(
+            bloom_assemble(bloom_words_read(spark, path)).collect()[0]["bloom"]
+        )
+
+    def one_shot(hi):
+        return bytes(
+            bloom_assemble(bloom_words(keys(0, hi), "k", m=m, k=k))
+            .collect()[0]["bloom"]
+        )
+
+    hook = bloom_words_collector("k", path, m=m, k=k)
+    for i in range(3):
+        hook(keys(i * 40, (i + 1) * 40), i)
+
+    class SimKill(BaseException):
+        """Simulated SIGKILL: BaseException so no except-Exception
+        policy in the stack can swallow it."""
+
+    if crash_point == "gen_renamed_no_flip":
+        real_rename = os.rename
+
+        def killer(src, dst):
+            if os.path.basename(dst) == atomic._CURRENT:
+                raise SimKill()  # gen dir landed; pointer never flips
+            return real_rename(src, dst)
+
+        monkeypatch.setattr(atomic.os, "rename", killer)
+    else:
+
+        def killer_rescue(old_root, new_root):
+            raise SimKill()  # flip landed; rescue/cleanup never ran
+
+        monkeypatch.setattr(atomic, "_rescue_unfolded", killer_rescue)
+
+    with pytest.raises(SimKill):
+        fold()
+    monkeypatch.undo()
+
+    if crash_point == "gen_renamed_no_flip":
+        # pointer never flipped: readers resolve the pre-fold layout and
+        # the orphaned generation is invisible
+        assert not os.path.exists(os.path.join(path, atomic._CURRENT))
+        assert os.path.isdir(os.path.join(path, "gen-0"))
+    else:
+        assert atomic.collector_root(path).endswith("gen-0")
+    assert assembled() == one_shot(120)  # reads correct immediately
+
+    # restart: same disk, fresh process state
+    hook = bloom_words_collector("k", path, m=m, k=k)
+    assert assembled() == one_shot(120)
+
+    # pre-kill ids stay replay-suppressed across the kill + restart in
+    # the flipped case (the fold's floor landed with the flip); in the
+    # no-flip case the fold never became visible, so the replay re-lands
+    # harmlessly identical bits (idempotent OR) — either way the filter
+    # is unchanged
+    hook(keys(0, 40), 0)
+    assert assembled() == one_shot(120)
+
+    # accumulate three delta batches again; the next fold must succeed,
+    # skipping over / superseding whatever the kill left behind.  Once
+    # a folded generation exists its batch-0 is the fold artifact, not
+    # a delta
+    def _delta_dirs():
+        root = atomic.collector_root(path)
+        return sum(
+            1
+            for d in os.listdir(root)
+            if d.startswith("batch-")
+            and not (root != path and d == "batch-0")
+        )
+
+    next_id = 3
+    while _delta_dirs() < 3:
+        hook(keys(next_id * 40, (next_id + 1) * 40), next_id)
+        next_id += 1
+    assert fold() >= 3
+    hi = next_id * 40
+    assert assembled() == one_shot(hi)
+    assert os.path.exists(os.path.join(path, atomic._CURRENT))
+
+    # replay of a folded id is suppressed by the new floor
+    hook(keys(0, 40), 1)
+    assert assembled() == one_shot(hi)
+
+    # a later vacuum (past the in-flight grace window) reaps the kill's
+    # leftovers without touching the live generation
+    atomic.vacuum_superseded(path, retain=0, orphan_age_s=0.0)
+    live = os.path.basename(atomic.collector_root(path))
+    leftovers = [
+        d
+        for d in os.listdir(path)
+        if d != live and d != atomic._CURRENT and not d.startswith(".CURRENT")
+    ]
+    assert leftovers == []
+    assert assembled() == one_shot(hi)

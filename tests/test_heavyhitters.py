@@ -95,82 +95,6 @@ def test_q_heavy_hitters_capacity_covers_testdata_vocab(spark, sf_dir):
     )
 
 
-def test_streaming_mg_matches_batch_counts(spark, tmp_path):
-    """Streamed MG (ample capacity) over two micro-batches must equal the
-    exact batch counts after merging shard summaries."""
-    from paas_auditor_spark.streaming.stateful import heavy_hitters_stream
-
-    src = str(tmp_path / "hh_src")
-    batch1 = ["a"] * 10 + ["b"] * 5 + ["c"]
-    batch2 = ["a"] * 3 + ["b"] * 7 + ["d"] * 2
-    spark.createDataFrame([(x,) for x in batch1], "item string").coalesce(
-        1
-    ).write.mode("overwrite").parquet(src)
-    spark.createDataFrame([(x,) for x in batch2], "item string").coalesce(
-        1
-    ).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema("item string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        heavy_hitters_stream(stream, n_shards=4, capacity=64)
-        .writeStream.format("memory")
-        .queryName("hh")
-        .outputMode("update")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        # update mode re-emits a shard's summary each batch; with ample
-        # capacity counts grow monotonically, so max() per item is the
-        # final summary; shards partition items so no cross-shard dupes
-        out = {
-            r["item"]: r["cnt"]
-            for r in spark.sql(
-                "SELECT item, max(cnt_lb) AS cnt FROM hh GROUP BY item"
-            ).collect()
-        }
-    finally:
-        q.stop()
-    assert out == {"a": 13, "b": 12, "c": 1, "d": 2}
-
-
-def test_streaming_mg_state_stays_bounded(spark, tmp_path):
-    from paas_auditor_spark.streaming.stateful import heavy_hitters_stream
-
-    src = str(tmp_path / "hh_bounded")
-    items = [f"t{i}" for i in range(300)] + ["hot"] * 100
-    spark.createDataFrame([(x,) for x in items], "item string").coalesce(
-        1
-    ).write.mode("overwrite").parquet(src)
-
-    stream = spark.readStream.schema("item string").parquet(src)
-    q = (
-        heavy_hitters_stream(stream, n_shards=2, capacity=20)
-        .writeStream.format("memory")
-        .queryName("hh_bounded")
-        .outputMode("update")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        per_shard = spark.sql(
-            "SELECT shard, count(*) AS n FROM hh_bounded GROUP BY shard"
-        ).collect()
-        hot = spark.sql(
-            "SELECT max(cnt_lb) AS c FROM hh_bounded WHERE item = 'hot'"
-        ).collect()[0]["c"]
-    finally:
-        q.stop()
-    # each shard's emitted summary is capped at capacity entries
-    assert all(r["n"] <= 20 for r in per_shard)
-    # the heavy item survives the decrements with a positive lower bound
-    assert hot is not None and hot > 0
-
-
 # -- property-based: fold_counts is pure Python, so hypothesis can hammer
 #    the MG invariants without a Spark round-trip per example
 from collections import Counter as _Counter

@@ -1,4 +1,4 @@
-"""JDBC sink tests: W1/W2 semantics with injected I/O and a real DB-API
+"""JDBC sink tests: W1 semantics with injected I/O and a real DB-API
 destination (DuckDB — supports ON CONFLICT like the reference's Postgres)."""
 
 from __future__ import annotations
@@ -31,25 +31,3 @@ def test_execute_partitionwise_on_conflict_duckdb(spark, tmp_path):
     assert n == 50  # ON CONFLICT swallowed in-batch dups and the full replay
     assert first7 == "p7"  # first insert wins, conflicting rows ignored
 
-
-def test_upsert_cursor_jdbc_last_writer_wins(spark, tmp_path):
-    db = str(tmp_path / "cursors.duckdb")
-    con = duckdb.connect(db)
-    con.execute(
-        "CREATE TABLE shipper_cursors ("
-        " name VARCHAR PRIMARY KEY, updated_at VARCHAR, shipped_id VARCHAR)"
-    )
-    con.close()
-    stmt = (
-        "INSERT INTO shipper_cursors VALUES (?, ?, ?) "
-        "ON CONFLICT (name) DO UPDATE SET "
-        "updated_at = excluded.updated_at, shipped_id = excluded.shipped_id"
-    )
-    factory = jdbc.dbapi_factory("duckdb", db)
-    jdbc.upsert_cursor_jdbc(spark, "splunk", "2024-01-01T00:00:00Z", "g1", stmt, factory)
-    jdbc.upsert_cursor_jdbc(spark, "splunk", "2024-01-02T00:00:00Z", "g2", stmt, factory)
-
-    con = duckdb.connect(db)
-    got = con.execute("SELECT * FROM shipper_cursors").fetchall()
-    con.close()
-    assert got == [("splunk", "2024-01-02T00:00:00Z", "g2")]

@@ -31,8 +31,7 @@ from paas_auditor_spark.sources.paginated_http import (
 )
 from paas_auditor_spark.streaming.metrics import COUNTERS, GAUGES, MetricsRegistry
 from paas_auditor_spark.stores import ParquetStore
-from paas_auditor_spark.streaming.pipeline import informer_tick
-from paas_auditor_spark.streaming.ship import RetryPolicy, ship_tick
+from paas_auditor_spark.streaming.ship import send_with_retry, ship_tick
 
 BASE = dt.datetime(2024, 3, 1, 12, 0, 0)
 
@@ -213,7 +212,8 @@ def _stored(spark, tmp_path, events) -> ParquetStore:
     return store
 
 
-NO_SLEEP = RetryPolicy(sleep=lambda s: None, max_retries=3)
+def no_sleep(seconds: float) -> None:
+    pass
 
 
 def _envelopes(bodies: list[str]) -> list[str]:
@@ -227,7 +227,7 @@ def test_ship_happy_path(spark, tmp_path):
     store = _stored(spark, tmp_path, _events_df(spark))
     shipped = ship_tick(
         store, sent.append, SHIPPER, "test", 8192,
-        retry=NO_SLEEP, metrics=metrics,
+        sleep=no_sleep, metrics=metrics,
     )
     assert shipped == 3
     assert metrics.get(ERRORS) == 0
@@ -278,7 +278,7 @@ def test_ship_stop_on_failure_then_reship(spark, tmp_path):
             raise RuntimeError("splunk 500")
 
     shipped = ship_tick(
-        store, flaky, SHIPPER, "test", 8192, retry=NO_SLEEP, metrics=metrics
+        store, flaky, SHIPPER, "test", 8192, sleep=no_sleep, metrics=metrics
     )
     # batch 1 shipped, batch 2 failed after retries, batch 3 never tried
     assert shipped == 100 and metrics.get(ERRORS) == 1
@@ -294,7 +294,7 @@ def test_ship_stop_on_failure_then_reship(spark, tmp_path):
     sent2: list[str] = []
     shipped2 = ship_tick(
         store, sent2.append, SHIPPER, "test", 8192,
-        retry=NO_SLEEP, metrics=metrics,
+        sleep=no_sleep, metrics=metrics,
     )
     assert shipped2 == 150 and metrics.get(ERRORS) == 1
     assert len(sent2) == 2
@@ -310,8 +310,12 @@ def test_ship_batch_bounds(spark, tmp_path):
     ``build_payloads`` payload, byte for byte."""
     import json as _json
 
-    from paas_auditor_spark.sinks.hec import HEC_BATCH_BYTES, HEC_BATCH_EVENTS
-    from paas_auditor_spark.streaming.ship import build_payloads, ship_rows
+    from paas_auditor_spark.streaming.ship import (
+        HEC_BATCH_BYTES,
+        HEC_BATCH_EVENTS,
+        build_payloads,
+        ship_rows,
+    )
 
     assert HEC_BATCH_EVENTS == 100
     events = _events_df(spark, 250)
@@ -320,7 +324,7 @@ def test_ship_batch_bounds(spark, tmp_path):
     sent: list[str] = []
     shipped = ship_tick(
         store, sent.append, SHIPPER, "test", 8192,
-        retry=NO_SLEEP, metrics=metrics,
+        sleep=no_sleep, metrics=metrics,
     )
     assert shipped == 250
     assert metrics.get(ERRORS) == 0
@@ -344,7 +348,7 @@ def test_ship_batch_bounds(spark, tmp_path):
     def ship(rows) -> list[str]:
         bodies: list[str] = []
         shipped, last_ok, failed = ship_rows(
-            rows, bodies.append, "s", retry=NO_SLEEP
+            rows, bodies.append, "s", sleep=no_sleep
         )
         assert shipped == len(rows) and not failed
         assert last_ok is rows[-1]
@@ -374,12 +378,24 @@ def test_retry_backoff_recovers():
             raise RuntimeError("transient")
 
     slept: list[float] = []
-    policy = RetryPolicy(sleep=slept.append, max_retries=3)
-    policy.send_with_retry(flaky_twice, "x")
+    send_with_retry(flaky_twice, "x", sleep=slept.append)
     assert len(attempts) == 3
     assert len(slept) == 2
     # exponential envelope: 0.1(+jitter≤0.5), then 0.2(+jitter)
     assert 0.1 <= slept[0] <= 0.6 and 0.2 <= slept[1] <= 0.7
+
+    # a sender that never recovers: 1 attempt + 3 retries, then it raises
+    attempts.clear()
+    slept.clear()
+
+    def down(payload: str) -> None:
+        attempts.append(payload)
+        raise RuntimeError("down")
+
+    with pytest.raises(RuntimeError, match="down"):
+        send_with_retry(down, "x", sleep=slept.append)
+    assert len(attempts) == 4
+    assert 0.4 <= slept[2] <= 0.9
 
 
 def test_cursor_upsert_and_monotonic(spark):
@@ -398,9 +414,12 @@ def test_cursor_upsert_and_monotonic(spark):
 # --- informer (reference informer_test.go) --------------------------------
 
 
-def test_informer_gauges(spark):
-    metrics = MetricsRegistry()
-    informer_tick(_events_df(spark, 4), metrics)
+def test_informer_gauges(spark, tmp_path):
+    from paas_auditor_spark.runner import Service
+
+    svc = Service(spark, store=_stored(spark, tmp_path, _events_df(spark, 4)))
+    svc.informer_tick()
+    metrics = svc.metrics
     assert metrics.get("informer_cf_audit_events_total") == 4.0
     assert metrics.get("informer_latest_cf_audit_event_timestamp") == (
         BASE + dt.timedelta(seconds=3)

@@ -197,9 +197,9 @@ def test_shipper_gated_on_missing_creds(spark, tmp_path):
     assert svc.totals.shipped == 0
     # cursor table untouched (no silent epoch ship)
     assert spark.read.parquet(svc.paths[CURSORS_TABLE]).count() == 0
-    # threaded deployment: collector + informer + maintenance loops spawn
-    # (no shipper without creds; maintenance always arms — ADVICE r7)
-    assert len(svc.run_threaded()) == 3
+    # threaded deployment: collector + informer loops spawn (no shipper
+    # without creds)
+    assert len(svc.run_threaded()) == 2
     svc.stop()
 
 
@@ -314,7 +314,7 @@ def test_service_batch_failure_delivery_contract(spark, tmp_path):
     ``q=timestamp>``, so tick 2 re-reads every event.  The delivery
     contract holds: every event delivered, no duplicate stored rows, a
     cursor that only moves forward, and at most one batch re-shipped."""
-    from paas_auditor_spark.sinks.hec import HEC_BATCH_EVENTS
+    from paas_auditor_spark.streaming.ship import HEC_BATCH_EVENTS
 
     delivered: list[str] = []  # every body that reached the collector
     tick = {"n": 1}
@@ -439,7 +439,7 @@ def test_service_delivery_contract_under_faults(spark, tmp_path, fault):
     import urllib.error
     from collections import Counter
 
-    from paas_auditor_spark.sinks.hec import HEC_BATCH_EVENTS
+    from paas_auditor_spark.streaming.ship import HEC_BATCH_EVENTS
     from paas_auditor_spark.stores import ParquetStore
 
     tick = {"n": 0}
@@ -493,8 +493,6 @@ def test_service_delivery_contract_under_faults(spark, tmp_path, fault):
     assert len([g for g, k in counts.items() if k > 1]) <= HEC_BATCH_EVENTS
 
 
-# the threaded collector's fail-fast exit is the behaviour under test
-@pytest.mark.filterwarnings("ignore::pytest.PytestUnhandledThreadExceptionWarning")
 def test_collector_metrics_scraped_after_good_and_failing_tick(spark, tmp_path):
     """/metrics shows the collector's duration after a good tick and its
     error counter after a failing one, under both loop drivers."""
@@ -533,7 +531,7 @@ def test_collector_metrics_scraped_after_good_and_failing_tick(spark, tmp_path):
             == m["cf_audit_event_collector_collect_duration_total"]
         )
 
-        # threaded deployment: the collector thread dies on its error
+        # threaded deployment: the collector's error stops the service
         # (fail-fast policy) after counting it
         (thread,) = svc.run_threaded(loops=("collector",))
         thread.join(timeout=60)
@@ -657,508 +655,114 @@ def test_run_threaded_loop_subset_for_streaming_mode(spark, tmp_path):
     assert svc.totals.collected == 0
 
 
-def test_maintenance_loop_compacts_registered_collectors(spark, tmp_path):
-    """The engine's fourth loop: a collector dataset registered with the
-    service gets its batch dirs folded by maintenance_tick once
-    min_batches accumulate — reads bit-identical, the returned hook is
-    the LOCKED one (commit and fold mutually exclusive), and below the
-    churn guard nothing folds."""
-    from pyspark.sql import functions as F
+def test_collector_failure_stops_threaded_service(spark, tmp_path):
+    """main.go:92-97 parity: a collector error ends the process.  In the
+    threaded deployment it stops every loop, the working shipper and the
+    informer included, instead of leaving a service that never collects
+    again; the failure is counted and recorded."""
+    import time
 
-    from paas_auditor_spark.operators.bloom import (
-        bloom_assemble,
-        bloom_words_collector,
-        bloom_words_read,
+    cfg = EngineConfig()
+    cfg.collector_schedule_s = 0.2
+    cfg.shipper_schedule_s = 0.2
+    cfg.informer_schedule_s = 0.2
+
+    def down(url: str) -> dict:
+        raise ConnectionError("CF API down")
+
+    sent: list[str] = []
+    svc = Service(
+        spark,
+        warehouse_dir=str(tmp_path / "wh"),
+        transport=down,
+        sender=sent.append,
+        cfg=cfg,
     )
-
-    svc = Service(spark, warehouse_dir=str(tmp_path / "wh"))
-    path = str(tmp_path / "words")
-    m, k = 1 << 12, 3
-    hook = svc.register_collector_dataset(
-        path, bloom_words_collector("k", path, m=m, k=k), min_batches=3
-    )
-
-    def keys(lo, hi):
-        return spark.range(lo, hi).select(
-            F.concat(F.lit("w"), F.col("id").cast("string")).alias("k")
-        )
-
-    def blob():
-        return bytes(
-            bloom_assemble(bloom_words_read(spark, path)).collect()[0]["bloom"]
-        )
-
-    hook(keys(0, 50), 0)
-    hook(keys(50, 90), 1)
-    assert svc.maintenance_tick() == 0  # churn guard: below min_batches
-    hook(keys(90, 140), 2)
-    before = blob()
-    assert svc.maintenance_tick() == 3
-    assert blob() == before
-    # post-fold appends land in the live generation and the next tick
-    # stays quiet until the guard trips again
-    hook(keys(140, 160), 3)
-    assert svc.maintenance_tick() == 0
-    assert blob() != before
+    threads = svc.run_threaded()
+    try:
+        deadline = time.monotonic() + 30
+        for t in threads:
+            t.join(timeout=max(0.0, deadline - time.monotonic()))
+        assert [t.is_alive() for t in threads] == [False] * len(threads)
+        assert len(threads) == 3  # collector, shipper, informer
+        assert svc.metrics.get("cf_audit_event_collector_errors_total") == 1
+        assert isinstance(svc.collector_error, ConnectionError)
+    finally:
+        svc.stop()
 
 
-def test_maintenance_fold_materializes_minhash_collapse(spark, tmp_path):
-    """A MinHash gate dataset enrolled with the custom ``fold`` hook
-    (r10): the maintenance tick runs minhash_fold instead of the
-    generic compaction, so after the tick the stored collapse is GLOBAL
-    (_global=true, cross-batch duplicate groups share one _rep) and the
-    probe result is unchanged — the deployment wiring for the
-    materialized probe."""
-    from paas_auditor_spark.operators.atomic import batch_data_paths
-    from paas_auditor_spark.operators.dedup import (
-        minhash_fold,
-        minhash_incremental_persisted,
-        minhash_index_collector,
-    )
+def test_main_exits_1_when_collector_fails(spark, tmp_path, monkeypatch):
+    """``python -m paas_auditor_spark`` returns 1 after its collector
+    fails, instead of waiting on the other loops forever."""
+    import http.server
+    import threading
 
-    svc = Service(spark, warehouse_dir=str(tmp_path / "wh"))
-    path = str(tmp_path / "mh")
-    hook = svc.register_collector_dataset(
-        path,
-        minhash_index_collector(path, num_hashes=24, num_bands=12),
-        parts=("collapse", "bands", "sets"),
-        min_batches=2,
-        fold=lambda sp, tomb: minhash_fold(
-            sp, path, tombstone_path=tomb, defer_delete=True
-        ),
-    )
-    boiler = ("alpha beta gamma delta epsilon zeta eta theta iota "
-              "kappa lambda mu nu xi omicron pi rho sigma tau shared")
-    hook(spark.createDataFrame([(1, boiler)], ["doc_id", "text"]), 0)
-    hook(spark.createDataFrame([(2, boiler)], ["doc_id", "text"]), 1)
+    from paas_auditor_spark import __main__ as cli
 
-    new = spark.createDataFrame(
-        [(900, boiler + " extra")], ["doc_id", "text"]
-    )
+    class Gone(http.server.BaseHTTPRequestHandler):
+        def do_GET(self):  # noqa: N802
+            self.send_response(404)  # not retried by the CF client
+            self.end_headers()
 
-    def gate():
-        return sorted(
-            (r["id_a"], r["id_b"], r["jaccard"])
-            for r in minhash_incremental_persisted(
-                spark, path, new,
-                threshold=0.5, num_hashes=24, num_bands=12,
-            ).collect()
-        )
+        def log_message(self, *args):
+            pass
 
-    before = gate()
-    assert {b for _, b, _ in before} == {1, 2}
-    assert svc.maintenance_tick() == 2
-    collapse = spark.read.parquet(
-        *batch_data_paths(path, "rename", "collapse")
-    ).collect()
-    assert all(r["_global"] for r in collapse)
-    assert {r["_rep"] for r in collapse} == {1}  # cross-batch group folded
-    assert gate() == before
+    cf = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Gone)
+    threading.Thread(target=cf.serve_forever, daemon=True).start()
+    host, port = cf.server_address
+    for name in ("ENGINE_MODE", "ENGINE_STORE", "SPLUNK_HEC_ENDPOINT_URL",
+                 "CF_TOKEN", "CF_CLIENT_ID", "CF_USERNAME"):
+        monkeypatch.delenv(name, raising=False)
+    monkeypatch.setenv("CF_API_ADDRESS", f"http://{host}:{port}")
+    monkeypatch.setenv("ENGINE_WAREHOUSE", str(tmp_path / "wh"))
+    monkeypatch.setenv("PORT", "0")
+    monkeypatch.setenv("COLLECTOR_SCHEDULE", "200ms")
+    monkeypatch.setenv("INFORMER_SCHEDULE", "200ms")
+    # the CLI installs SIGINT/SIGTERM handlers; keep pytest's own
+    monkeypatch.setattr(cli.signal, "signal", lambda *args: None)
+
+    codes: list[int] = []
+    runner = threading.Thread(target=lambda: codes.append(cli.main()))
+    runner.daemon = True
+    try:
+        runner.start()
+        runner.join(timeout=60)
+        assert not runner.is_alive()
+        assert codes == [1]
+    finally:
+        cf.shutdown()
+        cf.server_close()
 
 
-def test_maintenance_delta_volume_guard(spark, tmp_path):
-    """max_delta_fraction (r10): once a folded generation exists, the
-    maintenance tick folds as soon as the UNFOLDED batch dirs' bytes
-    exceed the fraction of the fold artifact's — fold cadence follows
-    ingest volume, not tick count.  The first fold still goes through
-    min_batches (no folded baseline before it)."""
-    from paas_auditor_spark.operators.dedup import (
-        minhash_fold,
-        minhash_index_collector,
-    )
-
-    svc = Service(spark, warehouse_dir=str(tmp_path / "wh"))
-    path = str(tmp_path / "mh")
-    hook = svc.register_collector_dataset(
-        path,
-        minhash_index_collector(path, num_hashes=24, num_bands=12),
-        parts=("collapse", "bands", "sets"),
-        min_batches=3,
-        max_delta_fraction=0.5,
-        fold=lambda sp, tomb: minhash_fold(
-            sp, path, tombstone_path=tomb, defer_delete=True
-        ),
-    )
-
-    def docs(lo, hi):
-        return spark.createDataFrame(
-            [(i, f"document number {i} about storage engines and "
-                 f"columnar formats and shuffles {i}")
-             for i in range(lo, hi)],
-            ["doc_id", "text"],
-        )
-
-    hook(docs(0, 20), 0)
-    assert svc.maintenance_tick() == 0  # no generation, 1 < min_batches
-    hook(docs(20, 40), 1)
-    hook(docs(40, 60), 2)
-    assert svc.maintenance_tick() == 3  # count guard: the FIRST fold
-
-    # one comparable-size delta batch: count guard quiet (2 < 3), but
-    # the volume guard trips (delta bytes ≈ artifact bytes > 0.5×)
-    hook(docs(60, 90), 3)
-    assert svc.maintenance_tick() == 2
-
-
-def test_maintenance_loop_scheduled_and_vacuums(spark, tmp_path):
-    """run_threaded actually schedules the maintenance loop (the default
-    loops tuple includes it; it arms only when a dataset is registered),
-    and successive ticks vacuum what the previous tick's deferred fold
-    superseded — the one-interval grace discipline."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from paas_auditor_spark.operators.bloom import bloom_words_collector
-
-    svc = Service(spark, warehouse_dir=str(tmp_path / "wh"))
-    # ADVICE r7 (medium): the loop arms even with NO dataset registered
-    # yet — the streaming deployment calls run_threaded before its
-    # collectors register, so a call-time gate left the loop dead.  A
-    # tick over the empty list is a no-op, not an error.
-    threads = svc.run_threaded(loops=("maintenance",))
-    assert len(threads) == 1
-    svc.stop()
-    assert svc.maintenance_tick() == 0  # empty dataset list: no-op
-    path = str(tmp_path / "words")
-    hook = svc.register_collector_dataset(
-        path, bloom_words_collector("k", path, m=1 << 12, k=3), min_batches=2
-    )
-
-    for i in range(3):
-        hook(
-            spark.range(i * 20, (i + 1) * 20).select(
-                F.concat(F.lit("m"), F.col("id").cast("string")).alias("k")
-            ),
-            i,
-        )
-    assert svc.maintenance_tick() == 3  # fold, deletes deferred
-    assert [d for d in os.listdir(path) if d.startswith("batch-")]
-    assert svc.maintenance_tick() == 0  # next tick: vacuum, below guard
-    assert not [d for d in os.listdir(path) if d.startswith("batch-")]
-
-
-def test_maintenance_fold_applies_tombstones(spark, tmp_path):
-    """A collector dataset registered WITH a tombstone relation gets its
-    deleted rows physically dropped by the regular maintenance fold —
-    no extra fold scheduling, the read-time anti-join covers the gap
-    between folds.  After the tick: the raw index holds only survivors,
-    and a tombstone-blind read scores exactly like an index that never
-    held the deleted docs."""
-    from paas_auditor_spark.operators.atomic import (
-        batch_data_paths,
-        tombstones_collector,
-    )
-    from paas_auditor_spark.operators.ranking import (
-        bm25_from_postings,
-        bm25_scores,
-        postings_collector,
-    )
-
-    rows = [
-        (1, "table table scan"),
-        (2, "merge sort table"),
-        (3, "hash join hash"),
-        (4, "scan scan merge hash table"),
-        (5, "window frame sort"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    idx = str(tmp_path / "idx")
-    tomb = str(tmp_path / "tomb")
-    svc = Service(spark, warehouse_dir=str(tmp_path / "wh"))
-    hook = svc.register_collector_dataset(
-        idx,
-        postings_collector(idx),
-        parts=("postings", "doclens"),
-        min_batches=2,
-        tombstone_path=tomb,
-    )
-    hook(docs.filter("doc_id <= 3"), 0)
-    hook(docs.filter("doc_id > 3"), 1)
-    tombstones_collector(tomb)(
-        spark.createDataFrame([(4,)], "doc_id long"), 0
-    )
-
-    assert svc.maintenance_tick() == 2
-    stored = {
-        r["doc_id"]
-        for r in spark.read.parquet(
-            *batch_data_paths(idx, "rename", "doclens")
-        ).collect()
-    }
-    assert stored == {1, 2, 3, 5}
-    survivors = docs.filter("doc_id != 4")
-    want = {
-        (r["doc_id"], round(r["score"], 6))
-        for r in bm25_scores(survivors, ["table", "hash"]).collect()
-    }
-    got = {
-        (r["doc_id"], round(r["score"], 6))
-        for r in bm25_from_postings(spark, idx, ["table", "hash"]).collect()
-    }
-    assert got == want
-
-
-def test_maintenance_custom_fold_receives_tombstones(spark, tmp_path):
-    """r11 (r10 advice): a dataset registered with BOTH a custom fold
-    and a tombstone relation has the tombstone path passed INTO the
-    fold callable, so fold-time physical reclamation holds for
-    materializing folds by construction — after the tick the MinHash
-    index's parts hold only survivors and the stored representative
-    shifts to the surviving copy on disk (not just at read time)."""
-    from paas_auditor_spark.operators.atomic import (
-        batch_data_paths,
-        tombstones_collector,
-    )
-    from paas_auditor_spark.operators.dedup import (
-        minhash_fold,
-        minhash_index_collector,
-    )
-
-    svc = Service(spark, warehouse_dir=str(tmp_path / "wh"))
-    path = str(tmp_path / "mh")
-    tomb = str(tmp_path / "tomb")
-    hook = svc.register_collector_dataset(
-        path,
-        minhash_index_collector(path, num_hashes=24, num_bands=12),
-        parts=("collapse", "bands", "sets"),
-        min_batches=2,
-        tombstone_path=tomb,
-        fold=lambda sp, tp: minhash_fold(
-            sp, path, tombstone_path=tp, defer_delete=True
-        ),
-    )
-    boiler = ("alpha beta gamma delta epsilon zeta eta theta iota "
-              "kappa lambda mu nu xi omicron pi rho sigma tau shared")
-    hook(spark.createDataFrame([(1, boiler)], ["doc_id", "text"]), 0)
-    hook(spark.createDataFrame([(2, boiler)], ["doc_id", "text"]), 1)
-    tombstones_collector(tomb)(
-        spark.createDataFrame([(1,)], "doc_id long"), 0
-    )
-
-    assert svc.maintenance_tick() == 2
-    for part in ("collapse", "bands", "sets"):
-        ids = {
-            r["doc_id"]
-            for r in spark.read.option("mergeSchema", "true")
-            .parquet(*batch_data_paths(path, "rename", part))
-            .select("doc_id")
-            .collect()
-        }
-        assert ids == {2}, part  # doc 1 physically reclaimed
-    collapse = spark.read.parquet(
-        *batch_data_paths(path, "rename", "collapse")
-    ).collect()
-    assert {r["_rep"] for r in collapse} == {2}  # rep shifted on disk
-
-
-@pytest.mark.parametrize(
-    "crash_point", ["gen_renamed_no_flip", "flipped_no_cleanup"]
-)
-def test_service_restart_after_kill_during_fold(
-    spark, tmp_path, monkeypatch, crash_point
-):
-    """Round-10 soak variant pulled forward: the soak test kills the
-    service BETWEEN ticks; this one kills it IN THE MIDDLE of a
-    maintenance fold, at both kill windows a real SIGKILL can hit —
-    (a) after the new generation dir is renamed into place but before
-    the CURRENT pointer flips (readers must keep resolving the OLD
-    generation; the orphan gen must not wedge later folds), and
-    (b) after the flip but before the post-flip rescue/cleanup sweep
-    (readers resolve the NEW generation; stale v1 batch dirs must be
-    vacuumed, not double-counted).  After restart: reads bit-identical
-    to a one-shot filter, the next fold succeeds, and pre-kill batch
-    ids stay replay-suppressed."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from paas_auditor_spark.operators import atomic
-    from paas_auditor_spark.operators.bloom import (
-        bloom_assemble,
-        bloom_words,
-        bloom_words_collector,
-        bloom_words_read,
-    )
-
-    m, k = 1 << 13, 3
-    path = str(tmp_path / "words")
-
-    def make_service():
-        svc = Service(spark, warehouse_dir=str(tmp_path / "wh"))
-        hook = svc.register_collector_dataset(
-            path, bloom_words_collector("k", path, m=m, k=k), min_batches=3
-        )
-        return svc, hook
-
-    def keys(lo, hi):
-        return spark.range(lo, hi).select(
-            F.concat(F.lit("w"), F.col("id").cast("string")).alias("k")
-        )
-
-    def assembled():
-        return bytes(
-            bloom_assemble(bloom_words_read(spark, path)).collect()[0]["bloom"]
-        )
-
-    def one_shot(hi):
-        return bytes(
-            bloom_assemble(bloom_words(keys(0, hi), "k", m=m, k=k))
-            .collect()[0]["bloom"]
-        )
-
-    svc, hook = make_service()
-    for i in range(3):
-        hook(keys(i * 40, (i + 1) * 40), i)
-
-    class SimKill(BaseException):
-        """Simulated SIGKILL: BaseException so no except-Exception
-        policy in the stack can swallow it."""
-
-    if crash_point == "gen_renamed_no_flip":
-        real_rename = os.rename
-
-        def killer(src, dst):
-            if os.path.basename(dst) == atomic._CURRENT:
-                raise SimKill()  # gen dir landed; pointer never flips
-            return real_rename(src, dst)
-
-        monkeypatch.setattr(atomic.os, "rename", killer)
-    else:
-
-        def killer_rescue(old_root, new_root):
-            raise SimKill()  # flip landed; rescue/cleanup never ran
-
-        monkeypatch.setattr(atomic, "_rescue_unfolded", killer_rescue)
-
-    with pytest.raises(SimKill):
-        svc.maintenance_tick()
-    monkeypatch.undo()
-
-    if crash_point == "gen_renamed_no_flip":
-        # pointer never flipped: readers resolve the pre-fold layout and
-        # the orphaned generation is invisible
-        assert not os.path.exists(os.path.join(path, atomic._CURRENT))
-        assert os.path.isdir(os.path.join(path, "gen-0"))
-    else:
-        assert atomic.collector_root(path).endswith("gen-0")
-    assert assembled() == one_shot(120)  # reads correct immediately
-
-    # restart: same disk, fresh process state
-    svc, hook = make_service()
-    assert assembled() == one_shot(120)
-
-    # pre-kill ids stay replay-suppressed across the kill + restart in
-    # the flipped case (the fold's floor landed with the flip); in the
-    # no-flip case the fold never became visible, so the replay re-lands
-    # harmlessly identical bits (idempotent OR) — either way the filter
-    # is unchanged
-    hook(keys(0, 40), 0)
-    assert assembled() == one_shot(120)
-
-    # accumulate to the churn guard again; the next fold must succeed,
-    # skipping over / superseding whatever the kill left behind.  The
-    # guard counts DELTA dirs: once a folded generation exists its
-    # batch-0 is the fold artifact, not ingest churn (r10 advice)
-    def _delta_dirs():
-        root = atomic.collector_root(path)
-        return sum(
-            1
-            for d in os.listdir(root)
-            if d.startswith("batch-")
-            and not (root != path and d == "batch-0")
-        )
-
-    next_id = 3
-    while _delta_dirs() < 3:
-        hook(keys(next_id * 40, (next_id + 1) * 40), next_id)
-        next_id += 1
-    folded = svc.maintenance_tick()
-    assert folded >= 3
-    hi = next_id * 40
-    assert assembled() == one_shot(hi)
-    assert os.path.exists(os.path.join(path, atomic._CURRENT))
-
-    # replay of a folded id is suppressed by the new floor
-    hook(keys(0, 40), 1)
-    assert assembled() == one_shot(hi)
-
-    # a later vacuum (past the in-flight grace window) reaps the kill's
-    # leftovers without touching the live generation
-    atomic.vacuum_superseded(path, retain=0, orphan_age_s=0.0)
-    live = os.path.basename(atomic.collector_root(path))
-    leftovers = [
-        d
-        for d in os.listdir(path)
-        if d != live and d != atomic._CURRENT and not d.startswith(".CURRENT")
-    ]
-    assert leftovers == []
-    assert assembled() == one_shot(hi)
-
-
-@pytest.mark.parametrize("protocol,n_ticks", [("rename", 24), ("marker", 12)])
-def test_service_soak_ticks_compaction_restart(
-    spark, tmp_path, protocol, n_ticks
-):
-    """r8 verdict task #8 — the streaming SOAK: all four loops together
-    over an advancing overlapping event window, with the bloom collector
-    dataset live (min_batches=5, so compaction fires mid-run several
-    times under the new rescue/pointer protocol), one sink-outage tick
-    (at-least-once re-ship), and a kill/restart of the whole service at
-    the halfway point.  Pins: cursor monotonicity across every tick,
-    zero lost events (store exact, every event shipped at least once),
-    no duplicate STORE rows, and the collector dataset assembling
-    bit-identical to a one-shot filter over the distinct union of keys
-    despite folds + restart.  Runs under BOTH commit protocols (r9, the
-    round-10 candidate pulled forward): 24 ticks rename, 12 ticks marker
-    (the object-store variant exercises the link-publish + marker-aware
-    rescue machinery; fewer ticks keep the doubled soak inside the suite
-    budget)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from paas_auditor_spark.functions.timecross import parse_wall  # noqa: F401
-    from paas_auditor_spark.operators.bloom import (
-        bloom_assemble,
-        bloom_words,
-        bloom_words_collector,
-        bloom_words_read,
-    )
-
+def test_service_soak_ticks_restart(spark, tmp_path):
+    """The service soak: 24 collect→ship→inform ticks over an advancing,
+    overlapping event window, one sink-outage tick (at-least-once
+    re-ship) and a kill/restart of the whole service at the halfway
+    point.  Pins: cursor monotonicity across every tick, the cursor
+    standing still through the outage, zero lost events (store exact,
+    every event shipped at least once) and no duplicate STORE rows."""
     cfg = EngineConfig()
     cfg.pagination_wait_s = 0.0
     transport = PageServer([])
     sent: list[str] = []
-    bloom_path = str(tmp_path / "soak_words")
-    m, k = 1 << 14, 4
+    n_ticks = 24
 
     def make_service():
-        svc = Service(
+        return Service(
             spark,
             warehouse_dir=str(tmp_path / "wh_soak"),
             transport=transport,
             sender=sent.append,
             cfg=cfg,
         )
-        hook = svc.register_collector_dataset(
-            bloom_path,
-            bloom_words_collector(
-                "k", bloom_path, m=m, k=k, protocol=protocol
-            ),
-            min_batches=5,
-            protocol=protocol,
-        )
-        return svc, hook
 
-    svc, hook = make_service()
+    svc = make_service()
 
     def boom(payload: str) -> None:
         raise RuntimeError("sink outage")
 
     all_ids: set[int] = set()
     last_cursor = (dt.datetime(1970, 1, 1), "")
-    folds = 0
     for t in range(n_ticks):
         ids = list(range(max(0, 3 * t - 2), 3 * t + 3))  # overlap 2 per tick
         all_ids.update(ids)
@@ -1168,15 +772,6 @@ def test_service_soak_ticks_compaction_restart(
         svc.run_loops(max_ticks=1)
         if t == 7:
             svc.sender = sent.append
-        # feed the collector dataset its own per-tick key batch (replays
-        # of overlapping keys only re-OR identical bits)
-        hook(
-            spark.createDataFrame(
-                [(f"key-{i}",) for i in ids], "k string"
-            ),
-            t,
-        )
-        folds += svc.maintenance_tick()
 
         cursors = spark.read.parquet(svc.paths[CURSORS_TABLE]).collect()
         assert len(cursors) == 1
@@ -1187,11 +782,7 @@ def test_service_soak_ticks_compaction_restart(
         last_cursor = cur
 
         if t == n_ticks // 2:  # kill/restart: new process state, same disk
-            svc, hook = make_service()
-
-    # at least two mid-run folds actually happened, through the restart
-    assert folds >= (10 if n_ticks >= 24 else 5)
-    assert os.path.exists(os.path.join(bloom_path, "CURRENT"))
+            svc = make_service()
 
     # zero lost events, no store duplicates
     events = spark.read.parquet(svc.paths["cf_audit_events"])
@@ -1203,18 +794,3 @@ def test_service_soak_ticks_compaction_restart(
     assert got_guids == want_guids  # every event shipped ≥ once
     # duplicates only from the at-least-once re-ship after the outage
     assert len(shipped) >= len(want_guids)
-
-    # collector dataset: folds + restart are invisible — bit-identical
-    # to a one-shot filter over the distinct union of keys
-    keys = spark.createDataFrame(
-        sorted((f"key-{i}",) for i in all_ids), "k string"
-    )
-    one_shot = bytes(
-        bloom_assemble(bloom_words(keys, "k", m=m, k=k)).collect()[0]["bloom"]
-    )
-    assembled = bytes(
-        bloom_assemble(
-            bloom_words_read(spark, bloom_path, protocol=protocol)
-        ).collect()[0]["bloom"]
-    )
-    assert assembled == one_shot

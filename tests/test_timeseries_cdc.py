@@ -271,60 +271,6 @@ def test_cdc_near_dup_planted_pair(spark):
     assert p["count"] >= n1 - 1
 
 
-def test_ewma_stream_matches_batch_and_drops_late(spark, tmp_path):
-    """Streaming EWMA (applyInPandasWithState) folded over in-order
-    micro-batches equals the batch fold exactly; a replayed/late row in
-    a later batch is dropped instead of corrupting the series."""
-    from paas_auditor_spark.streaming.stateful import ewma_stream
-    from paas_auditor_spark.operators.timeseries import ewma
-
-    src = str(tmp_path / "ewma_src")
-    schema = "k string, t double, x double"
-    b1 = [("a", 1.0, 10.0), ("a", 2.0, 20.0), ("b", 1.0, 5.0)]
-    b2 = [("a", 3.0, 30.0), ("b", 2.0, 15.0)]
-    b3 = [("a", 2.0, 999.0), ("a", 4.0, 40.0)]  # t=2 is a late replay
-    spark.createDataFrame(b1, schema).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(src)
-    spark.createDataFrame(b2, schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    spark.createDataFrame(b3, schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        ewma_stream(stream, alpha=0.3)
-        .writeStream.format("memory")
-        .queryName("ewma_out")
-        .outputMode("update")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = {
-            (r["k"], r["t"]): r["ewma"]
-            for r in spark.sql("SELECT * FROM ewma_out").collect()
-        }
-    finally:
-        q.stop()
-
-    in_order = spark.createDataFrame(
-        b1 + b2 + [("a", 4.0, 40.0)], schema
-    )
-    want = {
-        (r["k"], r["t"]): r["ewma"]
-        for r in ewma(in_order, "k", "t", "x", alpha=0.3).collect()
-    }
-    assert got == want  # exact double equality: same multiply-add chain
-    assert ("a", 2.0) in got and got[("a", 2.0)] != 999.0
-
-
 def test_hll_overlap_accuracy(spark, sf_dir):
     """Inclusion-exclusion overlap from HLL sketches tracks the exact
     pairwise intersection within the sketch's error envelope."""
@@ -561,57 +507,6 @@ def test_bootstrap_and_sequential_plans_stay_jvm_side(spark, sf_dir):
         )
         for node in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
             assert node not in plan, (name, node)
-
-
-def test_cusum_stream_matches_batch_fixed_limits(spark, tmp_path):
-    """Streaming CUSUM with fixed (mu, k) over in-order micro-batches
-    equals the batch fold given the same limits as constant columns."""
-    from paas_auditor_spark.operators.timeseries import cusum
-    from paas_auditor_spark.streaming.stateful import cusum_stream
-
-    src = str(tmp_path / "cusum_src")
-    schema = "k string, t double, x double"
-    b1 = [("a", 1.0, 12.0), ("a", 2.0, 9.0), ("b", 1.0, 30.0)]
-    b2 = [("a", 3.0, 15.0), ("b", 2.0, 30.0)]
-    spark.createDataFrame(b1, schema).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(src)
-    spark.createDataFrame(b2, schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        cusum_stream(stream, mu=10.0, slack=1.0)
-        .writeStream.format("memory")
-        .queryName("cusum_out")
-        .outputMode("update")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = {
-            (r["k"], r["t"]): r["cusum"]
-            for r in spark.sql("SELECT * FROM cusum_out").collect()
-        }
-    finally:
-        q.stop()
-
-    batch = spark.createDataFrame(b1 + b2, schema).select(
-        "*", F.lit(10.0).alias("mu"), F.lit(1.0).alias("kk")
-    )
-    want = {
-        (r["k"], r["t"]): r["cusum"]
-        for r in cusum(
-            batch, "k", "t", "x", mu_col="mu", slack_col="kk"
-        ).collect()
-    }
-    assert got == want
-    assert got[("b", 2.0)] == 38.0  # 19 + 19: sustained shift accumulates
 
 
 def test_ivf_recall_curve_monotone_terminal_exact(spark, sf_dir):
