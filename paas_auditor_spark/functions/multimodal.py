@@ -3,9 +3,8 @@
 Design: image/audio/video payloads are opaque ``binary`` columns travelling
 next to typed metadata; all per-blob compute runs as Arrow-batched
 ``mapInPandas`` so bytes never round-trip through row-at-a-time Python.
-The decode step itself is STUBBED (image/audio libraries are not installed
-in this environment) behind ``decode_image`` — the Spark-side schema,
-partition sizing, UDF signature and batch shape are real and tested.
+Image and audio containers are decoded without a codec library: binary
+PPM (``decode_ppm``) by hand, PCM WAV with the stdlib ``wave`` module.
 
 Scale notes: blobs dominate partition size, so callers should
 ``spark.sql.files.maxPartitionBytes`` down (or repartition by blob-count)
@@ -50,139 +49,6 @@ def binary_features(
             )
 
     return blobs_df.mapInPandas(extract, schema=BINARY_FEATURES_SCHEMA)
-
-
-def have_pil() -> bool:
-    """True when a real image codec (PIL) is importable on the workers."""
-    try:
-        import PIL.Image  # noqa: F401, PLC0415
-
-        return True
-    except ImportError:
-        return False
-
-
-def decode_image(blob: bytes) -> dict:
-    """Decode image metadata: real PIL decode when the codec is present,
-    else a clearly-marked NotImplementedError (this sandbox has no image
-    libraries — the deterministic ``fake_image_meta`` stands in for tests;
-    the Spark-side plumbing is identical either way).
-    """
-    try:
-        import io  # noqa: PLC0415
-
-        from PIL import Image  # noqa: PLC0415
-    except ImportError as exc:
-        raise NotImplementedError(
-            "image decode libraries are not available in this environment; "
-            "install PIL (pillow) on the cluster and decode_image uses it "
-            "automatically"
-        ) from exc
-    with Image.open(io.BytesIO(blob)) as img:
-        return {"width": img.width, "height": img.height, "mode": img.mode}
-
-
-def fake_image_meta(blob: bytes) -> dict:
-    """Deterministic stand-in for decode_image used by tests: derives fake
-    dimensions from the blob hash so the pipeline shape is exercised
-    end-to-end without a codec."""
-    h = hashlib.sha256(blob).digest()
-    return {
-        "width": 1 + h[0] % 64,
-        "height": 1 + h[1] % 64,
-        "mode": "RGB" if h[2] % 2 == 0 else "L",
-    }
-
-
-def image_meta_features(
-    blobs_df: DataFrame,
-    id_col: str = "doc_id",
-    blob_col: str = "blob",
-    decoder=None,
-) -> DataFrame:
-    """Decode-and-extract over binary image columns: the real PIL decoder
-    when present, else the deterministic test stand-in."""
-    if decoder is None:
-        decoder = decode_image if have_pil() else fake_image_meta
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = [decoder(bytes(b)) for b in pdf[blob_col]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "width": [m["width"] for m in metas],
-                    "height": [m["height"] for m in metas],
-                    "mode": [m["mode"] for m in metas],
-                }
-            )
-
-    return blobs_df.mapInPandas(
-        extract, schema="doc_id long, width int, height int, mode string"
-    )
-
-
-def ppm_resize(blob: bytes, w: int, h: int) -> bytes:
-    """REAL image resize with no image library: decode the binary-PPM
-    container, nearest-neighbor resample on the pixel grid (the
-    source-index map ``src = floor((dst + 0.5)·src_dim/dst_dim)`` —
-    OpenCV/PIL's NEAREST convention), re-encode as P6.  Deterministic
-    and dependency-free, so ``resize_images`` has a genuine codec step
-    everywhere (r9, completing the PPM path): pass it as ``resizer``
-    for PPM blobs; PIL's ``Image.resize`` drops in for JPEG/PNG."""
-    import numpy as np
-
-    sw, sh, _mx, flat = decode_ppm(blob)
-    img = flat.reshape(sh, sw, 3)
-    ys = np.minimum(((np.arange(h) + 0.5) * sh / h).astype(np.int64), sh - 1)
-    xs = np.minimum(((np.arange(w) + 0.5) * sw / w).astype(np.int64), sw - 1)
-    out = img[ys[:, None], xs[None, :], :]
-    return f"P6\n{w} {h}\n255\n".encode() + out.tobytes()
-
-
-def resize_images(
-    blobs_df: DataFrame,
-    target_w: int = 32,
-    target_h: int = 32,
-    id_col: str = "doc_id",
-    blob_col: str = "blob",
-    resizer=None,
-) -> DataFrame:
-    """Resize template: binary in → binary out, same mapInPandas shape.
-
-    ``resizer(blob, w, h) -> bytes`` is the pluggable codec step —
-    ``ppm_resize`` is the REAL dependency-free implementation for PPM
-    blobs (r9); PIL ``Image.resize`` slots in for compressed formats on
-    a real cluster.  The default remains the deterministic fake —
-    sha256-keyed byte expansion to exactly w*h bytes — so the pipeline
-    (schema binary→binary, Arrow round-trip of bytearrays, batch shape)
-    is exercised even on blobs that are not images at all.
-    """
-
-    def fake_resize(blob: bytes, w: int, h: int) -> bytes:
-        seed = hashlib.sha256(blob).digest()
-        reps = (w * h) // len(seed) + 1
-        return (seed * reps)[: w * h]
-
-    resizer = resizer or fake_resize
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "resized": [
-                        resizer(bytes(b), target_w, target_h)
-                        for b in pdf[blob_col]
-                    ],
-                    "width": target_w,
-                    "height": target_h,
-                }
-            )
-
-    return blobs_df.mapInPandas(
-        run, schema="doc_id long, resized binary, width int, height int"
-    )
 
 
 def sample_frames(
@@ -431,8 +297,8 @@ def audio_window_features(
     window: int = 256,
 ) -> DataFrame:
     """Windowed audio features over WAV blobs with a REAL decode — the
-    audio member of the multimodal family, and unlike the PIL-gated
-    image branch this one runs everywhere: the stdlib ``wave`` module
+    audio member of the multimodal family, and it runs everywhere: the
+    stdlib ``wave`` module
     parses the RIFF container (mono 16-bit PCM contract) and numpy
     frombuffer yields the waveform, Arrow batch by Arrow batch.
 
@@ -512,14 +378,8 @@ __all__ = [
     "BINARY_FEATURES_SCHEMA",
     "audio_window_features",
     "binary_features",
-    "decode_image",
     "decode_ppm",
-    "fake_image_meta",
-    "have_pil",
-    "image_meta_features",
     "image_tile_features",
-    "ppm_resize",
-    "resize_images",
     "sample_frames",
     "synth_ppm",
     "synth_wav",

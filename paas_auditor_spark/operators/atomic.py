@@ -2,7 +2,7 @@
 
 One implementation of the write-to-hidden-tmp + atomic-rename protocol
 shared by every foreachBatch collector that appends per-batch mergeable
-relations (`bloom.bloom_words_collector`, `quantiles.hist_collector`) —
+relations (`quantiles.hist_collector`, `atomic.tombstones_collector`) —
 a single place to hold the three load-bearing details:
 
 - the tmp directory is dot-prefixed (invisible to Spark readers) AND
@@ -43,7 +43,6 @@ from collections.abc import Callable
 __all__ = [
     "GenerationSupersededError",
     "anti_join_tombstones",
-    "apply_tombstones_fold",
     "batch_data_paths",
     "collector_root",
     "commit_batch_dir",
@@ -54,7 +53,6 @@ __all__ = [
     "replay_floor",
     "tombstone_ids",
     "tombstones_collector",
-    "vacuum_superseded",
 ]
 
 _MARKER = "_COMMITTED"
@@ -63,9 +61,6 @@ _CURRENT = "CURRENT"
 # skips it, so a recursiveFileLookup parquet read of a generation dir
 # never trips over the metadata file
 _FLOOR = "_COMPACTED_THROUGH"
-# apply_tombstones_fold's steady-state watermark: the set of tombstone
-# batch dirs folded into this generation (same hidden-path convention)
-_TOMB_FP = "_TOMBSTONES_THROUGH"
 
 
 def collector_root(path: str) -> str:
@@ -102,7 +97,7 @@ def replay_floor(root: str) -> int:
 class GenerationSupersededError(RuntimeError):
     """A commit published its batch into a generation that a concurrent
     compaction superseded between root resolution and publish — the
-    batch landed in a directory ``vacuum_superseded`` will delete.
+    batch landed in a directory the fold is about to delete.
     Retrying the commit is SAFE and the correct recovery: the retry
     re-resolves CURRENT; if the fold absorbed the batch its id is under
     the new floor (no-op), if the fold missed it the retry re-appends
@@ -122,7 +117,7 @@ def _check_generation_stable(path: str, root: str, batch_id: int) -> None:
     published, so correctness must not hang on the caller's retry
     discipline (a one-shot caller — a cache-build hook, a manual script
     — that treats the exception as failure would leave the batch
-    invisible until a later vacuum/fold sweep happens to run).  The
+    invisible until a later fold sweep happens to run).  The
     guard re-resolves CURRENT and either (a) finds the fold absorbed the
     batch (id ≤ the live floor: visible, done), (b) moves the published
     dir into the live generation itself (the _rescue_unfolded rename,
@@ -181,7 +176,7 @@ def _move_published_batch(src: str, dst: str) -> str:
     committed — ``commit_batch_dir_marker`` makedirs the batch dir
     before any data or marker exists, so an in-flight (or dead) racer's
     scaffolding at dst must not be read as "the batch is safe" while the
-    only COMMITTED copy sits in src awaiting vacuum.  When dst exists
+    only COMMITTED copy sits in src awaiting deletion.  When dst exists
     but is uncommitted and src IS a committed marker publish, the
     committed attempt is migrated with the protocol's own primitives:
     rename the attempt dir in, then hard-link the (already non-empty)
@@ -372,7 +367,7 @@ def committed_batch_dirs(path: str) -> list[str]:
         try:
             bid = int(d.split("-", 1)[1])
         except ValueError:
-            continue  # foreign batch-* name: not ours (the vacuum rule)
+            continue  # foreign batch-* name: not ours
         try:
             attempt = (
                 open(os.path.join(root, d, _MARKER)).read().strip()
@@ -435,7 +430,7 @@ def _rescue_unfolded(old_root: str, new_root: str) -> int:
         elif outcome == "wedged":
             # empty marker = external corruption: the same loud posture
             # commit and compact take, here before the dir under it is
-            # vacuumed away
+            # deleted with its generation
             raise ValueError(
                 f"wedged empty commit marker under {src!r}: inspect and "
                 "remove it before maintenance can reclaim this generation"
@@ -449,21 +444,19 @@ def compact_batches(
     parts: tuple[str, ...] = ("",),
     protocol: str = "rename",
     target_files: int = 1,
-    defer_delete: bool = False,
     transform=None,
 ) -> int:
     """Fold every committed ``batch-<id>`` of a collector dataset into
     ONE batch directory of ``target_files`` parquet files — the
     small-file maintenance job every long-running collector needs: a
     micro-batch cadence of seconds accumulates ~10⁵ directories/week,
-    and per-file open cost eventually dominates every read
-    (``compact_partition``'s problem, recurring at the batch-dir level).
+    and per-file open cost eventually dominates every read.
 
-    Content-neutral by design: all three collector families fold at
-    READ time (bit_or for bloom words, additive counts for histograms
-    and postings), so compaction is purely a row-preserving rewrite —
-    the union of all batch rows lands in a single new batch dir, and
-    read-side results are bit-identical (test-pinned).
+    Content-neutral by design: the collector families fold at READ
+    time (additive counts for histograms and postings), so compaction
+    is purely a row-preserving rewrite — the union of all batch rows
+    lands in a single new batch dir, and read-side results are
+    bit-identical (test-pinned).
 
     Atomicity and replay:
     - The new generation is built complete in a hidden tmp dir, renamed
@@ -476,38 +469,32 @@ def compact_batches(
       committed, so an at-least-once replay of a pre-compaction batch
       stays a no-op even though its directory is gone.
 
-    Single-writer contract (the compact_partition rule, one level up):
-    run this from the collector's own driver BETWEEN micro-batches — it
-    must not race the appender, because a batch committed to the OLD
-    generation after the fold's file listing would be silently dropped
-    by the pointer flip.  Readers never see a torn RESOLUTION (old or
-    new generation, whole), but the old generation's files are deleted
-    immediately after the flip by default — a read that resolved just
-    before the flip can hit FileNotFound mid-scan.  On shared storage
-    pass ``defer_delete=True`` and reap superseded generations after
-    the longest possible read duration (the standard table-format
-    vacuum discipline).
+    Single-writer contract: run this from the collector's own driver
+    BETWEEN micro-batches — it must not race the appender, because a
+    batch committed to the OLD generation after the fold's file listing
+    would be silently dropped by the pointer flip.  Readers never see a
+    torn RESOLUTION (old or new generation, whole), but the old
+    generation's files are deleted immediately after the flip — a read
+    that resolved just before the flip can hit FileNotFound mid-scan.
 
     ``parts`` names the sub-relations inside each batch dir ("" for
-    flat datasets like bloom words / histograms; ("postings",
-    "doclens") for the inverted index).  Returns the number of batch
-    dirs folded (0 = nothing to do).
+    flat datasets like histograms; ("postings", "doclens") for the
+    inverted index).  Returns the number of batch dirs folded (0 =
+    nothing to do).
 
     ``transform`` (optional, ``fn(part_name, df) -> df``) maps each
-    part's unioned rows before the rewrite — the hook the tombstone
-    machinery uses to PHYSICALLY drop deleted rows at fold time
-    (``apply_tombstones_fold``) and the MinHash gate uses to
-    materialize its global collapse (``minhash_fold``).  Two contract
-    points: the transform must be deterministic and must never
-    FABRICATE rows (replay floors still suppress re-commits of FOLDED
-    ids, so an invented row has no batch to belong to — dropping rows
-    and rewriting/adding COLUMNS are both fine), and correctness must
-    NEVER depend on it having run: a batch rescued by
-    ``_rescue_unfolded`` after the pointer flip rides into the new
-    generation UNTRANSFORMED, so read paths keep applying the same
-    filter read-time (for tombstones: the anti-join, idempotent over
-    already-removed rows; for fold-added columns: treat absent/NULL as
-    not-yet-folded)."""
+    part's unioned rows before the rewrite — the hook the MinHash gate
+    uses to drop tombstoned rows and materialize its global collapse at
+    fold time (``minhash_fold``).  Two contract points: the transform
+    must be deterministic and must never FABRICATE rows (replay floors
+    still suppress re-commits of FOLDED ids, so an invented row has no
+    batch to belong to — dropping rows and rewriting/adding COLUMNS are
+    both fine), and correctness must NEVER depend on it having run: a
+    batch rescued by ``_rescue_unfolded`` after the pointer flip rides
+    into the new generation UNTRANSFORMED, so read paths keep applying
+    the same filter read-time (for tombstones: the anti-join, idempotent
+    over already-removed rows; for fold-added columns: treat absent/NULL
+    as not-yet-folded)."""
     root = collector_root(path)
     if protocol == "marker":
         # fold (and floor!) only batches with a COMMITTED (non-empty)
@@ -540,7 +527,7 @@ def compact_batches(
                 try:
                     bid = int(d.split("-", 1)[1])
                 except ValueError:
-                    # foreign batch-* name (not ours — the vacuum /
+                    # foreign batch-* name (not ours — the
                     # committed_batch_dirs tolerance rule): never folded,
                     # never floored; it rides the old generation
                     continue
@@ -635,9 +622,7 @@ def compact_batches(
     _rescue_unfolded(root, os.path.join(path, new_gen))
     # reclaim the previous generation: no NEW reader can resolve it, but
     # a read that resolved before the flip may still be scanning — see
-    # the docstring's defer_delete contract
-    if defer_delete:
-        return len(data_dirs)
+    # the docstring's single-writer contract
     if root == path:
         # v1 layout: delete exactly the batch dirs that were folded
         # (a wedged marker batch was NOT folded and must stay on disk)
@@ -655,7 +640,7 @@ def compact_batches(
 
 def commit_fn(protocol: str) -> Callable[[str, int, Callable[[str], None]], bool]:
     """The commit primitive for ``protocol`` — the single dispatch point
-    all collector families share (bloom words, histograms, postings),
+    all collector families share (histograms, postings, MinHash bands),
     so the rename/marker semantics live in this module only."""
     try:
         return {
@@ -685,8 +670,8 @@ def batch_data_paths(path: str, protocol: str, part: str = "") -> list[str]:
         commit_fn(protocol)  # raise the canonical unknown-protocol error
     root = collector_root(path)
     # explicit numeric-id listing, not a batch-* glob (r9 fix-review):
-    # the glob also matched foreign batch-* names the fold/vacuum now
-    # tolerate, feeding their non-parquet contents straight into the
+    # the glob also matched foreign batch-* names the fold now
+    # tolerates, feeding their non-parquet contents straight into the
     # read.  Compaction bounds the dir count, so the path list stays
     # small; Spark's hidden-path rule never saw the dot-prefixed tmp
     # dirs either way.  Deliberate contract change that rides along: a
@@ -723,136 +708,6 @@ def batch_data_paths(path: str, protocol: str, part: str = "") -> list[str]:
     return [os.path.join(b, part) if part else b for b in batches]
 
 
-def vacuum_superseded(
-    path: str, retain: int = 2, orphan_age_s: float = 600.0
-) -> int:
-    """Reclaim what the CURRENT pointer no longer references — the read
-    half of ``compact_batches(defer_delete=True)`` and the reaper for
-    crash leftovers:
-
-    - superseded ``gen-<n>`` directories BELOW the current generation,
-      except the ``retain`` newest (see below);
-    - crash-orphaned ``gen-<n>`` dirs ABOVE the current generation (a
-      fold died between its generation rename and its pointer flip —
-      never referenced, skipped by later folds, reclaimed immediately);
-    - stale v1-layout ``batch-*`` dirs left in ``path`` itself once the
-      dataset went generational with deferred deletes;
-    - dot-prefixed ``.gen-*.tmp*`` build dirs a SIGKILLed fold left.
-
-    Returns the number of directories removed.
-
-    ``retain`` (VERDICT r7 #5) keeps the newest ``retain`` superseded
-    generations on disk, so a reader's grace window is ``retain``
-    maintenance intervals, not one: with the tick discipline
-    (vacuum-then-fold, ``defer_delete=True``), a query that resolved a
-    generation's file list just before a flip can keep scanning through
-    ``retain`` further ticks before its files disappear — at 100 TB,
-    10-minute readers are routine and one interval was exactly one
-    flip away from FileNotFoundException.  Disk cost is bounded:
-    ``retain`` extra model-sized generations, reclaimed on schedule.
-    ``retain=0`` restores immediate reclamation (the r7 behavior).
-
-    Two further safety rules (r8 review):
-    - anything that can hold an IN-FLIGHT fold's work — a ``gen-<n>``
-      dir ABOVE the current generation (renamed into place but not yet
-      pointer-flipped) or a ``.gen-*.tmp*`` build dir — is reclaimed
-      only once older than ``orphan_age_s`` (default one maintenance
-      interval): a vacuum racing a manual fold must not delete the
-      generation the fold is about to flip to, which would point
-      CURRENT at a deleted directory and brick the dataset;
-    - before any deletion, committed batch dirs with ids ABOVE the
-      live generation's replay floor (a commit that raced an earlier
-      fold's listing) are MOVED into the live generation
-      (``_rescue_unfolded``), never deleted — the same
-      no-silent-batch-loss rule the fold itself applies post-flip.
-
-    No-op (0) on a v1 dataset that has never been compacted."""
-    import time
-
-    current = collector_root(path)
-    if current == path or not os.path.isdir(path):
-        return 0  # never compacted: nothing is superseded
-    cur_n = int(os.path.basename(current).split("-", 1)[1])
-    removed = 0
-    keep = os.path.basename(current)
-    now = time.time()
-
-    def old_enough(p: str) -> bool:
-        # age from the NEWEST directory mtime in the tree (r11 review):
-        # a long fold sets the build dir's own mtime at creation and
-        # then writes only inside nested part/batch subdirs, so the
-        # top-level mtime goes stale minutes into a write that may
-        # legitimately exceed orphan_age_s — but every part FILE a task
-        # creates bumps its parent DIR's mtime, so the newest dir mtime
-        # in the tree tracks live write activity.  Cost: one walk over
-        # the candidate dir's directories (bounded: parts × batches).
-        try:
-            ts = [os.path.getmtime(p)]
-            for droot, dnames, _ in os.walk(p):
-                for dn in dnames:
-                    try:
-                        ts.append(os.path.getmtime(os.path.join(droot, dn)))
-                    except OSError:
-                        pass
-            return now - max(ts) > orphan_age_s
-        except OSError:
-            return False  # vanished under us: another reaper got it
-
-    # stale v1-layout batch dirs in path itself: rescue unfolded ids
-    # into the live generation, then let the stale remainder fall
-    # through to deletion below
-    _rescue_unfolded(path, current)
-    superseded: list[tuple[int, str]] = []
-    for d in os.listdir(path):
-        full = os.path.join(path, d)
-        if d == keep or not os.path.isdir(full):
-            continue
-        if d.startswith("gen-"):
-            try:
-                n = int(d.split("-", 1)[1])
-            except ValueError:
-                # not one of ours (e.g. an operator-created gen-backup):
-                # tolerate it like _rescue_unfolded tolerates foreign
-                # batch-* names — with vacuums on a schedule, raising
-                # here would fail EVERY subsequent run (ADVICE r8)
-                continue
-            if n < cur_n:
-                superseded.append((n, full))
-                continue  # grace-window candidate, judged below
-            # n > cur_n: crash orphan — unless it is an in-flight
-            # fold's freshly renamed generation (age-gated)
-            if not old_enough(full):
-                continue
-        elif d.startswith(".gen-"):
-            if not old_enough(full):
-                continue  # possibly an in-flight fold's build dir
-        elif d.startswith("batch-"):
-            try:
-                int(d.split("-", 1)[1])
-            except ValueError:
-                # foreign batch-* name (operator data): spared, like
-                # gen-backup above — tolerance must reach the delete,
-                # not just the parse (r9 fix-review)
-                continue
-        elif d.startswith(".batch-"):
-            # same in-flight-work age gate as .gen-* build dirs (r11
-            # review): a raw-hook commit that resolved root=path just
-            # before the first flip may still be writing here — only a
-            # quiescent tmp is a crash orphan
-            if not old_enough(full):
-                continue
-        else:
-            continue
-        shutil.rmtree(full, ignore_errors=True)
-        removed += 1
-    doomed = sorted(superseded)[:-retain] if retain > 0 else sorted(superseded)
-    for _, full in doomed:
-        _rescue_unfolded(full, current)
-        shutil.rmtree(full, ignore_errors=True)
-        removed += 1
-    return removed
-
-
 def tombstones_collector(path: str, id_col: str = "doc_id",
                          protocol: str = "rename"):
     """foreachBatch hook for a DELETION (tombstone) dataset — the
@@ -861,16 +716,17 @@ def tombstones_collector(path: str, id_col: str = "doc_id",
     erasure, licensing takedowns, opt-outs), but the collector-family
     indexes are, so deletions land as their OWN tiny collector dataset
     of doomed ids under the SAME atomic commit protocol (replay of a
-    committed tombstone batch writes nothing; folds and vacuums work
-    unchanged because tombstones are a plain flat relation).
+    committed tombstone batch writes nothing; folds work unchanged
+    because tombstones are a plain flat relation).
 
     Consumption is two-tier, each independently correct:
     - READ-TIME: index readers anti-join the tombstone ids
       (``tombstone_ids``) — deletions take effect at the next query,
       O(|deletes|) extra input, no index rewrite;
-    - FOLD-TIME: ``apply_tombstones_fold`` physically drops tombstoned
-      rows during compaction, so the index's disk/scan cost stops
-      paying for deleted documents.  The read-time anti-join stays on
+    - FOLD-TIME: a ``compact_batches`` transform (``minhash_fold``'s
+      ``tombstone_path``) physically drops tombstoned rows during
+      compaction, so the index's disk/scan cost stops paying for
+      deleted documents.  The read-time anti-join stays on
       (idempotent over already-removed rows) — correctness never
       depends on a fold having run (a rescued batch rides into the new
       generation untransformed; see ``compact_batches``).
@@ -954,84 +810,3 @@ def anti_join_tombstones(df, doomed, id_col: str):
     return df.join(
         doomed.withColumnRenamed("id", id_col), id_col, "left_anti"
     )
-
-
-def apply_tombstones_fold(
-    spark,
-    path: str,
-    tomb_path: str,
-    parts: tuple[str, ...] = ("",),
-    id_col: str = "doc_id",
-    protocol: str = "rename",
-    defer_delete: bool = True,
-) -> int:
-    """Compact a collector dataset AND physically drop tombstoned rows
-    — the maintenance job that reclaims deleted documents' index space.
-    Every part is anti-joined on ``id_col`` against the tombstone
-    dataset at ``tomb_path``; parts without that column (none of the
-    current families) would fail loudly rather than silently keep
-    doomed rows.  No-op (0) when nothing is tombstoned.  Runs under the
-    fold's single-writer contract like any compaction; the default
-    ``defer_delete=True`` keeps the reader grace window.
-
-    Steady-state no-op (r11 review): once any tombstone has ever been
-    committed, ``doomed`` is never None again — without a watermark
-    every invocation would pay a full dataset rewrite even with zero
-    new batches and zero new tombstones.  After each fold the set of
-    folded tombstone batch dirs is recorded in the new generation
-    (``_TOMBSTONES_THROUGH``); a later call whose data dirs are exactly
-    the prior fold's artifact AND whose tombstone batch set is
-    unchanged returns 0 without a Spark job.  (The runner additionally
-    gates on min_batches/delta-fraction; this guard protects DIRECT
-    callers of the documented maintenance entry point.)"""
-    import hashlib
-
-    doomed = tombstone_ids(spark, tomb_path, protocol)
-    if doomed is None:
-        return 0
-    tomb_fp = hashlib.md5(
-        "\n".join(
-            sorted(
-                os.path.relpath(p, tomb_path)
-                for p in batch_data_paths(tomb_path, protocol)
-            )
-        ).encode()
-    ).hexdigest()
-    root = collector_root(path)
-    fp_file = os.path.join(root, _TOMB_FP)
-    try:
-        with open(fp_file) as fh:
-            prior_fp = fh.read().strip()
-    except OSError:
-        prior_fp = None
-    if prior_fp == tomb_fp:
-        try:
-            data_dirs = batch_data_paths(path, protocol)
-        except ValueError:
-            data_dirs = []  # nothing committed: let compact no-op
-        if len(data_dirs) == 1:
-            # the only batch is the prior fold's artifact and the
-            # tombstone set hasn't changed: the rewrite would reproduce
-            # the generation byte-for-byte
-            return 0
-
-    # no forced broadcast hint: tombstone sets are tiny in the common
-    # case (AQE broadcasts them on its own) but a bulk-erasure campaign
-    # can be arbitrarily large — let the planner pick the join strategy
-    def drop_doomed(part, df):
-        return anti_join_tombstones(df, doomed, id_col)
-
-    n = compact_batches(
-        spark,
-        path,
-        parts=parts,
-        protocol=protocol,
-        defer_delete=defer_delete,
-        transform=drop_doomed,
-    )
-    # record the folded tombstone set in the LIVE generation (the fold
-    # is single-writer by contract; underscore prefix keeps Spark's
-    # hidden-path rule away from the metadata file)
-    with open(os.path.join(collector_root(path), _TOMB_FP), "w") as fh:
-        fh.write(tomb_fp + "\n")
-    return n

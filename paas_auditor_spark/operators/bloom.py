@@ -57,18 +57,12 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "BLOOM_SCHEME",
-    "bloom_assemble",
     "bloom_blob_from_words",
-    "bloom_blob_literal",
     "bloom_prune",
     "bloom_bit_pos",
-    "bloom_bitmap",
     "bloom_contains",
     "bloom_literal",
-    "bloom_merge",
     "bloom_words",
-    "bloom_words_collector",
-    "bloom_words_read",
 ]
 
 
@@ -132,7 +126,7 @@ def bloom_words(
     """The MERGEABLE form of the filter: a sparse (w, bits, m, k,
     scheme) relation — word index, 64 bits of that word — holding every set bit,
     plus the filter GEOMETRY (m, k) as constant columns so a persisted
-    table is self-describing: ``bloom_merge``/``bloom_assemble`` verify
+    table is self-describing: ``bloom_blob_from_words`` verifies
     every input was built under the same (m, k) instead of inferring
     from blob length (which only catches a LARGER-m mismatch — a
     smaller-m words table zero-pads to the right length and probes
@@ -140,10 +134,10 @@ def bloom_words(
 
     This is the form to PERSIST for incremental pipelines: filters
     built from disjoint key batches (daily benchmark drops, per-shard
-    corpora) merge by ``union -> groupBy(w) -> bit_or`` — exactly
-    ``bloom_merge`` — with no rebuild from keys, the same
-    re-aggregation story as the daily HLL sketches and the CMS counter
-    relation.  Fully distributed: keys fan out to their k positions
+    corpora) merge by ``union -> groupBy(w) -> bit_or`` (which
+    ``bloom_blob_from_words`` does on read) with no rebuild from keys,
+    the same re-aggregation story as the daily HLL sketches and the CMS
+    counter relation.  Fully distributed: keys fan out to their k positions
     (narrow ×k map) and pack map-side-combined into ≤ m/64 rows.  No
     distinct first — bit_or is idempotent, so duplicate positions cost
     nothing while a distinct would be one more full shuffle of the
@@ -205,219 +199,12 @@ def _reject_foreign_schemes(schemes: set, scheme: str) -> None:
         )
 
 
-def _scheme_and_geometry(
-    words_df: DataFrame, scheme: str = BLOOM_SCHEME
-) -> set[tuple[int, int]]:
-    """Scheme check and (m, k) read in ONE bounded distinct+collect
-    (the per-table validation bloom_merge runs on every input — one
-    driver round-trip per table, not two).  Returns the table's
-    geometry set: empty for an empty relation (a collector partial
-    whose micro-batches had zero keys — a legal merge input that
-    merely contributes nothing), a singleton for any valid table;
-    a mixed table raises."""
-    _require_scheme_column(words_df, scheme)
-    rows = words_df.select("scheme", "m", "k").distinct().collect()
-    _reject_foreign_schemes({r["scheme"] for r in rows}, scheme)
-    geos = {(int(r["m"]), int(r["k"])) for r in rows}
-    if len(geos) > 1:
-        raise ValueError(
-            f"words table mixes filters of different geometry: "
-            f"{sorted(geos)}; merge only filters built under identical "
-            "(m, k)"
-        )
-    return geos
-
-
-def _words_geometry(
-    words_df: DataFrame, scheme: str = BLOOM_SCHEME
-) -> tuple[int, int]:
-    """Read the (m, k) geometry a words relation was built under,
-    refusing an empty or mixed table or a foreign position scheme.  The
-    collect is bounded by the number of DISTINCT geometries/schemes
-    (1 in any valid table), never by filter or key size."""
-    geos = _scheme_and_geometry(words_df, scheme)
-    if not geos:
-        raise ValueError(
-            "empty words relation: (m, k) geometry unknown — build with "
-            "bloom_words, or merge it with a non-empty filter and "
-            "assemble that"
-        )
-    ((m, k),) = geos
-    return m, k
-
-
-def bloom_merge(
-    *word_tables: DataFrame, scheme: str = BLOOM_SCHEME
-) -> DataFrame:
-    """OR any number of (w, bits, m, k) filters into one — a Bloom
-    filter's union IS the filter of the union of the key sets,
-    bit-exactly (test-pinned).  Inputs must agree on (m, k): the
-    geometry columns each table carries are validated here (one bounded
-    distinct), because OR-ing words of different-m filters silently
-    yields false negatives — the one failure mode Bloom must never
-    have."""
-    if not word_tables:
-        raise ValueError("bloom_merge needs at least one word table")
-    # localCheckpoint before validating: each input is consumed by its
-    # own scheme collect, the merged geometry collect AND the union —
-    # without the cut a freshly-built words relation would re-run its
-    # full key-fold build per consumer.  Words relations are bounded at
-    # m/64 rows, so the checkpoint is O(m), never key-count-shaped
-    # (the hist_merge convention).
-    word_tables = tuple(t.localCheckpoint(eager=False) for t in word_tables)
-    # per-input scheme AND geometry validation BEFORE the union (one
-    # bounded distinct per table): a legacy table (no scheme column)
-    # would otherwise surface as an opaque union-schema error instead
-    # of the actionable rebuild message, and the merged relation needs
-    # no re-validation — cross-table agreement is checked right here.
-    # Empty partials (collector micro-batches with zero keys) are legal
-    # inputs: they impose no geometry and contribute no bits.
-    geos: set[tuple[int, int]] = set()
-    for t in word_tables:
-        geos |= _scheme_and_geometry(t, scheme)
-    if len(geos) > 1:
-        raise ValueError(
-            f"words tables mix filters of different geometry: "
-            f"{sorted(geos)}; merge only filters built under identical "
-            "(m, k)"
-        )
-    if not geos:
-        raise ValueError(
-            "all words relations are empty: (m, k) geometry unknown — "
-            "include at least one non-empty filter in the merge"
-        )
-    merged = word_tables[0]
-    for t in word_tables[1:]:
-        merged = merged.unionByName(t)
-    ((m, k),) = geos
-    return (
-        merged.groupBy("w")
-        .agg(F.bit_or("bits").alias("bits"))
-        .select(
-            "w",
-            "bits",
-            F.lit(m).cast("long").alias("m"),
-            F.lit(k).cast("int").alias("k"),
-            F.lit(scheme).alias("scheme"),
-        )
-    )
-
-
-def bloom_assemble(
-    words_df: DataFrame,
-    m: int | None = None,
-    scheme: str = BLOOM_SCHEME,
-) -> DataFrame:
-    """Densify a sparse (w, bits) relation into the probe form: 1-row
-    DataFrame with column ``bloom`` = m/8 bytes of binary, byte i
-    holding bits 8i..8i+7 (bit p => byte p div 8, bit p mod 8).
-
-    Geometry comes from the words relation itself when it carries
-    (m, k) columns (anything built by ``bloom_words``/``bloom_merge``);
-    a caller-passed ``m`` is then cross-checked, and a mismatch raises
-    instead of zero-padding a smaller-m table to a plausible length
-    (the silent-false-negative hole the old length-only guard missed).
-
-    The assembly avoids per-element map lookups (element_at on a
-    non-literal map is a linear scan — O(words²) was ~6 s at m=2^20): a
-    zero row is unioned for every word index and re-folded with bit_or
-    so each word appears exactly once, then array_sort on the collected
-    (w, bits) structs makes position i+1 be word i by construction.
-    Each word renders its 8 bytes as hex pairs in little-endian BYTE
-    order (``sequence(15, 1, -2)`` walks the word's big-endian hex two
-    chars at a time from the low byte), so the concatenation unhex()es
-    straight into the byte layout above.  O(words log words), all
-    JVM-side; the only driver-adjacent object is the m/8-byte filter
-    row itself, which is the shipped payload by design
-    (``bloom_literal``)."""
-    if "m" in words_df.columns:
-        wm, _wk = _words_geometry(words_df, scheme)
-        if m is not None and m != wm:
-            raise ValueError(
-                f"words table was built under m={wm} but assemble was "
-                f"asked for m={m}: filter built/merged under a different m"
-            )
-        m = wm
-    elif m is None:
-        raise ValueError(
-            "words table carries no (m, k) geometry columns; pass m"
-        )
-    if m % 64:
-        raise ValueError(f"m must be a multiple of 64, got {m}")
-    words = m // 64
-    all_words = words_df.sparkSession.range(words).select(
-        F.col("id").alias("w"), F.lit(0).cast("long").alias("bits")
-    )
-    dense = (
-        words_df.select("w", "bits")
-        .unionByName(all_words)
-        .groupBy("w")
-        .agg(F.bit_or("bits").alias("bits"))
-    )
-    return _render_blob(dense)
-
-
-def _render_blob(dense: DataFrame) -> DataFrame:
-    """One-row blob from a DENSE (w, bits) relation (every word index
-    present exactly once): array_sort makes position i+1 be word i, each
-    word renders as little-endian hex pairs, unhex packs the bytes."""
-
-    def word_le_hex(e: Column) -> Column:
-        # conv(bits, 10, 16) is unsigned-64 hex (bit 63 safe), lpad to
-        # 16 chars big-endian; re-pair from the tail for byte order
-        h = F.lpad(F.conv(e["bits"], 10, 16), 16, "0")
-        return F.array_join(
-            F.transform(
-                F.sequence(F.lit(15), F.lit(1), F.lit(-2)),
-                lambda i: F.substring(h, i, F.lit(2)),
-            ),
-            "",
-        )
-
-    return dense.agg(
-        F.array_sort(F.collect_list(F.struct("w", "bits"))).alias("_e")
-    ).select(
-        F.unhex(
-            F.array_join(F.transform(F.col("_e"), word_le_hex), "")
-        ).alias("bloom")
-    )
-
-
-def bloom_bitmap(
-    keys: DataFrame,
-    key_col: str,
-    m: int = 1 << 20,
-    k: int = 4,
-    scheme: str = BLOOM_SCHEME,
-) -> DataFrame:
-    """Build the probe-form filter straight from keys — semantically
-    ``bloom_assemble(bloom_words(keys))``, but fused: the zero row per
-    word index is injected at the POSITION level, so densify folds into
-    the same groupBy that packs bits (two shuffles end-to-end instead
-    of three).  Keep the sparse ``bloom_words`` relation instead when
-    the filter is built incrementally (``bloom_merge``)."""
-    if m % 64:
-        raise ValueError(f"m must be a multiple of 64, got {m}")
-    words = m // 64
-    pos_bits = _pos_bits(keys, key_col, m, k, scheme)
-    zeros = keys.sparkSession.range(words).select(
-        F.col("id").alias("w"), F.lit(0).cast("long").alias("bits")
-    )
-    dense = (
-        pos_bits.unionByName(zeros)
-        .groupBy("w")
-        .agg(F.bit_or("bits").alias("bits"))
-    )
-    return _render_blob(dense)
-
-
 def _pos_bits(
     keys: DataFrame, key_col: str, m: int, k: int, scheme: str
 ) -> DataFrame:
     """(w, bits) rows: each non-null key's k bit positions as 64-bit
-    word index + single-bit mask — the shared sparse base of the
-    relational build (``bloom_bitmap``) and the driver-packed literal
-    build (``bloom_literal``)."""
+    word index + single-bit mask — the sparse base of the driver-packed
+    literal build (``bloom_literal``)."""
     return keys.where(F.col(key_col).isNotNull()).select(
         F.explode(
             F.array(
@@ -448,15 +235,14 @@ def bloom_literal(
 
     The build collects the SPARSE (w, bits) aggregate — ≤ m/64 narrow
     rows, the same O(m)-payload bound as the one-row blob fetch — and
-    packs the bytes driver-side (r11, guide §1.2): the relational
-    render (``bloom_bitmap`` + collect) pays a zero-densify union plus
-    a second shuffle down to one row whose single task does per-word
-    hex string assembly; the driver pack replaces both with a trivial
-    Python loop over ≤16 K words.  Bit-equal to the relational path by
-    the same packing as ``bloom_blob_from_words`` (little-endian words,
-    byte i = bits 8i..8i+7), pinned by
-    ``test_bloom.py::test_literal_equals_relational_render``.  Keep
-    ``bloom_bitmap`` when the blob must stay a relation."""
+    packs the bytes driver-side: a relational render of the blob pays
+    a zero-densify union plus a second shuffle down to one row whose
+    single task does per-word hex string assembly; the driver pack
+    replaces both with a trivial Python loop over ≤16 K words.
+    Bit-equal to the relational render by the same packing as
+    ``bloom_blob_from_words`` (little-endian words, byte i = bits
+    8i..8i+7), pinned by
+    ``test_bloom.py::test_literal_equals_relational_render``."""
     if m % 64:
         raise ValueError(f"m must be a multiple of 64, got {m}")
     sparse = (
@@ -471,21 +257,6 @@ def bloom_literal(
     return F.lit(blob)
 
 
-def bloom_blob_literal(bitmap_df: DataFrame, m: int) -> Column:
-    """Collect an assembled 1-row ``bloom`` blob into a probe literal,
-    refusing a blob whose length disagrees with ``m`` — a words table
-    built (or merged) under a DIFFERENT m assembles to the wrong length
-    and would otherwise probe misaligned bytes, i.e. silent FALSE
-    NEGATIVES, the one failure mode a Bloom filter must never have."""
-    blob = bytes(bitmap_df.collect()[0]["bloom"])
-    if len(blob) != m // 8:
-        raise ValueError(
-            f"bloom blob is {len(blob)} bytes but m={m} implies {m // 8}: "
-            "filter built/merged under a different m"
-        )
-    return F.lit(blob)
-
-
 def bloom_blob_from_words(
     words_df: DataFrame,
     m: int | None = None,
@@ -497,12 +268,10 @@ def bloom_blob_from_words(
     bounded at m/64 rows × 16 bytes, the same O(m)-payload contract as
     ``bloom_literal``'s one-row blob fetch, never key-count-shaped —
     and Python ORs duplicates (per-batch appends) and renders the m/8
-    bytes directly.  Bit-equal to ``bloom_assemble`` + collect
+    bytes directly.  Bit-equal to a relational densify + render
     (test-pinned) but with ZERO shuffles and no separate geometry job:
     the geometry columns ride in the same collect and are validated
-    against the caller's (m, k) expectation here.  This is the hot path
-    for a probe-only decontamination run; keep ``bloom_assemble`` when
-    the blob itself must stay a relation (e.g. written to a table)."""
+    against the caller's (m, k) expectation here."""
     _require_scheme_column(words_df, scheme)
     rows = words_df.select("w", "bits", "m", "k", "scheme").collect()
     _reject_foreign_schemes({r["scheme"] for r in rows}, scheme)
@@ -533,70 +302,6 @@ def bloom_blob_from_words(
         words[int(r["w"])] |= int(r["bits"]) & 0xFFFFFFFFFFFFFFFF
     blob = b"".join(wd.to_bytes(8, "little") for wd in words)
     return F.lit(blob)
-
-
-def bloom_words_collector(
-    key_col: str,
-    path: str,
-    m: int = 1 << 20,
-    k: int = 4,
-    scheme: str = BLOOM_SCHEME,
-    protocol: str = "rename",
-):
-    """foreachBatch hook for INCREMENTAL filter maintenance: each
-    micro-batch of new benchmark keys lands its own (w, bits, m, k,
-    scheme) words relation under ``path`` — nothing is rebuilt from
-    keys, ever.  Readers get the merged filter for free:
-    ``bloom_assemble`` over ``bloom_words_read(path)`` folds the
-    per-batch rows with the same bit_or the explicit ``bloom_merge``
-    uses (OR is associative), and the carried geometry/scheme columns
-    reject a mixed-(m, k) or foreign-scheme append.  Gate refresh is
-    the reader's choice — re-assemble when the table grows (cheap:
-    O(m/64) rows), keep probing the old literal otherwise.
-
-    Concurrency contract: `operators/atomic.py:commit_batch_dir` — each
-    batch lands in a private hidden tmp dir and one atomic rename
-    publishes it, so a concurrent reader sees whole batches or nothing,
-    never a half-committed file set (a torn read would pack a literal
-    missing some of the batch's bits: false negatives), and a genuine
-    commit failure RAISES instead of silently dropping the batch (see
-    that module for the filesystem contract and the racer/replay
-    semantics).  Delivery is at-least-once-safe twice over: a replayed
-    batch finds its committed directory and skips, and even a duplicate
-    append would only re-OR identical bits.
-
-    ``protocol`` picks the publish primitive for the target filesystem:
-    ``"rename"`` (default — local disk/NFS/HDFS, atomic directory
-    rename) or ``"marker"`` (object stores, exclusive-create commit
-    marker: `atomic.commit_batch_dir_marker`).  Read with the SAME
-    protocol (``bloom_words_read``)."""
-    from paas_auditor_spark.operators.atomic import commit_fn
-
-    commit = commit_fn(protocol)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        commit(
-            path,
-            batch_id,
-            lambda tmp: bloom_words(batch_df, key_col, m=m, k=k, scheme=scheme)
-            .write.mode("overwrite")
-            .parquet(tmp),
-        )
-
-    return write_batch
-
-
-def bloom_words_read(spark, path: str, protocol: str = "rename") -> DataFrame:
-    """Snapshot-consistent read of a collector-maintained words
-    directory — the read half of ``bloom_words_collector``'s
-    whole-batches-or-nothing contract, per protocol: only COMMITTED
-    batch directories, resolved through the generation pointer so a
-    compacted dataset reads its live generation only (the path rules
-    live in one place: ``atomic.batch_data_paths``)."""
-    from paas_auditor_spark.operators.atomic import batch_data_paths
-    from paas_auditor_spark.sources.tables import read_parquet_cached
-
-    return read_parquet_cached(spark, *batch_data_paths(path, protocol))
 
 
 def bloom_contains(

@@ -35,7 +35,7 @@ from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from paas_auditor_spark.functions.timecross import (
@@ -44,13 +44,9 @@ from paas_auditor_spark.functions.timecross import (
     ts_string,
     wall_string,
 )
-from paas_auditor_spark.schemas import EPOCH, SHIPPER_CURSOR
+from paas_auditor_spark.schemas import EPOCH
 
 EPOCH_TS = dt.datetime(1970, 1, 1)
-
-
-def empty_cursors(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], schema=SHIPPER_CURSOR)
 
 
 def effective_cursor(
@@ -148,20 +144,10 @@ def upsert_cursor(
     return kept.unionByName(new_row)
 
 
-def validate_cursor_monotonic(
-    before: tuple[dt.datetime, str], after: tuple[dt.datetime, str]
-) -> bool:
-    """Cursor must never move backwards (CHECK > epoch + advance-on-success,
-    reference create_shipper_cursors.sql:8-12 and shipper.go:137-143)."""
-    return after[0] >= before[0] and after[0] > EPOCH_TS
-
-
 __all__ = [
     "EPOCH",
     "EPOCH_TS",
     "effective_cursor",
-    "empty_cursors",
     "unshipped_events",
     "upsert_cursor",
-    "validate_cursor_monotonic",
 ]

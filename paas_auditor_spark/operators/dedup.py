@@ -1073,7 +1073,6 @@ def minhash_fold(
     tombstone_path: str | None = None,
     protocol: str = "rename",
     target_files: int = 1,
-    defer_delete: bool = False,
 ) -> int:
     """The MinHash gate index's maintenance fold: generic compaction
     PLUS materialization of the probe's two global artifacts (r9
@@ -1090,8 +1089,8 @@ def minhash_fold(
       the probe's hot-bucket cap becomes a per-row comparison, not an
       index-wide window).
 
-    ``tombstone_path`` additionally drops doomed rows physically (the
-    ``apply_tombstones_fold`` semantics) BEFORE the collapse, so
+    ``tombstone_path`` additionally drops doomed rows physically (an
+    anti-join against ``tombstone_ids``) BEFORE the collapse, so
     representation shifts to surviving members on disk.  Correctness
     never depends on this fold having run: un-rewritten rows (new
     batches, rescued batches) read as DELTA and the probe reconciles
@@ -1157,7 +1156,6 @@ def minhash_fold(
         parts=("collapse", "bands", "sets"),
         protocol=protocol,
         target_files=target_files,
-        defer_delete=defer_delete,
         transform=tf,
     )
 
@@ -1571,84 +1569,6 @@ def simhash(
         "  0L, (acc, x) -> acc | x)"
     )
     return base.select(F.col(id_col), packed.alias("simhash"))
-
-
-def simhash_near_duplicates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    max_bucket: int | None = None,
-    identical_edges: str = "all",
-) -> DataFrame:
-    """Near-dup pairs by SimHash banding + exact Hamming verify.
-
-    With 4 bands of 16 bits, any pair within Hamming distance 3 matches on
-    at least one band (pigeonhole), so the band equi-join finds all of them
-    without an O(n²) comparison.  The guarantee stops at 3: a pair at
-    distance 4 can place one differing bit in each band and never share a
-    key, so ``max_hamming > 3`` would return silently INCOMPLETE results —
-    rejected here (more bands / multi-probe banding is the correct tool).
-
-    Hot-bucket posture (r11 review: this path previously had NONE of the
-    minhash guards, so one 10⁶-copy page — routine at web-crawl scale —
-    fanned ~5×10¹¹ pairs per band into a post-join distinct): identical
-    FINGERPRINTS collapse to one representative before banding (exact,
-    not approximate — equal simhashes are interchangeable w.r.t. every
-    Hamming distance this operator computes), candidate pairs leave the
-    band join exactly once via the first-shared-band filter (no
-    ``.distinct()``), verification runs at representative level and
-    fans back out (``_expand_group_pairs``), and the minhash
-    ``max_bucket`` / ``identical_edges="star"`` guards are available
-    with the same semantics (defaults ``None`` / ``"all"`` preserve the
-    classic exhaustive pair list bit-for-bit — oracle-pinned)."""
-    if not 0 <= max_hamming <= 3:
-        raise ValueError(
-            f"max_hamming={max_hamming} outside the 4×16-bit banding "
-            "guarantee (pigeonhole covers Hamming distance ≤ 3)"
-        )
-    _check_identical_edges(identical_edges)
-    # checkpoint: the fingerprints feed the collapse, both sides of the
-    # band self-join, and the verify join (see minhash_near_duplicates
-    # for the localCheckpoint-vs-persist note)
-    sh = simhash(df, text_col, id_col).localCheckpoint(eager=False)
-    membership, rep_sh = _collapse_identical(sh, id_col, F.col("simhash"))
-    bkeys = F.array(
-        *[
-            F.shiftright("simhash", 16 * i).bitwiseAND(F.lit(0xFFFF))
-            for i in range(4)
-        ]
-    )
-    banded = rep_sh.select(F.col(id_col), bkeys.alias("bkeys")).select(
-        F.col(id_col),
-        F.posexplode("bkeys").alias("band_id", "band_hash"),
-        F.expr("slice(bkeys, 1, band_id)").alias("prior"),
-    )
-    cands = _pairs_from_banded(
-        banded, banded, id_col, self_join=True, max_bucket=max_bucket
-    )
-    fp_a = rep_sh.select(
-        F.col(id_col).alias("id_a"), F.col("simhash").alias("sh_a")
-    )
-    fp_b = rep_sh.select(
-        F.col(id_col).alias("id_b"), F.col("simhash").alias("sh_b")
-    )
-    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    verified = (
-        cands.join(fp_a, "id_a")
-        .join(fp_b, "id_b")
-        .select("id_a", "id_b", hamming.cast("int").alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-    )
-    inter = (
-        verified
-        if identical_edges == "star"
-        else _expand_group_pairs(verified, membership, id_col, ["hamming"])
-    )
-    intra = _intra_group_pairs(membership, id_col, identical_edges).select(
-        "id_a", "id_b", F.lit(0).cast("int").alias("hamming")
-    )
-    return inter.unionByName(intra).orderBy("id_a", "id_b")
 
 
 def connected_components(
@@ -2147,5 +2067,4 @@ __all__ = [
     "minhash_signatures",
     "shingles",
     "simhash",
-    "simhash_near_duplicates",
 ]

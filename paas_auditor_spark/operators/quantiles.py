@@ -16,8 +16,8 @@ engine reproduces bit-for-bit — the registered query carries a full
 DuckDB oracle replaying build, merge and interpolated read-off — and
 the sketch is a plain (bin, cnt) parquet row set, so the
 build-per-shard → persist → merge-without-rescan lifecycle works with
-ordinary tables (test-pinned roundtrip, mirroring
-`bloom_words`/`bloom_merge`).
+ordinary tables (test-pinned roundtrip, mirroring the persisted
+`bloom_words` relation).
 
 Scale shape: the build is one narrow map (bin assignment) + one
 map-side-combined groupBy reducing to ≤ n_bins rows per shard —
@@ -218,24 +218,23 @@ def hist_collector(
     protocol: str = "rename",
     retract: bool = False,
 ):
-    """foreachBatch hook for INCREMENTAL quantile maintenance — the
-    quantile twin of ``bloom.bloom_words_collector``: each micro-batch
-    lands its own ≤ n_bins-row sketch under ``path`` via the same
-    write-to-hidden-tmp + atomic-rename commit (a concurrent reader
+    """foreachBatch hook for INCREMENTAL quantile maintenance: each
+    micro-batch lands its own ≤ n_bins-row sketch under ``path`` via the
+    shared write-to-hidden-tmp + atomic-rename commit (a concurrent reader
     sees whole batches or nothing), and ``hist_read(path)`` +
     ``hist_merge`` fold the history into the running distribution
     without ever rescanning raw batches.  Bounds must be EXPLICIT here:
     per-batch in-plan bounds would give each partial its own geometry
-    and hist_merge would (correctly) refuse to fold them.  Replay
-    safety differs from Bloom's: counts are NOT idempotent under
-    re-append (bits OR, counts ADD), so the committed-directory skip
-    inside `operators/atomic.py:commit_batch_dir` (the shared commit
-    protocol — see that module for the racer/replay/failure semantics)
-    is the correctness mechanism, not merely an optimization — a
-    replayed batch finds its ``batch-<id>`` directory and writes
-    nothing.  ``protocol`` as in ``bloom_words_collector``: ``rename``
-    (atomic-rename filesystems) or ``marker`` (object stores,
-    exclusive-create commit marker) — read with the same protocol.
+    and hist_merge would (correctly) refuse to fold them.  Counts are
+    NOT idempotent under re-append (bits would OR, counts ADD), so the
+    committed-directory skip inside
+    `operators/atomic.py:commit_batch_dir` (the shared commit protocol —
+    see that module for the racer/replay/failure semantics) is the
+    correctness mechanism, not merely an optimization — a replayed
+    batch finds its ``batch-<id>`` directory and writes nothing.
+    ``protocol``: ``rename`` (atomic-rename filesystems) or ``marker``
+    (object stores, exclusive-create commit marker) — read with the
+    same protocol.
 
     ``retract=True`` makes the hook a DELETION writer (the additive
     families' takedown answer, shared with
@@ -267,7 +266,7 @@ def hist_collector(
 
 def hist_read(spark, path: str, protocol: str = "rename") -> DataFrame:
     """Read a collector-maintained sketch directory (the read half of
-    the commit contract, same as bloom_words_read): only COMMITTED
+    the commit contract): only COMMITTED
     batch directories, resolved through the generation pointer
     (``atomic.batch_data_paths`` owns the per-protocol path rules)."""
     from paas_auditor_spark.operators.atomic import batch_data_paths

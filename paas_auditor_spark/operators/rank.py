@@ -10,9 +10,9 @@ engine analytics (Gini/Pareto concentration audits, the word2vec
 negative-sampling alias table, exact global percentiles) need a
 TOTAL-order statistic over an unbounded relation.
 
-This module computes them with the ``export_ordered`` pattern
-(sources/partitioned.py): ``repartitionByRange`` gives every partition
-a contiguous, disjoint key range; a per-partition window (parallel —
+This module computes them with a range-partitioned layout:
+``repartitionByRange`` gives every partition a contiguous, disjoint
+key range; a per-partition window (parallel —
 partitioned by ``spark_partition_id()``) ranks locally; each
 partition's offset is the total count/weight of the partitions before
 it.  Global rank = local rank + offset; global prefix sum likewise.

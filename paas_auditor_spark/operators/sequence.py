@@ -30,11 +30,6 @@ from pyspark.sql import functions as F
 INGEST_BATCH_COL = "ingest_batch_id"
 
 
-def stamp_ingest_batch(df: DataFrame, batch_id: int) -> DataFrame:
-    """Stamp the writer-side batch id (streaming epoch / collector tick)."""
-    return df.withColumn(INGEST_BATCH_COL, F.lit(int(batch_id)).cast("long"))
-
-
 def assign_ingest_sequence(
     df: DataFrame,
     batch_col: str = INGEST_BATCH_COL,
@@ -57,8 +52,8 @@ def assign_ingest_sequence(
         # pipeline bug, surface it instead of crashing in sort() or
         # silently dropping rows
         raise ValueError(
-            f"{batch_col} contains NULL — stamp every row "
-            "(stamp_ingest_batch) before assigning sequences"
+            f"{batch_col} contains NULL — stamp every row with its "
+            "batch id before assigning sequences"
         )
     counts.sort(key=lambda r: r[batch_col])
     offsets: list[tuple[int, int]] = []
@@ -83,4 +78,4 @@ def assign_ingest_sequence(
     )
 
 
-__all__ = ["INGEST_BATCH_COL", "assign_ingest_sequence", "stamp_ingest_batch"]
+__all__ = ["INGEST_BATCH_COL", "assign_ingest_sequence"]

@@ -798,7 +798,7 @@ def ivf_index_write(
     pruning over ``<path>/lists`` — the corpus is never re-assigned and
     never fully scanned.  This is the bloom_words pattern applied to
     ANN: pay the build once per corpus drop, amortize across query
-    batches; grow it per corpus drop with ``ivf_index_append``.
+    batches.
 
     Same deterministic coarse quantizer as ``ivf_topk`` (centroids = the
     first ``n_centroids`` corpus vectors; a k-means fit slots in
@@ -823,99 +823,9 @@ def ivf_index_write(
     cents.write.mode("overwrite").parquet(os.path.join(path, "centroids"))
 
 
-def ivf_index_append(
-    spark,
-    index_path: str,
-    shard_df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Incremental IVF maintenance — the bloom_words_collector story
-    applied to ANN: a new corpus drop is assigned against the EXISTING
-    centroid table (read back, broadcast — the quantizer never retrains,
-    so old lists stay valid) and appended into the same
-    list_id-partitioned layout.  Cost is O(shard), not O(corpus): the
-    existing lists are never read, and parquet partition append only
-    touches the directories the shard lands in.  An index grown by any
-    sequence of appends probes identically to one built in a single
-    shot over the union (test-pinned), because ``_ivf_assign`` is a
-    pure per-row function of (vector, centroids)."""
-    import os
-
-    cents = read_parquet_cached(spark, os.path.join(index_path, "centroids"))
-    _ivf_assign(shard_df, cents, id_col, vec_col).write.mode(
-        "append"
-    ).partitionBy("list_id").parquet(os.path.join(index_path, "lists"))
-
-
-def ivf_shard_collector(
-    spark,
-    index_path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    protocol: str = "rename",
-):
-    """foreachBatch hook for ATOMIC incremental IVF maintenance — the
-    collector-family treatment (bloom words / histograms / postings /
-    LM counts) applied to the ANN index, closing its last non-atomic
-    writer: ``ivf_index_append``'s bare ``mode("append")`` leaves a
-    torn shard's partial part-files VISIBLE to every reader if the
-    writer dies mid-commit, which is fine for an orchestrated rebuild
-    (external atomicity, quiescent index) but not for continuous
-    ingest.  Here each micro-batch of new vectors is assigned against
-    the index's FROZEN centroid table (read once at hook creation —
-    the quantizer never retrains, so old lists stay valid) and
-    committed as ONE batch dir under ``<index_path>/shards`` via the
-    shared commit protocol: a torn attempt is invisible until the
-    atomic publish, replays are no-ops, and the generic
-    ``compact_batches(parts=("",))`` fold applies unchanged because a
-    shard is a flat additive relation.
-
-    Shards keep ``list_id`` as a DATA column, sorted within the write,
-    so a probe's ``list_id IN (...)`` predicate prunes shard row
-    groups (PushedFilters) while the base build's directory partitions
-    keep planning-time pruning (PartitionFilters) — the hybrid layout
-    every log-structured index uses (small recent deltas + compacted
-    base), with the periodic full rebuild (``ivf_index_write`` over
-    the union) playing the role of major compaction."""
-    import os
-
-    from paas_auditor_spark.operators.atomic import commit_fn
-
-    commit = commit_fn(protocol)
-    nearest = nearest_lists_udf(
-        _cent_rows_from_df(
-            read_parquet_cached(spark, os.path.join(index_path, "centroids"))
-        ),
-        1,
-    )
-    shards_root = os.path.join(index_path, "shards")
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        def write(tmp: str) -> None:
-            (
-                batch_df.select(
-                    F.col(id_col).alias("c_id"),
-                    F.col(vec_col).alias("c_vec"),
-                )
-                .withColumn("c_n", l2_norm(_to_double(F.col("c_vec"))))
-                .withColumn(
-                    "list_id",
-                    F.explode(nearest(_to_double(F.col("c_vec")))),
-                )
-                .sortWithinPartitions("list_id")
-                .write.parquet(tmp)
-            )
-
-        commit(shards_root, batch_id, write)
-
-    return write_batch
-
-
 def _shard_lists(spark, index_path: str, protocol: str):
-    """Committed shard relations of an index (empty DataFrame-less None
-    when the index has no shards) — the read half of
-    ``ivf_shard_collector`` / ``ivfpq_shard_collector``."""
+    """Committed shard relations of an index under ``<index_path>/shards``
+    (None when the index has no shards)."""
     import os
 
     from paas_auditor_spark.operators.atomic import batch_data_paths
@@ -954,9 +864,8 @@ def ivf_topk_persisted(
     data; a deleted vector that seeded a centroid keeps partitioning
     space correctly (the standard IVF deletion semantics), and the
     periodic full rebuild (``ivf_index_write`` over the surviving
-    corpus) is the major compaction that eventually retrains.  Physical
-    removal from shards rides ``apply_tombstones_fold(id_col="c_id")``;
-    the base lists table is rewritten only by rebuild.
+    corpus) is the major compaction that eventually retrains and the
+    only physical removal.
 
     The probed list ids are collected driver-side before the scan — a
     bounded collect (≤ n_centroids rows, never corpus- or query-count-
@@ -1004,7 +913,7 @@ def ivf_topk_persisted(
         .withColumn("list_id", F.col("list_id").cast("long"))
         .filter(F.col("list_id").isin(probed_ids))
     )
-    # committed shards (ivf_shard_collector): same probe filter, pushed
+    # committed shards: same probe filter, pushed
     # to the shard parquet scan as a row-group predicate on the sorted
     # list_id DATA column (the base's directory partitions keep
     # planning-time pruning)
@@ -1303,107 +1212,6 @@ def _read_ivfpq_model(spark, index_path: str):
         for j in range(m)
     ]
     return cents, books, m
-
-
-def ivfpq_index_append(
-    spark,
-    index_path: str,
-    shard_df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Incremental IVF-PQ maintenance: encode a new corpus drop under
-    the FROZEN model (centroids + codebooks read back from the index —
-    neither retrains, so existing codes stay valid) and partition-append
-    its (c_id, c_n, pq_codes) rows into lists/ plus full vectors into
-    vectors/.  Cost is O(shard); a grown index probes identically to a
-    single-shot build over the union (test-pinned), because assignment
-    and encoding are pure per-row functions of (vector, model)."""
-    import os
-
-    from paas_auditor_spark.operators.quantize import pq_assign
-
-    cents, books, m = _read_ivfpq_model(spark, index_path)
-    cvec = (
-        shard_df.select(
-            F.col(id_col).alias("c_id"),
-            _to_double(F.col(vec_col)).alias("c_v"),
-        )
-        .withColumn("c_n", l2_norm(F.col("c_v")))
-        .localCheckpoint(eager=False)
-    )
-    assigned = cvec.withColumn(
-        "list_id", F.explode(nearest_lists_udf(cents, 1)(F.col("c_v")))
-    )
-    encoded = pq_assign(assigned, books, vec_col="c_v")
-    encoded.select("c_id", "c_n", "pq_codes", "list_id").write.mode(
-        "append"
-    ).partitionBy("list_id").parquet(os.path.join(index_path, "lists"))
-    cvec.select("c_id", F.col("c_v").alias("vec")).write.mode(
-        "append"
-    ).parquet(os.path.join(index_path, "vectors"))
-
-
-def ivfpq_shard_collector(
-    spark,
-    index_path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    protocol: str = "rename",
-):
-    """``ivf_shard_collector`` for the IVF-PQ index: each micro-batch is
-    assigned and PQ-encoded under the FROZEN model (centroids +
-    codebooks read back once — neither retrains) and committed as ONE
-    two-part batch dir (``lists`` codes + ``vectors`` re-rank store)
-    under ``<index_path>/shards``, because a shard whose codes landed
-    but whose vectors didn't would break the exact re-rank fetch — the
-    torn state the whole-batch commit exists to prevent (the
-    postings_collector argument).  Compaction: the generic
-    ``compact_batches(parts=("lists", "vectors"))`` fold applies
-    unchanged."""
-    import os
-
-    from paas_auditor_spark.operators.atomic import commit_fn
-    from paas_auditor_spark.operators.quantize import pq_assign
-
-    commit = commit_fn(protocol)
-    cents, books, m = _read_ivfpq_model(spark, index_path)
-    nearest = nearest_lists_udf(cents, 1)
-    shards_root = os.path.join(index_path, "shards")
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        def write(tmp: str) -> None:
-            # ONE materialization feeds both parts: without the cut the
-            # source is scanned twice (2x per-batch ingest I/O) and a
-            # nondeterministic batch source could make the lists and
-            # vectors parts disagree INSIDE the one atomic shard — the
-            # torn state the two-part commit exists to prevent (r8
-            # review finding; the ivf_topk_persisted probes checkpoint
-            # for the same reason)
-            cvec = (
-                batch_df.select(
-                    F.col(id_col).alias("c_id"),
-                    _to_double(F.col(vec_col)).alias("c_v"),
-                )
-                .withColumn("c_n", l2_norm(F.col("c_v")))
-                .localCheckpoint(eager=False)
-            )
-            assigned = cvec.withColumn(
-                "list_id", F.explode(nearest(F.col("c_v")))
-            )
-            encoded = pq_assign(assigned, books, vec_col="c_v")
-            (
-                encoded.select("c_id", "c_n", "pq_codes", "list_id")
-                .sortWithinPartitions("list_id")
-                .write.parquet(os.path.join(tmp, "lists"))
-            )
-            cvec.select("c_id", F.col("c_v").alias("vec")).write.parquet(
-                os.path.join(tmp, "vectors")
-            )
-
-        commit(shards_root, batch_id, write)
-
-    return write_batch
 
 
 def _ivfpq_shard_parts(spark, index_path: str, protocol: str):
@@ -1952,14 +1760,10 @@ __all__ = [
     "embedding_near_duplicates_lsh",
     "hyperplane_bucket",
     "ivf_auto_params",
-    "ivf_index_append",
     "ivf_index_write",
-    "ivf_shard_collector",
     "ivf_topk",
     "ivf_topk_persisted",
-    "ivfpq_index_append",
     "ivfpq_index_write",
-    "ivfpq_shard_collector",
     "ivfpq_topk",
     "ivfpq_topk_persisted",
     "kmeans_assign",

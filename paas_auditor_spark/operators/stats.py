@@ -42,13 +42,6 @@ def approx_count(parquet_path: str) -> int:
     return sum(f.metadata.num_rows for f in dataset.get_fragments())
 
 
-def count_and_max(df: DataFrame, ts_col: str = "created_at") -> DataFrame:
-    """SELECT COUNT(*), MAX(created_at) — the documented ops query (A3)."""
-    return df.agg(
-        F.count(F.lit(1)).alias("n_events"), F.max(ts_col).alias("max_ts")
-    )
-
-
 def join_size_stats(
     left: DataFrame,
     right: DataFrame,
@@ -102,7 +95,6 @@ def join_size_stats(
 
 __all__ = [
     "approx_count",
-    "count_and_max",
     "join_size_stats",
     "latest_event_time",
 ]

@@ -2811,18 +2811,16 @@ def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_image_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image-path multimodal plumbing with a REAL decode and NO image
-    library (r9 — retires the 'real image decode is PIL-gated' residual
-    the way r8's audio path retired WAV's): embeddings synthesize
-    binary-PPM P6 blobs (real netpbm containers — header + raw RGB,
-    openable by standard tools), and image_tile_features parses the
-    actual bytes back (decode_ppm: magic, comment-tolerant header
-    grammar, sample-count check) and computes per-4×4-tile channel
+    library: embeddings synthesize binary-PPM P6 blobs (real netpbm
+    containers — header + raw RGB, openable by standard tools), and
+    image_tile_features parses the actual bytes back (decode_ppm:
+    magic, comment-tolerant header grammar, sample-count check) and
+    computes per-4×4-tile channel
     sums / peak / mean luma.  Fully exact oracle: pixel bytes are
     floor((clip(v,−1,1)+1)·127.5+0.5) on both engines and every feature
     is an exact rational of int64 byte sums, so DuckDB replays the
     features straight off the embedding floats without ever seeing a
-    PPM byte.  The PIL-gated decode_image path remains for real-world
-    formats (JPEG/PNG), self-upgrading when the codec appears."""
+    PPM byte."""
     from paas_auditor_spark.functions.multimodal import (
         image_tile_features,
         synth_ppm,
@@ -4185,9 +4183,9 @@ def q_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     train_test_split applied to ordering), and each epoch is an
     independent permutation.  Here the head of the permutation
     materializes via TakeOrderedAndProject (per-partition heaps — no
-    global sort); the full-corpus write path is export_ordered
-    (repartitionByRange on the key + sortWithinPartitions), which scales
-    the same permutation to any corpus size with one range shuffle."""
+    global sort); a full-corpus write would repartitionByRange on the
+    key + sortWithinPartitions, which scales the same permutation to
+    any corpus size with one range shuffle."""
     docs = _t(spark, sf_dir, "documents")
     key = F.md5(F.concat_ws("#", F.col("doc_id"), F.lit("1")))
     # limit FIRST (TakeOrderedAndProject), then rank the surviving 20 —
@@ -8189,9 +8187,8 @@ def q_bm25_tombstoned(spark: SparkSession, sf_dir: str) -> DataFrame:
     certifies the strong contract: a deleted document doesn't just
     vanish from results, it stops influencing N, avgdl and df (scores
     of surviving docs shift, and the shifted values are what must
-    hash-match).  Physical removal at fold time
-    (apply_tombstones_fold) is pytest-pinned; this query exercises the
-    read-time path every probe between folds uses."""
+    hash-match).  This query exercises the read-time path every probe
+    uses."""
     from paas_auditor_spark.operators.ranking import bm25_from_postings
 
     path = _postings_index_cached(spark, sf_dir)
@@ -8999,7 +8996,7 @@ def q_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Morton (Z-order) key over (user_id, epoch-second): interleave the
     low 16 bits of each so range-partitioning on the key co-locates rows
     that are close in BOTH dimensions — the multi-column data-skipping
-    layout behind ``write_clustered``.  The interleave is one JVM
+    layout of a clustered write.  The interleave is one JVM
     ``aggregate`` over a 16-element sequence (no UDF, no shuffle); the
     query materializes the first 50 keys for oracle parity."""
     events = _t(spark, sf_dir, "events")

@@ -1,1 +1,1 @@
-from paas_auditor_spark.sources.tables import load_table, load_tables  # noqa: F401
+from paas_auditor_spark.sources.tables import load_table  # noqa: F401

@@ -532,36 +532,6 @@ def avro_scan(
     return small.unionByName(split)
 
 
-def avro_stream(
-    spark,
-    path: str,
-    spark_schema: str,
-    max_files_per_trigger: int = 1,
-):
-    """Streaming Avro bronze ingestion: the same block decode as
-    ``avro_scan`` over an UNBOUNDED binaryFile source — drop container
-    files into the landing zone and each micro-batch picks up at most
-    ``max_files_per_trigger`` of them (the file source's
-    ``maxFilesPerTrigger`` rate limit, S3/T5).  Pair it with a
-    ``foreachBatch`` hook for the sink (``streaming.pipeline.store_sink``
-    for the event store, or a collector hook); file-source checkpointing
-    makes replays exactly the committed batches the atomic commit
-    protocol already suppresses."""
-    files = (
-        spark.readStream.format("binaryFile")
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", "*.avro")
-        .schema(
-            "path string, modificationTime timestamp, "
-            "length long, content binary"
-        )
-        .load(path)
-        .select("content")
-    )
-    return _decode_files(spark, files, spark_schema)
-
-
 def _target_info(spark, spark_schema: str):
     """Reader-side plan-time introspection shared by every scan shape:
     (target StructType, names, instant ts columns, ntz ts columns,

@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from paas_auditor_spark.schemas import CF_AUDIT_EVENT, SHIPPER_CURSOR
 
@@ -50,14 +50,9 @@ def init_warehouse(spark: SparkSession, warehouse_dir: str) -> dict[str, str]:
     }
 
 
-def read_table(spark: SparkSession, warehouse_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(_table_path(warehouse_dir, name))
-
-
 __all__ = [
     "CURSORS_TABLE",
     "EVENTS_TABLE",
     "init_table",
     "init_warehouse",
-    "read_table",
 ]

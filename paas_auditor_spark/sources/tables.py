@@ -18,8 +18,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from paas_auditor_spark.schemas import TABLES
-
 # Parquet TIMESTAMP(NANOS) columns (Spark has no nanos type: read as long
 # via the legacy conf, then integer-divide to micros — matches DuckDB's
 # ns→us truncation exactly).
@@ -91,10 +89,6 @@ def load_table(
     if columns:
         df = df.select(*columns)
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
 
 
 # Rebalance only inputs small enough that the round-robin shuffle is ~free;

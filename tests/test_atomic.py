@@ -4,7 +4,8 @@ The rename variant's contract is pinned in test_bloom.py; this file pins
 the OBJECT-STORE variant (commit_batch_dir_marker): same
 whole-batches-or-nothing semantics on a filesystem with NO atomic rename
 — replay skip, racer loss, torn-attempt invisibility, and end-to-end
-equality with the rename protocol through the bloom collector.
+equality with the rename protocol through the histogram collector —
+plus the compaction fold both protocols share.
 """
 
 from __future__ import annotations
@@ -18,6 +19,10 @@ from paas_auditor_spark.operators.atomic import (
     commit_batch_dir_marker,
     committed_batch_dirs,
 )
+
+# histogram geometry of every collector dataset below: 16 bins over
+# [0, 10000), so each value id lands in bin id // 625
+_BINS, _LO, _HI = 16, 0.0, 10_000.0
 
 
 def _write_file(data_dir, name="part-0", content="x"):
@@ -97,48 +102,56 @@ def test_marker_protocol_survives_broken_rename(monkeypatch, tmp_path):
     assert len(committed_batch_dirs(str(tmp_path / "mk"))) == 1
 
 
-def test_bloom_collector_marker_equals_rename(spark, tmp_path):
-    """End-to-end through the collectors: two batches + a replay under
-    each protocol assemble to the SAME filter blob, and under marker a
-    torn pre-commit attempt contributes nothing."""
+def _values(spark, lo, hi):
     from pyspark.sql import functions as F
 
-    from paas_auditor_spark.operators.bloom import (
-        bloom_assemble,
-        bloom_words_collector,
-        bloom_words_read,
+    return spark.range(lo, hi).select(F.col("id").cast("double").alias("v"))
+
+
+def _hist_hook(path, protocol="rename"):
+    from paas_auditor_spark.operators.quantiles import hist_collector
+
+    return hist_collector("v", path, _BINS, _LO, _HI, protocol=protocol)
+
+
+def _bins(sketch):
+    """A merged sketch as its sorted non-empty (bin, count) pairs."""
+    from paas_auditor_spark.operators.quantiles import hist_merge
+
+    return sorted(
+        (r["bin"], r["cnt"]) for r in hist_merge(sketch).collect() if r["cnt"]
     )
 
-    def keys(lo, hi):
-        return spark.range(lo, hi).select(
-            F.concat(F.lit("key"), F.col("id").cast("string")).alias("k")
-        )
 
-    m, k = 1 << 14, 4
-    blobs = {}
+def _sketch(spark, path, protocol="rename"):
+    """Every committed batch of a histogram collector dataset, merged.
+    Counts ADD across batches, so a double-appended replay shows."""
+    from paas_auditor_spark.operators.quantiles import hist_read
+
+    return _bins(hist_read(spark, path, protocol=protocol))
+
+
+def _one_shot(spark, lo, hi):
+    """The sketch of values [lo, hi) built in one pass."""
+    from paas_auditor_spark.operators.quantiles import hist_sketch
+
+    return _bins(hist_sketch(_values(spark, lo, hi), "v", _BINS, _LO, _HI))
+
+
+def test_collector_marker_equals_rename(spark, tmp_path):
+    """End-to-end through the collectors: two batches + a replay under
+    each protocol merge to the SAME sketch, and the replayed id adds
+    nothing."""
+    sketches = {}
     for protocol in ("rename", "marker"):
         path = str(tmp_path / protocol)
-        hook = bloom_words_collector("k", path, m=m, k=k, protocol=protocol)
-        hook(keys(0, 300), 0)
-        hook(keys(200, 500), 1)
-        hook(keys(999, 9999), 1)  # replayed id: must be a no-op
-        words = bloom_words_read(spark, path, protocol=protocol)
-        blobs[protocol] = bytes(
-            bloom_assemble(words).collect()[0]["bloom"]
-        )
-    assert blobs["marker"] == blobs["rename"]
-
-
-def _assemble(spark, path, protocol="rename"):
-    from paas_auditor_spark.operators.bloom import (
-        bloom_assemble,
-        bloom_words_read,
-    )
-
-    return bytes(
-        bloom_assemble(bloom_words_read(spark, path, protocol=protocol))
-        .collect()[0]["bloom"]
-    )
+        hook = _hist_hook(path, protocol=protocol)
+        hook(_values(spark, 0, 300), 0)
+        hook(_values(spark, 200, 500), 1)
+        hook(_values(spark, 999, 9999), 1)  # replayed id: must be a no-op
+        sketches[protocol] = _sketch(spark, path, protocol=protocol)
+    assert sketches["marker"] == sketches["rename"]
+    assert sum(c for _, c in sketches["rename"]) == 600
 
 
 def _parquet_files(path):
@@ -150,42 +163,34 @@ def _parquet_files(path):
 
 def test_compact_batches_preserves_reads_and_replay_floor(spark, tmp_path):
     """Folding every batch dir into one generation must be invisible to
-    readers (bit-identical assembled filter), shrink the file count,
+    readers (identical merged sketch), shrink the file count,
     keep replays of FOLDED batch ids no-ops (the floor — their dirs are
     gone, re-append would double-add), and accept new batches into the
     live generation."""
-    from pyspark.sql import functions as F
-
     from paas_auditor_spark.operators.atomic import compact_batches
-    from paas_auditor_spark.operators.bloom import bloom_words_collector
 
-    def keys(lo, hi):
-        return spark.range(lo, hi).select(
-            F.concat(F.lit("k"), F.col("id").cast("string")).alias("k")
-        )
-
-    path = str(tmp_path / "words")
-    m, k = 1 << 14, 4
-    hook = bloom_words_collector("k", path, m=m, k=k)
+    path = str(tmp_path / "hist")
+    hook = _hist_hook(path)
     for i in range(4):
-        hook(keys(i * 100, (i + 1) * 100), i)
-    before = _assemble(spark, path)
+        hook(_values(spark, i * 100, (i + 1) * 100), i)
+    before = _sketch(spark, path)
     n_before = len(_parquet_files(path))
 
     assert compact_batches(spark, path) == 4
-    assert _assemble(spark, path) == before
+    assert _sketch(spark, path) == before
     assert len(_parquet_files(path)) < n_before
 
-    hook(keys(9_000, 9_050), 2)  # replay of a FOLDED id: must be a no-op
-    assert _assemble(spark, path) == before
-    hook(keys(400, 500), 4)  # genuinely new batch: lands in the live gen
-    after = _assemble(spark, path)
+    hook(_values(spark, 9_000, 9_050), 2)  # replay of a FOLDED id: no-op
+    assert _sketch(spark, path) == before
+    hook(_values(spark, 400, 500), 4)  # genuinely new batch: live gen
+    after = _sketch(spark, path)
     assert after != before
+    assert after == _one_shot(spark, 0, 500)
 
     # second compaction folds gen-0's batch-0 + the new batch into gen-1
     assert compact_batches(spark, path) == 2
-    assert _assemble(spark, path) == after
-    assert open(tmp_path / "words" / "CURRENT").read().strip() == "gen-1"
+    assert _sketch(spark, path) == after
+    assert open(tmp_path / "hist" / "CURRENT").read().strip() == "gen-1"
 
 
 def test_compact_batches_marker_protocol_and_postings(spark, tmp_path):
@@ -283,50 +288,6 @@ def test_compaction_between_streaming_waves(spark, tmp_path):
     assert got == want
 
 
-def test_vacuum_superseded_reaps_generations_and_orphans(spark, tmp_path):
-    """vacuum_superseded is the deferred-delete reaper: superseded
-    generations, crash-orphaned gen dirs, SIGKILLed tmp build dirs and
-    stale v1 batch dirs all go; the live generation stays readable."""
-    from pyspark.sql import functions as F
-
-    from paas_auditor_spark.operators.atomic import (
-        compact_batches,
-        vacuum_superseded,
-    )
-    from paas_auditor_spark.operators.bloom import bloom_words_collector
-
-    path = str(tmp_path / "words")
-    hook = bloom_words_collector("k", path, m=1 << 12, k=3)
-    for i in range(3):
-        hook(
-            spark.range(i * 30, (i + 1) * 30).select(
-                F.concat(F.lit("v"), F.col("id").cast("string")).alias("k")
-            ),
-            i,
-        )
-    assert vacuum_superseded(path) == 0  # v1, never compacted: no-op
-    before = _assemble(spark, path)
-    assert compact_batches(spark, path, defer_delete=True) == 3
-    # deferred: the stale v1 batch dirs are still on disk
-    stale = [d for d in os.listdir(path) if d.startswith("batch-")]
-    assert len(stale) == 3
-    # plant crash leftovers: an orphaned generation and a tmp build dir,
-    # BACKDATED past the orphan age gate (a fresh one could be an
-    # in-flight fold's work — r8 review)
-    os.makedirs(tmp_path / "words" / "gen-7" / "batch-0")
-    os.makedirs(tmp_path / "words" / ".gen-8.tmp999")
-    past = __import__("time").time() - 3600
-    # backdate the TREES (r11: the gate ages by the newest dir mtime in
-    # the tree, so a fresh nested dir reads as in-flight work)
-    os.utime(tmp_path / "words" / "gen-7", (past, past))
-    os.utime(tmp_path / "words" / "gen-7" / "batch-0", (past, past))
-    os.utime(tmp_path / "words" / ".gen-8.tmp999", (past, past))
-    assert vacuum_superseded(path) == 5  # 3 stale batches + orphan + tmp
-    left = sorted(os.listdir(path))
-    assert left == ["CURRENT", "gen-0"]
-    assert _assemble(spark, path) == before
-
-
 def test_compact_refuses_wedged_marker(spark, tmp_path):
     """A wedged (empty) marker below the fold's max committed id would
     be absorbed by the replay floor and its data deleted — compaction
@@ -384,8 +345,8 @@ def test_compact_refuses_unmarked_batch_below_floor(spark, tmp_path):
 def test_commit_self_rescues_when_generation_flips_mid_write(tmp_path, commit):
     """ADVICE r7 + r8: commit resolves collector_root once at entry; if
     a concurrent compaction flips CURRENT between that resolution and
-    the publish, the batch lands in a superseded generation that vacuum
-    later deletes.  The post-publish re-check must not merely raise
+    the publish, the batch lands in a superseded generation that the
+    fold deletes.  The post-publish re-check must not merely raise
     (one-shot callers treat the exception as failure and the batch stays
     invisible until a sweep happens to run): it SELF-RESCUES — moves the
     just-published dir into the live generation and reports success."""
@@ -469,97 +430,22 @@ def _ptr_tmp(tmp_path, gen):
     return p
 
 
-def test_vacuum_retains_reader_grace_generations(spark, tmp_path):
-    """VERDICT r7 #5: a reader that resolved generation n keeps its
-    files through TWO further vacuum-then-fold rounds, not
-    one — vacuum retains the newest ``retain`` superseded generations,
-    so long scans can't hit FileNotFound one flip after resolving."""
-    from pyspark.sql import functions as F
-
-    from paas_auditor_spark.operators.atomic import (
-        batch_data_paths,
-        collector_root,
-        compact_batches,
-        vacuum_superseded,
-    )
-    from paas_auditor_spark.operators.bloom import bloom_words_collector
-
-    path = str(tmp_path / "words")
-    hook = bloom_words_collector("k", path, m=1 << 12, k=3)
-
-    def add(lo, hi, bid):
-        hook(
-            spark.range(lo, hi).select(
-                F.concat(F.lit("g"), F.col("id").cast("string")).alias("k")
-            ),
-            bid,
-        )
-
-    add(0, 30, 0)
-    add(30, 60, 1)
-    assert compact_batches(spark, path, defer_delete=True) == 2  # → gen-0
-    assert collector_root(path).endswith("gen-0")
-    # a long-running reader resolves gen-0's file list NOW
-    reader = spark.read.parquet(*batch_data_paths(path, "rename"))
-    want = reader.count()
-
-    # tick 1: vacuum (gen-0 is current: nothing), fold → gen-1
-    vacuum_superseded(path)
-    add(60, 90, 2)
-    add(90, 120, 3)
-    # 3 dirs: gen-0's folded batch-0 + the two new batches
-    assert compact_batches(spark, path, defer_delete=True) == 3
-    # tick 2: vacuum retains gen-0 (newest superseded), fold → gen-2
-    vacuum_superseded(path)
-    assert os.path.isdir(tmp_path / "words" / "gen-0")
-    add(120, 150, 4)
-    add(150, 180, 5)
-    assert compact_batches(spark, path, defer_delete=True) == 3
-    # the reader that resolved two flips ago still completes
-    assert reader.count() == want
-    # tick 3: superseded = {gen-0, gen-1}, both inside the 2-generation
-    # grace window — nothing reclaimed yet
-    vacuum_superseded(path)
-    assert os.path.isdir(tmp_path / "words" / "gen-0")
-    # tick 4: one more fold pushes gen-0 to third-newest superseded →
-    # reclaimed; gen-1/gen-2 stay inside the grace window
-    add(180, 210, 6)
-    add(210, 240, 7)
-    assert compact_batches(spark, path, defer_delete=True) == 3
-    vacuum_superseded(path)
-    assert not os.path.isdir(tmp_path / "words" / "gen-0")
-    assert os.path.isdir(tmp_path / "words" / "gen-1")
-    assert os.path.isdir(tmp_path / "words" / "gen-2")
-
-
 def test_fold_rescues_batch_committed_during_fold(spark, tmp_path, monkeypatch):
     """r8 review: a raw hook publishing between a fold's directory
     listing and its pointer flip was silently lost (absent from the new
     generation, id above the floor so replays no-op, old generation
-    vacuumed).  The post-flip rescue sweep must move it into the live
+    deleted).  The post-flip rescue sweep must move it into the live
     generation.  Simulated by intercepting the fold's CURRENT rename:
     the racing commit publishes just before the flip and reports
     SUCCESS (its own pointer check still sees the old generation)."""
-    from pyspark.sql import functions as F
-
     from paas_auditor_spark.operators.atomic import compact_batches
-    from paas_auditor_spark.operators.bloom import (
-        bloom_words_collector,
-        bloom_words_read,
-    )
+    from paas_auditor_spark.operators.quantiles import hist_sketch
 
-    path = str(tmp_path / "words")
-    hook = bloom_words_collector("k", path, m=1 << 12, k=3)
+    path = str(tmp_path / "hist")
+    hook = _hist_hook(path)
     for i in range(2):
-        hook(
-            spark.range(i * 20, (i + 1) * 20).select(
-                F.concat(F.lit("w"), F.col("id").cast("string")).alias("k")
-            ),
-            i,
-        )
-    late = spark.range(900, 930).select(
-        F.concat(F.lit("w"), F.col("id").cast("string")).alias("k")
-    )
+        hook(_values(spark, i * 20, (i + 1) * 20), i)
+    late = _values(spark, 900, 930)
 
     real_rename = os.rename
     state = {"fired": False}
@@ -576,84 +462,16 @@ def test_fold_rescues_batch_committed_during_fold(spark, tmp_path, monkeypatch):
     assert compact_batches(spark, path) == 2
     monkeypatch.setattr(os, "rename", real_rename)
     assert state["fired"]
-    # the late batch survived the fold: its words are readable from the
+    # the late batch survived the fold: its counts are readable from the
     # live generation and its replay is suppressed by directory presence
     from paas_auditor_spark.operators.atomic import collector_root
 
     assert os.path.isdir(os.path.join(collector_root(path), "batch-7"))
-    assert bloom_words_read(spark, path).count() > 0
-    before = bloom_words_read(spark, path).count()
+    before = _sketch(spark, path)
+    landed = _values(spark, 0, 40).union(late)
+    assert before == _bins(hist_sketch(landed, "v", _BINS, _LO, _HI))
     hook(late, 7)  # replay: directory exists → no-op (no double count)
-    assert bloom_words_read(spark, path).count() == before
-
-
-def test_vacuum_rescues_unfolded_batch_and_spares_fresh_orphans(
-    spark, tmp_path
-):
-    """r8 review: (a) vacuum must MOVE a committed-but-unfolded batch
-    out of a superseded generation instead of deleting it; (b) a
-    gen-<n> ABOVE the current generation is reclaimed only once older
-    than the orphan age gate — a fresh one may be an in-flight fold's
-    renamed-but-not-yet-flipped work."""
-    from pyspark.sql import functions as F
-
-    from paas_auditor_spark.operators.atomic import (
-        collector_root,
-        commit_batch_dir,
-        compact_batches,
-        vacuum_superseded,
-    )
-    from paas_auditor_spark.operators.bloom import bloom_words_collector
-
-    path = str(tmp_path / "words")
-    hook = bloom_words_collector("k", path, m=1 << 12, k=3)
-    for i in range(2):
-        hook(
-            spark.range(i * 10, (i + 1) * 10).select(
-                F.concat(F.lit("v"), F.col("id").cast("string")).alias("k")
-            ),
-            i,
-        )
-    assert compact_batches(spark, path, defer_delete=True) == 2  # → gen-0
-    hook(spark.range(50, 60).select(
-        F.concat(F.lit("v"), F.col("id").cast("string")).alias("k")), 2)
-    assert compact_batches(spark, path, defer_delete=True) == 2  # → gen-1
-
-    # plant an unfolded commit inside the superseded gen-0 (id 9 > floor)
-    os.makedirs(tmp_path / "words" / "gen-0" / "batch-9")
-    with open(tmp_path / "words" / "gen-0" / "batch-9" / "part-0", "w") as fh:
-        fh.write("x")
-    # and a FRESH above-current generation (an in-flight fold's rename)
-    os.makedirs(tmp_path / "words" / "gen-5" / "batch-0")
-
-    vacuum_superseded(path, retain=0)
-    cur = collector_root(path)
-    assert cur.endswith("gen-1")
-    assert os.path.isdir(os.path.join(cur, "batch-9"))  # rescued, not lost
-    assert not os.path.isdir(tmp_path / "words" / "gen-0")  # reclaimed
-    assert os.path.isdir(tmp_path / "words" / "gen-5")  # fresh: spared
-    past = __import__("time").time() - 3600
-    # backdate the tree (r11: the gate ages by newest dir mtime in it)
-    os.utime(tmp_path / "words" / "gen-5", (past, past))
-    os.utime(tmp_path / "words" / "gen-5" / "batch-0", (past, past))
-    vacuum_superseded(path, retain=0)
-    assert not os.path.isdir(tmp_path / "words" / "gen-5")  # aged: reaped
-
-
-def test_vacuum_tolerates_foreign_generation_names(spark, tmp_path):
-    """ADVICE r8: vacuum_superseded parses gen-* ids; an operator-created
-    directory like gen-backup must be tolerated (skipped), not crash
-    every scheduled vacuum with a ValueError."""
-    from paas_auditor_spark.operators.atomic import vacuum_superseded
-
-    os.makedirs(tmp_path / "gen-0")
-    os.makedirs(tmp_path / "gen-backup")
-    (tmp_path / "gen-backup" / "keep.txt").write_text("operator data")
-    with open(tmp_path / "CURRENT", "w") as fh:
-        fh.write("gen-0\n")
-    removed = vacuum_superseded(str(tmp_path))
-    assert removed == 0
-    assert (tmp_path / "gen-backup" / "keep.txt").exists()
+    assert _sketch(spark, path) == before
 
 
 def test_marker_rescue_migrates_past_racer_scaffolding(tmp_path):
@@ -661,12 +479,7 @@ def test_marker_rescue_migrates_past_racer_scaffolding(tmp_path):
     in-flight racer's makedirs-only batch dir in the live generation
     must NOT satisfy the self-rescue's 'already committed there' check —
     the committed attempt + marker must migrate in, or the only durable
-    copy dies with its generation at the next vacuum."""
-    from paas_auditor_spark.operators.atomic import (
-        commit_batch_dir_marker,
-        committed_batch_dirs,
-        vacuum_superseded,
-    )
+    copy dies with its generation at the next fold."""
 
     path = str(tmp_path)
     os.makedirs(tmp_path / "gen-0")
@@ -685,10 +498,6 @@ def test_marker_rescue_migrates_past_racer_scaffolding(tmp_path):
     dirs = committed_batch_dirs(path)  # resolves gen-1
     assert len(dirs) == 1
     assert os.path.isfile(os.path.join(dirs[0], "part-0"))
-    # vacuum (aging gates off) must not delete the only committed copy
-    vacuum_superseded(path, retain=0, orphan_age_s=0.0)
-    dirs2 = committed_batch_dirs(path)
-    assert len(dirs2) == 1 and os.path.isfile(os.path.join(dirs2[0], "part-0"))
     # replay of the rescued id is a no-op
     assert commit_batch_dir_marker(path, 5, _write_file) is False
 
@@ -697,29 +506,19 @@ def test_compact_tolerates_foreign_batch_names(spark, tmp_path):
     """r9 review (reproduced pre-fix): compact_batches crashed with
     ValueError on an operator-created batch-backup dir, permanently
     failing every scheduled fold under both protocols."""
-    from pyspark.sql import functions as F
-
     from paas_auditor_spark.operators.atomic import compact_batches
-    from paas_auditor_spark.operators.bloom import bloom_words_collector
 
     for protocol in ("rename", "marker"):
         path = str(tmp_path / protocol)
-        hook = bloom_words_collector(
-            "k", path, m=1 << 12, k=3, protocol=protocol
-        )
+        hook = _hist_hook(path, protocol=protocol)
         for i in range(3):
-            hook(
-                spark.range(i * 10, (i + 1) * 10).select(
-                    F.concat(F.lit("b"), F.col("id").cast("string")).alias("k")
-                ),
-                i,
-            )
+            hook(_values(spark, i * 10, (i + 1) * 10), i)
         os.makedirs(os.path.join(path, "batch-backup"))
         with open(os.path.join(path, "batch-backup", "note.txt"), "w") as fh:
             fh.write("operator data")
         assert compact_batches(spark, path, protocol=protocol) == 3
-        before = _assemble(spark, path, protocol=protocol)
-        assert before  # dataset still reads fine after the fold
+        # dataset still reads fine after the fold
+        assert _sketch(spark, path, protocol=protocol) == _one_shot(spark, 0, 30)
 
 
 def test_rename_read_of_marker_dataset_raises(tmp_path):
@@ -781,154 +580,31 @@ def test_marker_commit_keeps_published_data_on_late_failure(
     assert os.path.isfile(os.path.join(dirs[0], "part-0"))
 
 
-def test_vacuum_age_gates_batch_tmp_and_uses_tree_mtime(spark, tmp_path):
-    """r11 review: (a) .batch-*.tmp dirs get the same in-flight age
-    gate as .gen-* build dirs; (b) the age comes from the newest DIR
-    mtime in the tree, so a long fold whose writes land in nested
-    subdirs is not reaped while actively writing."""
-    import time
-
-    from paas_auditor_spark.operators.atomic import (
-        commit_batch_dir,
-        compact_batches,
-        vacuum_superseded,
-    )
-
-    path = str(tmp_path / "ds")
-
-    def w(i):
-        def write(d):
-            spark.range(i * 10, i * 10 + 10).write.parquet(d)
-
-        return write
-
-    for i in range(3):
-        commit_batch_dir(path, i, w(i))
-    assert compact_batches(spark, path) == 3  # dataset goes generational
-
-    # a FRESH .batch tmp (in-flight commit) must be spared
-    fresh = os.path.join(path, ".batch-9.tmp123")
-    os.makedirs(fresh)
-    vacuum_superseded(path, retain=0)
-    assert os.path.isdir(fresh)
-    # backdate it: now it is a crash orphan and is reaped
-    old = time.time() - 10_000
-    os.utime(fresh, (old, old))
-    vacuum_superseded(path, retain=0)
-    assert not os.path.isdir(fresh)
-
-    # a build dir whose TOP mtime is stale but whose nested write dir
-    # is fresh (a long fold mid-write) must be spared
-    build = os.path.join(path, ".gen-9.tmp123")
-    inner = os.path.join(build, "batch-0", "bands")
-    os.makedirs(inner)
-    os.utime(build, (old, old))
-    os.utime(os.path.join(build, "batch-0"), (old, old))
-    # inner stays fresh (just created)
-    vacuum_superseded(path, retain=0)
-    assert os.path.isdir(build)
-    os.utime(inner, (old, old))
-    vacuum_superseded(path, retain=0)
-    assert not os.path.isdir(build)
-
-
-def test_tombstone_fold_steady_state_noop(spark, tmp_path):
-    """r11 review: after a fold, re-invoking apply_tombstones_fold with
-    no new batches and an unchanged tombstone set must be a no-op (0)
-    instead of a full dataset rewrite per tick forever."""
-    from paas_auditor_spark.operators.atomic import (
-        apply_tombstones_fold,
-        collector_root,
-        commit_batch_dir,
-        tombstones_collector,
-    )
-
-    path = str(tmp_path / "ds")
-    for i in range(3):
-        commit_batch_dir(
-            path,
-            i,
-            lambda d, i=i: spark.range(i * 10, i * 10 + 10)
-            .withColumnRenamed("id", "doc_id")
-            .write.parquet(d),
-        )
-    tomb = str(tmp_path / "tomb")
-    tombstones_collector(tomb, id_col="doc_id")(
-        spark.range(5).withColumnRenamed("id", "doc_id"), 0
-    )
-    assert apply_tombstones_fold(spark, path, tomb, id_col="doc_id") == 3
-    gen_after_first = collector_root(path)
-    # steady state: no new batches, same tombstones -> no rewrite
-    assert apply_tombstones_fold(spark, path, tomb, id_col="doc_id") == 0
-    assert collector_root(path) == gen_after_first
-    # a NEW tombstone batch re-arms the fold
-    tombstones_collector(tomb, id_col="doc_id")(
-        spark.range(5, 8).withColumnRenamed("id", "doc_id"), 1
-    )
-    assert apply_tombstones_fold(spark, path, tomb, id_col="doc_id") == 1
-    left = {
-        r["doc_id"]
-        for r in spark.read.parquet(
-            os.path.join(collector_root(path), "batch-0")
-        ).collect()
-    }
-    assert left == set(range(8, 30))
-
-
 @pytest.mark.parametrize(
     "crash_point", ["gen_renamed_no_flip", "flipped_no_cleanup"]
 )
 def test_restart_after_kill_during_fold(
     spark, tmp_path, monkeypatch, crash_point
 ):
-    """A kill IN THE MIDDLE of a fold (``vacuum_superseded`` then
-    ``compact_batches(defer_delete=True)``), at both kill windows a real
-    SIGKILL can hit — (a) after the new generation dir is renamed into
-    place but before the CURRENT pointer flips (readers must keep
-    resolving the OLD generation; the orphan gen must not wedge later
-    folds), and (b) after the flip but before the post-flip
+    """A kill IN THE MIDDLE of a ``compact_batches`` fold, at both kill
+    windows a real SIGKILL can hit — (a) after the new generation dir is
+    renamed into place but before the CURRENT pointer flips (readers
+    must keep resolving the OLD generation; the orphan gen must not
+    wedge later folds), and (b) after the flip but before the post-flip
     rescue/cleanup sweep (readers resolve the NEW generation; stale v1
-    batch dirs must be vacuumed, not double-counted).  After restart:
-    reads bit-identical to a one-shot filter, the next fold succeeds,
-    and pre-kill batch ids stay replay-suppressed."""
-    from pyspark.sql import functions as F
-
+    batch dirs must not be double-counted).  After restart: reads equal
+    a one-shot sketch, the next fold succeeds, and pre-kill batch ids
+    stay replay-suppressed."""
     from paas_auditor_spark.operators import atomic
-    from paas_auditor_spark.operators.bloom import (
-        bloom_assemble,
-        bloom_words,
-        bloom_words_collector,
-        bloom_words_read,
-    )
 
-    m, k = 1 << 13, 3
-    path = str(tmp_path / "words")
+    path = str(tmp_path / "hist")
 
-    def fold() -> int:
-        # vacuum what an earlier fold superseded, then fold with the
-        # reader-grace delete discipline
-        atomic.vacuum_superseded(path)
-        return atomic.compact_batches(spark, path, defer_delete=True)
+    def sketch():
+        return _sketch(spark, path)
 
-    def keys(lo, hi):
-        return spark.range(lo, hi).select(
-            F.concat(F.lit("w"), F.col("id").cast("string")).alias("k")
-        )
-
-    def assembled():
-        return bytes(
-            bloom_assemble(bloom_words_read(spark, path)).collect()[0]["bloom"]
-        )
-
-    def one_shot(hi):
-        return bytes(
-            bloom_assemble(bloom_words(keys(0, hi), "k", m=m, k=k))
-            .collect()[0]["bloom"]
-        )
-
-    hook = bloom_words_collector("k", path, m=m, k=k)
+    hook = _hist_hook(path)
     for i in range(3):
-        hook(keys(i * 40, (i + 1) * 40), i)
+        hook(_values(spark, i * 40, (i + 1) * 40), i)
 
     class SimKill(BaseException):
         """Simulated SIGKILL: BaseException so no except-Exception
@@ -951,7 +627,7 @@ def test_restart_after_kill_during_fold(
         monkeypatch.setattr(atomic, "_rescue_unfolded", killer_rescue)
 
     with pytest.raises(SimKill):
-        fold()
+        atomic.compact_batches(spark, path)
     monkeypatch.undo()
 
     if crash_point == "gen_renamed_no_flip":
@@ -961,19 +637,18 @@ def test_restart_after_kill_during_fold(
         assert os.path.isdir(os.path.join(path, "gen-0"))
     else:
         assert atomic.collector_root(path).endswith("gen-0")
-    assert assembled() == one_shot(120)  # reads correct immediately
+    assert sketch() == _one_shot(spark, 0, 120)  # reads correct immediately
 
     # restart: same disk, fresh process state
-    hook = bloom_words_collector("k", path, m=m, k=k)
-    assert assembled() == one_shot(120)
+    hook = _hist_hook(path)
+    assert sketch() == _one_shot(spark, 0, 120)
 
-    # pre-kill ids stay replay-suppressed across the kill + restart in
-    # the flipped case (the fold's floor landed with the flip); in the
-    # no-flip case the fold never became visible, so the replay re-lands
-    # harmlessly identical bits (idempotent OR) — either way the filter
-    # is unchanged
-    hook(keys(0, 40), 0)
-    assert assembled() == one_shot(120)
+    # pre-kill ids stay replay-suppressed across the kill + restart: by
+    # the fold's floor in the flipped case (it landed with the flip), by
+    # the still-present batch dir in the no-flip case — either way the
+    # counts are unchanged
+    hook(_values(spark, 0, 40), 0)
+    assert sketch() == _one_shot(spark, 0, 120)
 
     # accumulate three delta batches again; the next fold must succeed,
     # skipping over / superseding whatever the kill left behind.  Once
@@ -990,25 +665,13 @@ def test_restart_after_kill_during_fold(
 
     next_id = 3
     while _delta_dirs() < 3:
-        hook(keys(next_id * 40, (next_id + 1) * 40), next_id)
+        hook(_values(spark, next_id * 40, (next_id + 1) * 40), next_id)
         next_id += 1
-    assert fold() >= 3
+    assert atomic.compact_batches(spark, path) >= 3
     hi = next_id * 40
-    assert assembled() == one_shot(hi)
+    assert sketch() == _one_shot(spark, 0, hi)
     assert os.path.exists(os.path.join(path, atomic._CURRENT))
 
     # replay of a folded id is suppressed by the new floor
-    hook(keys(0, 40), 1)
-    assert assembled() == one_shot(hi)
-
-    # a later vacuum (past the in-flight grace window) reaps the kill's
-    # leftovers without touching the live generation
-    atomic.vacuum_superseded(path, retain=0, orphan_age_s=0.0)
-    live = os.path.basename(atomic.collector_root(path))
-    leftovers = [
-        d
-        for d in os.listdir(path)
-        if d != live and d != atomic._CURRENT and not d.startswith(".CURRENT")
-    ]
-    assert leftovers == []
-    assert assembled() == one_shot(hi)
+    hook(_values(spark, 0, 40), 1)
+    assert sketch() == _one_shot(spark, 0, hi)

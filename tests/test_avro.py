@@ -365,48 +365,6 @@ def test_per_file_sync_markers(spark, tmp_path):
     assert len(got) == 1 and bytes(got[0]["b"]) == blob
 
 
-def test_avro_stream_ingests_landing_zone(spark, tmp_path):
-    """Streaming bronze ingestion e2e: Avro container files dropped
-    into the landing zone flow through avro_stream (binaryFile file
-    source, one file per trigger) into a foreachBatch parquet sink —
-    per-file micro-batches, all rows landed exactly once."""
-    from paas_auditor_spark.sources.avro_io import avro_stream
-
-    zone = str(tmp_path / "zone")
-    os.makedirs(zone)
-    schema = {
-        "type": "record", "name": "r",
-        "fields": [
-            {"name": "id", "type": "long"},
-            {"name": "s", "type": ["null", "string"]},
-        ],
-    }
-    for i, batch in enumerate([[(1, "a"), (2, "b")], [(3, None)]]):
-        with open(os.path.join(zone, f"f{i}.avro"), "wb") as fh:
-            write_container(fh, schema, iter(batch))
-
-    out = str(tmp_path / "silver")
-    seen_batches = []
-
-    def sink(batch_df, epoch_id):
-        seen_batches.append(batch_df.count())
-        batch_df.write.mode("append").parquet(out)
-
-    q = (
-        avro_stream(spark, zone, "id long, s string")
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = sorted(
-        (r["id"], r["s"]) for r in spark.read.parquet(out).collect()
-    )
-    assert got == [(1, "a"), (2, "b"), (3, None)]
-    assert sorted(seen_batches) == [1, 2]  # one micro-batch per file
-
-
 @pytest.mark.parametrize("codec", ["null", "deflate"])
 def test_split_scan_equals_whole_file_scan(spark, tmp_path, codec):
     """Sync-marker split scan: every byte range decodes exactly the

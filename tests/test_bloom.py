@@ -19,9 +19,13 @@ from pyspark.sql import functions as F
 
 from paas_auditor_spark.operators.bloom import (
     bloom_bit_pos,
-    bloom_bitmap,
+    bloom_blob_from_words,
     bloom_contains,
+    bloom_literal,
+    bloom_words,
 )
+
+from bloom_reference import bloom_assemble, bloom_bitmap
 
 M, K = 1 << 14, 4
 
@@ -32,12 +36,15 @@ def _keys(spark, lo, hi, prefix="key"):
     )
 
 
+def _blob(spark, literal):
+    """The bytes of a probe literal column."""
+    return bytes(spark.range(1).select(literal.alias("b")).collect()[0]["b"])
+
+
 def test_no_false_negatives(spark):
     members = _keys(spark, 0, 2000)
-    bitmap = bloom_bitmap(members, "k", m=M, k=K)
-    probed = members.join(F.broadcast(bitmap)).where(
-        ~bloom_contains(F.col("k"), F.col("bloom"), m=M, k=K)
-    )
+    bitmap = bloom_literal(members, "k", m=M, k=K)
+    probed = members.where(~bloom_contains(F.col("k"), bitmap, m=M, k=K))
     assert probed.count() == 0
 
 
@@ -46,13 +53,9 @@ def test_false_positive_rate_bounded(spark):
 
     n = 2000
     members = _keys(spark, 0, n)
-    bitmap = bloom_bitmap(members, "k", m=M, k=K)
+    bitmap = bloom_literal(members, "k", m=M, k=K)
     outsiders = _keys(spark, 0, 10000, prefix="other")
-    fp = (
-        outsiders.join(F.broadcast(bitmap))
-        .where(bloom_contains(F.col("k"), F.col("bloom"), m=M, k=K))
-        .count()
-    )
+    fp = outsiders.where(bloom_contains(F.col("k"), bitmap, m=M, k=K)).count()
     expected = (1 - math.exp(-K * n / M)) ** K  # ≈ 0.048 at these params
     # generous ceiling: 3× the closed form catches a broken hash family
     # (which degrades to orders of magnitude more FPs) without flaking
@@ -64,8 +67,7 @@ def test_packing_equals_position_set(spark):
     the distinct position set — exercises word boundaries, the
     little-endian byte order, and bit 63."""
     members = _keys(spark, 0, 500)
-    bitmap_row = bloom_bitmap(members, "k", m=M, k=K).collect()[0]
-    blob = bytes(bitmap_row["bloom"])
+    blob = _blob(spark, bloom_literal(members, "k", m=M, k=K))
     assert len(blob) == M // 8
     positions = {
         r["p"]
@@ -94,33 +96,24 @@ def test_bit63_round_trip(spark):
         .limit(1)
     )
     assert cand.count() == 1
-    bitmap = bloom_bitmap(cand, "k", m=M, k=K)
-    hit = (
-        cand.join(F.broadcast(bitmap))
-        .where(bloom_contains(F.col("k"), F.col("bloom"), m=M, k=K))
-        .count()
-    )
+    bitmap = bloom_literal(cand, "k", m=M, k=K)
+    hit = cand.where(bloom_contains(F.col("k"), bitmap, m=M, k=K)).count()
     assert hit == 1
 
 
 def test_m_must_be_word_aligned(spark):
     with pytest.raises(ValueError, match="multiple of 64"):
-        bloom_bitmap(_keys(spark, 0, 1), "k", m=100, k=2)
+        bloom_literal(_keys(spark, 0, 1), "k", m=100, k=2)
 
 
 def test_empty_reference_set_flags_nothing(spark):
     """An empty benchmark builds an all-zero bitmap; every probe is
     False (the decontamination gate passes everything through)."""
     empty = _keys(spark, 0, 0)
-    bitmap = bloom_bitmap(empty, "k", m=M, k=K)
-    row = bitmap.collect()[0]
-    assert bytes(row["bloom"]) == bytes(M // 8)
+    bitmap = bloom_literal(empty, "k", m=M, k=K)
+    assert _blob(spark, bitmap) == bytes(M // 8)
     probes = _keys(spark, 0, 100)
-    hits = (
-        probes.join(F.broadcast(bitmap))
-        .where(bloom_contains(F.col("k"), F.col("bloom"), m=M, k=K))
-        .count()
-    )
+    hits = probes.where(bloom_contains(F.col("k"), bitmap, m=M, k=K)).count()
     assert hits == 0
 
 
@@ -167,86 +160,6 @@ def test_streaming_bloom_gate_matches_batch(spark, tmp_path):
     assert all(i % 7 not in (1, 4) for i in got)
 
 
-def test_streaming_incremental_decontamination(spark, tmp_path):
-    """Incremental streaming decontamination end-to-end: benchmark
-    drops arrive as a STREAM, each micro-batch appends its own
-    (w, bits, m, k) words relation via bloom_words_collector
-    (foreachBatch) — no rebuild from keys — and the corpus gate is
-    re-assembled from the persisted words table only when it grows.
-    Batch-2 additions to the benchmark set are caught by the refreshed
-    gate (and provably NOT by the stale one), extending the static
-    streaming-gate test above to the filter's own lifecycle."""
-    import os
-
-    from paas_auditor_spark.operators.bloom import (
-        bloom_assemble,
-        bloom_blob_literal,
-        bloom_contains,
-        bloom_words_collector,
-        bloom_words_read,
-    )
-
-    bench_src = str(tmp_path / "bench_stream")
-    words_path = str(tmp_path / "bloom_words")
-    os.makedirs(bench_src)
-
-    def drop_bench(name: str, bodies: list[str]) -> None:
-        spark.createDataFrame(
-            [(b,) for b in bodies], "body string"
-        ).coalesce(1).write.mode("append").parquet(bench_src)
-
-    drop_bench("day1", ["text piece 1", "text piece 4"])
-    q = (
-        spark.readStream.schema("body string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(bench_src)
-        .writeStream.foreachBatch(
-            bloom_words_collector("body", words_path, m=M, k=K)
-        )
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        gate1 = bloom_blob_literal(
-            bloom_assemble(bloom_words_read(spark, words_path)), M
-        )
-
-        # batch 2: a NEW benchmark body lands in the stream
-        drop_bench("day2", ["text piece 6"])
-        q.processAllAvailable()
-        gate2 = bloom_blob_literal(
-            bloom_assemble(bloom_words_read(spark, words_path)), M
-        )
-    finally:
-        q.stop()
-
-    docs = spark.createDataFrame(
-        [(i, f"text piece {i % 7}") for i in range(70)], "doc_id long, body string"
-    )
-
-    def flagged(gate):
-        return {
-            r["doc_id"]
-            for r in docs.where(
-                bloom_contains(F.col("body"), gate, m=M, k=K)
-            ).collect()
-        }
-
-    old, new = flagged(gate1), flagged(gate2)
-    # the stale gate misses the day-2 addition; the refreshed gate
-    # catches it on top of everything day 1 caught (no false negatives)
-    assert old == {i for i in range(70) if i % 7 in (1, 4)}
-    assert new == {i for i in range(70) if i % 7 in (1, 4, 6)}
-    # the words table holds per-batch appends (≥2 files' worth of rows),
-    # merged at read time — nothing was rebuilt from keys
-    n_word_rows = bloom_words_read(spark, words_path).count()
-    n_distinct_w = (
-        bloom_words_read(spark, words_path).select("w").distinct().count()
-    )
-    assert n_word_rows >= n_distinct_w  # appends co-exist until assembled
-
-
 def test_null_keys_dropped_on_build_and_probe(spark):
     """NULL keys contribute no positions (SQL set semantics: the oracle's
     ``g || '#' || j`` is NULL for NULL g) and never probe True — without
@@ -254,92 +167,25 @@ def test_null_keys_dropped_on_build_and_probe(spark):
     an engine-specific nonsense answer."""
     rows = [("a",), (None,), ("b",)]
     df = spark.createDataFrame(rows, "k string")
-    with_nulls = bloom_bitmap(df, "k", m=M, k=K).collect()[0]["bloom"]
-    without = bloom_bitmap(
-        df.where(F.col("k").isNotNull()), "k", m=M, k=K
-    ).collect()[0]["bloom"]
-    assert bytes(with_nulls) == bytes(without)
-    lit = F.lit(bytes(with_nulls))
+    with_nulls = _blob(spark, bloom_literal(df, "k", m=M, k=K))
+    without = _blob(
+        spark, bloom_literal(df.where(F.col("k").isNotNull()), "k", m=M, k=K)
+    )
+    assert with_nulls == without
+    lit = F.lit(with_nulls)
     got = df.select(
         "k", bloom_contains(F.col("k"), lit, m=M, k=K).alias("hit")
     ).collect()
     assert {r["k"]: r["hit"] for r in got} == {"a": True, None: False, "b": True}
 
 
-def test_merge_equals_build_on_union(spark):
-    """Incremental contract: OR-ing per-batch word tables == building
-    one filter from the unioned keys, bit-exactly — so daily filters
-    roll up with no key rebuild (the HLL/CMS re-aggregation story)."""
-    from paas_auditor_spark.operators.bloom import (
-        bloom_assemble,
-        bloom_merge,
-        bloom_words,
-    )
-
-    b1 = _keys(spark, 0, 300)
-    b2 = _keys(spark, 200, 600)  # overlapping on purpose
-    merged = bloom_assemble(
-        bloom_merge(
-            bloom_words(b1, "k", m=M, k=K), bloom_words(b2, "k", m=M, k=K)
-        ),
-        M,
-    ).collect()[0]["bloom"]
-    direct = bloom_bitmap(b1.unionByName(b2), "k", m=M, k=K).collect()[0][
-        "bloom"
-    ]
-    assert bytes(merged) == bytes(direct)
-
-
-def test_blob_literal_rejects_mismatched_m(spark):
-    """Assembling under one m and probing under another must fail loudly
-    — a misaligned blob would silently produce false negatives."""
-    from paas_auditor_spark.operators.bloom import (
-        bloom_assemble,
-        bloom_blob_literal,
-        bloom_words,
-    )
-
-    words = bloom_words(_keys(spark, 0, 10), "k", m=M, k=K)
-    assembled = bloom_assemble(words, M)
-    with pytest.raises(ValueError, match="different m"):
-        bloom_blob_literal(assembled, M * 2)
-
-
-def test_assemble_rejects_smaller_m_words_table(spark):
-    """The r5 advice hole: a words table built under a SMALLER m,
-    assembled under a larger m, zero-pads to exactly m/8 bytes and
-    passes a length-only guard — then probes misaligned bits (silent
-    false negatives).  The geometry columns the words relation now
-    carries must catch it at assemble time."""
-    from paas_auditor_spark.operators.bloom import bloom_assemble, bloom_words
-
-    words_small = bloom_words(_keys(spark, 0, 10), "k", m=M // 2, k=K)
-    with pytest.raises(ValueError, match="different m"):
-        bloom_assemble(words_small, M)
-
-
-def test_merge_rejects_mixed_geometry(spark):
-    """OR-ing word tables built under different (m, k) is meaningless;
-    bloom_merge must refuse rather than produce a mixed filter."""
-    from paas_auditor_spark.operators.bloom import bloom_merge, bloom_words
-
-    a = bloom_words(_keys(spark, 0, 10), "k", m=M, k=K)
-    b = bloom_words(_keys(spark, 0, 10), "k", m=M // 2, k=K)
-    with pytest.raises(ValueError, match="different geometry"):
-        bloom_merge(a, b)
-
-
 def test_assemble_reads_geometry_from_words(spark):
-    """A persisted words table is self-describing: assemble with no m
-    argument reconstructs the same blob as the fused build."""
-    from paas_auditor_spark.operators.bloom import bloom_assemble, bloom_words
-
+    """A persisted words table is self-describing: packing it with no m
+    argument reconstructs the same blob as the build from keys."""
     ks = _keys(spark, 0, 123)
-    via_words = bloom_assemble(bloom_words(ks, "k", m=M, k=K)).collect()[0][
-        "bloom"
-    ]
-    direct = bloom_bitmap(ks, "k", m=M, k=K).collect()[0]["bloom"]
-    assert bytes(via_words) == bytes(direct)
+    via_words = _blob(spark, bloom_blob_from_words(bloom_words(ks, "k", m=M, k=K)))
+    direct = _blob(spark, bloom_literal(ks, "k", m=M, k=K))
+    assert via_words == direct
 
 
 def test_blob_from_words_bit_equal_to_assemble(spark, tmp_path):
@@ -347,12 +193,6 @@ def test_blob_from_words_bit_equal_to_assemble(spark, tmp_path):
     hot path, zero shuffles) must render byte-identical bits to the
     relational bloom_assemble, including duplicate w rows from per-batch
     parquet appends and bit 63."""
-    from paas_auditor_spark.operators.bloom import (
-        bloom_assemble,
-        bloom_blob_from_words,
-        bloom_words,
-    )
-
     p = str(tmp_path / "words")
     bloom_words(_keys(spark, 0, 300), "k", m=M, k=K).write.parquet(p)
     bloom_words(_keys(spark, 200, 600), "k", m=M, k=K).write.mode(
@@ -380,75 +220,34 @@ def test_blob_from_words_validates_geometry(spark):
         bloom_blob_from_words(words, m=M // 2, k=K + 1)
 
 
-def test_words_persist_roundtrip_then_merge(spark, tmp_path):
-    """The incremental deployment shape end-to-end: per-batch word
-    tables persist as parquet, later read back, merged, assembled —
-    bit-equal to building from all keys at once.  (What a daily
-    benchmark-drop pipeline actually does; nothing is rebuilt from
-    keys.)"""
-    from paas_auditor_spark.operators.bloom import (
-        bloom_assemble,
-        bloom_merge,
-        bloom_words,
-    )
-
-    p1, p2 = str(tmp_path / "day1"), str(tmp_path / "day2")
-    b1, b2 = _keys(spark, 0, 250), _keys(spark, 250, 500)
-    bloom_words(b1, "k", m=M, k=K).write.parquet(p1)
-    bloom_words(b2, "k", m=M, k=K).write.parquet(p2)
-    merged = bloom_assemble(
-        bloom_merge(spark.read.parquet(p1), spark.read.parquet(p2)), M
-    ).collect()[0]["bloom"]
-    direct = bloom_bitmap(b1.unionByName(b2), "k", m=M, k=K).collect()[0][
-        "bloom"
-    ]
-    assert bytes(merged) == bytes(direct)
-
-
 def test_streaming_gate_composes_with_sessionization(spark, tmp_path):
-    """The full curation-ingest composition (SURVEY §7 r7 carry-over
-    item 5): an unbounded MESSAGE stream is gated in-stream by the
-    incrementally-maintained bloom filter (words table appended by a
-    concurrent benchmark stream via bloom_words_collector; each message
-    micro-batch packs the CURRENT words table with bloom_blob_from_words
-    — zero shuffles), and the landed clean table sessionizes with
+    """The full curation-ingest composition: an unbounded MESSAGE stream
+    is gated in-stream by the incrementally-maintained bloom filter
+    (each benchmark drop appends its own bloom_words relation to a
+    parquet words table; each message micro-batch packs the CURRENT
+    words table with bloom_blob_from_words — zero shuffles), and the
+    landed clean table sessionizes with
     session_window.  Asserts: the contaminated message never lands, a
     benchmark drop BETWEEN message batches changes only later batches'
     gating, and the surviving messages fold into the right sessions."""
     import datetime as dt
     import os
 
-    from paas_auditor_spark.operators.bloom import (
-        bloom_blob_from_words,
-        bloom_contains,
-        bloom_words_collector,
-        bloom_words_read,
-    )
-
-    bench_src = str(tmp_path / "bench_src")
     msg_src = str(tmp_path / "msg_src")
     words_path = str(tmp_path / "words")
     clean_path = str(tmp_path / "clean")
-    os.makedirs(bench_src)
     os.makedirs(msg_src)
 
-    # benchmark stream, day 1: "bad seed" is contaminated
-    spark.createDataFrame([("bad seed",)], "body string").coalesce(
-        1
-    ).write.mode("append").parquet(bench_src)
-    bq = (
-        spark.readStream.schema("body string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(bench_src)
-        .writeStream.foreachBatch(
-            bloom_words_collector("body", words_path, m=M, k=K)
-        )
-        .option("checkpointLocation", str(tmp_path / "bq_ckpt"))
-        .start()
-    )
+    def drop_bench(body: str) -> None:
+        bloom_words(
+            spark.createDataFrame([(body,)], "body string"), "body", m=M, k=K
+        ).write.mode("append").parquet(words_path)
+
+    # benchmark drop, day 1: "bad seed" is contaminated
+    drop_bench("bad seed")
 
     def gate_batch(batch_df, batch_id):
-        words = bloom_words_read(batch_df.sparkSession, words_path)
+        words = batch_df.sparkSession.read.parquet(words_path)
         blob = bloom_blob_from_words(words, m=M, k=K)
         batch_df.where(
             ~bloom_contains(F.col("text"), blob, m=M, k=K)
@@ -471,11 +270,9 @@ def test_streaming_gate_composes_with_sessionization(spark, tmp_path):
             (2, base, "bad seed"),
         ]
     )
-    # drain the benchmark stream BEFORE the first message batch runs:
     # the gate reads the words table at batch time, so the filter must
     # exist before any message is gated (in production the words table
     # is seeded at deploy; here day 1's drop plays that role)
-    bq.processAllAvailable()
     mq = (
         spark.readStream.schema("user_id long, ts timestamp, text string")
         .option("maxFilesPerTrigger", 1)
@@ -487,10 +284,7 @@ def test_streaming_gate_composes_with_sessionization(spark, tmp_path):
     try:
         mq.processAllAvailable()
         # day-2 benchmark drop lands BETWEEN message batches
-        spark.createDataFrame(
-            [("spoiler text",)], "body string"
-        ).coalesce(1).write.mode("append").parquet(bench_src)
-        bq.processAllAvailable()
+        drop_bench("spoiler text")
         # message batch 2: the newly-benchmarked text must now be gated
         drop_msgs(
             [
@@ -501,7 +295,6 @@ def test_streaming_gate_composes_with_sessionization(spark, tmp_path):
         mq.processAllAvailable()
     finally:
         mq.stop()
-        bq.stop()
 
     clean = spark.read.parquet(clean_path)
     texts = {r["text"] for r in clean.collect()}
@@ -529,25 +322,17 @@ def test_scheme_column_rejects_legacy_and_foreign_tables(spark):
     bit-position formula (same m/k, misaligned bits → silent false
     negatives), so every validator must reject (a) a legacy table with
     no scheme column and (b) a table stamped with a foreign scheme."""
-    from paas_auditor_spark.operators.bloom import (
-        bloom_assemble,
-        bloom_blob_from_words,
-        bloom_merge,
-        bloom_words,
-    )
-
     words = bloom_words(_keys(spark, 0, 50), "k", m=M, k=K)
     legacy = words.drop("scheme")
     foreign = words.withColumn("scheme", F.lit("salted-md5-v0"))
     for bad, pat in ((legacy, "no scheme column"), (foreign, "scheme")):
         with pytest.raises(ValueError, match=pat):
-            bloom_assemble(bad).collect()
-        with pytest.raises(ValueError, match=pat):
             bloom_blob_from_words(bad, m=M, k=K)
-        with pytest.raises(ValueError, match=pat):
-            bloom_merge(words, bad).collect()
+    # a foreign batch appended to a valid table poisons the whole table
+    with pytest.raises(ValueError, match="scheme"):
+        bloom_blob_from_words(words.unionByName(foreign), m=M, k=K)
     # and the happy path still round-trips
-    assert bloom_assemble(words).count() == 1
+    assert len(_blob(spark, bloom_blob_from_words(words, m=M, k=K))) == M // 8
 
 
 def test_bloom_prune_superset_then_join_exact(spark):
@@ -689,32 +474,6 @@ def test_commit_batch_dir_contract(tmp_path):
     assert os.path.isdir(os.path.join(path, "batch-2"))
 
 
-def test_merge_accepts_empty_partial(spark):
-    """A collector partial whose micro-batches had zero keys is a LEGAL
-    merge input (r6 advice): it imposes no geometry and contributes no
-    bits — the merged blob equals the non-empty side's alone.  All-empty
-    merges and direct geometry reads of an empty table fail with the
-    actionable empty-relation message, not a bogus 'mixed geometry: []'."""
-    from paas_auditor_spark.operators.bloom import (
-        _words_geometry,
-        bloom_assemble,
-        bloom_merge,
-        bloom_words,
-    )
-
-    full = bloom_words(_keys(spark, 0, 50), "k", m=M, k=K)
-    empty = full.where(F.lit(False))
-    merged = bloom_merge(full, empty)
-    assert (
-        bytes(bloom_assemble(merged).collect()[0]["bloom"])
-        == bytes(bloom_assemble(full).collect()[0]["bloom"])
-    )
-    with pytest.raises(ValueError, match="all words relations are empty"):
-        bloom_merge(empty, empty)
-    with pytest.raises(ValueError, match="empty words relation"):
-        _words_geometry(empty)
-
-
 def test_bloom_sharded_is_batch_slice_of_persisted(spark, sf_dir):
     """bloom_decontaminate_sharded must equal the full persisted
     decontamination restricted to the ingest batch (same artifact, same
@@ -740,7 +499,7 @@ def test_bloom_sharded_is_batch_slice_of_persisted(spark, sf_dir):
 
 
 def test_literal_equals_relational_render(spark):
-    """The driver-packed ``bloom_literal`` blob (r11: sparse collect +
+    """The driver-packed ``bloom_literal`` blob (sparse collect +
     Python pack, no densify union / one-row render shuffle) is
     BIT-EQUAL to the relational ``bloom_bitmap`` render for the same
     keys and geometry — the packing change is representation plumbing,

@@ -56,10 +56,6 @@ def test_simhash_near_duplicates(docs_df):
     ham_03 = bin(sh[0] ^ sh[3]).count("1")
     assert ham_02 < ham_03  # near-dup closer than unrelated
 
-    pairs = {(r["id_a"], r["id_b"]) for r in
-             dedup.simhash_near_duplicates(docs_df, max_hamming=3).collect()}
-    assert (0, 1) in pairs
-
 
 def test_minhash_signature_shape(docs_df):
     sigs = dedup.minhash_signatures(docs_df).collect()
@@ -338,20 +334,6 @@ def test_banding_parameter_guards(spark):
         minhash_candidates(docs, num_hashes=8, num_bands=16).count()
     with pytest.raises(ValueError, match="multiple of"):
         minhash_candidates(docs, num_hashes=32, num_bands=10).count()
-
-
-def test_simhash_max_hamming_guard(spark):
-    """max_hamming beyond the 4×16-bit pigeonhole guarantee (3) must be
-    rejected, not silently under-recall."""
-    import pytest
-
-    from paas_auditor_spark.operators.dedup import simhash_near_duplicates
-
-    docs = spark.createDataFrame(
-        [(1, "a b c"), (2, "a b d")], "doc_id long, text string"
-    )
-    with pytest.raises(ValueError, match="pigeonhole"):
-        simhash_near_duplicates(docs, max_hamming=5)
 
 
 def test_connected_components_raises_on_non_convergence(spark):
@@ -1296,48 +1278,6 @@ def test_band_fold_int64_safe_at_any_rows_per_band(spark):
         minima[2 * bi] * 1000003 + minima[2 * bi + 1] for bi in range(4)
     ]
     assert list(row["bkeys"]) == expect
-
-
-def test_simhash_guards_value_identical_and_star(spark):
-    """The simhash path's new hot-bucket guards must not change the
-    default output (collapse + first-shared-band replace the post-join
-    distinct bit-for-bit), and identical_edges='star' must stay
-    connected-components-equivalent on a duplicate-heavy corpus."""
-    docs = spark.createDataFrame(
-        [(i, "the exact same page content repeated many times over")
-         for i in range(12)]
-        + [(100 + i, f"distinct content number {i} with its own words")
-           for i in range(4)],
-        ["doc_id", "text"],
-    )
-    allp = dedup.simhash_near_duplicates(docs).collect()
-    # 12 identical docs -> all 66 intra pairs at hamming 0, every pair
-    # emitted exactly once
-    intra = [(r.id_a, r.id_b) for r in allp if r.id_a < 12 and r.id_b < 12]
-    assert len(intra) == len(set(intra)) == 66
-    assert all(r.hamming == 0 for r in allp if (r.id_a, r.id_b) in intra)
-    star = dedup.simhash_near_duplicates(
-        docs, identical_edges="star"
-    ).collect()
-    # star: the 12-copy group contributes 11 edges instead of 66
-    sintra = [(r.id_a, r.id_b) for r in star if r.id_a < 12 and r.id_b < 12]
-    assert len(sintra) == 11
-    # same connectivity: identical component partitions
-    edges = spark.createDataFrame(
-        [(r.id_a, r.id_b) for r in allp], ["id_a", "id_b"]
-    )
-    sedges = spark.createDataFrame(
-        [(r.id_a, r.id_b) for r in star], ["id_a", "id_b"]
-    )
-    comp = {
-        (r.node, r.component)
-        for r in dedup.connected_components_star(edges).collect()
-    }
-    scomp = {
-        (r.node, r.component)
-        for r in dedup.connected_components_star(sedges).collect()
-    }
-    assert comp == scomp
 
 
 def test_min_rep_collapse_null_ckey_rows_stand_alone(spark):

@@ -13,9 +13,7 @@ import pytest
 from paas_auditor_spark.operators.cursor import (
     EPOCH_TS,
     effective_cursor,
-    empty_cursors,
     upsert_cursor,
-    validate_cursor_monotonic,
 )
 from paas_auditor_spark.operators.ingest import (
     idempotent_append,
@@ -29,6 +27,7 @@ from paas_auditor_spark.sources.paginated_http import (
     fetch_event_pages,
     pages_to_dataframe,
 )
+from paas_auditor_spark.schemas import SHIPPER_CURSOR
 from paas_auditor_spark.streaming.metrics import COUNTERS, GAUGES, MetricsRegistry
 from paas_auditor_spark.stores import ParquetStore
 from paas_auditor_spark.streaming.ship import send_with_retry, ship_tick
@@ -399,12 +398,10 @@ def test_retry_backoff_recovers():
 
 
 def test_cursor_upsert_and_monotonic(spark):
-    c0 = empty_cursors(spark)
-    before = effective_cursor(c0, "s")
+    c0 = spark.createDataFrame([], schema=SHIPPER_CURSOR)
+    assert effective_cursor(c0, "s") == (EPOCH_TS, "")
     c1 = upsert_cursor(c0, "s", BASE, "g1")
-    after = effective_cursor(c1, "s")
-    assert after == (BASE, "g1")
-    assert validate_cursor_monotonic(before, after)
+    assert effective_cursor(c1, "s") == (BASE, "g1")
     # second upsert replaces, not duplicates (name is PK — W2)
     c2 = upsert_cursor(c1, "s", BASE + dt.timedelta(seconds=5), "g2")
     assert c2.filter("name = 's'").count() == 1
@@ -452,47 +449,6 @@ def test_idempotent_append_respects_window_floor(spark):
     assert floored.count() == 8
     correct = idempotent_append(events, batch, window_floor=EPOCH_TS)
     assert correct.count() == 5
-
-
-def test_compact_partition_preserves_rows_and_reduces_files(spark, tmp_path):
-    """Small-file compaction: many per-batch appends collapse to one file
-    per closed partition, with row-for-row identical content."""
-    import datetime as dt
-    import glob
-    import os
-
-    from pyspark.sql import functions as F
-
-    from paas_auditor_spark.sources.partitioned import (
-        compact_partition,
-        list_partitions,
-        write_partitioned,
-    )
-
-    bronze = str(tmp_path / "bronze")
-    base = dt.datetime(2024, 3, 1, 12, 0, 0)
-    # 5 micro-batch appends into the same date partition
-    for batch in range(5):
-        df = spark.createDataFrame(
-            [(batch * 10 + i, base + dt.timedelta(seconds=batch * 10 + i))
-             for i in range(10)],
-            "guid long, created_at timestamp",
-        ).coalesce(2)
-        write_partitioned(df, bronze)
-
-    assert list_partitions(bronze) == ["2024-03-01"]
-    part_dir = os.path.join(bronze, "event_date=2024-03-01")
-    files_before = glob.glob(os.path.join(part_dir, "*.parquet"))
-    assert len(files_before) >= 5
-
-    n = compact_partition(spark, bronze, "2024-03-01", target_files=1)
-    assert n == 50
-    files_after = glob.glob(os.path.join(part_dir, "*.parquet"))
-    assert len(files_after) == 1
-    out = spark.read.parquet(part_dir)
-    assert out.count() == 50
-    assert out.agg(F.sum("guid")).first()[0] == sum(range(50))
-    assert list_partitions(bronze) == ["2024-03-01"]  # no temp dirs leak
 
 
 def test_stratified_sample_fractions(spark, sf_dir):
@@ -557,70 +513,6 @@ def test_approx_percentiles_accuracy_envelope(spark, sf_dir):
             assert lo - 0.01 <= a <= hi + 0.01, (etype, qs[i], a, lo, hi)
 
 
-def test_export_ordered_total_order_across_files(spark, sf_dir, tmp_path):
-    """Range-partitioned sorted export: every part-file internally sorted,
-    file key-ranges disjoint and increasing — i.e. a total order readable
-    in parallel."""
-    import glob
-
-    from paas_auditor_spark.sources.partitioned import export_ordered
-    from paas_auditor_spark.sources.tables import load_table
-
-    out = str(tmp_path / "ordered")
-    events = load_table(spark, sf_dir, "events").select("event_id", "ts")
-    export_ordered(events, out, "event_id", num_partitions=4)
-
-    files = sorted(glob.glob(f"{out}/part-*.parquet"))
-    assert len(files) >= 2
-    ranges = []
-    total = 0
-    for f in files:
-        vals = [r["event_id"] for r in spark.read.parquet(f).collect()]
-        if not vals:
-            continue
-        assert vals == sorted(vals), f  # internal order
-        ranges.append((vals[0], vals[-1]))
-        total += len(vals)
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 < lo2  # disjoint, increasing across files
-    assert total == events.count()
-
-
-def test_clustered_write_makes_row_group_stats_selective(spark, sf_dir, tmp_path):
-    """write_clustered must produce near-disjoint per-file value ranges on
-    the cluster key (the precondition for row-group skipping), where a
-    random layout's ranges all span the full domain."""
-    from paas_auditor_spark.sources.partitioned import (
-        row_group_stats,
-        write_clustered,
-    )
-    from paas_auditor_spark.sources.tables import load_table
-
-    events = load_table(spark, sf_dir, "events").select("user_id", "ts", "value")
-    clustered = str(tmp_path / "clustered")
-    random_layout = str(tmp_path / "random")
-    write_clustered(events, clustered, ["user_id", "ts"], num_files=4)
-    events.repartition(4).write.mode("overwrite").parquet(random_layout)
-
-    def spread(stats):
-        lo = min(s[0] for s in stats)
-        hi = max(s[1] for s in stats)
-        full = hi - lo or 1
-        return sum((s[1] - s[0]) / full for s in stats) / len(stats)
-
-    clustered_spread = spread(row_group_stats(clustered, "user_id"))
-    random_spread = spread(row_group_stats(random_layout, "user_id"))
-    # each clustered row group covers a narrow slice of the key domain;
-    # random row groups each cover ~the whole domain
-    assert clustered_spread < 0.5 < random_spread
-    # and the ranges tile the domain: sorted by min, overlaps are rare
-    stats = sorted(row_group_stats(clustered, "user_id"))
-    overlaps = sum(
-        1 for a, b in zip(stats, stats[1:]) if b[0] < a[1]
-    )
-    assert overlaps <= len(stats) // 4
-
-
 def test_event_json_emits_empty_string_for_null_fields(spark):
     """to_json drops null struct keys by default — event_json must emit
     "" instead (Go string struct fields are never nil), keeping the
@@ -661,31 +553,6 @@ def test_event_json_emits_empty_string_for_null_fields(spark):
         "actor_username", "actee", "actee_type", "actee_name",
         "organization_guid", "space_guid", "metadata",
     ]
-
-
-def test_csv_source_quarantines_malformed_rows(spark, tmp_path):
-    """Typed CSV scan: good rows parse to the events schema, unparseable
-    lines land in the quarantine channel instead of vanishing."""
-    from paas_auditor_spark.sources.csv import read_events_csv
-
-    p = tmp_path / "events.csv"
-    p.write_text(
-        "event_id,ts,user_id,event_type,value,props\n"
-        "1,2024-01-01T00:00:00,10,click,1.5,\"{}\"\n"
-        "2,2024-01-01T00:01:00,11,view,2.0,\n"
-        "not-a-number,garbage-ts,x,oops,NaNope,{}\n"
-        "3,2024-01-01T00:02:00,12,error,9.9,\"{\"\"k\"\": 1}\"\n"
-    )
-    good, bad = read_events_csv(spark, str(p), with_quarantine=True)
-    rows = {r["event_id"]: r for r in good.collect()}
-    assert set(rows) == {1, 2, 3}
-    assert rows[3]["props"] == '{"k": 1}'
-    assert rows[1]["value"] == 1.5
-    assert [c for c in good.columns] == [
-        "event_id", "ts", "user_id", "event_type", "value", "props"
-    ]
-    bad_lines = [r["raw_line"] for r in bad.collect()]
-    assert len(bad_lines) == 1 and bad_lines[0].startswith("not-a-number")
 
 
 def test_orc_and_json_round_trip_preserve_events(spark, sf_dir, tmp_path):
@@ -740,81 +607,6 @@ def test_orc_and_json_round_trip_preserve_events(spark, sf_dir, tmp_path):
     )
     assert (got_orc["c"], got_orc["n"]) == (want["c"], want["n"])
     assert (got_json["c"], got_json["n"]) == (want["c"], want["n"])
-
-
-def test_delete_keys_rewrites_only_target_partition(spark, tmp_path):
-    """Right-to-erasure: deleting guids from one date partition removes
-    exactly those rows; the sibling partition's files are byte-identical
-    afterwards (the lake outside the target partition is untouched)."""
-    import datetime as dt
-    import glob
-    import hashlib
-    import os
-
-    from pyspark.sql import functions as F
-
-    from paas_auditor_spark.sources.partitioned import (
-        delete_keys_from_partition,
-        list_partitions,
-        write_partitioned,
-    )
-
-    bronze = str(tmp_path / "bronze")
-    d1 = dt.datetime(2024, 3, 1, 12, 0, 0)
-    d2 = dt.datetime(2024, 3, 2, 12, 0, 0)
-    df = spark.createDataFrame(
-        [(i, d1 + dt.timedelta(seconds=i)) for i in range(20)]
-        + [(100 + i, d2 + dt.timedelta(seconds=i)) for i in range(20)],
-        "guid long, created_at timestamp",
-    )
-    write_partitioned(df, bronze)
-
-    def digest(part):
-        h = hashlib.md5()
-        for f in sorted(
-            glob.glob(os.path.join(bronze, f"event_date={part}", "*.parquet"))
-        ):
-            h.update(open(f, "rb").read())
-        return h.hexdigest()
-
-    other_before = digest("2024-03-02")
-    n = delete_keys_from_partition(
-        spark, bronze, "2024-03-01", "guid", [3, 7, 999]
-    )
-    assert n == 2  # 999 never existed
-    assert digest("2024-03-02") == other_before
-    left = spark.read.parquet(bronze)
-    assert left.count() == 38
-    assert (
-        left.filter(F.col("guid").isin([3, 7])).count() == 0
-    )
-    assert list_partitions(bronze) == ["2024-03-01", "2024-03-02"]
-
-
-def test_delete_keys_keeps_null_key_rows(spark, tmp_path):
-    """NOT IN is three-valued: null-key rows must survive a targeted
-    delete of OTHER keys (regression: `~isin` alone drops them)."""
-    import datetime as dt
-
-    from pyspark.sql import functions as F
-
-    from paas_auditor_spark.sources.partitioned import (
-        delete_keys_from_partition,
-        write_partitioned,
-    )
-
-    bronze = str(tmp_path / "bronze")
-    d1 = dt.datetime(2024, 3, 1, 12, 0, 0)
-    df = spark.createDataFrame(
-        [(1, d1), (2, d1), (None, d1)],
-        "guid long, created_at timestamp",
-    )
-    write_partitioned(df, bronze)
-    n = delete_keys_from_partition(spark, bronze, "2024-03-01", "guid", [2])
-    assert n == 1
-    left = spark.read.parquet(bronze)
-    assert left.count() == 2
-    assert left.filter(F.col("guid").isNull()).count() == 1
 
 
 def test_null_guid_rows_quarantined_and_never_reappended(spark, tmp_path):

@@ -7,11 +7,6 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from paas_auditor_spark.plans import (
-    assert_plan_contains,
-    assert_plan_lacks,
-    physical_plan,
-)
 from paas_auditor_spark.queries import (
     q_knn_bruteforce,
     q_pricing_summary,
@@ -20,6 +15,8 @@ from paas_auditor_spark.queries import (
     q_top_revenue_orders,
     q_unshipped_events,
 )
+
+from plan_asserts import assert_plan_contains, assert_plan_lacks, physical_plan
 
 
 def test_unshipped_events_is_topk_with_pushdown(spark, sf_dir):
@@ -134,36 +131,6 @@ def test_pricing_summary_prunes_columns(spark, sf_dir):
     assert "l_suppkey" not in read_schema[0]
 
 
-def test_partitioned_bronze_prunes_partitions(spark, sf_dir, tmp_path):
-    """The cursor-window read over a date-partitioned bronze must show the
-    date predicate as a PartitionFilter (pruning), not a data filter."""
-    import datetime as dt
-
-    from paas_auditor_spark.sources.partitioned import (
-        read_since,
-        write_partitioned,
-    )
-    from paas_auditor_spark.sources.tables import load_table
-
-    bronze = str(tmp_path / "bronze_part")
-    events = load_table(spark, sf_dir, "events").select(
-        "event_id", F.col("ts").alias("created_at"), "event_type"
-    )
-    write_partitioned(events, bronze)
-
-    hi = events.agg(F.max("created_at")).first()[0]
-    since = hi - dt.timedelta(days=1)
-    df = read_since(spark, bronze, since)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    pf = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
-    assert pf and "event_date" in pf[0] and "isnotnull(event_date" in pf[0]
-    # and the timestamp predicate still reaches the row groups
-    assert "PushedFilters" in plan and "GreaterThanOrEqual(created_at" in plan
-    # correctness: everything at/after the cursor, nothing before
-    lo = df.agg(F.min("created_at")).first()[0]
-    assert lo is not None and lo >= since
-
-
 def test_order_priority_counts_semi_join_pushdown(spark, sf_dir):
     from paas_auditor_spark.queries import q_order_priority_counts
 
@@ -202,40 +169,6 @@ def test_returned_item_customers_topk_and_broadcast(spark, sf_dir):
     assert "EqualTo(l_returnflag,R)" in plan
 
 
-def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
-    """Same-bucketed tables join with zero shuffles — the co-location
-    contract that makes repeated fact-to-fact joins viable at scale."""
-    from paas_auditor_spark.plans import physical_plan
-    from paas_auditor_spark.sources.bucketed import bucketed_join, write_bucketed
-    from paas_auditor_spark.sources.tables import load_table
-
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_quantity"
-    )
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice"
-    )
-    write_bucketed(li, "bkt_lineitem", "l_orderkey", num_buckets=4)
-    write_bucketed(
-        orders.withColumnRenamed("o_orderkey", "l_orderkey"),
-        "bkt_orders",
-        "l_orderkey",
-        num_buckets=4,
-    )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = bucketed_join(spark, "bkt_lineitem", "bkt_orders", "l_orderkey")
-        plan = physical_plan(joined)
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan
-        assert joined.count() > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS bkt_lineitem")
-        spark.sql("DROP TABLE IF EXISTS bkt_orders")
-
-
 def test_interval_join_avoids_nested_loop(spark, sf_dir):
     """The binned range join must run as an equi-join on the bin key — a
     BETWEEN theta join would degenerate to BroadcastNestedLoopJoin, which
@@ -253,7 +186,6 @@ def test_small_quantity_revenue_single_scan_window(spark, sf_dir):
     reuse because the two branches prune different columns)."""
     import re
 
-    from paas_auditor_spark.plans import physical_plan
     from paas_auditor_spark.queries import q_small_quantity_revenue
 
     plan = physical_plan(q_small_quantity_revenue(spark, sf_dir))

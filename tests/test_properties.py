@@ -638,36 +638,36 @@ def test_global_order_stats_equals_window_form(spark, rows, parts):
     data=st.data(),
 )
 def test_compaction_read_equivalence_any_split(spark, tmp_path_factory, splits, data):
-    """For ANY way of splitting a key stream into batches, compacting
-    the collector dataset leaves the assembled Bloom filter
-    bit-identical — compaction is row-preserving regardless of batch
-    boundaries."""
+    """For ANY way of splitting a value stream into batches, compacting
+    the collector dataset leaves the merged histogram sketch identical —
+    compaction is row-preserving regardless of batch boundaries."""
     from paas_auditor_spark.operators.atomic import compact_batches
-    from paas_auditor_spark.operators.bloom import (
-        bloom_assemble,
-        bloom_words_collector,
-        bloom_words_read,
+    from paas_auditor_spark.operators.quantiles import (
+        hist_collector,
+        hist_merge,
+        hist_read,
     )
 
-    path = str(tmp_path_factory.mktemp("cb") / "words")
-    m, k = 1 << 12, 3
-    hook = bloom_words_collector("k", path, m=m, k=k)
+    path = str(tmp_path_factory.mktemp("cb") / "hist")
+    hook = hist_collector("v", path, n_bins=8, lo=0.0, hi=200.0)
     lo = 0
     for i, n in enumerate(splits):
         batch = spark.range(lo, lo + n).select(
-            F.concat(F.lit("p"), F.col("id").cast("string")).alias("k")
+            F.col("id").cast("double").alias("v")
         )
         hook(batch, i)
         lo += n
 
-    def blob():
-        return bytes(
-            bloom_assemble(bloom_words_read(spark, path)).collect()[0]["bloom"]
+    def merged():
+        return sorted(
+            (r["bin"], r["cnt"])
+            for r in hist_merge(hist_read(spark, path)).collect()
         )
 
-    before = blob()
+    before = merged()
+    assert sum(c for _, c in before) == lo
     assert compact_batches(spark, path) == len(splits)
-    assert blob() == before
+    assert merged() == before
 
 
 @settings(

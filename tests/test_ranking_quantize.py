@@ -236,16 +236,9 @@ def test_bm25_tombstones_rescore_and_fold(spark, tmp_path):
     opt-outs): tombstoned doc ids are anti-joined out of BOTH index
     relations before any statistic, so scores are value-identical to an
     index that never held the documents — N, avgdl, df, tf all shift,
-    not just the result rows.  apply_tombstones_fold then PHYSICALLY
-    drops the rows at compaction: the raw parquet no longer contains
-    them, scores are unchanged, and even a read WITHOUT the tombstone
-    path now matches (the fold applied everything).  Replays of data
-    and tombstone batches stay no-ops throughout."""
-    from paas_auditor_spark.operators.atomic import (
-        apply_tombstones_fold,
-        batch_data_paths,
-        tombstones_collector,
-    )
+    not just the result rows.  Replays of tombstone batches stay
+    no-ops."""
+    from paas_auditor_spark.operators.atomic import tombstones_collector
     from paas_auditor_spark.operators.ranking import (
         bm25_from_postings,
         postings_collector,
@@ -296,25 +289,6 @@ def test_bm25_tombstones_rescore_and_fold(spark, tmp_path):
     # without the tombstone path the deleted rows still score (nothing
     # was rewritten yet)
     assert scores() == want(docs)
-
-    # physical removal at fold time
-    assert apply_tombstones_fold(
-        spark, path, tomb, parts=("postings", "doclens")
-    ) == 2
-    stored = {
-        r["doc_id"]
-        for r in spark.read.parquet(
-            *batch_data_paths(path, "rename", "doclens")
-        ).collect()
-    }
-    assert stored == {1, 2, 3, 6}
-    assert scores(tombstone_path=tomb) == want(survivors)
-    assert scores() == want(survivors)  # fold applied everything
-
-    # a replayed data batch after the fold is floor-suppressed: the
-    # deleted docs cannot resurrect through at-least-once delivery
-    hook(docs.filter("doc_id > 3"), 1)
-    assert scores() == want(survivors)
 
 
 def test_postings_collector_under_real_stream(spark, tmp_path):

@@ -1,11 +1,12 @@
-"""Service-side code must be reachable from something that runs it.
+"""Every top-level definition in every module of the package must be
+reachable from something that runs it.
 
 Parses the package with ``ast`` and follows names from the roots — the
 query functions in ``REGISTRY``, ``__main__.main``, ``runner.Service``,
 and everything ``perfbench/*.py``, ``bench.py`` and
 ``__spark_entry__.py`` reference — through every top-level function and
-class body in the package.  A top-level definition in the service-side
-modules that no root reaches is code only tests run.  Names are followed
+class body in the package.  A top-level definition anywhere in the
+package that no root reaches is code only tests run.  Names are followed
 without resolving imports, so a collision can only make a definition
 look used, never flag a used one.
 """
@@ -18,14 +19,6 @@ import os
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = os.path.join(ROOT, "paas_auditor_spark")
-GUARDED = (
-    "runner.py",
-    "__main__.py",
-    "config.py",
-    "stores.py",
-    "streaming/",
-    "sinks/",
-)
 
 
 def _names(node: ast.AST) -> set[str]:
@@ -48,7 +41,7 @@ def unreachable() -> list[str]:
     from paas_auditor_spark.queries import REGISTRY
 
     defs: dict[str, list[ast.AST]] = {}  # top-level name -> its definitions
-    guarded: list[tuple[str, str]] = []  # (module path, name)
+    found: list[tuple[str, str]] = []  # (module path, name)
     roots = {spec.fn.__name__ for spec in REGISTRY.values()}
     roots |= {"main", "Service"}
     for path in glob.glob(os.path.join(PACKAGE, "**", "*.py"), recursive=True):
@@ -58,8 +51,7 @@ def unreachable() -> list[str]:
                 node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
             ):
                 defs.setdefault(node.name, []).append(node)
-                if rel.startswith(GUARDED):
-                    guarded.append((rel, node.name))
+                found.append((rel, node.name))
             else:
                 # module-level statements run on import
                 roots |= _names(node)
@@ -78,10 +70,10 @@ def unreachable() -> list[str]:
         reached.add(name)
         for node in defs.get(name, ()):
             todo.extend(_names(node) - reached)
-    return [f"{rel}::{name}" for rel, name in guarded if name not in reached]
+    return [f"{rel}::{name}" for rel, name in found if name not in reached]
 
 
-def test_service_side_code_is_reachable():
+def test_package_code_is_reachable():
     dead = unreachable()
     assert dead == [], (
         "top-level definitions that no registry query, the CLI, the "

@@ -1,102 +1,7 @@
-"""Incremental rollup maintenance: partition-scoped refresh equals full
-recompute, and untouched history partitions are not rewritten."""
+"""Bronze schema evolution: files written before a column existed read
+back under mergeSchema."""
 
 from __future__ import annotations
-
-import datetime as dt
-import os
-
-from paas_auditor_spark.operators.rollup import refresh_rollup, rollup_aggregate
-from paas_auditor_spark.sources.partitioned import PARTITION_COL, write_partitioned
-
-SCHEMA = "guid string, created_at timestamp, event_type string, value double"
-
-
-def _rows(day_hour_type_val):
-    return [
-        (f"g{i}", dt.datetime(2024, 3, d, h, 30), t, v)
-        for i, (d, h, t, v) in enumerate(day_hour_type_val)
-    ]
-
-
-def _mtimes(path):
-    out = {}
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if f.endswith(".parquet"):
-                p = os.path.join(root, f)
-                out[p] = os.stat(p).st_mtime_ns
-    return out
-
-
-def test_incremental_rollup_matches_full_and_skips_closed_partitions(
-    spark, tmp_path
-):
-    bronze = str(tmp_path / "bronze")
-    rollup = str(tmp_path / "rollup")
-
-    first = _rows(
-        [(1, 0, "a", 1.0), (1, 0, "a", 2.0), (1, 1, "b", 3.0), (2, 5, "a", 4.0)]
-    )
-    write_partitioned(
-        spark.createDataFrame(first, SCHEMA), bronze, mode="overwrite"
-    )
-    n1 = refresh_rollup(
-        spark, bronze, rollup, dims=("event_type",), value_col="value"
-    )
-    assert n1 == 3  # (d1,h0,a) (d1,h1,b) (d2,h5,a)
-
-    day1_files_before = {
-        p: m
-        for p, m in _mtimes(rollup).items()
-        if f"{PARTITION_COL}=2024-03-01" in p
-    }
-    assert day1_files_before
-
-    # late data for day 2 plus a brand-new day 3
-    second = _rows([(2, 5, "a", 10.0), (2, 6, "b", 5.0), (3, 0, "a", 7.0)])
-    write_partitioned(spark.createDataFrame(second, SCHEMA), bronze, mode="append")
-    n2 = refresh_rollup(
-        spark,
-        bronze,
-        rollup,
-        dims=("event_type",),
-        value_col="value",
-        since=dt.datetime(2024, 3, 2),
-    )
-    assert n2 == 3  # (d2,h5,a) (d2,h6,b) (d3,h0,a) recomputed
-
-    # incremental result == full recompute from bronze
-    got = {
-        (r[PARTITION_COL].isoformat(), r["bucket_ts"], r["event_type"]): (
-            r["n_events"],
-            r["sum_value"],
-        )
-        for r in spark.read.parquet(rollup).collect()
-    }
-    full = rollup_aggregate(
-        spark.read.parquet(bronze).drop(PARTITION_COL),
-        "created_at",
-        ("event_type",),
-        "value",
-    )
-    want = {
-        (r[PARTITION_COL].isoformat(), r["bucket_ts"], r["event_type"]): (
-            r["n_events"],
-            r["sum_value"],
-        )
-        for r in full.collect()
-    }
-    assert got == want
-    assert got[("2024-03-02", dt.datetime(2024, 3, 2, 5), "a")] == (2, 14.0)
-
-    # the closed day-1 partition was neither rewritten nor deleted
-    day1_files_after = {
-        p: m
-        for p, m in _mtimes(rollup).items()
-        if f"{PARTITION_COL}=2024-03-01" in p
-    }
-    assert day1_files_after == day1_files_before
 
 
 def test_bronze_schema_evolution_merge_read(spark, tmp_path):

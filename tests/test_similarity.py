@@ -290,24 +290,17 @@ def test_ivf_persisted_equals_in_memory_and_prunes(spark, sf_dir, tmp_path):
     assert list(got.columns) == list(want.columns)
 
 
-def test_ivf_tombstones_equal_never_indexed_and_fold(spark, sf_dir, tmp_path):
+def test_ivf_tombstones_equal_never_indexed(spark, sf_dir, tmp_path):
     """IVF deletion contract: probing a full index with a tombstone
     dataset must return EXACTLY what an index built WITHOUT the deleted
     vectors returns (both share the frozen centroid prefix — the
     deleted ids are all ≥ n_centroids, so the quantizers are identical
-    and the comparison is airtight).  Shard-resident deleted rows are
-    physically dropped by apply_tombstones_fold; the probe result is
-    unchanged and the raw shard parquet no longer holds the ids."""
+    and the comparison is airtight)."""
     import pyspark.sql.functions as F
 
-    from paas_auditor_spark.operators.atomic import (
-        apply_tombstones_fold,
-        batch_data_paths,
-        tombstones_collector,
-    )
+    from paas_auditor_spark.operators.atomic import tombstones_collector
     from paas_auditor_spark.operators.similarity import (
         ivf_index_write,
-        ivf_shard_collector,
         ivf_topk_persisted,
     )
     from paas_auditor_spark.sources.tables import load_table
@@ -316,16 +309,11 @@ def test_ivf_tombstones_equal_never_indexed_and_fold(spark, sf_dir, tmp_path):
     queries = emb.filter(F.col("vec_id") < 10)
     dead_pred = (F.col("vec_id") >= 100) & (F.col("vec_id") % 7 == 0)
 
-    # full index: base build over vec_id < 300, one collector shard for
-    # the rest (so deletion covers BOTH storage tiers)
     full = str(tmp_path / "ivf_full")
-    ivf_index_write(emb.filter(F.col("vec_id") < 300), full, n_centroids=8)
-    ivf_shard_collector(spark, full)(emb.filter(F.col("vec_id") >= 300), 0)
-    # survivor index: same base/shard split, deleted vectors never enter
+    ivf_index_write(emb, full, n_centroids=8)
+    # survivor index: the deleted vectors never enter
     surv = str(tmp_path / "ivf_surv")
-    alive = emb.filter(~dead_pred)
-    ivf_index_write(alive.filter(F.col("vec_id") < 300), surv, n_centroids=8)
-    ivf_shard_collector(spark, surv)(alive.filter(F.col("vec_id") >= 300), 0)
+    ivf_index_write(emb.filter(~dead_pred), surv, n_centroids=8)
 
     tomb = str(tmp_path / "tomb")
     tombstones_collector(tomb, id_col="vec_id")(
@@ -340,24 +328,6 @@ def test_ivf_tombstones_equal_never_indexed_and_fold(spark, sf_dir, tmp_path):
     # and the deletion is not vacuous: the unfiltered probe differs
     noto = ivf_topk_persisted(spark, full, queries, k=5, nprobe=2).toPandas()
     assert noto.values.tolist() != want.values.tolist()
-
-    # physical removal from the shard tier
-    import os
-
-    assert apply_tombstones_fold(
-        spark, os.path.join(full, "shards"), tomb, id_col="c_id"
-    ) == 1
-    shard_ids = {
-        r["c_id"]
-        for r in spark.read.parquet(
-            *batch_data_paths(os.path.join(full, "shards"), "rename")
-        ).collect()
-    }
-    assert not any(i >= 300 and i % 7 == 0 for i in shard_ids)
-    got2 = ivf_topk_persisted(
-        spark, full, queries, k=5, nprobe=2, tombstone_path=tomb
-    ).toPandas()
-    assert got2.values.tolist() == want.values.tolist()
 
 
 def test_ivfpq_tombstones_equal_never_indexed(spark, sf_dir, tmp_path):
@@ -399,74 +369,6 @@ def test_ivfpq_tombstones_equal_never_indexed(spark, sf_dir, tmp_path):
         spark, full, queries, k=5, nprobe=2, rerank=32
     ).toPandas()
     assert noto.values.tolist() != want.values.tolist()
-
-
-def test_ivf_index_append_equals_single_shot_build(spark, sf_dir, tmp_path):
-    """Growing a persisted IVF index shard-by-shard must probe
-    IDENTICALLY to building it in one shot over the union — the
-    quantizer never retrains, so assignment is a pure per-row function
-    and append order cannot matter.  Also checks the append only wrote
-    the shard's rows (incremental cost contract)."""
-    import pyspark.sql.functions as F
-
-    from paas_auditor_spark.operators.similarity import (
-        ivf_index_append,
-        ivf_index_write,
-        ivf_topk_persisted,
-    )
-    from paas_auditor_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    full_path = str(tmp_path / "ivf_full")
-    grown_path = str(tmp_path / "ivf_grown")
-    ivf_index_write(emb, full_path, n_centroids=8)
-    ivf_index_write(emb.filter(F.col("vec_id") < 300), grown_path, n_centroids=8)
-    before = spark.read.parquet(grown_path + "/lists").count()
-    ivf_index_append(spark, grown_path, emb.filter(F.col("vec_id") >= 300))
-    after = spark.read.parquet(grown_path + "/lists").count()
-    assert after - before == emb.filter(F.col("vec_id") >= 300).count()
-    assert after == emb.count()
-
-    got = ivf_topk_persisted(spark, grown_path, queries, k=5, nprobe=2).toPandas()
-    want = ivf_topk_persisted(spark, full_path, queries, k=5, nprobe=2).toPandas()
-    assert got.values.tolist() == want.values.tolist()
-
-
-def test_ivfpq_index_append_equals_single_shot_build(spark, sf_dir, tmp_path):
-    """IVF-PQ incremental append under the FROZEN model must probe
-    identically to a single-shot build — valid here because the initial
-    shard (vec_id < 300) contains the training prefix (first 256 by
-    id), so both indexes carry the same centroids and codebooks; the
-    shard's codes are then a pure per-row function of the model."""
-    import pyspark.sql.functions as F
-
-    from paas_auditor_spark.operators.similarity import (
-        ivfpq_index_append,
-        ivfpq_index_write,
-        ivfpq_topk_persisted,
-    )
-    from paas_auditor_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    full_path = str(tmp_path / "ivfpq_full")
-    grown_path = str(tmp_path / "ivfpq_grown")
-    ivfpq_index_write(emb, full_path, n_centroids=8, m=4, codes=16)
-    ivfpq_index_write(
-        emb.filter(F.col("vec_id") < 300), grown_path, n_centroids=8, m=4, codes=16
-    )
-    ivfpq_index_append(spark, grown_path, emb.filter(F.col("vec_id") >= 300))
-    assert spark.read.parquet(grown_path + "/lists").count() == emb.count()
-    assert spark.read.parquet(grown_path + "/vectors").count() == emb.count()
-
-    got = ivfpq_topk_persisted(
-        spark, grown_path, queries, k=5, nprobe=2, rerank=32
-    ).toPandas()
-    want = ivfpq_topk_persisted(
-        spark, full_path, queries, k=5, nprobe=2, rerank=32
-    ).toPandas()
-    assert got.values.tolist() == want.values.tolist()
 
 
 def test_ivfpq_persisted_equals_in_memory_and_prunes(spark, sf_dir, tmp_path):
@@ -704,100 +606,6 @@ def test_ivf_unclamped_sizing_keeps_candidates_sublinear():
     assert cand_volume(10**12, 1024) > 5e9
 
 
-def test_ivf_shard_collector_atomic_equal_and_compactable(spark, sf_dir, tmp_path):
-    """ATOMIC incremental IVF (r8): shards committed under the shared
-    commit protocol probe identically to a single-shot build over the
-    union, a torn shard write is invisible (the mode('append') failure
-    shape the collector exists to prevent), a replayed batch id is a
-    no-op, and generic compaction of the shard dirs changes nothing."""
-    import pytest
-
-    from paas_auditor_spark.operators.atomic import compact_batches
-    from paas_auditor_spark.operators.similarity import (
-        ivf_index_write,
-        ivf_shard_collector,
-        ivf_topk_persisted,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") < 10)
-
-    full_path = str(tmp_path / "full")
-    ivf_index_write(emb, full_path, n_centroids=8)
-    want = ivf_topk_persisted(spark, full_path, queries, k=5, nprobe=2).collect()
-
-    grown = str(tmp_path / "grown")
-    ivf_index_write(emb.filter(F.col("vec_id") < 200), grown, n_centroids=8)
-    hook = ivf_shard_collector(spark, grown)
-    hook(emb.filter((F.col("vec_id") >= 200) & (F.col("vec_id") < 350)), 0)
-
-    # torn shard: writer dies mid-batch → nothing becomes visible
-    from paas_auditor_spark.operators.atomic import commit_batch_dir
-
-    def die(tmp):
-        raise RuntimeError("executor lost")
-
-    with pytest.raises(RuntimeError):
-        commit_batch_dir(str(tmp_path / "grown" / "shards"), 1, die)
-    hook(emb.filter(F.col("vec_id") >= 350), 1)  # the retry commits
-    hook(emb.filter(F.col("vec_id") >= 350), 1)  # replay: no-op
-    got = ivf_topk_persisted(spark, grown, queries, k=5, nprobe=2).collect()
-    assert [tuple(r) for r in got] == [tuple(r) for r in want]
-
-    # generic compaction folds the flat shard dirs; probe unchanged
-    assert compact_batches(spark, str(tmp_path / "grown" / "shards")) == 2
-    after = ivf_topk_persisted(spark, grown, queries, k=5, nprobe=2).collect()
-    assert [tuple(r) for r in after] == [tuple(r) for r in want]
-
-
-def test_ivfpq_shard_collector_two_part_commit(spark, sf_dir, tmp_path):
-    """IVF-PQ shards commit codes + re-rank vectors as ONE batch dir
-    (a codes-without-vectors shard would break the exact re-rank — the
-    postings_collector torn-state argument) and probe identically to a
-    single-shot build over the union, including after compaction."""
-    from paas_auditor_spark.operators.atomic import compact_batches
-    from paas_auditor_spark.operators.similarity import (
-        ivfpq_index_write,
-        ivfpq_shard_collector,
-        ivfpq_topk_persisted,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") < 10)
-
-    full_path = str(tmp_path / "full")
-    ivfpq_index_write(emb, full_path, n_centroids=8, m=4, codes=16)
-    want = ivfpq_topk_persisted(
-        spark, full_path, queries, k=5, nprobe=2, rerank=32
-    ).collect()
-
-    grown = str(tmp_path / "grown")
-    ivfpq_index_write(
-        emb.filter(F.col("vec_id") < 300), grown, n_centroids=8, m=4, codes=16
-    )
-    hook = ivfpq_shard_collector(spark, grown)
-    hook(emb.filter((F.col("vec_id") >= 300) & (F.col("vec_id") < 400)), 0)
-    hook(emb.filter(F.col("vec_id") >= 400), 1)
-    hook(emb.filter(F.col("vec_id") >= 400), 1)  # replay: no-op
-    got = ivfpq_topk_persisted(
-        spark, grown, queries, k=5, nprobe=2, rerank=32
-    ).collect()
-    assert [tuple(r) for r in got] == [tuple(r) for r in want]
-
-    assert (
-        compact_batches(
-            spark,
-            str(tmp_path / "grown" / "shards"),
-            parts=("lists", "vectors"),
-        )
-        == 2
-    )
-    after = ivfpq_topk_persisted(
-        spark, grown, queries, k=5, nprobe=2, rerank=32
-    ).collect()
-    assert [tuple(r) for r in after] == [tuple(r) for r in want]
-
-
 def test_ivf_empty_corpus_returns_empty_not_crash(spark):
     """r8 review finding: the matmul assignment UDF crashed with a numpy
     AxisError when the centroid set was empty — the replaced join+window
@@ -819,89 +627,6 @@ def test_ivf_empty_corpus_returns_empty_not_crash(spark):
         [], "centroid_id long, cv array<double>, cnorm double"
     )
     assert _ivf_assign(queries, cents, "vec_id", "embedding").count() == 0
-
-
-def test_ivfpq_shard_tombstones_fold_and_base_shard_dup(spark, sf_dir, tmp_path):
-    """r11 review: the IVF-PQ deletion contract must hold through the
-    SHARD tier too — tombstoned shard vectors excluded at read time,
-    physically dropped from BOTH shard parts by apply_tombstones_fold
-    (codes and re-rank vectors stay paired) — and a vector present in
-    both the base lists and a collector shard must not duplicate or
-    displace a neighbor in the final top-k."""
-    from paas_auditor_spark.operators.atomic import (
-        apply_tombstones_fold,
-        batch_data_paths,
-        tombstone_ids,
-        tombstones_collector,
-    )
-    from paas_auditor_spark.operators.similarity import (
-        ivfpq_index_write,
-        ivfpq_shard_collector,
-        ivfpq_topk_persisted,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") < 10)
-    dead_pred = (F.col("vec_id") >= 320) & (F.col("vec_id") % 7 == 0)
-
-    grown = str(tmp_path / "grown")
-    ivfpq_index_write(
-        emb.filter(F.col("vec_id") < 300), grown, n_centroids=8, m=4,
-        codes=16,
-    )
-    hook = ivfpq_shard_collector(spark, grown)
-    # shard 0 re-ingests 10 BASE vectors (the base+shard duplicate)
-    hook(
-        emb.filter(
-            (F.col("vec_id") >= 300)
-            | ((F.col("vec_id") >= 100) & (F.col("vec_id") < 110))
-        ),
-        0,
-    )
-    surv = str(tmp_path / "surv")
-    ivfpq_index_write(
-        emb.filter(~dead_pred), surv, n_centroids=8, m=4, codes=16
-    )
-    tomb = str(tmp_path / "tomb")
-    tombstones_collector(tomb, id_col="vec_id")(
-        emb.filter(dead_pred).select("vec_id"), 0
-    )
-    want = ivfpq_topk_persisted(
-        spark, surv, queries, k=5, nprobe=2, rerank=32
-    ).collect()
-    got = ivfpq_topk_persisted(
-        spark, grown, queries, k=5, nprobe=2, rerank=32,
-        tombstone_path=tomb,
-    ).collect()
-    assert [tuple(r) for r in got] == [tuple(r) for r in want]
-
-    # fold physically drops the doomed ids from BOTH shard parts
-    shards = str(tmp_path / "grown" / "shards")
-    # both shard parts key the vector id as c_id (the lists/vectors
-    # store convention); a wrong id_col fails loudly by contract
-    with pytest.raises(Exception, match="vec_id"):
-        apply_tombstones_fold(
-            spark, shards, tomb, parts=("lists", "vectors"),
-            id_col="vec_id",
-        )
-    assert apply_tombstones_fold(
-        spark, shards, tomb, parts=("lists", "vectors"), id_col="c_id"
-    ) == 1
-    dead_ids = {r["vec_id"] for r in emb.filter(dead_pred).collect()}
-    for part in ("lists", "vectors"):
-        left = {
-            r["c_id"]
-            for r in spark.read.parquet(
-                *batch_data_paths(shards, "rename", part)
-            ).collect()
-        }
-        assert not (left & dead_ids), part
-    # post-fold probe (tombstones still cover the base tier) unchanged
-    after = ivfpq_topk_persisted(
-        spark, grown, queries, k=5, nprobe=2, rerank=32,
-        tombstone_path=tomb,
-    ).collect()
-    assert [tuple(r) for r in after] == [tuple(r) for r in want]
 
 
 def test_tombstone_protocol_mismatch_raises(spark, tmp_path):

@@ -152,10 +152,10 @@ def test_cursor_roundtrip_immune_to_process_tz_both_directions(spark):
 
     from paas_auditor_spark.operators.cursor import (
         effective_cursor,
-        empty_cursors,
         unshipped_events,
         upsert_cursor,
     )
+    from paas_auditor_spark.schemas import SHIPPER_CURSOR
 
     B = dt.datetime(2024, 3, 1, 12, 0, 0)
     # events every 30 min across ±6 h around the noon cursor
@@ -171,7 +171,7 @@ def test_cursor_roundtrip_immune_to_process_tz_both_directions(spark):
         from paas_auditor_spark.functions.timecross import ts_string
 
         cursors = upsert_cursor(
-            empty_cursors(spark), "s", B, "12"
+            spark.createDataFrame([], schema=SHIPPER_CURSOR), "s", B, "12"
         )
         ts, sid = effective_cursor(cursors, "s")
         got = (
