@@ -393,12 +393,11 @@ def lm_counts_collector(
     path: str,
     text_col: str = "text",
     id_col: str = "doc_id",
-    protocol: str = "rename",
     retract: bool = False,
 ):
     """foreachBatch hook for an INCREMENTALLY MAINTAINED trigram-LM
     count store — the language-model member of the collector family
-    (bloom words / histograms / postings): each micro-batch of newly
+    (histograms / postings / MinHash bands): each micro-batch of newly
     ingested documents commits its own additive ``(w1, w2, w3, c3)``
     trigram counts plus its distinct-token ``vocab`` relation under the
     shared atomic commit protocol (operators/atomic.py), so the corpus
@@ -407,7 +406,7 @@ def lm_counts_collector(
     distinct-of-union — which also makes generational compaction
     (compact_batches, a row-preserving rewrite) invisible to readers.
     Replay protection is the correctness mechanism for the additive
-    part, exactly as for bloom words: a replayed batch finds its
+    part, exactly as for histogram counts: a replayed batch finds its
     committed directory and writes nothing (counts would double).
 
     ``lm_index_finalize`` turns the accumulated counts into the scoring
@@ -432,9 +431,8 @@ def lm_counts_collector(
     pre-upgrade dataset (legacy distinct-(w) vocab) re-collect before
     retraction batches land — finalize detects the mix and refuses
     rather than undercounting silently."""
-    from paas_auditor_spark.operators.atomic import commit_fn
+    from paas_auditor_spark.operators.atomic import commit_batch_dir
 
-    commit = commit_fn(protocol)
     sign = -1 if retract else 1
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -460,7 +458,7 @@ def lm_counts_collector(
                 .write.parquet(f"{tmp}/vocab")
             )
 
-        commit(path, batch_id, write)
+        commit_batch_dir(path, batch_id, write)
 
     return write_batch
 
@@ -469,7 +467,6 @@ def lm_index_finalize(
     spark,
     counts_path: str,
     model_path: str,
-    protocol: str = "rename",
 ) -> None:
     """Materialize the SCORING MODEL from accumulated lm_counts_collector
     batches — the train-once step of the persisted LM (VERDICT r7 #3:
@@ -498,7 +495,7 @@ def lm_index_finalize(
     from paas_auditor_spark.operators.atomic import batch_data_paths
 
     summed = (
-        spark.read.parquet(*batch_data_paths(counts_path, protocol, "trigrams"))
+        spark.read.parquet(*batch_data_paths(counts_path, "trigrams"))
         .groupBy("w1", "w2", "w3")
         .agg(F.sum("c3").alias("c3"))
         .localCheckpoint(eager=False)
@@ -545,7 +542,7 @@ def lm_index_finalize(
     # deterministic; the read is maintenance-cadence, footer-merge cost
     # is bounded by the compaction-bounded batch count.
     vdf = spark.read.option("mergeSchema", "true").parquet(
-        *batch_data_paths(counts_path, protocol, "vocab")
+        *batch_data_paths(counts_path, "vocab")
     )
     if "c" in vdf.columns:
         # counted vocab (retraction-capable format): presence = net

@@ -950,13 +950,12 @@ def minhash_index_collector(
     num_hashes: int = 32,
     num_bands: int = 16,
     shingle_k: int = 3,
-    protocol: str = "rename",
     hash_fn: str = "xxhash64",
 ):
     """foreachBatch hook for an INCREMENTALLY MAINTAINED near-dup gate
-    index — the dedup member of the collector family (bloom_words /
-    postings / lm_counts / ivf shards; r9: minhash was the one family
-    whose deployment shape still re-signatured the corpus per gate).
+    index — the dedup member of the collector family (histograms /
+    postings / lm_counts; minhash was the one family whose deployment
+    shape still re-signatured the corpus per gate).
     Each micro-batch of newly ingested documents lands TWO relations as
     ONE atomic batch directory (``batch-<id>/bands`` + ``batch-<id>/
     sets``) under the shared commit protocol (operators/atomic.py):
@@ -1004,15 +1003,13 @@ def minhash_index_collector(
     one bounded read per NEW batch, and replays skip it entirely)."""
     from paas_auditor_spark.operators.atomic import (
         batch_data_paths,
-        commit_fn,
+        commit_batch_dir,
     )
-
-    commit = commit_fn(protocol)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         def write(tmp: str) -> None:
             try:
-                band_paths = batch_data_paths(path, protocol, "bands")
+                band_paths = batch_data_paths(path, "bands")
             except ValueError:
                 band_paths = None  # first batch: nothing to agree with
             if band_paths:
@@ -1061,7 +1058,7 @@ def minhash_index_collector(
                 .write.parquet(f"{tmp}/bands")
             )
 
-        commit(path, batch_id, write)
+        commit_batch_dir(path, batch_id, write)
 
     return write_batch
 
@@ -1071,7 +1068,6 @@ def minhash_fold(
     path: str,
     id_col: str = "doc_id",
     tombstone_path: str | None = None,
-    protocol: str = "rename",
     target_files: int = 1,
 ) -> int:
     """The MinHash gate index's maintenance fold: generic compaction
@@ -1105,7 +1101,7 @@ def minhash_fold(
 
     dead = None
     if tombstone_path is not None:
-        dead = tombstone_ids(spark, tombstone_path, protocol)
+        dead = tombstone_ids(spark, tombstone_path)
     state: dict[str, DataFrame] = {}
 
     def tf(part: str, df: DataFrame) -> DataFrame:
@@ -1154,7 +1150,6 @@ def minhash_fold(
         spark,
         path,
         parts=("collapse", "bands", "sets"),
-        protocol=protocol,
         target_files=target_files,
         transform=tf,
     )
@@ -1171,7 +1166,6 @@ def minhash_incremental_persisted(
     num_bands: int = 16,
     shingle_k: int = 3,
     max_bucket: int | None = 4096,
-    protocol: str = "rename",
     tombstone_path: str | None = None,
     hash_fn: str = "xxhash64",
 ) -> DataFrame:
@@ -1230,8 +1224,8 @@ def minhash_incremental_persisted(
         raise ValueError(f"max_bucket={max_bucket} must be >= 2 or None")
 
     try:
-        band_paths = batch_data_paths(index_path, protocol, "bands")
-        set_paths = batch_data_paths(index_path, protocol, "sets")
+        band_paths = batch_data_paths(index_path, "bands")
+        set_paths = batch_data_paths(index_path, "sets")
     except ValueError:
         # bootstrap: nothing indexed yet → nothing can gate (the r9
         # review's first-batch case; the in-memory twin over an empty
@@ -1259,14 +1253,14 @@ def minhash_incremental_persisted(
     idx_sets = read_parquet_cached(spark, *set_paths, merge_schema=True)
     dead = None
     if tombstone_path is not None:
-        doomed = tombstone_ids(spark, tombstone_path, protocol)
+        doomed = tombstone_ids(spark, tombstone_path)
         if doomed is not None:
             # kept renamed (not anti_join_tombstones): this relation
             # feeds left_anti AND left_semi joins across both probe
             # shapes, all keyed by id_col
             dead = doomed.withColumnRenamed("id", id_col)
 
-    collapse_paths = batch_data_paths(index_path, protocol, "collapse")
+    collapse_paths = batch_data_paths(index_path, "collapse")
     if (
         all(os.path.isdir(p) for p in collapse_paths)
         # schema-only fold detector (zero cost): no bands file carries

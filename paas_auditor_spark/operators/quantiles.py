@@ -215,7 +215,6 @@ def hist_collector(
     n_bins: int,
     lo: float,
     hi: float,
-    protocol: str = "rename",
     retract: bool = False,
 ):
     """foreachBatch hook for INCREMENTAL quantile maintenance: each
@@ -232,9 +231,6 @@ def hist_collector(
     see that module for the racer/replay/failure semantics) is the
     correctness mechanism, not merely an optimization — a replayed
     batch finds its ``batch-<id>`` directory and writes nothing.
-    ``protocol``: ``rename`` (atomic-rename filesystems) or ``marker``
-    (object stores, exclusive-create commit marker) — read with the
-    same protocol.
 
     ``retract=True`` makes the hook a DELETION writer (the additive
     families' takedown answer, shared with
@@ -244,13 +240,12 @@ def hist_collector(
     (oracle-checked by quantile_sketch_retracted).  Retract only values
     actually ingested, exactly once, under the SAME geometry —
     ``hist_merge`` validates (negative net bins raise loudly)."""
-    from paas_auditor_spark.operators.atomic import commit_fn
+    from paas_auditor_spark.operators.atomic import commit_batch_dir
 
-    commit = commit_fn(protocol)
     sign = -1 if retract else 1
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        commit(
+        commit_batch_dir(
             path,
             batch_id,
             lambda tmp: hist_sketch(
@@ -264,14 +259,14 @@ def hist_collector(
     return write_batch
 
 
-def hist_read(spark, path: str, protocol: str = "rename") -> DataFrame:
+def hist_read(spark, path: str) -> DataFrame:
     """Read a collector-maintained sketch directory (the read half of
-    the commit contract): only COMMITTED
-    batch directories, resolved through the generation pointer
-    (``atomic.batch_data_paths`` owns the per-protocol path rules)."""
+    the commit contract): only COMMITTED batch directories, resolved
+    through the generation pointer (``atomic.batch_data_paths`` owns
+    the path rules)."""
     from paas_auditor_spark.operators.atomic import batch_data_paths
 
-    return spark.read.parquet(*batch_data_paths(path, protocol))
+    return spark.read.parquet(*batch_data_paths(path))
 
 
 def hist_quantiles(sketch: DataFrame, probs: list[float]) -> DataFrame:

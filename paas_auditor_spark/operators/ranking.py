@@ -211,13 +211,12 @@ def postings_collector(
     path: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    protocol: str = "rename",
 ):
     """foreachBatch hook for an INCREMENTALLY MAINTAINED inverted index
-    — the retrieval member of the collector family (bloom_words /
-    hist_sketch): each micro-batch of newly ingested documents lands its
-    own (term, doc_id, tf) postings plus a (doc_id, dl) doc-length
-    relation, and ``bm25_from_postings`` scores queries off the
+    — the retrieval member of the collector family (hist_collector /
+    lm_counts_collector): each micro-batch of newly ingested documents
+    lands its own (term, doc_id, tf) postings plus a (doc_id, dl)
+    doc-length relation, and ``bm25_from_postings`` scores queries off the
     accumulated index WITHOUT ever re-tokenizing a landed document.
     Both relations are mergeable by construction: a document lives in
     exactly one batch (append-only corpus — re-ingesting an id is the
@@ -227,9 +226,9 @@ def postings_collector(
 
     The two relations commit as ONE batch directory (``batch-<id>/
     postings`` + ``batch-<id>/doclens``) under the shared atomic commit
-    protocol (operators/atomic.py — ``protocol`` picks rename or
-    commit-marker), because a batch whose postings landed but whose
-    doc-lengths didn't would score its documents with a wrong N/avgdl —
+    protocol (operators/atomic.py), because a batch whose postings
+    landed but whose doc-lengths didn't would score its documents with
+    a wrong N/avgdl —
     the torn state the whole-batch commit exists to prevent.  Replay is
     the additive-relation correctness mechanism, exactly as for counts:
     a replayed batch finds its committed directory and writes nothing
@@ -240,9 +239,7 @@ def postings_collector(
     (row groups without the probed terms never leave disk — the
     inverted-index property, plan-asserted in test_ranking_quantize) —
     the corpus itself is never touched at query time."""
-    from paas_auditor_spark.operators.atomic import commit_fn
-
-    commit = commit_fn(protocol)
+    from paas_auditor_spark.operators.atomic import commit_batch_dir
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         def write(tmp: str) -> None:
@@ -266,7 +263,7 @@ def postings_collector(
                 .write.parquet(f"{tmp}/postings")
             )
 
-        commit(path, batch_id, write)
+        commit_batch_dir(path, batch_id, write)
 
     return write_batch
 
@@ -279,7 +276,6 @@ def bm25_from_postings(
     id_col: str = "doc_id",
     k1: float = 1.2,
     b: float = 0.75,
-    protocol: str = "rename",
     tombstone_path: str | None = None,
 ) -> DataFrame:
     """Okapi BM25 over a ``postings_collector`` index — value-identical
@@ -303,14 +299,10 @@ def bm25_from_postings(
 
     from paas_auditor_spark.sources.tables import read_parquet_cached
 
-    postings = read_parquet_cached(
-        spark, *batch_data_paths(path, protocol, "postings")
-    )
-    doclens = read_parquet_cached(
-        spark, *batch_data_paths(path, protocol, "doclens")
-    )
+    postings = read_parquet_cached(spark, *batch_data_paths(path, "postings"))
+    doclens = read_parquet_cached(spark, *batch_data_paths(path, "doclens"))
     if tombstone_path is not None:
-        doomed = tombstone_ids(spark, tombstone_path, protocol)
+        doomed = tombstone_ids(spark, tombstone_path)
         postings = anti_join_tombstones(postings, doomed, id_col)
         doclens = anti_join_tombstones(doclens, doomed, id_col)
 

@@ -347,9 +347,9 @@ def _nearest_rounded_udf(cent_rows, round_digits: int):
 def _cent_rows_from_df(cents_df):
     """The (centroid_id, cv)-relation form of ``_cent_rows_collect`` —
     the ONE id/vector extraction + lower-id-first sort every persisted
-    path shares (index builds, shard collectors, persisted probes), so
-    the tie-breaking order that makes "all paths assign identically"
-    true lives in exactly one place."""
+    path shares (index builds and persisted probes), so the
+    tie-breaking order that makes "all paths assign identically" true
+    lives in exactly one place."""
     return sorted(
         (
             (int(r["centroid_id"]), list(r["cv"]))
@@ -765,10 +765,9 @@ def _ivf_assign(
     corpus_df: DataFrame, cents: DataFrame, id_col: str, vec_col: str
 ) -> DataFrame:
     """Nearest-centroid-by-cosine assignment (ties to the lower centroid
-    id) against a given centroid relation — shared by the initial index
-    build and incremental shard appends so both assign identically.
-    The centroid relation is collected (bounded, ≤ n_centroids rows)
-    and assignment is the shared Arrow-batched matmul
+    id) against a given centroid relation — the assignment step of
+    ``ivf_index_write``.  The centroid relation is collected (bounded,
+    ≤ n_centroids rows) and assignment is the shared Arrow-batched matmul
     (nearest_lists_udf) — one narrow map over the corpus, no join, no
     window: the r7 join+window form made the 200k-corpus index build
     cost 66 s of wide-row window shuffle."""
@@ -823,23 +822,6 @@ def ivf_index_write(
     cents.write.mode("overwrite").parquet(os.path.join(path, "centroids"))
 
 
-def _shard_lists(spark, index_path: str, protocol: str):
-    """Committed shard relations of an index under ``<index_path>/shards``
-    (None when the index has no shards)."""
-    import os
-
-    from paas_auditor_spark.operators.atomic import batch_data_paths
-
-    root = os.path.join(index_path, "shards")
-    if not os.path.isdir(root):
-        return None
-    try:
-        paths = batch_data_paths(root, protocol)
-    except ValueError:
-        return None  # dirs exist but nothing committed yet
-    return read_parquet_cached(spark, *paths)
-
-
 def ivf_topk_persisted(
     spark,
     index_path: str,
@@ -849,7 +831,6 @@ def ivf_topk_persisted(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_digits: int = 4,
-    protocol: str = "rename",
     tombstone_path: str | None = None,
 ) -> DataFrame:
     """Probe-only IVF top-k over an index built by ``ivf_index_write``:
@@ -857,9 +838,9 @@ def ivf_topk_persisted(
     closest lists, then scan ONLY those list partitions.
 
     ``tombstone_path`` (optional) points at a ``tombstones_collector``
-    dataset of deleted vector ids: the candidate relation (base lists +
-    committed shards) is anti-joined before scoring, so a deleted
-    vector can never be returned as a neighbor.  The CENTROID table is
+    dataset of deleted vector ids: the candidate list rows are
+    anti-joined before scoring, so a deleted vector can never be
+    returned as a neighbor.  The CENTROID table is
     deliberately untouched — centroids are a frozen quantizer, not
     data; a deleted vector that seeded a centroid keeps partitioning
     space correctly (the standard IVF deletion semantics), and the
@@ -913,17 +894,6 @@ def ivf_topk_persisted(
         .withColumn("list_id", F.col("list_id").cast("long"))
         .filter(F.col("list_id").isin(probed_ids))
     )
-    # committed shards: same probe filter, pushed
-    # to the shard parquet scan as a row-group predicate on the sorted
-    # list_id DATA column (the base's directory partitions keep
-    # planning-time pruning)
-    shards = _shard_lists(spark, index_path, protocol)
-    if shards is not None:
-        lists = lists.unionByName(
-            shards.withColumn(
-                "list_id", F.col("list_id").cast("long")
-            ).filter(F.col("list_id").isin(probed_ids))
-        )
     if tombstone_path is not None:
         from paas_auditor_spark.operators.atomic import (
             anti_join_tombstones,
@@ -931,7 +901,7 @@ def ivf_topk_persisted(
         )
 
         lists = anti_join_tombstones(
-            lists, tombstone_ids(spark, tombstone_path, protocol), "c_id"
+            lists, tombstone_ids(spark, tombstone_path), "c_id"
         )
     scored = (
         lists.withColumnRenamed("list_id", "centroid_id")
@@ -1155,8 +1125,9 @@ def ivfpq_index_write(
     cent_rows = rows[:n_centroids]
     spark = corpus_df.sparkSession
 
-    # one materialization for the lists and vectors writes (see the
-    # shard collector's rationale)
+    # ONE materialization feeds both the lists and the vectors writes:
+    # without the cut the corpus is scanned twice, and a
+    # nondeterministic corpus_df could make the two relations disagree
     cvec = (
         corpus_df.select(
             F.col(id_col).alias("c_id"),
@@ -1214,24 +1185,6 @@ def _read_ivfpq_model(spark, index_path: str):
     return cents, books, m
 
 
-def _ivfpq_shard_parts(spark, index_path: str, protocol: str):
-    """(shard_lists, shard_vectors) DataFrames of an IVF-PQ index's
-    committed shards, or (None, None) when there are none."""
-    import os
-
-    from paas_auditor_spark.operators.atomic import batch_data_paths
-
-    root = os.path.join(index_path, "shards")
-    if not os.path.isdir(root):
-        return None, None
-    try:
-        lists = read_parquet_cached(spark, *batch_data_paths(root, protocol, "lists"))
-        vecs = read_parquet_cached(spark, *batch_data_paths(root, protocol, "vectors"))
-    except ValueError:
-        return None, None
-    return lists, vecs
-
-
 def ivfpq_topk_persisted(
     spark,
     index_path: str,
@@ -1242,7 +1195,6 @@ def ivfpq_topk_persisted(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_digits: int = 4,
-    protocol: str = "rename",
     tombstone_path: str | None = None,
 ) -> DataFrame:
     """Probe-only IVF-PQ top-k over an ``ivfpq_index_write`` index —
@@ -1288,13 +1240,6 @@ def ivfpq_topk_persisted(
         .withColumn("list_id", F.col("list_id").cast("long"))
         .filter(F.col("list_id").isin(probed_ids))
     )
-    shard_lists, shard_vecs = _ivfpq_shard_parts(spark, index_path, protocol)
-    if shard_lists is not None:
-        lists = lists.unionByName(
-            shard_lists.withColumn(
-                "list_id", F.col("list_id").cast("long")
-            ).filter(F.col("list_id").isin(probed_ids))
-        )
     if tombstone_path is not None:
         # same deletion contract as ivf_topk_persisted: candidates
         # anti-joined, frozen quantizer/codebooks untouched; an excluded
@@ -1306,13 +1251,8 @@ def ivfpq_topk_persisted(
         )
 
         lists = anti_join_tombstones(
-            lists, tombstone_ids(spark, tombstone_path, protocol), "c_id"
+            lists, tombstone_ids(spark, tombstone_path), "c_id"
         )
-    # a vector present in both the base lists and a collector shard must
-    # not duplicate (or displace) a neighbor in the final top-k — the
-    # IVF twin's dropDuplicates guard, applied at the cheapest point
-    # (candidate granularity, before reconstruction/scoring)
-    lists = lists.dropDuplicates(["c_id", "list_id"])
     lists = lists.withColumnRenamed("list_id", "centroid_id")
     approx = lists.select(
         "c_id",
@@ -1354,12 +1294,6 @@ def ivfpq_topk_persisted(
     # the only touch of full float vectors: an id join sized
     # rerank × |queries|, never the corpus
     vectors = read_parquet_cached(spark, os.path.join(index_path, "vectors"))
-    if shard_vecs is not None:
-        # the re-rank store is id-keyed (one row per vector by
-        # contract); a vector ingested into both the base build and a
-        # collector shard would otherwise match the shortlist row twice
-        # and duplicate the neighbor in the final top-k
-        vectors = vectors.unionByName(shard_vecs).dropDuplicates(["c_id"])
     rescored = shortlist.join(
         vectors.withColumnRenamed("c_id", "neighbor_id"), on="neighbor_id"
     ).select(

@@ -2703,8 +2703,8 @@ def _emb_tombs_cached(spark: SparkSession, sf_dir: str) -> str:
 def q_knn_ivf_tombstoned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DELETION support for the ANN member of the persisted family: the
     same IVF index as knn_ivf_persisted probed with a tombstone dataset
-    — deleted vectors are anti-joined out of the candidate lists (base
-    + shards) before scoring, while the frozen centroid quantizer and
+    — deleted vectors are anti-joined out of the candidate lists
+    before scoring, while the frozen centroid quantizer and
     the build-time sizing stay untouched (the index predates the
     deletion; retraining happens at the periodic full rebuild, IVF's
     major compaction).  The oracle replays exactly that contract: same

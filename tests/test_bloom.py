@@ -429,7 +429,7 @@ def test_bloom_prune_rejects_mismatched_key_types(spark):
         bloom_prune(fact, "key", dim, "key", m=1 << 10, k=3)
 
 
-def test_commit_batch_dir_contract(tmp_path):
+def test_commit_batch_dir_contract(tmp_path, monkeypatch):
     """The shared collector commit protocol: replay skips without
     writing, a racer's completed commit is absorbed, and a genuine
     write failure RAISES (never a silently dropped batch) with the
@@ -472,6 +472,17 @@ def test_commit_batch_dir_contract(tmp_path):
 
     assert commit_batch_dir(path, 2, write_then_racer_commits) is False
     assert os.path.isdir(os.path.join(path, "batch-2"))
+
+    # a rename that fails for any other reason (no racer published the
+    # batch) raises and leaves the batch uncommitted
+    def no_rename(src, dst):
+        raise OSError(95, "Operation not supported")
+
+    monkeypatch.setattr(os, "rename", no_rename)
+    with pytest.raises(OSError, match="not supported"):
+        commit_batch_dir(path, 3, write_ok)
+    monkeypatch.undo()
+    assert not os.path.isdir(os.path.join(path, "batch-3"))
 
 
 def test_bloom_sharded_is_batch_slice_of_persisted(spark, sf_dir):

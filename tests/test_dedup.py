@@ -855,12 +855,12 @@ def test_minhash_gate_tombstones_and_rep_shift(spark, tmp_path):
     stored = {
         r["doc_id"]
         for r in spark.read.parquet(
-            *batch_data_paths(path, "rename", "sets")
+            *batch_data_paths(path, "sets")
         ).collect()
     }
     assert stored == {101, 102, 201}
     collapse = spark.read.parquet(
-        *batch_data_paths(path, "rename", "collapse")
+        *batch_data_paths(path, "collapse")
     ).collect()
     reps = {r["doc_id"]: r["_rep"] for r in collapse}
     assert reps[101] == 101 and reps[102] == 101  # shifted on disk
@@ -965,7 +965,7 @@ def test_minhash_collector_refuses_parameter_drift(spark, tmp_path):
     minhash_index_collector(path, num_hashes=24, num_bands=12)(docs2, 1)
     from paas_auditor_spark.operators.atomic import batch_data_paths
 
-    assert len(batch_data_paths(path, "rename", "bands")) == 2
+    assert len(batch_data_paths(path, "bands")) == 2
 
 
 def test_minhash_gate_pre_upgrade_index_extended(spark, tmp_path):

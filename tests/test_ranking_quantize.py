@@ -193,9 +193,8 @@ def test_phrase_search_absent_and_empty(spark):
 def test_postings_index_incremental_equals_batch(spark, tmp_path):
     """The inverted-index collector contract: two micro-batches + a
     replayed batch accumulate an index whose BM25 scores are
-    value-identical to bm25_scores over the union corpus — under BOTH
-    commit protocols (rename and the object-store marker variant) —
-    and the probe terms prune the postings scan (pushed filter)."""
+    value-identical to bm25_scores over the union corpus, and the probe
+    terms prune the postings scan (pushed filter)."""
     from paas_auditor_spark.operators.ranking import (
         bm25_from_postings,
         postings_collector,
@@ -214,21 +213,16 @@ def test_postings_index_incremental_equals_batch(spark, tmp_path):
         (r["doc_id"], round(r["score"], 6))
         for r in bm25_scores(docs, ["table", "hash"]).collect()
     }
-    for protocol in ("rename", "marker"):
-        path = str(tmp_path / protocol)
-        hook = postings_collector(path, protocol=protocol)
-        hook(docs.filter("doc_id <= 3"), 0)
-        hook(docs.filter("doc_id > 3"), 1)
-        hook(docs.filter("doc_id > 990"), 1)  # replay: must be a no-op
-        scored = bm25_from_postings(
-            spark, path, ["table", "hash"], protocol=protocol
-        )
-        got = {
-            (r["doc_id"], round(r["score"], 6)) for r in scored.collect()
-        }
-        assert got == want, protocol
-        plan = scored._jdf.queryExecution().executedPlan().toString()
-        assert "IN (table,hash)" in plan  # index-pruned probe scan
+    path = str(tmp_path / "idx")
+    hook = postings_collector(path)
+    hook(docs.filter("doc_id <= 3"), 0)
+    hook(docs.filter("doc_id > 3"), 1)
+    hook(docs.filter("doc_id > 990"), 1)  # replay: must be a no-op
+    scored = bm25_from_postings(spark, path, ["table", "hash"])
+    got = {(r["doc_id"], round(r["score"], 6)) for r in scored.collect()}
+    assert got == want
+    plan = scored._jdf.queryExecution().executedPlan().toString()
+    assert "IN (table,hash)" in plan  # index-pruned probe scan
 
 
 def test_bm25_tombstones_rescore_and_fold(spark, tmp_path):

@@ -298,7 +298,10 @@ def test_ivf_tombstones_equal_never_indexed(spark, sf_dir, tmp_path):
     and the comparison is airtight)."""
     import pyspark.sql.functions as F
 
-    from paas_auditor_spark.operators.atomic import tombstones_collector
+    from paas_auditor_spark.operators.atomic import (
+        tombstone_ids,
+        tombstones_collector,
+    )
     from paas_auditor_spark.operators.similarity import (
         ivf_index_write,
         ivf_topk_persisted,
@@ -328,6 +331,8 @@ def test_ivf_tombstones_equal_never_indexed(spark, sf_dir, tmp_path):
     # and the deletion is not vacuous: the unfiltered probe differs
     noto = ivf_topk_persisted(spark, full, queries, k=5, nprobe=2).toPandas()
     assert noto.values.tolist() != want.values.tolist()
+    # a tombstone dataset with nothing committed yet reads as bootstrap
+    assert tombstone_ids(spark, str(tmp_path / "nope")) is None
 
 
 def test_ivfpq_tombstones_equal_never_indexed(spark, sf_dir, tmp_path):
@@ -627,23 +632,3 @@ def test_ivf_empty_corpus_returns_empty_not_crash(spark):
         [], "centroid_id long, cv array<double>, cnorm double"
     )
     assert _ivf_assign(queries, cents, "vec_id", "embedding").count() == 0
-
-
-def test_tombstone_protocol_mismatch_raises(spark, tmp_path):
-    """r11 review: a tombstone dataset committed under one protocol but
-    read with the other must raise — returning None there is
-    indistinguishable from 'nothing deleted yet' and would serve
-    GDPR-deleted rows forever."""
-    from paas_auditor_spark.operators.atomic import (
-        tombstone_ids,
-        tombstones_collector,
-    )
-
-    tomb = str(tmp_path / "tomb")
-    tombstones_collector(tomb, id_col="vec_id")(
-        spark.range(5).withColumnRenamed("id", "vec_id"), 0
-    )
-    with pytest.raises(ValueError, match="protocol"):
-        tombstone_ids(spark, tomb, protocol="marker")
-    # a genuinely absent dataset still reads as bootstrap
-    assert tombstone_ids(spark, str(tmp_path / "nope")) is None
