@@ -244,8 +244,8 @@ def _reclaim_superseded(path: str, live: str) -> None:
       leaving it on disk — when it cannot be placed.
 
     A read that resolved a superseded generation before the flip may
-    still be scanning it — see ``compact_batches``' single-writer
-    contract."""
+    still be scanning it and hit FileNotFound — one of the remaining
+    risks ``compact_batches``' single-writer contract lists."""
     live_n = -1 if live == path else int(os.path.basename(live)[4:])
     for n, gen in _numbered(path, "gen-"):
         if n > live_n:
@@ -293,12 +293,17 @@ def compact_batches(
       disk (``_reclaim_superseded``).
 
     Single-writer contract: run this from the collector's own driver
-    BETWEEN micro-batches — it must not race the appender, because a
-    batch committed to the OLD generation after the fold's file listing
-    would be silently dropped by the pointer flip.  Readers never see a
-    torn RESOLUTION (old or new generation, whole), but the old
-    generation's files are deleted immediately after the flip — a read
-    that resolved just before the flip can hit FileNotFound mid-scan.
+    BETWEEN micro-batches.  A batch committed to the OLD generation
+    during a fold is not lost: the post-flip ``_rescue_unfolded`` sweep
+    and ``commit_batch_dir``'s self-rescue place it in the live
+    generation.  What a racing appender or reader still risks:
+    - readers never see a torn RESOLUTION (old or new generation,
+      whole), but the old generation's files are deleted right after
+      the flip, so a read that resolved just before it can hit
+      FileNotFound mid-scan;
+    - a commit that sees CURRENT move twice while it rescues its batch
+      (two folds inside one commit) raises
+      ``GenerationSupersededError``; retrying it is safe.
 
     ``parts`` names the sub-relations inside each batch dir ("" for
     flat datasets like histograms; ("postings", "doclens") for the

@@ -40,7 +40,6 @@ from pyspark.sql import functions as F
 
 from paas_auditor_spark.functions.timecross import (
     parse_wall,
-    to_ts,
     ts_string,
     wall_string,
 )
@@ -119,35 +118,9 @@ def unshipped_events(
     ).orderBy(F.col(ts_col).asc(), F.col(id_col).asc())
 
 
-def upsert_cursor(
-    cursors_df: DataFrame,
-    shipper_name: str,
-    updated_at: dt.datetime,
-    shipped_id: str,
-) -> DataFrame:
-    """Keyed single-row upsert (reference store.go:262-287, W2).
-
-    Spark has no in-place update; the idiom is anti-join out the old row and
-    union the new one — the same MERGE-on-``name`` shape Delta would run.
-    The cursor table is O(#sinks) rows, so this is trivially cheap and the
-    caller overwrites the tiny state table atomically (write temp + rename
-    or Delta MERGE on a real deployment).
-    """
-    spark = cursors_df.sparkSession
-    # the timestamp crosses as a wall-clock string parsed JVM-side
-    # (session tz) — a datetime object would convert via the process tz
-    new_row = spark.createDataFrame(
-        [(shipper_name, wall_string(updated_at), shipped_id)],
-        "name string, updated_at string, shipped_id string",
-    ).withColumn("updated_at", to_ts("updated_at"))
-    kept = cursors_df.filter(F.col("name") != F.lit(shipper_name))
-    return kept.unionByName(new_row)
-
-
 __all__ = [
     "EPOCH",
     "EPOCH_TS",
     "effective_cursor",
     "unshipped_events",
-    "upsert_cursor",
 ]

@@ -25,7 +25,6 @@ from paas_auditor_spark.operators.cursor import (
     unshipped_events,
 )
 from paas_auditor_spark.operators.ingest import idempotent_append
-from paas_auditor_spark.schemas import SHIPPER_CURSOR
 from paas_auditor_spark.sources.tables import load_table, rebalance_scan
 
 SHIPPER_NAME = "cf-audit-events-to-splunk"

@@ -12,8 +12,9 @@ the Spark engine:
   (validate → dedup → anti-join → append; only fresh rows are written —
   never a rewrite of history, never a second copy of a stored event)
 - shipper tick: ``streaming.ship.ship_tick`` — cursor query → ordered
-  NDJSON batches with retries → cursor commit (on parquet an atomic
-  temp-dir rename, the stand-in for W2's upsert)
+  NDJSON batches with retries → a cursor commit after every acknowledged
+  batch (on parquet an atomic replace of one JSON file, the stand-in for
+  W2's upsert)
 - informer tick: metadata count + latest-timestamp gauges
 - /metrics (Prometheus text) and /health endpoints on a ThreadingHTTPServer
 - error policies per loop (T8): a collector error raises out of

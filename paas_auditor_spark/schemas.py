@@ -6,8 +6,6 @@ Mirrors the reference's data model (SURVEY.md §1):
   (reference pkg/db/sql/create_cf_audit_events.sql:1-32) — 12 scalar fields,
   event-time timestamp, raw-JSON metadata string.  The /v2/events envelope
   is decoded into these columns by ``sources.paginated_http``.
-- ``SHIPPER_CURSOR``: per-sink ship-progress state
-  (reference pkg/db/sql/create_shipper_cursors.sql:1-18).
 
 The driver's synthetic ``events`` table (TESTDATA.md / FIXTURES.md §B) is the
 stand-in stream: event_id→guid, ts→created_at, user_id→actor,
@@ -38,15 +36,6 @@ CF_AUDIT_EVENT = T.StructType(
         T.StructField("space_guid", T.StringType(), True),
         # raw JSON string for byte-faithful round-trip (JSONB in reference)
         T.StructField("metadata", T.StringType(), True),
-    ]
-)
-
-# reference create_shipper_cursors.sql:1-6
-SHIPPER_CURSOR = T.StructType(
-    [
-        T.StructField("name", T.StringType(), False),
-        T.StructField("updated_at", T.TimestampType(), False),
-        T.StructField("shipped_id", T.StringType(), True),
     ]
 )
 

@@ -17,42 +17,22 @@ import os
 
 from pyspark.sql import SparkSession
 
-from paas_auditor_spark.schemas import CF_AUDIT_EVENT, SHIPPER_CURSOR
+from paas_auditor_spark.schemas import CF_AUDIT_EVENT
 
 EVENTS_TABLE = "cf_audit_events"
-CURSORS_TABLE = "shipper_cursors"
-
-
-def _table_path(warehouse_dir: str, name: str) -> str:
-    return os.path.join(warehouse_dir, name)
-
-
-def init_table(
-    spark: SparkSession, warehouse_dir: str, name: str, schema
-) -> str:
-    """Create the table as an empty parquet dataset if absent (idempotent)."""
-    path = _table_path(warehouse_dir, name)
-    if not os.path.exists(path):
-        spark.createDataFrame([], schema).write.mode("ignore").parquet(path)
-    return path
 
 
 def init_warehouse(spark: SparkSession, warehouse_dir: str) -> dict[str, str]:
-    """Apply all startup DDL (reference store.go:55-71): both tables exist
-    with pinned schemas afterwards, whether or not they did before."""
-    return {
-        EVENTS_TABLE: init_table(
-            spark, warehouse_dir, EVENTS_TABLE, CF_AUDIT_EVENT
-        ),
-        CURSORS_TABLE: init_table(
-            spark, warehouse_dir, CURSORS_TABLE, SHIPPER_CURSOR
-        ),
-    }
+    """Apply the startup DDL (reference store.go:55-71): the events table
+    exists with its pinned schema afterwards, as an empty parquet dataset
+    if it was absent.  The shipper cursors are not a table here: the
+    store keeps them in one JSON file (``stores.ParquetStore``)."""
+    path = os.path.join(warehouse_dir, EVENTS_TABLE)
+    if not os.path.exists(path):
+        spark.createDataFrame([], CF_AUDIT_EVENT).write.mode("ignore").parquet(
+            path
+        )
+    return {EVENTS_TABLE: path}
 
 
-__all__ = [
-    "CURSORS_TABLE",
-    "EVENTS_TABLE",
-    "init_table",
-    "init_warehouse",
-]
+__all__ = ["EVENTS_TABLE", "init_warehouse"]

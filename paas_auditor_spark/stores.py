@@ -12,13 +12,16 @@ surface so ``runner.Service`` is storage-agnostic:
 - ``event_count()``        — informer count, approximate where the
   backend offers it (store.go:310-329 reads pg_class.reltuples)
 - ``effective_cursor(name)`` / ``upsert_cursor(...)`` — W2
-  (store.go:191-199, 262-287)
+  (store.go:191-199, 262-287); the shipper commits after every
+  acknowledged HEC batch, so a commit must cost milliseconds
 - ``unshipped_events(cursor_ts, shipped_id, cap)`` — the shipper CTE
   (store.go:191-225)
 
 **Where the relational work runs differs by backend, deliberately.**
-``ParquetStore`` computes everything in Spark (partition-prunable scans,
-broadcast anti-joins).  ``DbApiStore`` pushes the cursor CTE, the count
+``ParquetStore`` computes the event work in Spark (partition-prunable
+scans, broadcast anti-joins) and keeps the cursors — one entry per sink —
+in one small JSON file replaced atomically, with no Spark job.
+``DbApiStore`` pushes the cursor CTE, the count
 and the watermark MAX down to the database — exactly like the reference,
 whose Postgres does this work — because the database has the indexes and
 the result sets are tiny (1 row, or ≤8192 rows).  Bulk writes still flow
@@ -32,58 +35,99 @@ cursor/ship path touches the driver, same as the parquet store.
 from __future__ import annotations
 
 import datetime as dt
+import json
 import os
-import shutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from paas_auditor_spark.functions.timecross import (
+    parse_wall,
+    to_ts,
+    ts_string,
+    wall_string,
+)
 from paas_auditor_spark.operators.cursor import (
     EPOCH_TS,
-    effective_cursor as _effective_cursor_df,
     unshipped_events as _unshipped_events_df,
-    upsert_cursor as _upsert_cursor_df,
 )
 from paas_auditor_spark.schemas import CF_AUDIT_EVENT
 from paas_auditor_spark.sinks.jdbc import execute_partitionwise
-from paas_auditor_spark.sources.bootstrap import (
-    CURSORS_TABLE,
-    EVENTS_TABLE,
-    init_warehouse,
-)
+from paas_auditor_spark.sources.bootstrap import EVENTS_TABLE, init_warehouse
 
 EVENT_COLUMNS = [f.name for f in CF_AUDIT_EVENT.fields]
+# {name: [updated_at wall-clock string, shipped_id]}
+CURSORS_FILE = "shipper_cursors.json"
 
 
 class ParquetStore:
-    """Local/lakehouse store: parquet tables, Spark-side relational work."""
+    """Local/lakehouse store: parquet events, Spark-side relational work,
+    cursors in ``<warehouse>/shipper_cursors.json``."""
 
     def __init__(self, spark: SparkSession, warehouse_dir: str) -> None:
         self.spark = spark
         self.paths = init_warehouse(spark, warehouse_dir)  # W5
+        self.cursor_path = os.path.join(warehouse_dir, CURSORS_FILE)
+        if not os.path.exists(self.cursor_path):
+            self._import_table_cursors(warehouse_dir)
+
+    def _import_table_cursors(self, warehouse_dir: str) -> None:
+        """One-shot import of the ``shipper_cursors`` parquet table that
+        earlier versions kept: without it an upgraded service would
+        restart from epoch and re-ship all history.  A crash between
+        that version's two swap renames left only ``._old``, which then
+        holds the committed cursor.  Writing the JSON file marks the
+        import done; the table is left in place."""
+        for legacy in ("shipper_cursors", "shipper_cursors._old"):
+            path = os.path.join(warehouse_dir, legacy)
+            if os.path.isdir(path):
+                break
+        else:
+            return
+        # updated_at collects as the JVM-rendered wall-clock string: a
+        # datetime object would convert via the process tz
+        rows = (
+            self.spark.read.parquet(path)
+            .select("name", ts_string("updated_at").alias("u"), "shipped_id")
+            .collect()
+        )
+        # the rendered strings sort chronologically: the newest row wins
+        self._write_cursors(
+            {
+                r["name"]: [wall_string(parse_wall(r["u"])), r["shipped_id"]]
+                for r in sorted(rows, key=lambda r: r["u"])
+            }
+        )
+
+    def _cursors(self) -> dict[str, list[str]]:
+        try:
+            with open(self.cursor_path) as fh:
+                return json.load(fh)
+        except FileNotFoundError:
+            return {}
+
+    def _write_cursors(self, cursors: dict[str, list[str]]) -> None:
+        """Durable atomic replace: a reader sees the old file or the new
+        one, whole, and a committed file survives a power loss."""
+        tmp = self.cursor_path + ".tmp"
+        with open(tmp, "w") as fh:
+            json.dump(cursors, fh)
+            fh.flush()
+            os.fsync(fh.fileno())
+        os.replace(tmp, self.cursor_path)
+        fd = os.open(os.path.dirname(self.cursor_path), os.O_RDONLY)
+        try:
+            os.fsync(fd)  # the rename itself is durable
+        finally:
+            os.close(fd)
 
     # -- reads ------------------------------------------------------------
 
-    def _read(self, path: str) -> DataFrame:
-        """Read a table, healing a crashed cursor-swap (rename pair) by
-        restoring the ``._old`` backup — the cursor then re-ships at most
-        one committed batch (at-least-once), never resets to epoch."""
-        if not os.path.exists(path):
-            old = path + "._old"
-            if os.path.exists(old):
-                os.rename(old, path)
-        return self.spark.read.parquet(path)
-
     def events_df(self) -> DataFrame:
-        return self._read(self.paths[EVENTS_TABLE])
+        return self.spark.read.parquet(self.paths[EVENTS_TABLE])
 
     def latest_event_time(self) -> dt.datetime:
-        from paas_auditor_spark.functions.timecross import (
-            parse_wall,
-            ts_string,
-        )
-
         row = (
             self.events_df()
             .agg(ts_string(F.max("created_at")).alias("mx"))
@@ -94,8 +138,6 @@ class ParquetStore:
     def overlap_keys_df(self, floor: dt.datetime) -> DataFrame:
         """Stored guids at or after ``floor``.  Keys are unique in the
         store and feed a broadcast anti-join, so no distinct is needed."""
-        from paas_auditor_spark.functions.timecross import wall_string
-
         events = self.events_df()
         return events.filter(
             F.col("created_at")
@@ -117,32 +159,26 @@ class ParquetStore:
     # -- cursor / ship ----------------------------------------------------
 
     def effective_cursor(self, name: str) -> tuple[dt.datetime, str]:
-        return _effective_cursor_df(self._read(self.paths[CURSORS_TABLE]), name)
+        """The committed cursor, or the reference's (epoch, '') default
+        row (store.go:192-199)."""
+        entry = self._cursors().get(name)
+        return (parse_wall(entry[0]), entry[1]) if entry else (EPOCH_TS, "")
 
     def unshipped_events(self, name: str, cap: int) -> DataFrame:
-        """The shipper CTE computed Spark-side: cursor resolved from the
-        state table (J1-J3), then the capped chronological window (P6/P7/
-        O3/O4) as a partition-prunable range filter + TakeOrdered top-k."""
+        """The shipper CTE computed Spark-side: the cursor from the
+        cursors file, then the capped chronological window (P6/P7/O3/O4)
+        as a partition-prunable range filter + TakeOrdered top-k."""
         cursor_ts, shipped_id = self.effective_cursor(name)
         return _unshipped_events_df(self.events_df(), cursor_ts, shipped_id, cap)
 
     def upsert_cursor(
         self, name: str, updated_at: dt.datetime, shipped_id: str
     ) -> None:
-        """W2 on parquet: upsert the tiny state table, atomic dir swap."""
-        path = self.paths[CURSORS_TABLE]
-        new_df = _upsert_cursor_df(self._read(path), name, updated_at, shipped_id)
-        tmp = path + "._upsert"
-        new_df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        old = path + "._old"
-        # heal a crash that died between the renames and the cleanup: a
-        # stale ._old would make THIS rename fail forever, freezing the
-        # cursor while the shipper re-ships the same batch every tick
-        if os.path.isdir(old):
-            shutil.rmtree(old)
-        os.rename(path, old)
-        os.rename(tmp, path)
-        shutil.rmtree(old)
+        """W2 on parquet: set the sink's entry, replace the file.  The
+        read-modify-write needs one writer per warehouse: the shipper."""
+        cursors = self._cursors()
+        cursors[name] = [wall_string(updated_at), shipped_id]
+        self._write_cursors(cursors)
 
 
 # Reference DDL re-expressed portably (store.go:55-71 applies
@@ -297,8 +333,6 @@ class DbApiStore:
         """W1 strict parity: partition-wise ``INSERT … ON CONFLICT (guid)
         DO NOTHING`` — one connection + transaction per Spark partition,
         idempotent under task retries."""
-        from paas_auditor_spark.functions.timecross import ts_string
-
         # created_at crosses the executor boundary as the JVM-rendered
         # wall-clock string (the DB casts it back): a datetime OBJECT
         # row would be converted with the executor's process tz and a
@@ -334,11 +368,6 @@ class DbApiStore:
         # the DB returns wall-clock naive datetimes; they must NOT cross
         # into Spark as objects (createDataFrame converts via the
         # process tz) — render to strings and parse JVM-side instead
-        from paas_auditor_spark.functions.timecross import (
-            to_ts,
-            wall_string,
-        )
-
         str_rows = [
             (r[0], wall_string(r[1]), *r[2:]) for r in rows
         ]

@@ -3,7 +3,7 @@ client.
 
 ``ship_tick`` is the one ship step of the service path
 (``runner.Service.shipper_tick`` calls it): store cursor query → payload
-build → ordered delivery (``ship_rows``) → cursor commit.  It
+build → ordered delivery → a cursor commit after every batch.  It
 re-expresses the reference shipper
 (pkg/shippers/cf_audit_events_to_splunk_shipper.go:52-225):
 
@@ -14,12 +14,14 @@ re-expresses the reference shipper
   ``hec_batches`` (≤100 events or about 512 KiB of body) and each batch
   is one POST, where the reference makes one POST per event
 - W4 oldest-first ship loop, break on the first batch that still fails
-  after its retries, commit the cursor to the last event of the last
+  after its retries, commit the cursor to the last event of each
   acknowledged batch (shipper.go:117-170)
 - T4 at-least-once: the cursor advances only on success, so a failed batch
   is re-sent whole on the next tick — re-ships are bounded by one batch
-  (plus events sharing the cursor timestamp).  A cursor commit that fails
-  after delivery re-ships that whole tick, as in the reference.
+  (plus events sharing the cursor timestamp).  A kill or a cursor commit
+  that fails after delivery re-ships one batch.  That is stricter than
+  the reference, which commits once per tick and so re-ships the whole
+  tick.
 
 Scale notes (SURVEY.md §7 hard-part 3): total ship order + stop-on-failure
 implies sequential delivery of the ≤8192-event batch, so the loop runs
@@ -164,60 +166,6 @@ def build_payloads(batch_df: DataFrame, deploy_env: str) -> DataFrame:
     )
 
 
-def ship_rows(
-    rows,
-    sender: Sender,
-    shipper_name: str,
-    sleep: Callable[[float], None] = time.sleep,
-    metrics: MetricsRegistry | None = None,
-    logger=None,
-):
-    """Ordered stop-on-failure delivery loop (W4) over collected payload
-    rows, one NDJSON POST per ``hec_batches`` batch.  Returns
-    ``(shipped, last_ok_row, failed)``: ``last_ok_row`` is the last row of
-    the last acknowledged batch.  ``logger`` (a ``logs.JsonLogger``
-    session) observes the first failure — the reference logs it before
-    breaking (shipper.go:125-130)."""
-    shipped = 0
-    last_ok = None
-    failed = False
-    for batch in hec_batches(rows, lambda row: row["payload"]):
-        try:
-            send_with_retry(
-                sender, "\n".join(row["payload"] for row in batch), sleep
-            )
-        except Exception as ex:
-            failed = True
-            if metrics:
-                metrics.inc(f"{_mname(shipper_name)}_errors_total")
-            if logger is not None:
-                logger.error(
-                    "ship.failed",
-                    ex,
-                    {
-                        "guid": batch[0]["guid"],
-                        "batch_events": len(batch),
-                        "shipped_before_failure": shipped,
-                    },
-                )
-            break
-        shipped += len(batch)
-        last_ok = batch[-1]
-    if metrics:
-        metrics.inc(f"{_mname(shipper_name)}_events_shipped_total", shipped)
-        if last_ok is not None:
-            from paas_auditor_spark.functions.timecross import (
-                epoch_utc,
-                parse_wall,
-            )
-
-            metrics.set(
-                f"{_mname(shipper_name)}_latest_event_timestamp",
-                epoch_utc(parse_wall(last_ok["created_at_s"])),
-            )
-    return shipped, last_ok, failed
-
-
 def ship_tick(
     store,
     sender: Sender,
@@ -231,26 +179,50 @@ def ship_tick(
     """One shipper tick: cursor query → ordered ship → cursor advance;
     returns the events shipped.
 
-    Mirrors shipper.go:106-170: on the first failed batch stop; if at
-    least one batch shipped, commit the cursor (W2) at the last event of
-    the last acknowledged batch so the next tick resumes from there
-    (at-least-once, monotone cursor).
+    Mirrors shipper.go:106-170 with one NDJSON POST per ``hec_batches``
+    batch: stop on the first batch that still fails after its retries,
+    and commit the cursor (W2) to the last event of every acknowledged
+    batch, so a kill or a failed commit re-ships at most that batch.  A
+    commit that raises ends the tick.  ``logger`` (a ``logs.JsonLogger``
+    session) observes the first failure — the reference logs it before
+    breaking (shipper.go:125-130).
     """
-    from paas_auditor_spark.functions.timecross import parse_wall
+    from paas_auditor_spark.functions.timecross import epoch_utc, parse_wall
 
     t0 = time.perf_counter()
     rows = build_payloads(
         store.unshipped_events(name, cap), deploy_env
     ).collect()  # ≤ cap rows, ship order preserved
-    shipped, last_ok, _failed = ship_rows(
-        rows, sender, name, sleep=sleep, metrics=metrics, logger=logger
-    )
-    if last_ok is not None:
+    shipped = 0
+    for batch in hec_batches(rows, lambda row: row["payload"]):
+        try:
+            send_with_retry(
+                sender, "\n".join(row["payload"] for row in batch), sleep
+            )
+        except Exception as ex:
+            if metrics:
+                metrics.inc(f"{_mname(name)}_errors_total")
+            if logger is not None:
+                logger.error(
+                    "ship.failed",
+                    ex,
+                    {
+                        "guid": batch[0]["guid"],
+                        "batch_events": len(batch),
+                        "shipped_before_failure": shipped,
+                    },
+                )
+            break
+        shipped += len(batch)
         # the timestamp comes from the wall-clock string twin, not a
         # process-tz-converted datetime object
-        store.upsert_cursor(
-            name, parse_wall(last_ok["created_at_s"]), last_ok["guid"]
-        )
+        last_ts = parse_wall(batch[-1]["created_at_s"])
+        if metrics:
+            metrics.inc(f"{_mname(name)}_events_shipped_total", len(batch))
+            metrics.set(
+                f"{_mname(name)}_latest_event_timestamp", epoch_utc(last_ts)
+            )
+        store.upsert_cursor(name, last_ts, batch[-1]["guid"])
     if metrics:
         metrics.inc(
             f"{_mname(name)}_ship_duration_total", time.perf_counter() - t0
@@ -272,6 +244,5 @@ __all__ = [
     "hec_batches",
     "hec_sender",
     "send_with_retry",
-    "ship_rows",
     "ship_tick",
 ]

@@ -45,9 +45,8 @@ def test_bootstrap_idempotent(spark, tmp_path):
     wh = str(tmp_path / "warehouse")
     paths = bootstrap.init_warehouse(spark, wh)
     events = spark.read.parquet(paths[bootstrap.EVENTS_TABLE])
-    cursors = spark.read.parquet(paths[bootstrap.CURSORS_TABLE])
-    assert events.count() == 0 and cursors.count() == 0
-    assert "guid" in events.columns and "name" in cursors.columns
+    assert events.count() == 0
+    assert "guid" in events.columns
     # re-init is a no-op and keeps any data written in between
     events_path = paths[bootstrap.EVENTS_TABLE]
     spark.createDataFrame(

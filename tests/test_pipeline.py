@@ -10,11 +10,7 @@ import uuid
 
 import pytest
 
-from paas_auditor_spark.operators.cursor import (
-    EPOCH_TS,
-    effective_cursor,
-    upsert_cursor,
-)
+from paas_auditor_spark.operators.cursor import EPOCH_TS
 from paas_auditor_spark.operators.ingest import (
     idempotent_append,
     ingest_delta,
@@ -27,7 +23,6 @@ from paas_auditor_spark.sources.paginated_http import (
     fetch_event_pages,
     pages_to_dataframe,
 )
-from paas_auditor_spark.schemas import SHIPPER_CURSOR
 from paas_auditor_spark.streaming.metrics import COUNTERS, GAUGES, MetricsRegistry
 from paas_auditor_spark.stores import ParquetStore
 from paas_auditor_spark.streaming.ship import send_with_retry, ship_tick
@@ -313,7 +308,7 @@ def test_ship_batch_bounds(spark, tmp_path):
         HEC_BATCH_BYTES,
         HEC_BATCH_EVENTS,
         build_payloads,
-        ship_rows,
+        hec_batches,
     )
 
     assert HEC_BATCH_EVENTS == 100
@@ -345,12 +340,10 @@ def test_ship_batch_bounds(spark, tmp_path):
         }
 
     def ship(rows) -> list[str]:
-        bodies: list[str] = []
-        shipped, last_ok, failed = ship_rows(
-            rows, bodies.append, "s", sleep=no_sleep
-        )
-        assert shipped == len(rows) and not failed
-        assert last_ok is rows[-1]
+        batches = list(hec_batches(rows, lambda r: r["payload"]))
+        assert sum(map(len, batches)) == len(rows)
+        assert batches[-1][-1] is rows[-1]
+        bodies = ["\n".join(r["payload"] for r in b) for b in batches]
         assert _envelopes(bodies) == [r["payload"] for r in rows]
         return bodies
 
@@ -397,15 +390,18 @@ def test_retry_backoff_recovers():
     assert 0.4 <= slept[2] <= 0.9
 
 
-def test_cursor_upsert_and_monotonic(spark):
-    c0 = spark.createDataFrame([], schema=SHIPPER_CURSOR)
-    assert effective_cursor(c0, "s") == (EPOCH_TS, "")
-    c1 = upsert_cursor(c0, "s", BASE, "g1")
-    assert effective_cursor(c1, "s") == (BASE, "g1")
+def test_cursor_upsert_and_monotonic(spark, tmp_path):
+    import json as _json
+
+    store = ParquetStore(spark, str(tmp_path / "wh"))
+    assert store.effective_cursor("s") == (EPOCH_TS, "")
+    store.upsert_cursor("s", BASE, "g1")
+    assert store.effective_cursor("s") == (BASE, "g1")
     # second upsert replaces, not duplicates (name is PK — W2)
-    c2 = upsert_cursor(c1, "s", BASE + dt.timedelta(seconds=5), "g2")
-    assert c2.filter("name = 's'").count() == 1
-    assert effective_cursor(c2, "s") == (BASE + dt.timedelta(seconds=5), "g2")
+    store.upsert_cursor("s", BASE + dt.timedelta(seconds=5), "g2")
+    with open(store.cursor_path) as fh:
+        assert list(_json.load(fh)) == ["s"]
+    assert store.effective_cursor("s") == (BASE + dt.timedelta(seconds=5), "g2")
 
 
 # --- informer (reference informer_test.go) --------------------------------

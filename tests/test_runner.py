@@ -13,7 +13,7 @@ import pytest
 
 from paas_auditor_spark.runner import SHIPPER_NAME, Service
 from paas_auditor_spark.config import EngineConfig
-from paas_auditor_spark.sources.bootstrap import CURSORS_TABLE
+from paas_auditor_spark.operators.cursor import EPOCH_TS
 
 BASE = dt.datetime(2024, 3, 1, 12, 0, 0)
 
@@ -119,9 +119,9 @@ def test_service_end_to_end(spark, tmp_path):
     svc.run_loops(max_ticks=1)
     assert svc.totals.collected == 3
     assert svc.totals.shipped == 3
-    cursors = spark.read.parquet(svc.paths[CURSORS_TABLE]).collect()
-    assert len(cursors) == 1 and cursors[0]["name"] == SHIPPER_NAME
-    assert cursors[0]["shipped_id"] == str(uuid.UUID(int=2))
+    assert svc.store.effective_cursor(SHIPPER_NAME) == (
+        BASE + dt.timedelta(seconds=2), str(uuid.UUID(int=2))
+    )
 
     # tick 2: overlap re-fetch (0..2 again) + 2 new events → only the new
     # ones land and ship; shipped payloads stay unique
@@ -195,8 +195,8 @@ def test_shipper_gated_on_missing_creds(spark, tmp_path):
     svc.run_loops(max_ticks=1)
     assert svc.totals.collected == 3
     assert svc.totals.shipped == 0
-    # cursor table untouched (no silent epoch ship)
-    assert spark.read.parquet(svc.paths[CURSORS_TABLE]).count() == 0
+    # cursor never committed (no silent epoch ship)
+    assert svc.store.effective_cursor(SHIPPER_NAME) == (EPOCH_TS, "")
     # threaded deployment: collector + informer loops spawn (no shipper
     # without creds)
     assert len(svc.run_threaded()) == 2
@@ -335,9 +335,7 @@ def test_service_batch_failure_delivery_contract(spark, tmp_path):
     )
 
     def cursor():
-        rows = spark.read.parquet(svc.paths[CURSORS_TABLE]).collect()
-        assert len(rows) == 1
-        return rows[0]["updated_at"], rows[0]["shipped_id"]
+        return svc.store.effective_cursor(SHIPPER_NAME)
 
     svc.run_loops(max_ticks=1)
     assert svc.totals.shipped == 100
@@ -419,7 +417,7 @@ class PagedSource:
 
 
 @pytest.mark.parametrize(
-    "fault", ["hec_timeout", "cf_5xx", "old_rows", "commit_crash"]
+    "fault", ["hec_timeout", "cf_5xx", "old_rows", "commit_crash", "mid_tick_kill"]
 )
 def test_service_delivery_contract_under_faults(spark, tmp_path, fault):
     """The delivery contract under each injected fault, over three
@@ -432,7 +430,11 @@ def test_service_delivery_contract_under_faults(spark, tmp_path, fault):
     - ``old_rows``: the source ignores ``q=timestamp>``;
     - ``commit_crash``: the cursor commit fails once after tick 2 shipped
       its one batch, as if the process died between the HEC ack and the
-      commit.  Re-ships are bounded by that tick's delivery, one batch here.
+      commit.  The failed commit re-ships one batch;
+    - ``mid_tick_kill``: tick 1 ships its 200 events as two batches and
+      the commit after batch 2's ack fails, as if the process died there.
+      Batch 1's commit stands, so exactly batch 2 (events 100-199)
+      re-ships.
 
     Contract: every event delivered, stored rows equal distinct guids,
     the cursor only moves forward, at most one batch re-shipped."""
@@ -453,14 +455,19 @@ def test_service_delivery_contract_under_faults(spark, tmp_path, fault):
         ):
             raise TimeoutError("HEC response timed out")
 
-    class Store(ParquetStore):
-        crashes = int(fault == "commit_crash")
+    def killed(shipped_id: str) -> bool:
+        if fault == "commit_crash":
+            return tick["n"] == 2
+        return fault == "mid_tick_kill" and shipped_id == str(uuid.UUID(int=199))
 
-        def upsert_cursor(self, *args) -> None:
-            if tick["n"] == 2 and self.crashes:
+    class Store(ParquetStore):
+        crashes = 1
+
+        def upsert_cursor(self, name, updated_at, shipped_id) -> None:
+            if self.crashes and killed(shipped_id):
                 self.crashes -= 1
                 raise OSError("killed before the cursor commit")
-            super().upsert_cursor(*args)
+            super().upsert_cursor(name, updated_at, shipped_id)
 
     cfg = EngineConfig()
     cfg.pagination_wait_s = 0.0
@@ -490,7 +497,10 @@ def test_service_delivery_contract_under_faults(spark, tmp_path, fault):
     assert cursors[-1] == (
         BASE + dt.timedelta(seconds=249), str(uuid.UUID(int=249))
     )
-    assert len([g for g, k in counts.items() if k > 1]) <= HEC_BATCH_EVENTS
+    reshipped = {g for g, k in counts.items() if k > 1}
+    assert len(reshipped) <= HEC_BATCH_EVENTS
+    if fault == "mid_tick_kill":
+        assert reshipped == {str(uuid.UUID(int=i)) for i in range(100, 200)}
 
 
 def test_collector_metrics_scraped_after_good_and_failing_tick(spark, tmp_path):
@@ -543,11 +553,10 @@ def test_collector_metrics_scraped_after_good_and_failing_tick(spark, tmp_path):
         server.server_close()
 
 
-def test_cursor_swap_crash_recovery(spark, tmp_path):
-    """A crash between the two swap renames leaves only `._old`; the next
-    read heals it and the shipper resumes from the committed cursor."""
-    import os
-
+def test_cursor_torn_write_recovery(spark, tmp_path):
+    """A kill while the cursor file is being written leaves a torn
+    ``shipper_cursors.json.tmp`` beside the committed file.  The committed
+    cursor still rules, and the next tick ships only the new event."""
     transport = PageServer([0, 1, 2])
     sent: list[str] = []
     cfg = EngineConfig()
@@ -561,17 +570,97 @@ def test_cursor_swap_crash_recovery(spark, tmp_path):
     )
     svc.run_loops(max_ticks=1)
     assert svc.totals.shipped == 3
+    committed = svc.store.effective_cursor(SHIPPER_NAME)
 
-    # simulate the torn swap: cursors dir renamed away, new one never landed
-    path = svc.paths[CURSORS_TABLE]
-    os.rename(path, path + "._old")
+    with open(svc.store.cursor_path + ".tmp", "w") as fh:
+        fh.write('{"cf-audit-events-to-splunk": ["2099-01-')
+    assert svc.store.effective_cursor(SHIPPER_NAME) == committed
 
     transport.ids = [3]
-    svc.run_loops(max_ticks=1)  # read heals from ._old; only event 3 ships
+    svc.run_loops(max_ticks=1)
     assert svc.totals.shipped == 4
-    import json as _json
+    assert json.loads(sent[-1])["event"]["guid"] == str(uuid.UUID(int=3))
 
-    assert _json.loads(sent[-1])["event"]["guid"] == str(uuid.UUID(int=3))
+
+def spark_jobs_of(spark, fn) -> list[int]:
+    """Ids of the Spark jobs ``fn`` ran, from the status tracker.  The
+    tracker is fed by the asynchronous listener bus, so a later probe
+    job must show up first: every earlier job has then been seen."""
+    import time
+
+    sc = spark.sparkContext
+    group, probe = f"under-test-{uuid.uuid4()}", f"probe-{uuid.uuid4()}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(probe, probe)
+        try:
+            sc.parallelize([0], 1).count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 60
+    while not tracker.getJobIdsForGroup(probe):
+        assert time.monotonic() < deadline, "probe job never reported"
+        time.sleep(0.05)
+    return list(tracker.getJobIdsForGroup(group))
+
+
+def test_parquet_cursor_runs_no_spark_job(spark, tmp_path):
+    """The parquet store's cursor read and commit are file operations:
+    no Spark job, where the parquet cursor table ran two for each."""
+    from paas_auditor_spark.stores import ParquetStore
+
+    store = ParquetStore(spark, str(tmp_path / "wh"))
+    at = BASE + dt.timedelta(seconds=7)
+    assert spark_jobs_of(spark, lambda: store.upsert_cursor("s", at, "g7")) == []
+    got = []
+    assert spark_jobs_of(
+        spark, lambda: got.append(store.effective_cursor("s"))
+    ) == []
+    assert got == [(at, "g7")]
+    # the probe sees jobs where there are some
+    assert spark_jobs_of(spark, lambda: store.events_df().count())
+
+
+@pytest.mark.parametrize("layout", ["table", "swap_crash"])
+def test_parquet_store_imports_cursor_table(spark, tmp_path, layout):
+    """A warehouse whose cursors are the ``shipper_cursors`` parquet table
+    of earlier versions resumes from them, also when a crash between that
+    version's two swap renames left only ``shipper_cursors._old``."""
+    import os
+
+    from paas_auditor_spark.functions.timecross import to_ts
+    from paas_auditor_spark.stores import ParquetStore
+
+    wh = tmp_path / "wh"
+    table = str(wh / "shipper_cursors")
+    spark.createDataFrame(
+        [
+            ("sink-a", "2024-03-01 12:00:05", "g5"),
+            ("sink-b", "2024-03-01 13:30:00.250000", "g9"),
+        ],
+        "name string, updated_at string, shipped_id string",
+    ).withColumn("updated_at", to_ts("updated_at")).write.parquet(table)
+    if layout == "swap_crash":
+        os.rename(table, table + "._old")
+
+    store = ParquetStore(spark, str(wh))
+    assert os.path.exists(store.cursor_path)
+    want_a = (BASE + dt.timedelta(seconds=5), "g5")
+    want_b = (dt.datetime(2024, 3, 1, 13, 30, 0, 250000), "g9")
+    assert store.effective_cursor("sink-a") == want_a
+    assert store.effective_cursor("sink-b") == want_b
+    assert store.effective_cursor("sink-c") == (EPOCH_TS, "")
+
+    # the file marks the import done: a commit survives a restart
+    store.upsert_cursor("sink-a", BASE + dt.timedelta(seconds=6), "g6")
+    again = ParquetStore(spark, str(wh))
+    assert again.effective_cursor("sink-a") == (
+        BASE + dt.timedelta(seconds=6), "g6"
+    )
+    assert again.effective_cursor("sink-b") == want_b
 
 
 def test_service_jdbc_store_end_to_end(spark, tmp_path):
@@ -773,9 +862,7 @@ def test_service_soak_ticks_restart(spark, tmp_path):
         if t == 7:
             svc.sender = sent.append
 
-        cursors = spark.read.parquet(svc.paths[CURSORS_TABLE]).collect()
-        assert len(cursors) == 1
-        cur = (cursors[0]["updated_at"], cursors[0]["shipped_id"])
+        cur = svc.store.effective_cursor(SHIPPER_NAME)
         assert cur[0] >= last_cursor[0]  # T4: monotone, even through outage
         if t == 7:
             assert cur == last_cursor  # outage tick: cursor stays put

@@ -138,24 +138,21 @@ def test_unshipped_boundary_immune_to_python_process_tz(spark, sf_dir):
     assert before == after == 900
 
 
-def test_cursor_roundtrip_immune_to_process_tz_both_directions(spark):
+def test_cursor_roundtrip_immune_to_process_tz_both_directions(spark, tmp_path):
     """Non-vacuous tz regression: events sit INSIDE the tz-offset window
-    on both sides of the cursor, so any process-tz leak in the
-    cursors-table round trip (effective_cursor collect → literal) moves
-    the boundary and changes the result set.  Run the full
-    upsert → effective_cursor → unshipped_events cycle under UTC,
-    America/New_York (west) and Asia/Kolkata (east, half-hour offset):
-    identical batches required."""
+    on both sides of the cursor, so any process-tz leak in the cursor
+    round trip (commit → cursor file → literal) moves the boundary and
+    changes the result set.  Run the full ``ParquetStore`` cycle
+    upsert_cursor → unshipped_events under UTC, America/New_York (west)
+    and Asia/Kolkata (east, half-hour offset): identical batches
+    required."""
     import datetime as dt
     import os
     import time
 
-    from paas_auditor_spark.operators.cursor import (
-        effective_cursor,
-        unshipped_events,
-        upsert_cursor,
-    )
-    from paas_auditor_spark.schemas import SHIPPER_CURSOR
+    from pyspark.sql import functions as F
+
+    from paas_auditor_spark.stores import EVENT_COLUMNS, ParquetStore
 
     B = dt.datetime(2024, 3, 1, 12, 0, 0)
     # events every 30 min across ±6 h around the noon cursor
@@ -166,16 +163,22 @@ def test_cursor_roundtrip_immune_to_process_tz_both_directions(spark):
         ],
         "guid string, created_at timestamp",
     )
+    store = ParquetStore(spark, str(tmp_path / "wh"))
+    store.append_events(
+        events.select(
+            *(
+                F.col(c) if c in events.columns else F.lit("x").alias(c)
+                for c in EVENT_COLUMNS
+            )
+        )
+    )
 
     def run_cycle():
         from paas_auditor_spark.functions.timecross import ts_string
 
-        cursors = upsert_cursor(
-            spark.createDataFrame([], schema=SHIPPER_CURSOR), "s", B, "12"
-        )
-        ts, sid = effective_cursor(cursors, "s")
+        store.upsert_cursor("s", B, "12")
         got = (
-            unshipped_events(events, ts, sid, batch_cap=8192)
+            store.unshipped_events("s", 8192)
             # compare JVM-rendered wall clocks: collecting the datetime
             # OBJECTS would re-introduce the process-tz rendering this
             # test exists to exclude from engine semantics
