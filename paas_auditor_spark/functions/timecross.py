@@ -60,8 +60,20 @@ def epoch_utc(d: dt.datetime) -> float:
     return d.replace(tzinfo=dt.timezone.utc).timestamp()
 
 
+def arrow_wall(value) -> dt.datetime | None:
+    """Naive UTC wall clock of a pyarrow timestamp scalar, read from a
+    parquet file without the JVM.  A zoned value converts to UTC; a naive
+    one — Spark's INT96, a tz-less column — already holds the UTC wall
+    clock.  The process timezone never enters."""
+    d = value.as_py()
+    if d is not None and d.tzinfo is not None:
+        d = d.astimezone(dt.timezone.utc).replace(tzinfo=None)
+    return d
+
+
 __all__ = [
     "TS_FMT_SPARK",
+    "arrow_wall",
     "epoch_utc",
     "parse_wall",
     "to_ts",

@@ -26,9 +26,12 @@ O3 batch-bounding top-k, O4 chronological output.
 Scale notes: the cursor relation has cardinality exactly 1, so we collect it
 to the driver and inline as literals — the same plan Postgres produces for
 the scalar subqueries, and strictly cheaper than a broadcast cross-join.
-The big-side work is then a partition-prunable range filter plus a global
-top-k, which Spark executes as TakeOrderedAndProject (no full sort, no
-full shuffle: per-partition heaps of size k merged on the driver).
+The big-side work is then a range filter plus a global top-k, which Spark
+executes as TakeOrderedAndProject (no full sort, no full shuffle:
+per-partition heaps of size k merged on the driver).  The filter prunes
+nothing by itself: the events table is not partitioned and Spark's INT96
+``created_at`` has no footer stats.  ``stores.ParquetStore`` hands in
+only the files whose logged max reaches the cursor.
 """
 
 from __future__ import annotations

@@ -12,8 +12,10 @@ this step is ``sources.paginated_http.decode_resource``):
 Scale notes (SURVEY.md §7 hard-part 1): the anti-join against the store
 must not scan full history.  ``ingest_delta`` bounds its right side by
 the batch's own oldest event, so only stored keys a batch row could
-collide with are read — on a date-partitioned table that is partition
-pruning.  With a source that honours ``timestamp>`` the batch starts
+collide with are read — on ``ParquetStore`` the files whose logged max
+``created_at`` reaches that floor, one or two near the tail (the table is
+not partitioned, and Spark's INT96 ``created_at`` has no footer stats to
+prune by).  With a source that honours ``timestamp>`` the batch starts
 after the watermark and the window is the 5 s overlap; a source that
 returns old rows widens the window instead of duplicating them.  The
 small bounded side is broadcast so no shuffle of the batch is needed.
@@ -99,8 +101,8 @@ def ingest_delta(
     epoch-or-older and null-guid rows, in-batch duplicates collapse, and
     a broadcast left-anti join against the store's keys since the
     batch's own oldest event removes everything already stored, however
-    old the source's rows are.  The fresh rows are checkpointed so the
-    count and the append run the anti-join once.
+    old the source's rows are.  The store's append runs the anti-join and
+    returns the rows it stored, so no separate count runs.
     """
     from paas_auditor_spark.functions.timecross import parse_wall, ts_string
 
@@ -115,10 +117,8 @@ def ingest_delta(
         return 0
     fresh = deduped.join(
         F.broadcast(store.overlap_keys_df(parse_wall(lo))), "guid", "left_anti"
-    ).localCheckpoint(eager=False)
-    n = fresh.count()
-    if n:
-        store.append_events(fresh)
+    )
+    n = store.append_events(fresh)
     if metrics is not None:
         metrics.inc("cf_audit_event_collector_events_collected_total", float(n))
     return n

@@ -15,7 +15,8 @@ the Spark engine:
   NDJSON batches with retries → a cursor commit after every acknowledged
   batch (on parquet an atomic replace of one JSON file, the stand-in for
   W2's upsert)
-- informer tick: metadata count + latest-timestamp gauges
+- informer tick: count + latest-timestamp gauges from the store's stats
+  (on parquet the events stats log: no Spark job)
 - /metrics (Prometheus text) and /health endpoints on a ThreadingHTTPServer
 - error policies per loop (T8): a collector error raises out of
   ``run_loops`` and stops every ``run_threaded`` loop — the process-exit
@@ -46,6 +47,8 @@ from paas_auditor_spark.streaming.metrics import MetricsRegistry
 from paas_auditor_spark.streaming.ship import Sender, ship_tick
 
 SHIPPER_NAME = "cf-audit-events-to-splunk"
+# ship_tick's count of acknowledged events for SHIPPER_NAME
+SHIPPED_TOTAL = "cf_audit_events_to_splunk_shipper_events_shipped_total"
 
 
 @dataclass
@@ -144,22 +147,31 @@ class Service:
     def shipper_tick(self) -> int:
         if self.sender is None:  # creds absent: shipper disabled
             return 0
-        shipped = ship_tick(
-            self.store,
-            self.sender,
-            SHIPPER_NAME,
-            self.cfg.deploy_env,
-            self.cfg.ship_batch_cap,
-            metrics=self.metrics,
-            logger=self._loop_logs[self.shipper_tick],
-        )
-        self.totals.shipped += shipped
-        self._loop_logs[self.shipper_tick].info("shipped", {"events": shipped})
+        # counted by ship_tick's per-batch counter, so a cursor commit that
+        # raises after HEC acknowledged batches still counts them; the
+        # error then reaches the loop's error path
+        before = self.metrics.get(SHIPPED_TOTAL)
+        try:
+            ship_tick(
+                self.store,
+                self.sender,
+                SHIPPER_NAME,
+                self.cfg.deploy_env,
+                self.cfg.ship_batch_cap,
+                metrics=self.metrics,
+                logger=self._loop_logs[self.shipper_tick],
+            )
+        finally:
+            shipped = int(self.metrics.get(SHIPPED_TOTAL) - before)
+            self.totals.shipped += shipped
+            self._loop_logs[self.shipper_tick].info(
+                "shipped", {"events": shipped}
+            )
         return shipped
 
     def informer_tick(self) -> None:
-        """Reference pkg/informer/informer.go:26-54: dataset-size (A2
-        approximate where the backend offers it) + latest-timestamp gauges."""
+        """Reference pkg/informer/informer.go:26-54: dataset-size +
+        latest-timestamp gauges."""
         self.metrics.set(
             "informer_cf_audit_events_total", float(self.store.event_count())
         )

@@ -3,14 +3,15 @@
 The reference persists to Postgres and delegates its relational work to
 five SQL statements (pkg/db/store.go:28-400).  The engine's north-star
 deployment does the same through JDBC/DB-API; the default local warehouse
-is date-partitionable parquet.  Both are exposed behind one small store
-surface so ``runner.Service`` is storage-agnostic:
+is parquet.  Both are exposed behind one small store surface so
+``runner.Service`` is storage-agnostic:
 
 - ``latest_event_time()``  — watermark basis (store.go:289-308)
 - ``overlap_keys_df(floor)`` — dedup window keys for W1/T3
-- ``append_events(df)``    — idempotent insert (store.go:73-100)
-- ``event_count()``        — informer count, approximate where the
-  backend offers it (store.go:310-329 reads pg_class.reltuples)
+- ``append_events(df)``    — idempotent insert (store.go:73-100); returns
+  the rows it stored
+- ``event_count()``        — informer count (store.go:310-329 reads
+  pg_class.reltuples)
 - ``effective_cursor(name)`` / ``upsert_cursor(...)`` — W2
   (store.go:191-199, 262-287); the shipper commits after every
   acknowledged HEC batch, so a commit must cost milliseconds
@@ -18,18 +19,46 @@ surface so ``runner.Service`` is storage-agnostic:
   (store.go:191-225)
 
 **Where the relational work runs differs by backend, deliberately.**
-``ParquetStore`` computes the event work in Spark (partition-prunable
-scans, broadcast anti-joins) and keeps the cursors — one entry per sink —
-in one small JSON file replaced atomically, with no Spark job.
-``DbApiStore`` pushes the cursor CTE, the count
-and the watermark MAX down to the database — exactly like the reference,
-whose Postgres does this work — because the database has the indexes and
-the result sets are tiny (1 row, or ≤8192 rows).  Bulk writes still flow
-through Spark partitions (``execute_partitionwise``: one connection +
-transaction per partition, ON CONFLICT DO NOTHING — W1 under task
-retries).  On a 1000-executor cluster the wide data path (fetch →
-normalize → validate → dedup) stays distributed; only the bounded
-cursor/ship path touches the driver, same as the parquet store.
+``DbApiStore`` pushes the cursor CTE, the count and the watermark MAX
+down to the database — exactly like the reference, whose Postgres does
+this work — because the database has the indexes and the result sets are
+tiny (1 row, or ≤8192 rows).  Bulk writes still flow through Spark
+partitions (``execute_partitionwise``: one connection + transaction per
+partition, ON CONFLICT DO NOTHING — W1 under task retries).
+
+``ParquetStore`` answers the per-tick reads from file operations, in the
+place of Postgres's ``created_at`` index and ``reltuples``.  Its layout:
+
+    <warehouse>/shipper_cursors.json       {name: [updated_at, shipped_id]}
+    <warehouse>/cf_audit_events/part-*     the events, one file per part
+    <warehouse>/cf_audit_events/_staging/  appends being written
+    <warehouse>/cf_audit_events/_events_log/<n>.json
+                                           per-file stats of one append
+
+- An append writes its parquet files under ``_staging/<id>/``, renames
+  every file that holds rows into the table directory — the rename is the
+  commit — and then writes one log entry with each file's name, rows,
+  ``min_created_at`` and ``max_created_at`` (UTC wall-clock strings).
+- The directory listing stays the only authority on which rows exist;
+  the log only caches stats.  Each read lists the table once and reads
+  and logs the stats of any file the log lacks: a crash between the
+  rename and the entry, a warehouse from an earlier version, a file
+  written into the table by another tool.  Entries are keyed by file
+  name, so a second entry for a file is harmless.
+- Stats come from each file's ``created_at`` column read with pyarrow,
+  not from footer min/max: Spark writes the column as INT96, which has
+  no footer statistics.
+- Leftovers under ``_staging/`` are swept when the store opens: one
+  writer (the collector) per warehouse.
+- Spark's and pyarrow's directory reads skip both underscore-prefixed
+  directories, so ``spark.read.parquet(<table>)`` reads the same rows.
+
+The watermark is then the log's max, the count its row sum (exact), and
+``overlap_keys_df`` and ``unshipped_events`` read only the files whose
+logged max reaches their floor — one or two near the tail — with the
+pinned schema, so Spark runs no listing or schema-inference job.  The
+events table is not partitioned: pruning is by the per-file max.  The
+cursors are one small JSON file replaced atomically, with no Spark job.
 """
 
 from __future__ import annotations
@@ -37,12 +66,19 @@ from __future__ import annotations
 import datetime as dt
 import json
 import os
+import shutil
+import uuid
 from collections.abc import Callable
+from typing import NamedTuple
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from paas_auditor_spark.functions.timecross import (
+    arrow_wall,
     parse_wall,
     to_ts,
     ts_string,
@@ -59,15 +95,55 @@ from paas_auditor_spark.sources.bootstrap import EVENTS_TABLE, init_warehouse
 EVENT_COLUMNS = [f.name for f in CF_AUDIT_EVENT.fields]
 # {name: [updated_at wall-clock string, shipped_id]}
 CURSORS_FILE = "shipper_cursors.json"
+STAGING = "_staging"
+EVENTS_LOG = "_events_log"
+
+
+class FileStats(NamedTuple):
+    """One events file's row count and ``created_at`` bounds (naive UTC
+    wall clock; ``None`` when the file holds no rows)."""
+
+    rows: int
+    lo: dt.datetime | None
+    hi: dt.datetime | None
+
+
+def _visible(name: str) -> bool:
+    """Spark's and pyarrow's directory reads skip ``_``/``.`` names: the
+    staging area, the log, ``_SUCCESS`` and checksum files."""
+    return not name.startswith(("_", "."))
+
+
+def file_stats(path: str) -> FileStats:
+    """Stats of one events file from its ``created_at`` column alone."""
+    col = pq.read_table(
+        path, columns=["created_at"], coerce_int96_timestamp_unit="us"
+    ).column(0)
+    if col.type.unit != "us":  # truncation keeps every `max >= floor` test
+        col = col.cast(pa.timestamp("us", col.type.tz), safe=False)
+    bounds = pc.min_max(col)
+    return FileStats(
+        len(col), arrow_wall(bounds["min"]), arrow_wall(bounds["max"])
+    )
 
 
 class ParquetStore:
-    """Local/lakehouse store: parquet events, Spark-side relational work,
-    cursors in ``<warehouse>/shipper_cursors.json``."""
+    """Local/lakehouse store: parquet events with a per-file stats log,
+    Spark-side relational work over the files near the tail, cursors in
+    ``<warehouse>/shipper_cursors.json``."""
 
     def __init__(self, spark: SparkSession, warehouse_dir: str) -> None:
         self.spark = spark
         self.paths = init_warehouse(spark, warehouse_dir)  # W5
+        self.events_dir = self.paths[EVENTS_TABLE]
+        self.staging_dir = os.path.join(self.events_dir, STAGING)
+        self.log_dir = os.path.join(self.events_dir, EVENTS_LOG)
+        # files an append staged but never renamed in hold no table rows
+        shutil.rmtree(self.staging_dir, ignore_errors=True)
+        os.makedirs(self.log_dir, exist_ok=True)
+        self._stats: dict[str, FileStats] = {}
+        self._next_entry = 0
+        self._load_log()
         self.cursor_path = os.path.join(warehouse_dir, CURSORS_FILE)
         if not os.path.exists(self.cursor_path):
             self._import_table_cursors(warehouse_dir)
@@ -122,39 +198,122 @@ class ParquetStore:
         finally:
             os.close(fd)
 
+    # -- events stats log -------------------------------------------------
+
+    def _load_log(self) -> None:
+        """Read the log into memory.  An entry torn by a crash is skipped:
+        the next read re-derives its files' stats from the files."""
+        for name in os.listdir(self.log_dir):
+            stem = name.removesuffix(".json")
+            if not stem.isdigit():
+                continue
+            self._next_entry = max(self._next_entry, int(stem) + 1)
+            try:
+                with open(os.path.join(self.log_dir, name)) as fh:
+                    files = json.load(fh)["files"]
+            except (OSError, ValueError, KeyError):
+                continue
+            for f in files:
+                self._stats[f["name"]] = FileStats(
+                    f["rows"],
+                    parse_wall(f["min_created_at"]),
+                    parse_wall(f["max_created_at"]),
+                )
+
+    def _log(self, stats: dict[str, FileStats]) -> None:
+        """Remember ``stats`` and write them as the next ``<n>.json``
+        entry; exclusive creation keeps a racing entry from being
+        overwritten."""
+        self._stats.update(stats)
+        body = json.dumps(
+            {
+                "files": [
+                    {
+                        "name": name,
+                        "rows": s.rows,
+                        "min_created_at": s.lo and wall_string(s.lo),
+                        "max_created_at": s.hi and wall_string(s.hi),
+                    }
+                    for name, s in stats.items()
+                ]
+            }
+        )
+        while True:
+            path = os.path.join(self.log_dir, f"{self._next_entry}.json")
+            self._next_entry += 1
+            try:
+                fd = os.open(path, os.O_WRONLY | os.O_CREAT | os.O_EXCL, 0o644)
+            except FileExistsError:
+                continue
+            with os.fdopen(fd, "w") as fh:
+                fh.write(body)
+            return
+
+    def _listed(self) -> dict[str, FileStats]:
+        """Stats of every file the table directory lists now, reading and
+        logging those of any file the log lacks."""
+        names = [n for n in os.listdir(self.events_dir) if _visible(n)]
+        missing = [n for n in names if n not in self._stats]
+        if missing:
+            self._log(
+                {n: file_stats(os.path.join(self.events_dir, n)) for n in missing}
+            )
+        return {n: self._stats[n] for n in names}
+
     # -- reads ------------------------------------------------------------
 
-    def events_df(self) -> DataFrame:
-        return self.spark.read.parquet(self.paths[EVENTS_TABLE])
+    def events_df(self, floor: dt.datetime | None = None) -> DataFrame:
+        """The events of the files whose logged max is at or after
+        ``floor`` (every file holding rows when ``floor`` is None), read
+        with the pinned schema: no listing or schema-inference job."""
+        files = [
+            os.path.join(self.events_dir, n)
+            for n, s in self._listed().items()
+            if s.rows and (floor is None or s.hi is not None and s.hi >= floor)
+        ]
+        if not files:
+            return self.spark.createDataFrame([], CF_AUDIT_EVENT)
+        return self.spark.read.schema(CF_AUDIT_EVENT).parquet(*files)
 
     def latest_event_time(self) -> dt.datetime:
-        row = (
-            self.events_df()
-            .agg(ts_string(F.max("created_at")).alias("mx"))
-            .first()
+        """The log's max ``created_at``, epoch when the table is empty."""
+        return max(
+            (s.hi for s in self._listed().values() if s.hi is not None),
+            default=EPOCH_TS,
         )
-        return parse_wall(row["mx"]) or EPOCH_TS
 
     def overlap_keys_df(self, floor: dt.datetime) -> DataFrame:
-        """Stored guids at or after ``floor``.  Keys are unique in the
-        store and feed a broadcast anti-join, so no distinct is needed."""
-        events = self.events_df()
-        return events.filter(
-            F.col("created_at")
-            >= F.lit(wall_string(floor)).cast(
-                events.schema["created_at"].dataType
-            )
+        """Stored guids at or after ``floor``, from the files whose logged
+        max reaches it.  Keys are unique in the store and feed a
+        broadcast anti-join, so no distinct is needed."""
+        return self.events_df(floor).filter(
+            F.col("created_at") >= to_ts(F.lit(wall_string(floor)))
         ).select("guid")
 
     def event_count(self) -> int:
-        from paas_auditor_spark.operators.stats import approx_count
-
-        return approx_count(self.paths[EVENTS_TABLE])  # A2: footer metadata
+        """The log's row sum: exact, with no Spark job."""
+        return sum(s.rows for s in self._listed().values())
 
     # -- writes -----------------------------------------------------------
 
-    def append_events(self, fresh_df: DataFrame) -> None:
-        fresh_df.write.mode("append").parquet(self.paths[EVENTS_TABLE])
+    def append_events(self, fresh_df: DataFrame) -> int:
+        """Stage, commit by rename, then log; returns the rows stored.  A
+        staged file without rows is deleted, never committed.  The files
+        of one append commit one by one, as Spark's own job commit moves
+        them."""
+        staged = os.path.join(self.staging_dir, uuid.uuid4().hex)
+        fresh_df.write.parquet(staged)
+        stats = {}
+        for name in sorted(filter(_visible, os.listdir(staged))):
+            path = os.path.join(staged, name)
+            s = file_stats(path)
+            if s.rows:
+                os.rename(path, os.path.join(self.events_dir, name))
+                stats[name] = s
+        shutil.rmtree(staged)
+        if stats:
+            self._log(stats)
+        return sum(s.rows for s in stats.values())
 
     # -- cursor / ship ----------------------------------------------------
 
@@ -167,9 +326,12 @@ class ParquetStore:
     def unshipped_events(self, name: str, cap: int) -> DataFrame:
         """The shipper CTE computed Spark-side: the cursor from the
         cursors file, then the capped chronological window (P6/P7/O3/O4)
-        as a partition-prunable range filter + TakeOrdered top-k."""
+        as a range filter + TakeOrdered top-k over the files whose logged
+        max reaches the cursor."""
         cursor_ts, shipped_id = self.effective_cursor(name)
-        return _unshipped_events_df(self.events_df(), cursor_ts, shipped_id, cap)
+        return _unshipped_events_df(
+            self.events_df(cursor_ts), cursor_ts, shipped_id, cap
+        )
 
     def upsert_cursor(
         self, name: str, updated_at: dt.datetime, shipped_id: str
@@ -329,10 +491,16 @@ class DbApiStore:
 
     # -- writes -----------------------------------------------------------
 
-    def append_events(self, fresh_df: DataFrame) -> None:
+    def append_events(self, fresh_df: DataFrame) -> int:
         """W1 strict parity: partition-wise ``INSERT … ON CONFLICT (guid)
         DO NOTHING`` — one connection + transaction per Spark partition,
-        idempotent under task retries."""
+        idempotent under task retries.  Returns the rows offered, counted
+        first; checkpointed, so the count and the insert run the caller's
+        plan once."""
+        fresh_df = fresh_df.localCheckpoint(eager=False)
+        n = fresh_df.count()
+        if not n:
+            return 0
         # created_at crosses the executor boundary as the JVM-rendered
         # wall-clock string (the DB casts it back): a datetime OBJECT
         # row would be converted with the executor's process tz and a
@@ -344,6 +512,7 @@ class DbApiStore:
             fresh, self._q(INSERT_EVENT), self.conn_factory,
             columns=EVENT_COLUMNS, max_partitions=self.write_partitions,
         )
+        return n
 
     # -- cursor / ship ----------------------------------------------------
 

@@ -23,6 +23,24 @@ GAUGES = (
     "informer_cf_audit_events_total",
     "informer_latest_cf_audit_event_timestamp",
 )
+HELP = {
+    "cf_audit_event_collector_collect_duration_total":
+        "Seconds spent in collector ticks.",
+    "cf_audit_event_collector_errors_total": "Collector ticks that failed.",
+    "cf_audit_event_collector_events_collected_total":
+        "Events the collector stored.",
+    "cf_audit_events_to_splunk_shipper_errors_total":
+        "Shipper ticks that stopped at a batch HEC did not acknowledge.",
+    "cf_audit_events_to_splunk_shipper_events_shipped_total":
+        "Events in batches HEC acknowledged.",
+    "cf_audit_events_to_splunk_shipper_ship_duration_total":
+        "Seconds spent in shipper ticks.",
+    "cf_audit_events_to_splunk_shipper_latest_event_timestamp":
+        "Epoch seconds of the last event HEC acknowledged.",
+    "informer_cf_audit_events_total": "Events in the store.",
+    "informer_latest_cf_audit_event_timestamp":
+        "Epoch seconds of the newest stored event.",
+}
 
 
 @dataclass
@@ -31,6 +49,10 @@ class MetricsRegistry:
 
     values: dict[str, float] = field(
         default_factory=lambda: {name: 0.0 for name in COUNTERS + GAUGES}
+    )
+    types: dict[str, str] = field(
+        default_factory=lambda: dict.fromkeys(COUNTERS, "counter")
+        | dict.fromkeys(GAUGES, "gauge")
     )
     _lock: threading.Lock = field(default_factory=threading.Lock, repr=False)
 
@@ -41,19 +63,27 @@ class MetricsRegistry:
         # forever.  The 9 reference names stay pre-registered above.
         with self._lock:
             self.values[name] = self.values.get(name, 0.0) + amount
+            self.types.setdefault(name, "counter")
 
     def set(self, name: str, value: float) -> None:
         with self._lock:
             self.values[name] = value
+            self.types.setdefault(name, "gauge")
 
     def get(self, name: str) -> float:
         with self._lock:
             return self.values[name]
 
     def render_text(self) -> str:
-        """Prometheus text exposition (what /metrics would serve)."""
+        """Prometheus text exposition (what /metrics serves): a ``# HELP``
+        and a ``# TYPE`` line, then the sample, per metric."""
         with self._lock:
-            return "\n".join(f"{k} {v}" for k, v in sorted(self.values.items()))
+            return "".join(
+                f"# HELP {k} {HELP.get(k, k.replace('_', ' ') + '.')}\n"
+                f"# TYPE {k} {self.types[k]}\n"
+                f"{k} {v}\n"
+                for k, v in sorted(self.values.items())
+            )
 
 
-__all__ = ["COUNTERS", "GAUGES", "MetricsRegistry"]
+__all__ = ["COUNTERS", "GAUGES", "HELP", "MetricsRegistry"]

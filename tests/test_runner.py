@@ -501,6 +501,11 @@ def test_service_delivery_contract_under_faults(spark, tmp_path, fault):
     assert len(reshipped) <= HEC_BATCH_EVENTS
     if fault == "mid_tick_kill":
         assert reshipped == {str(uuid.UUID(int=i)) for i in range(100, 200)}
+    if fault in ("commit_crash", "mid_tick_kill"):
+        # batches HEC acknowledged before the failed commit are counted
+        assert svc.totals.shipped == svc.metrics.get(
+            "cf_audit_events_to_splunk_shipper_events_shipped_total"
+        )
 
 
 def test_collector_metrics_scraped_after_good_and_failing_tick(spark, tmp_path):
@@ -519,7 +524,12 @@ def test_collector_metrics_scraped_after_good_and_failing_tick(spark, tmp_path):
         text = urllib.request.urlopen(
             f"http://127.0.0.1:{port}/metrics"
         ).read().decode()
-        return {k: float(v) for k, v in (ln.split() for ln in text.splitlines())}
+        return {
+            k: float(v)
+            for k, v in (
+                ln.split() for ln in text.splitlines() if not ln.startswith("#")
+            )
+        }
 
     try:
         svc.run_loops(max_ticks=1)
@@ -551,6 +561,44 @@ def test_collector_metrics_scraped_after_good_and_failing_tick(spark, tmp_path):
         svc.stop()
         server.shutdown()
         server.server_close()
+
+
+def test_metrics_endpoint_serves_prometheus_text(spark, tmp_path):
+    """/metrics is Prometheus text: each sample follows its ``# HELP`` and
+    ``# TYPE`` lines, the reference's names typed counter or gauge, and a
+    lazily registered name typed by its first use."""
+    import re
+
+    from paas_auditor_spark.streaming.metrics import COUNTERS, GAUGES
+
+    svc = Service(spark, warehouse_dir=str(tmp_path / "wh"))
+    svc.metrics.inc("custom_sink_shipper_events_shipped_total", 2)
+    svc.metrics.set("custom_sink_shipper_latest_event_timestamp", 7)
+    svc.informer_tick()
+    server = svc.serve_metrics(port=0)
+    try:
+        port = server.server_address[1]
+        text = urllib.request.urlopen(
+            f"http://127.0.0.1:{port}/metrics"
+        ).read().decode()
+    finally:
+        server.shutdown()
+        server.server_close()
+
+    lines = text.splitlines()
+    assert text.endswith("\n") and len(lines) % 3 == 0
+    types, values = {}, {}
+    for help_line, type_line, sample in zip(*[iter(lines)] * 3):
+        name = sample.split()[0]
+        assert re.fullmatch(rf"# HELP {name} \S.*", help_line)
+        kind = re.fullmatch(rf"# TYPE {name} (counter|gauge)", type_line)[1]
+        types[name], values[name] = kind, float(sample.split()[1])
+    assert {n: types[n] for n in COUNTERS} == dict.fromkeys(COUNTERS, "counter")
+    assert {n: types[n] for n in GAUGES} == dict.fromkeys(GAUGES, "gauge")
+    assert types["custom_sink_shipper_events_shipped_total"] == "counter"
+    assert types["custom_sink_shipper_latest_event_timestamp"] == "gauge"
+    assert values["custom_sink_shipper_events_shipped_total"] == 2
+    assert values["informer_cf_audit_events_total"] == 0
 
 
 def test_cursor_torn_write_recovery(spark, tmp_path):
