@@ -1,4 +1,5 @@
-"""Ingest operators: validation, idempotent append, the one ingest step.
+"""Ingest operators: the one ingest step of the service path, and the
+idempotent append over DataFrames that the registry query uses.
 
 Reference behavior being re-expressed (the S4 envelope decode that feeds
 this step is ``sources.paginated_http.decode_resource``):
@@ -9,51 +10,40 @@ this step is ``sources.paginated_http.decode_resource``):
 - W1/T3 idempotent insert: ON CONFLICT (guid) DO NOTHING
   (pkg/db/store.go:73-100) — overlap re-reads never duplicate.
 
+Where the work runs: a tick's rows are already Python tuples on the
+driver in both collector modes (the loop-mode pager decodes them, and so
+does the streaming source), a few thousand at most.  ``ingest_delta``
+therefore validates, deduplicates and anti-joins them in plain Python,
+and only the fresh rows reach Spark, as one Arrow batch written as one
+file.  A tick that stores rows runs one Spark job (the write); a tick
+that re-read only the overlap runs none.
+
 Scale notes (SURVEY.md §7 hard-part 1): the anti-join against the store
-must not scan full history.  ``ingest_delta`` bounds its right side by
-the batch's own oldest event, so only stored keys a batch row could
-collide with are read — on ``ParquetStore`` the files whose logged max
-``created_at`` reaches that floor, one or two near the tail (the table is
-not partitioned, and Spark's INT96 ``created_at`` has no footer stats to
-prune by).  With a source that honours ``timestamp>`` the batch starts
-after the watermark and the window is the 5 s overlap; a source that
-returns old rows widens the window instead of duplicating them.  The
-small bounded side is broadcast so no shuffle of the batch is needed.
+must not scan full history.  ``ingest_delta`` asks the store only for the
+keys at or after the batch's own oldest event — on ``ParquetStore`` the
+``guid``/``created_at`` columns of the one or two files near the tail
+whose logged max reaches that floor.  With a source that honours
+``timestamp>`` the batch starts after the watermark and the window is the
+5 s overlap; a source that returns old rows widens the window instead of
+duplicating them.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+from collections.abc import Iterable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from paas_auditor_spark.operators.cursor import EPOCH_TS
+from paas_auditor_spark.sources.paginated_http import EVENT_ROWS
 from paas_auditor_spark.streaming.metrics import MetricsRegistry
 
-
-def validate_events(
-    df: DataFrame, ts_col: str = "created_at", key_col: str = "guid"
-) -> tuple[DataFrame, DataFrame]:
-    """Split (valid, quarantined) on the event-time CHECK (P8) AND the
-    key NOT NULL constraint.
-
-    The reference enforces ``created_at > 'epoch'`` and
-    ``guid uuid NOT NULL`` as table constraints; as an engine we filter
-    on the write path and keep the rejects addressable instead of
-    erroring the batch.  The key check matters downstream: a NULL key
-    can never match a dedup anti-join (NULL ≠ NULL), so an unvalidated
-    null-key row would be re-appended on EVERY overlap re-read.
-    """
-    # epoch literal crosses as a string (session-tz parse) — an object
-    # literal converts via the process tz and would misjudge rows within
-    # tz-offset hours of the epoch on a non-UTC host
-    epoch_lit = F.lit("1970-01-01 00:00:00").cast(
-        df.schema[ts_col].dataType
-    )
-    cond = F.col(ts_col).isNotNull() & (F.col(ts_col) > epoch_lit)
-    if key_col in df.columns:
-        cond = cond & F.col(key_col).isNotNull()
-    return df.filter(cond), df.filter(~cond)
+COLLECTED = "cf_audit_event_collector_events_collected_total"
+REJECTED = "cf_audit_event_collector_events_rejected_total"
+EPOCH_UTC = EPOCH_TS.replace(tzinfo=dt.timezone.utc)
 
 
 def idempotent_append(
@@ -91,41 +81,79 @@ def idempotent_append(
     return target_df.unionByName(fresh.localCheckpoint(eager=False))
 
 
+def _arrow_events(rows: list[tuple]) -> pa.Table:
+    """``EVENT_ROWS`` tuples as one Arrow table.  ``created_at`` is an
+    aware UTC instant, so it crosses into Spark without any timezone
+    conversion (Arrow ``timestamp[us, UTC]`` is Spark's own encoding)."""
+    columns = list(zip(*rows))
+    return pa.table(
+        {
+            f.name: pa.array(
+                col,
+                pa.timestamp("us", tz="UTC")
+                if f.name == "created_at"
+                else pa.string(),
+            )
+            for f, col in zip(EVENT_ROWS.fields, columns)
+        }
+    )
+
+
 def ingest_delta(
-    batch_df: DataFrame, store, metrics: MetricsRegistry | None = None
+    rows: Iterable[tuple], store, metrics: MetricsRegistry | None = None
 ) -> int:
     """Store the batch's fresh events once; return how many were fresh.
 
     The one ingest step of the service path — the collector tick and the
-    streaming ``foreachBatch`` sink both call it.  Validation drops
-    epoch-or-older and null-guid rows, in-batch duplicates collapse, and
-    a broadcast left-anti join against the store's keys since the
-    batch's own oldest event removes everything already stored, however
-    old the source's rows are.  The store's append runs the anti-join and
-    returns the rows it stored, so no separate count runs.
-    """
-    from paas_auditor_spark.functions.timecross import parse_wall, ts_string
+    streaming ``foreachBatch`` sink both call it with decoded
+    ``EVENT_ROWS`` tuples whose ``created_at`` is aware UTC.  On the
+    driver:
 
-    valid, _quarantine = validate_events(batch_df)
-    # checkpointed so the floor read below decodes and dedups the batch
-    # once; the anti-join then reads the materialized rows
-    deduped = valid.dropDuplicates(["guid"]).localCheckpoint(eager=False)
-    # wall-clock string collect — a datetime-object collect would shift
-    # by the process-tz offset on a non-UTC host (functions/timecross.py)
-    lo = deduped.agg(ts_string(F.min("created_at")).alias("lo")).first()["lo"]
-    if lo is None:
-        return 0
-    fresh = deduped.join(
-        F.broadcast(store.overlap_keys_df(parse_wall(lo))), "guid", "left_anti"
-    )
-    n = store.append_events(fresh)
+    - rows with a null guid, a null ``created_at`` or one at or before
+      the epoch fail validation (P8 and the guid NOT NULL key) and are
+      counted in ``cf_audit_event_collector_events_rejected_total``; a
+      null key could never match the anti-join and would re-append on
+      every re-read;
+    - the first row per guid is kept;
+    - every guid the store holds at or after the batch's oldest event
+      (``store.overlap_keys``) is removed, however old the source's rows
+      are.
+
+    Nothing fresh means no Spark job.  Otherwise the fresh rows go to
+    ``store.append_events`` as one DataFrame built from an Arrow table,
+    in one partition so a parquet append commits one file.
+    """
+    first: dict[str, tuple] = {}
+    rejected = 0
+    for row in rows:
+        guid, created_at = row[0], row[1]
+        if guid is None or created_at is None or created_at <= EPOCH_UTC:
+            rejected += 1
+        else:
+            first.setdefault(guid, row)
+    fresh: list[tuple] = []
+    if first:
+        # naive UTC wall clock: the stores' floor convention
+        floor = (
+            min(r[1] for r in first.values())
+            .astimezone(dt.timezone.utc)
+            .replace(tzinfo=None)
+        )
+        stored = store.overlap_keys(floor)
+        fresh = [r for g, r in first.items() if g not in stored]
+    if fresh:
+        store.append_events(
+            store.spark.createDataFrame(
+                _arrow_events(fresh), EVENT_ROWS
+            ).coalesce(1)
+        )
     if metrics is not None:
-        metrics.inc("cf_audit_event_collector_events_collected_total", float(n))
-    return n
+        metrics.inc(REJECTED, float(rejected))
+        metrics.inc(COLLECTED, float(len(fresh)))
+    return len(fresh)
 
 
 __all__ = [
     "idempotent_append",
     "ingest_delta",
-    "validate_events",
 ]

@@ -9,8 +9,9 @@ the Spark engine:
 
 - warehouse init (W5, sources.bootstrap.init_warehouse)
 - collector tick: watermark fetch → ``operators.ingest.ingest_delta``
-  (validate → dedup → anti-join → append; only fresh rows are written —
-  never a rewrite of history, never a second copy of a stored event)
+  over the decoded tuples (validate → dedup → anti-join on the driver →
+  append; only fresh rows reach Spark, in one write job — never a
+  rewrite of history, never a second copy of a stored event)
 - shipper tick: ``streaming.ship.ship_tick`` — cursor query → ordered
   NDJSON batches with retries → a cursor commit after every acknowledged
   batch (on parquet an atomic replace of one JSON file, the stand-in for
@@ -38,8 +39,8 @@ from paas_auditor_spark.logs import JsonLogger
 from paas_auditor_spark.operators.ingest import ingest_delta
 from paas_auditor_spark.sources.paginated_http import (
     Transport,
+    decode_pages,
     fetch_event_pages,
-    pages_to_dataframe,
     watermark,
 )
 from paas_auditor_spark.stores import ParquetStore
@@ -131,9 +132,7 @@ class Service:
                 self.cfg.pagination_wait_s,
             )
         )
-        n = ingest_delta(
-            pages_to_dataframe(self.spark, pages), self.store, self.metrics
-        )
+        n = ingest_delta(list(decode_pages(pages)), self.store, self.metrics)
         self.metrics.inc(
             "cf_audit_event_collector_collect_duration_total",
             time.perf_counter() - t0,

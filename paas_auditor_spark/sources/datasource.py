@@ -64,7 +64,7 @@ class CfEventsStreamReader(SimpleDataSourceStreamReader):
     def _fetch_all(self, since: str) -> list[tuple]:
         """All rows newer than ``since``.  Rows without a parseable
         created_at are dropped here: they cannot order against the
-        watermark, and the loop path quarantines them anyway (P8)."""
+        watermark, and ``ingest_delta`` would reject them anyway (P8)."""
         pages = fetch_event_pages(
             self.transport,
             self.base_url,

@@ -21,15 +21,16 @@ between pages (rate limit), decode the envelope (S4) per page.
   the epoch (T2).
 
 Loop mode (``runner.Service.collector_tick``) runs the pager per tick and
-hands the decoded rows to Spark through ``pages_to_dataframe``; streaming
-mode (``sources.datasource.CfEventsStreamReader``) runs the same pager and
-decoder per micro-batch.  Tests inject any ``url -> dict`` callable as the
-transport, like the reference's httpmock suite
+hands the decoded tuples straight to ``operators.ingest.ingest_delta``;
+streaming mode (``sources.datasource.CfEventsStreamReader``) runs the
+same pager and decoder per micro-batch.  Tests inject any ``url -> dict``
+callable as the transport, like the reference's httpmock suite
 (cf_audit_event_fetcher_test.go:202-236).
 
 Scale notes: pagination is inherently sequential (next_url chaining), so
-the pager runs driver-side and hands decoded rows to Spark — the same
-boundary the reference draws with its fetch goroutine + channel.
+the pager runs driver-side — the same boundary the reference draws with
+its fetch goroutine + channel — and so does the ingest step that follows
+it: only the rows it finds fresh reach Spark, to be written.
 """
 
 from __future__ import annotations
@@ -43,7 +44,6 @@ import urllib.parse
 import urllib.request
 from collections.abc import Callable, Iterable, Iterator
 
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from paas_auditor_spark.operators.cursor import EPOCH_TS
@@ -69,7 +69,8 @@ CF_AUTH_ENV = (
 )
 
 # decoded rows: the event-table columns, every one nullable so a resource
-# missing a field reaches validate_events instead of failing the batch
+# missing a field reaches ingest_delta's validation instead of failing the
+# batch
 EVENT_ROWS = T.StructType(
     [T.StructField(f.name, f.dataType, True) for f in CF_AUDIT_EVENT.fields]
 )
@@ -266,8 +267,8 @@ def fetch_event_pages(
 def parse_created(created) -> dt.datetime | None:
     """RFC3339 → timezone-aware UTC datetime.  Fractional seconds and
     numeric offsets are accepted; a value without an offset is read as
-    UTC.  Unparseable values become None, so the row is quarantined by
-    validate_events instead of the batch dying on one bad record."""
+    UTC.  Unparseable values become None, so ``ingest_delta`` rejects the
+    row instead of the batch dying on one bad record."""
     if not isinstance(created, str) or not created:
         return None
     try:
@@ -313,11 +314,6 @@ def decode_pages(pages: Iterable[dict]) -> Iterator[tuple]:
     return (decode_resource(r) for p in pages for r in p.get("resources") or ())
 
 
-def pages_to_dataframe(spark: SparkSession, pages: list[dict]) -> DataFrame:
-    """Page envelopes → flat event DataFrame of decoded rows."""
-    return spark.createDataFrame(list(decode_pages(pages)), schema=EVENT_ROWS)
-
-
 # -- watermark --------------------------------------------------------------
 
 
@@ -342,7 +338,6 @@ __all__ = [
     "discover_token_url",
     "fetch_event_pages",
     "http_transport",
-    "pages_to_dataframe",
     "parse_created",
     "resolve_transport",
     "uaa_transport",

@@ -7,9 +7,11 @@ is parquet.  Both are exposed behind one small store surface so
 ``runner.Service`` is storage-agnostic:
 
 - ``latest_event_time()``  — watermark basis (store.go:289-308)
-- ``overlap_keys_df(floor)`` — dedup window keys for W1/T3
-- ``append_events(df)``    — idempotent insert (store.go:73-100); returns
-  the rows it stored
+- ``overlap_keys(floor)``  — the stored guids at or after ``floor``, as a
+  Python set: the dedup window of W1/T3, which ``ingest_delta`` applies
+  on the driver
+- ``append_events(df)``    — idempotent insert (store.go:73-100) of the
+  rows ``ingest_delta`` found fresh
 - ``event_count()``        — informer count (store.go:310-329 reads
   pg_class.reltuples)
 - ``effective_cursor(name)`` / ``upsert_cursor(...)`` — W2
@@ -22,9 +24,10 @@ is parquet.  Both are exposed behind one small store surface so
 ``DbApiStore`` pushes the cursor CTE, the count and the watermark MAX
 down to the database — exactly like the reference, whose Postgres does
 this work — because the database has the indexes and the result sets are
-tiny (1 row, or ≤8192 rows).  Bulk writes still flow through Spark
-partitions (``execute_partitionwise``: one connection + transaction per
-partition, ON CONFLICT DO NOTHING — W1 under task retries).
+tiny (1 row, the overlap window's keys, or ≤8192 rows).  Bulk writes
+still flow through Spark partitions (``execute_partitionwise``: one
+connection + transaction per partition, ON CONFLICT DO NOTHING — W1 under
+task retries).
 
 ``ParquetStore`` answers the per-tick reads from file operations, in the
 place of Postgres's ``created_at`` index and ``reltuples``.  Its layout:
@@ -54,11 +57,14 @@ place of Postgres's ``created_at`` index and ``reltuples``.  Its layout:
   directories, so ``spark.read.parquet(<table>)`` reads the same rows.
 
 The watermark is then the log's max, the count its row sum (exact), and
-``overlap_keys_df`` and ``unshipped_events`` read only the files whose
-logged max reaches their floor — one or two near the tail — with the
-pinned schema, so Spark runs no listing or schema-inference job.  The
-events table is not partitioned: pruning is by the per-file max.  The
-cursors are one small JSON file replaced atomically, with no Spark job.
+``overlap_keys`` and ``unshipped_events`` read only the files whose
+logged max reaches their floor — one or two near the tail.
+``overlap_keys`` reads their ``guid`` and ``created_at`` columns with
+pyarrow, so the anti-join runs no Spark job; ``unshipped_events`` reads
+them with Spark and the pinned schema, so Spark runs no listing or
+schema-inference job.  The events table is not partitioned: pruning is by
+the per-file max.  The cursors are one small JSON file replaced
+atomically, with no Spark job.
 """
 
 from __future__ import annotations
@@ -114,13 +120,25 @@ def _visible(name: str) -> bool:
     return not name.startswith(("_", "."))
 
 
+def _read_events(path: str, columns: list[str]) -> pa.Table:
+    """``columns`` of one events file with pyarrow, ``created_at`` in
+    microseconds: INT96 is read as ``us`` and a finer unit truncated,
+    which keeps every ``>= floor`` test at microsecond floors.  A zoned
+    column keeps its zone; its values are UTC instants either way."""
+    table = pq.read_table(
+        path, columns=columns, coerce_int96_timestamp_unit="us"
+    )
+    i = table.schema.get_field_index("created_at")
+    col = table.column(i)
+    if col.type.unit != "us":
+        col = col.cast(pa.timestamp("us", col.type.tz), safe=False)
+        table = table.set_column(i, "created_at", col)
+    return table
+
+
 def file_stats(path: str) -> FileStats:
     """Stats of one events file from its ``created_at`` column alone."""
-    col = pq.read_table(
-        path, columns=["created_at"], coerce_int96_timestamp_unit="us"
-    ).column(0)
-    if col.type.unit != "us":  # truncation keeps every `max >= floor` test
-        col = col.cast(pa.timestamp("us", col.type.tz), safe=False)
+    col = _read_events(path, ["created_at"]).column(0)
     bounds = pc.min_max(col)
     return FileStats(
         len(col), arrow_wall(bounds["min"]), arrow_wall(bounds["max"])
@@ -262,15 +280,20 @@ class ParquetStore:
 
     # -- reads ------------------------------------------------------------
 
-    def events_df(self, floor: dt.datetime | None = None) -> DataFrame:
-        """The events of the files whose logged max is at or after
-        ``floor`` (every file holding rows when ``floor`` is None), read
-        with the pinned schema: no listing or schema-inference job."""
-        files = [
+    def files(self, floor: dt.datetime | None = None) -> list[str]:
+        """Paths of the files whose logged max is at or after ``floor``
+        (every file holding rows when ``floor`` is None): what a read
+        from ``floor`` on touches."""
+        return [
             os.path.join(self.events_dir, n)
             for n, s in self._listed().items()
             if s.rows and (floor is None or s.hi is not None and s.hi >= floor)
         ]
+
+    def events_df(self, floor: dt.datetime | None = None) -> DataFrame:
+        """The events of ``files(floor)``, read with the pinned schema:
+        no listing or schema-inference job."""
+        files = self.files(floor)
         if not files:
             return self.spark.createDataFrame([], CF_AUDIT_EVENT)
         return self.spark.read.schema(CF_AUDIT_EVENT).parquet(*files)
@@ -282,13 +305,21 @@ class ParquetStore:
             default=EPOCH_TS,
         )
 
-    def overlap_keys_df(self, floor: dt.datetime) -> DataFrame:
-        """Stored guids at or after ``floor``, from the files whose logged
-        max reaches it.  Keys are unique in the store and feed a
-        broadcast anti-join, so no distinct is needed."""
-        return self.events_df(floor).filter(
-            F.col("created_at") >= to_ts(F.lit(wall_string(floor)))
-        ).select("guid")
+    def overlap_keys(self, floor: dt.datetime) -> set[str]:
+        """Stored guids at or after ``floor`` (naive UTC wall clock),
+        read with pyarrow from ``files(floor)``: no Spark job.  The
+        ``created_at`` values compare as UTC epoch microseconds — a naive
+        column (Spark's INT96) holds the UTC wall clock, a zoned one the
+        instant — so the process timezone never enters."""
+        at = (floor - EPOCH_TS) // dt.timedelta(microseconds=1)
+        keys: set[str] = set()
+        for path in self.files(floor):
+            table = _read_events(path, ["guid", "created_at"])
+            since = pc.greater_equal(
+                table.column("created_at").cast(pa.int64()), at
+            )
+            keys.update(table.column("guid").filter(since).to_pylist())
+        return keys
 
     def event_count(self) -> int:
         """The log's row sum: exact, with no Spark job."""
@@ -475,14 +506,12 @@ class DbApiStore:
         )  # store.go:289-308 incl. the epoch default on empty
         return rows[0][0] if rows else EPOCH_TS
 
-    def overlap_keys_df(self, floor: dt.datetime) -> DataFrame:
+    def overlap_keys(self, floor: dt.datetime) -> set[str]:
         rows = self._fetch(
             "SELECT guid FROM cf_audit_events WHERE created_at >= ?",
             (floor,),
         )
-        return self.spark.createDataFrame(
-            [(r[0],) for r in rows], schema="guid string"
-        )
+        return {r[0] for r in rows}
 
     def event_count(self) -> int:
         # Postgres path would read pg_class.reltuples (store.go:310-329);
@@ -491,16 +520,10 @@ class DbApiStore:
 
     # -- writes -----------------------------------------------------------
 
-    def append_events(self, fresh_df: DataFrame) -> int:
+    def append_events(self, fresh_df: DataFrame) -> None:
         """W1 strict parity: partition-wise ``INSERT … ON CONFLICT (guid)
         DO NOTHING`` — one connection + transaction per Spark partition,
-        idempotent under task retries.  Returns the rows offered, counted
-        first; checkpointed, so the count and the insert run the caller's
-        plan once."""
-        fresh_df = fresh_df.localCheckpoint(eager=False)
-        n = fresh_df.count()
-        if not n:
-            return 0
+        idempotent under task retries."""
         # created_at crosses the executor boundary as the JVM-rendered
         # wall-clock string (the DB casts it back): a datetime OBJECT
         # row would be converted with the executor's process tz and a
@@ -512,7 +535,6 @@ class DbApiStore:
             fresh, self._q(INSERT_EVENT), self.conn_factory,
             columns=EVENT_COLUMNS, max_partitions=self.write_partitions,
         )
-        return n
 
     # -- cursor / ship ----------------------------------------------------
 

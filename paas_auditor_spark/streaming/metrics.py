@@ -2,7 +2,10 @@
 same names, in a plain thread-safe dict registry (W6/T6 in SURVEY.md
 §2.6/§2.7).  The service's ticks and the streaming collector's
 ``foreachBatch`` sink update it on the driver, and ``render_text`` is what
-``/metrics`` serves.
+``/metrics`` serves.  Names beyond the reference's register on first use:
+the per-shipper names of a custom sink, and
+``cf_audit_event_collector_events_rejected_total``, which every ingest
+step adds to (zero included), so it is served from the first tick.
 """
 
 from __future__ import annotations
@@ -29,6 +32,9 @@ HELP = {
     "cf_audit_event_collector_errors_total": "Collector ticks that failed.",
     "cf_audit_event_collector_events_collected_total":
         "Events the collector stored.",
+    "cf_audit_event_collector_events_rejected_total":
+        "Fetched events the collector dropped for a null guid or a"
+        " created_at missing or at or before the epoch.",
     "cf_audit_events_to_splunk_shipper_errors_total":
         "Shipper ticks that stopped at a batch HEC did not acknowledge.",
     "cf_audit_events_to_splunk_shipper_events_shipped_total":

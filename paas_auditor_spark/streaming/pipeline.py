@@ -6,31 +6,56 @@ pkg/collectors/cf_audit_event_collector.go:30-104) is
 
     watermark = max(created_at) − 5s  (epoch when empty)
     pages     = paginated fetch since watermark
-    stored   += ingest_delta(batch, store)   # validate, guid dedup, append
+    stored   += ingest_delta(rows, store)   # validate, guid dedup, append
 
-``runner.Service.collector_tick`` runs it as a scheduled loop tick.
-Here the same ``operators.ingest.ingest_delta`` runs as a
-``foreachBatch`` sink (``store_sink``) under the CF API streaming source
-(``stream_api_to_store``, whose ``cf_events`` source fetches with the
-loop's CF client, ``sources/paginated_http.py``).  Deduplication is the store anti-join in ``ingest_delta`` in both modes;
-there is no separate streaming dedup state.  Sink errors fail the query —
-the collector's fail-fast policy (T8).
+``runner.Service.collector_tick`` runs it as a scheduled loop tick over
+the decoded tuples.  Here the same ``operators.ingest.ingest_delta`` runs
+as a ``foreachBatch`` sink (``store_sink``) under the CF API streaming
+source (``stream_api_to_store``, whose ``cf_events`` source fetches with
+the loop's CF client, ``sources/paginated_http.py``): the sink collects
+the micro-batch to the driver as tuples and hands them over, so only the
+fresh rows go back to Spark.  Deduplication is the store anti-join in
+``ingest_delta`` in both modes; there is no separate streaming dedup
+state.  Sink errors fail the query — the collector's fail-fast policy
+(T8).
 """
 
 from __future__ import annotations
 
+import datetime as dt
+
 from pyspark.sql import DataFrame, SparkSession
 
+from paas_auditor_spark.functions.timecross import parse_wall, ts_string
 from paas_auditor_spark.operators.ingest import ingest_delta
+from paas_auditor_spark.sources.paginated_http import EVENT_ROWS
 from paas_auditor_spark.streaming.metrics import MetricsRegistry
 
 
 def store_sink(store, metrics: MetricsRegistry | None = None):
     """foreachBatch sink into a pluggable store: ``ingest_delta`` per
-    micro-batch."""
+    micro-batch, over the batch collected as ``EVENT_ROWS`` tuples.
+
+    ``created_at`` is collected as the JVM-rendered wall-clock string and
+    parsed back as aware UTC (the session is pinned to UTC): a collected
+    datetime object would be converted with the process timezone."""
+    columns = [
+        ts_string(f.name).alias(f.name) if f.name == "created_at" else f.name
+        for f in EVENT_ROWS.fields
+    ]
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        ingest_delta(batch_df, store, metrics)
+        rows = [
+            (
+                r[0],
+                None
+                if r[1] is None
+                else parse_wall(r[1]).replace(tzinfo=dt.timezone.utc),
+                *r[2:],
+            )
+            for r in batch_df.select(*columns).collect()
+        ]
+        ingest_delta(rows, store, metrics)
 
     return sink
 

@@ -444,21 +444,26 @@ def test_rate_limit_429_retries_then_succeeds():
     assert sleeps == [0.5, 1.0]
 
 
-def test_decoder_stores_utc_under_non_utc_process_tz(spark):
-    """created_at is decoded timezone-aware, so the stored instant does
-    not move with the process timezone: 12:00Z stays 12:00 under
-    Asia/Kolkata (a naive datetime would be stored as 06:30)."""
+def test_decoder_stores_utc_under_non_utc_process_tz(spark, tmp_path):
+    """created_at is decoded timezone-aware, so the instant
+    ``ingest_delta`` stores does not move with the process timezone:
+    12:00Z stays 12:00 under Asia/Kolkata (a naive datetime would be
+    stored as 06:30)."""
     import os
     import time
 
-    from paas_auditor_spark.sources.paginated_http import pages_to_dataframe
+    from paas_auditor_spark.operators.ingest import ingest_delta
+    from paas_auditor_spark.sources.paginated_http import decode_pages
+    from paas_auditor_spark.stores import ParquetStore
 
     old = os.environ.get("TZ")
     os.environ["TZ"] = "Asia/Kolkata"
     time.tzset()
     try:
-        df = pages_to_dataframe(spark, [{"resources": [_resource(0)]}])
-        got = df.select(
+        store = ParquetStore(spark, str(tmp_path / "wh"))
+        rows = list(decode_pages([{"resources": [_resource(0)]}]))
+        assert ingest_delta(rows, store) == 1
+        got = store.events_df().select(
             F.date_format("created_at", "yyyy-MM-dd HH:mm:ss").alias("s")
         ).first()["s"]
     finally:

@@ -78,11 +78,13 @@ def spark_max_count(spark, path: str) -> tuple[str, int]:
     return row["mx"], row["n"]
 
 
-def test_tail_scans_touch_at_most_two_of_400_files(spark, tmp_path):
+def test_tail_scans_touch_at_most_two_of_400_files(spark, tmp_path, monkeypatch):
     """400 small files written straight into the table (the log never saw
-    them): the shipper's window and the anti-join's key scan each read at
-    most 2 files, and the watermark and count equal Spark's over the
+    them): the shipper's window and the anti-join's key read each touch
+    at most 2 files, and the watermark and count equal Spark's over the
     directory."""
+    from paas_auditor_spark import stores
+
     store = ParquetStore(spark, str(tmp_path / "wh"))
     for i in range(400):
         times = [B + dt.timedelta(seconds=10 * i + k) for k in range(3)]
@@ -99,11 +101,19 @@ def test_tail_scans_touch_at_most_two_of_400_files(spark, tmp_path):
         "398-2", "399-0", "399-1", "399-2"
     ]
 
-    keys = store.overlap_keys_df(last - dt.timedelta(seconds=5))
-    assert len(keys.inputFiles()) <= 2
-    assert sorted(r["guid"] for r in keys.collect()) == [
-        "399-0", "399-1", "399-2"
-    ]
+    read: list[str] = []
+    real = stores._read_events
+
+    def recording(path, columns):
+        read.append(path)
+        return real(path, columns)
+
+    monkeypatch.setattr(stores, "_read_events", recording)
+    keys = store.overlap_keys(last - dt.timedelta(seconds=5))
+    monkeypatch.undo()
+    assert 1 <= len(read) <= 2
+    assert read == store.files(last - dt.timedelta(seconds=5))
+    assert sorted(keys) == ["399-0", "399-1", "399-2"]
 
     mx, n = spark_max_count(spark, store.events_dir)
     assert store.latest_event_time() == dt.datetime.fromisoformat(mx) == last
@@ -165,7 +175,8 @@ def test_file_renamed_in_but_not_logged_is_reconciled(spark, tmp_path):
 def test_int96_file_stats_do_not_depend_on_process_tz(spark, tmp_path):
     """Spark writes ``created_at`` as INT96, which has no footer min/max;
     the stats come from the column itself and are the UTC wall clock
-    under any process timezone.  The instants sit around midnight, so a
+    under any process timezone, and so is the anti-join's key read, to
+    the microsecond.  The instants sit around midnight, so a
     shift by the New York or Kolkata offset would change them."""
     wh = str(tmp_path / "wh")
     lo, hi = B - dt.timedelta(minutes=20), B + dt.timedelta(minutes=20, microseconds=5)
@@ -186,14 +197,19 @@ def test_int96_file_stats_do_not_depend_on_process_tz(spark, tmp_path):
             time.tzset()
             shutil.rmtree(store.log_dir)  # every start reconciles afresh
             s = file_stats(path)
-            got[tz] = (s.lo, s.hi, ParquetStore(spark, wh).latest_event_time())
+            again = ParquetStore(spark, wh)
+            got[tz] = (
+                s.lo, s.hi, again.latest_event_time(),
+                sorted(again.overlap_keys(lo)),
+                sorted(again.overlap_keys(lo + dt.timedelta(microseconds=1))),
+            )
     finally:
         if old_tz is None:
             os.environ.pop("TZ", None)
         else:
             os.environ["TZ"] = old_tz
         time.tzset()
-    assert got["UTC"] == (lo, hi, hi)
+    assert got["UTC"] == (lo, hi, hi, ["a", "b"], ["b"])
     assert got["America/New_York"] == got["UTC"]
     assert got["Asia/Kolkata"] == got["UTC"]
 
@@ -239,7 +255,7 @@ def test_pruned_reads_match_full_scan(spark, tmp_path, floor_s):
             F.col("created_at") >= F.lit(floor.isoformat(sep=" ")).cast("timestamp")
         ).collect()
     )
-    assert sorted(r["guid"] for r in store.overlap_keys_df(floor).collect()) == want
+    assert sorted(store.overlap_keys(floor)) == want
     store.upsert_cursor("s", floor, "")
     assert [r["guid"] for r in store.unshipped_events("s", 100).collect()] == want
 

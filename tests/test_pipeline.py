@@ -12,16 +12,16 @@ import pytest
 
 from paas_auditor_spark.operators.cursor import EPOCH_TS
 from paas_auditor_spark.operators.ingest import (
+    REJECTED,
     idempotent_append,
     ingest_delta,
-    validate_events,
 )
 from paas_auditor_spark.sources.paginated_http import (
     EVENT_ROWS,
     build_events_url,
+    decode_pages,
     decode_resource,
     fetch_event_pages,
-    pages_to_dataframe,
 )
 from paas_auditor_spark.streaming.metrics import COUNTERS, GAUGES, MetricsRegistry
 from paas_auditor_spark.stores import ParquetStore
@@ -101,10 +101,14 @@ def test_pager_follows_next_url_and_paces():
     assert sleeps == [0.2, 0.2]
 
 
-def test_envelope_normalization(spark):
+def test_envelope_normalization(spark, tmp_path):
+    """Decoded envelope rows through ``ingest_delta`` are stored as the
+    decoder produced them, in the decoder's columns."""
     server = PageServer(make_pages([[0, 1, 2]]))
     pages = list(fetch_event_pages(server, "http://cc", BASE, wait_s=0))
-    df = pages_to_dataframe(spark, pages)
+    store = ParquetStore(spark, str(tmp_path / "wh"))
+    assert ingest_delta(list(decode_pages(pages)), store) == 3
+    df = store.events_df()
     rows = {r["guid"]: r for r in df.collect()}
     assert len(rows) == 3
     r0 = rows[str(uuid.UUID(int=0))]
@@ -114,8 +118,9 @@ def test_envelope_normalization(spark):
     assert r0["organization_guid"] is None  # '' -> NULL (P3)
     assert r0["space_guid"] == str(uuid.UUID(int=20_000))
     assert '"request": "r0"' in r0["metadata"] or '"request":"r0"' in r0["metadata"]
-    # the frame is exactly the decoder's rows, in the decoder's columns
-    assert df.schema == EVENT_ROWS
+    # the stored rows are exactly the decoder's rows, in its columns
+    (stored,) = store.files()
+    assert spark.read.parquet(stored).schema == EVENT_ROWS
     assert tuple(decode_resource(make_event(0))) == (
         r0["guid"], BASE.replace(tzinfo=dt.timezone.utc), *tuple(r0)[2:]
     )
@@ -170,18 +175,27 @@ def test_service_collect_then_overlap_reingest(spark, tmp_path):
     assert svc.metrics.get("cf_audit_event_collector_events_collected_total") == 7
 
 
-def test_validate_events_quarantines_epoch(spark):
+def test_validate_events_quarantines_epoch(spark, tmp_path):
+    """An event at the epoch fails the P8 CHECK in ``ingest_delta``: it is
+    counted as rejected and never stored, on a re-read either."""
     good = make_event(1)
     bad = make_event(2)
     bad["metadata"]["created_at"] = "1970-01-01T00:00:00Z"
-    df = pages_to_dataframe(
-        spark,
-        [{"total_results": 2, "total_pages": 1, "next_url": None,
-          "resources": [good, bad]}],
+    rows = list(
+        decode_pages(
+            [{"total_results": 2, "total_pages": 1, "next_url": None,
+              "resources": [good, bad]}]
+        )
     )
-    valid, quarantined = validate_events(df)
-    assert valid.count() == 1
-    assert quarantined.count() == 1
+    store = ParquetStore(spark, str(tmp_path / "wh"))
+    metrics = MetricsRegistry()
+    assert ingest_delta(rows, store, metrics) == 1
+    assert metrics.get(REJECTED) == 1
+    assert ingest_delta(rows, store, metrics) == 0
+    assert metrics.get(REJECTED) == 2
+    assert [r["guid"] for r in store.events_df().collect()] == [
+        str(uuid.UUID(int=1))
+    ]
 
 
 def test_service_watermark_empty_is_epoch(spark, tmp_path):
@@ -192,8 +206,10 @@ def test_service_watermark_empty_is_epoch(spark, tmp_path):
 
 
 def _events_df(spark, n=3):
+    """Events 0..n-1 as a frame of decoded rows; ``created_at`` is aware,
+    so it converts without the process timezone."""
     pages = make_pages([list(range(n))])
-    return pages_to_dataframe(spark, pages)
+    return spark.createDataFrame(list(decode_pages(pages)), EVENT_ROWS)
 
 
 SHIPPER = "cf-audit-events-to-splunk"
@@ -612,17 +628,17 @@ def test_null_guid_rows_quarantined_and_never_reappended(spark, tmp_path):
     (NULL never equals NULL)."""
     null_guid = make_event(2)
     null_guid["metadata"]["guid"] = None
-    batch = pages_to_dataframe(
-        spark,
-        [{"total_results": 2, "total_pages": 1, "next_url": None,
-          "resources": [make_event(1), null_guid]}],
+    batch = list(
+        decode_pages(
+            [{"total_results": 2, "total_pages": 1, "next_url": None,
+              "resources": [make_event(1), null_guid]}]
+        )
     )
-    valid, quarantined = validate_events(batch, ts_col="created_at")
-    assert valid.count() == 1
-    assert quarantined.count() == 1
-
     store = ParquetStore(spark, str(tmp_path / "wh"))
-    assert ingest_delta(batch, store) == 1
-    assert ingest_delta(batch, store) == 0
+    metrics = MetricsRegistry()
+    assert ingest_delta(batch, store, metrics) == 1
+    assert metrics.get(REJECTED) == 1
+    assert ingest_delta(batch, store, metrics) == 0
+    assert metrics.get(REJECTED) == 2
     # the null-guid row lands zero times; event 1 exactly once
     assert store.events_df().count() == 1

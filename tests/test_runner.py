@@ -509,8 +509,12 @@ def test_service_delivery_contract_under_faults(spark, tmp_path, fault):
 
 
 def test_collector_metrics_scraped_after_good_and_failing_tick(spark, tmp_path):
-    """/metrics shows the collector's duration after a good tick and its
-    error counter after a failing one, under both loop drivers."""
+    """/metrics shows the collector's duration after a good tick, the
+    events its validation rejected, and its error counter after a failing
+    tick, under both loop drivers."""
+    from paas_auditor_spark.operators.ingest import REJECTED
+    from paas_auditor_spark.streaming.metrics import HELP
+
     cfg = EngineConfig()
     cfg.pagination_wait_s = 0.0
     transport = PageServer([0, 1])
@@ -537,6 +541,21 @@ def test_collector_metrics_scraped_after_good_and_failing_tick(spark, tmp_path):
         assert m["cf_audit_event_collector_events_collected_total"] == 2
         assert m["cf_audit_event_collector_collect_duration_total"] > 0
         assert m["cf_audit_event_collector_errors_total"] == 0
+        assert m[REJECTED] == 0 and REJECTED in HELP
+
+        # an event at the epoch and one without a guid fail validation:
+        # counted as rejected, never stored
+        epoch, no_guid = _resource(2), _resource(3)
+        epoch["metadata"]["created_at"] = "1970-01-01T00:00:00Z"
+        no_guid["metadata"]["guid"] = None
+        svc.transport = lambda url: {
+            "next_url": None, "resources": [epoch, no_guid, _resource(4)]
+        }
+        svc.run_loops(max_ticks=1)
+        m = scrape()
+        assert m[REJECTED] == 2
+        assert m["cf_audit_event_collector_events_collected_total"] == 3
+        assert svc.store.event_count() == 3
 
         def down(url: str) -> dict:
             raise ConnectionError("CF API down")
@@ -670,6 +689,65 @@ def test_parquet_cursor_runs_no_spark_job(spark, tmp_path):
     assert got == [(at, "g7")]
     # the probe sees jobs where there are some
     assert spark_jobs_of(spark, lambda: store.events_df().count())
+
+
+def _data_files(store) -> int:
+    """Data files in the events table, the empty one the warehouse init
+    writes included."""
+    import os
+
+    return sum(
+        not n.startswith(("_", ".")) for n in os.listdir(store.events_dir)
+    )
+
+
+def test_collector_tick_runs_one_spark_job_per_append(spark, tmp_path):
+    """Validation, dedup, the batch floor and the anti-join run on the
+    driver: a collector tick with fresh rows runs exactly one Spark job
+    (the write) and commits exactly one file, and a tick that re-reads
+    only the overlap runs none."""
+    cfg = EngineConfig()
+    cfg.pagination_wait_s = 0.0
+    transport = PageServer(range(50))
+    svc = Service(
+        spark, warehouse_dir=str(tmp_path / "wh"), transport=transport, cfg=cfg
+    )
+    stored: list[int] = []
+    tick = lambda: stored.append(svc.collector_tick())  # noqa: E731
+    files = _data_files(svc.store)
+    assert len(spark_jobs_of(spark, tick)) == 1
+    assert _data_files(svc.store) == files + 1
+
+    transport.ids = range(45, 120)  # the overlap re-read plus 70 new rows
+    assert len(spark_jobs_of(spark, tick)) == 1
+    assert _data_files(svc.store) == files + 2
+
+    transport.ids = range(115, 120)  # only the overlap
+    assert spark_jobs_of(spark, tick) == []
+    assert _data_files(svc.store) == files + 2
+    assert stored == [50, 70, 0]
+    assert svc.store.event_count() == 120
+
+
+def test_store_sink_micro_batch_runs_at_most_two_spark_jobs(spark, tmp_path):
+    """The streaming sink collects the micro-batch (one job) and writes
+    its fresh rows (one job, one file); a replayed batch writes nothing."""
+    from paas_auditor_spark.sources.paginated_http import EVENT_ROWS, decode_pages
+    from paas_auditor_spark.stores import ParquetStore
+    from paas_auditor_spark.streaming.pipeline import store_sink
+
+    store = ParquetStore(spark, str(tmp_path / "wh"))
+    batch = spark.createDataFrame(
+        list(decode_pages([{"resources": [_resource(i) for i in range(30)]}])),
+        EVENT_ROWS,
+    )
+    sink = store_sink(store)
+    files = _data_files(store)
+    assert 1 <= len(spark_jobs_of(spark, lambda: sink(batch, 0))) <= 2
+    assert _data_files(store) == files + 1
+    assert len(spark_jobs_of(spark, lambda: sink(batch, 1))) <= 1
+    assert _data_files(store) == files + 1
+    assert store.event_count() == 30
 
 
 @pytest.mark.parametrize("layout", ["table", "swap_crash"])

@@ -207,3 +207,98 @@ def test_cursor_roundtrip_immune_to_process_tz_both_directions(spark, tmp_path):
     assert "12" not in {g for g, _ in results["UTC"]}
     assert results["America/New_York"] == results["UTC"]
     assert results["Asia/Kolkata"] == results["UTC"]
+
+
+def test_both_ingest_paths_store_and_ship_the_same_instants_under_any_process_tz(
+    spark, tmp_path
+):
+    """The collector tick hands ``ingest_delta`` the decoder's aware
+    datetimes; ``store_sink`` collects the micro-batch as wall-clock
+    strings.  Under UTC, America/New_York and Asia/Kolkata process
+    timezones both paths store the same ``created_at`` instants, derive
+    the same watermark and ship byte-identical payloads.  The events sit
+    around midnight UTC, one with a +05:30 offset and microseconds, so a
+    shift by either offset would show."""
+    import datetime as dt
+    import os
+    import time
+
+    from paas_auditor_spark.config import EngineConfig
+    from paas_auditor_spark.functions.timecross import ts_string
+    from paas_auditor_spark.runner import Service
+    from paas_auditor_spark.sources.paginated_http import EVENT_ROWS, decode_pages
+    from paas_auditor_spark.streaming.pipeline import store_sink
+
+    created = [
+        "2024-03-01T23:40:00Z",
+        "2024-03-02T05:35:00.250001+05:30",  # 00:05:00.250001Z
+        "2024-03-02T00:20:00Z",
+    ]
+    page = {
+        "next_url": None,
+        "resources": [
+            {
+                "metadata": {"guid": f"g{i}", "created_at": c},
+                "entity": {"type": "audit.app.create", "metadata": {"i": i}},
+            }
+            for i, c in enumerate(created)
+        ],
+    }
+    cfg = EngineConfig()
+    cfg.pagination_wait_s = 0.0
+
+    def run(tz: str) -> dict:
+        out = {}
+        for mode in ("collector_tick", "store_sink"):
+            sent: list[str] = []
+            svc = Service(
+                spark,
+                warehouse_dir=str(tmp_path / tz.replace("/", "_") / mode),
+                transport=lambda url: page,
+                sender=sent.append,
+                cfg=cfg,
+            )
+            if mode == "collector_tick":
+                assert svc.collector_tick() == 3
+            else:
+                batch = spark.createDataFrame(
+                    list(decode_pages([page])), EVENT_ROWS
+                )
+                store_sink(svc.store, svc.metrics)(batch, 0)
+                assert svc.store.event_count() == 3
+            assert svc.shipper_tick() == 3
+            stored = sorted(
+                (r["guid"], r["ca"])
+                for r in svc.store.events_df()
+                .select("guid", ts_string("created_at").alias("ca"))
+                .collect()
+            )
+            out[mode] = (stored, svc._watermark(), sent)
+        return out
+
+    old_tz = os.environ.get("TZ")
+    results = {}
+    try:
+        for tz in ("UTC", "America/New_York", "Asia/Kolkata"):
+            os.environ["TZ"] = tz
+            time.tzset()
+            results[tz] = run(tz)
+    finally:
+        if old_tz is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
+
+    want_stored = [
+        ("g0", "2024-03-01 23:40:00.000000"),
+        ("g1", "2024-03-02 00:05:00.250001"),
+        ("g2", "2024-03-02 00:20:00.000000"),
+    ]
+    want = results["UTC"]["collector_tick"]
+    assert want[0] == want_stored
+    assert want[1] == dt.datetime(2024, 3, 2, 0, 19, 55)
+    assert '"created_at":"2024-03-02T00:05:00Z"' in want[2][0]
+    for tz, modes in results.items():
+        for mode, got in modes.items():
+            assert got == want, (tz, mode)
