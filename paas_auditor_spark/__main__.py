@@ -62,20 +62,15 @@ def main() -> int:
     # duckdb for file paths — both behind import-try)
     store = None
     if os.environ.get("ENGINE_STORE", "").lower() == "jdbc":
-        from paas_auditor_spark.sinks.jdbc import dbapi_factory
-        from paas_auditor_spark.stores import DbApiStore
+        from paas_auditor_spark.stores import DbApiStore, dbapi_factory
 
         db_url = os.environ.get("DATABASE_URL", "postgres://localhost:5432/")
         if db_url.startswith(("postgres://", "postgresql://")):
-            factory = dbapi_factory("psycopg2", db_url)
-            store = DbApiStore(spark, factory, paramstyle="pyformat")
-        else:
-            # a DuckDB FILE is single-writer: the partition-wise insert
-            # path must not open concurrent connections (store contract)
-            factory = dbapi_factory("duckdb", db_url)
             store = DbApiStore(
-                spark, factory, paramstyle="qmark", write_partitions=1
+                dbapi_factory("psycopg2", db_url), paramstyle="pyformat"
             )
+        else:
+            store = DbApiStore(dbapi_factory("duckdb", db_url))
 
     service = Service(
         spark,

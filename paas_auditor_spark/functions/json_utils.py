@@ -15,7 +15,9 @@ exactly the layout Go's ``json.Marshal`` emits for the ``cfclient.Event``
 struct — and splices the raw ``metadata`` JSON string in unmodified, the
 same byte-faithful JSONB round-trip the reference does
 (store.go:82,171-176: metadata is stored and re-emitted as raw JSON).
-Everything is a JVM column expression; no Python in the ship hot path.
+Everything is a JVM column expression, for the registry queries
+(``splunk_envelope``).  The service's shipper builds the same envelope
+on the driver from the store's rows (``streaming.ship.hec_envelope``).
 """
 
 from __future__ import annotations

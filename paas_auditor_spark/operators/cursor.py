@@ -29,9 +29,10 @@ the scalar subqueries, and strictly cheaper than a broadcast cross-join.
 The big-side work is then a range filter plus a global top-k, which Spark
 executes as TakeOrderedAndProject (no full sort, no full shuffle:
 per-partition heaps of size k merged on the driver).  The filter prunes
-nothing by itself: the events table is not partitioned and Spark's INT96
-``created_at`` has no footer stats.  ``stores.ParquetStore`` hands in
-only the files whose logged max reaches the cursor.
+nothing by itself: Spark's INT96 ``created_at`` has no footer stats.
+This operator serves the ``unshipped_events`` registry query; the
+service's ``stores.ParquetStore.unshipped_events`` runs the same window
+with pyarrow over only the files whose logged max reaches the cursor.
 """
 
 from __future__ import annotations
@@ -80,7 +81,7 @@ def effective_cursor(
 
 
 def unshipped_events(
-    events_df: DataFrame,
+    events: DataFrame,
     cursor_ts: dt.datetime,
     shipped_id: str,
     batch_cap: int = 8192,
@@ -109,10 +110,10 @@ def unshipped_events(
     # on a non-UTC host (caught by a TZ sweep: the batch read 8192 rows,
     # not 8191; see functions/timecross.py for the invariant).
     lit_cursor = F.lit(wall_string(cursor_ts)).cast(
-        events_df.schema[ts_col].dataType
+        events.schema[ts_col].dataType
     )
     recent = (
-        events_df.filter(F.col(ts_col) >= lit_cursor)
+        events.filter(F.col(ts_col) >= lit_cursor)
         .orderBy(F.col(ts_col).asc(), F.col(id_col).asc())
         .limit(batch_cap)
     )

@@ -13,10 +13,11 @@ this step is ``sources.paginated_http.decode_resource``):
 Where the work runs: a tick's rows are already Python tuples on the
 driver in both collector modes (the loop-mode pager decodes them, and so
 does the streaming source), a few thousand at most.  ``ingest_delta``
-therefore validates, deduplicates and anti-joins them in plain Python,
-and only the fresh rows reach Spark, as one Arrow batch written as one
-file.  A tick that stores rows runs one Spark job (the write); a tick
-that re-read only the overlap runs none.
+therefore validates, deduplicates and anti-joins them in plain Python
+and hands the fresh tuples to the store: ``ParquetStore`` writes them as
+one Arrow batch in one file (one Spark job), ``DbApiStore`` inserts them
+in one transaction (no Spark job).  A tick that re-read only the overlap
+runs no Spark job.
 
 Scale notes (SURVEY.md §7 hard-part 1): the anti-join against the store
 must not scan full history.  ``ingest_delta`` asks the store only for the
@@ -33,12 +34,10 @@ from __future__ import annotations
 import datetime as dt
 from collections.abc import Iterable
 
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from paas_auditor_spark.operators.cursor import EPOCH_TS
-from paas_auditor_spark.sources.paginated_http import EVENT_ROWS
 from paas_auditor_spark.streaming.metrics import MetricsRegistry
 
 COLLECTED = "cf_audit_event_collector_events_collected_total"
@@ -81,24 +80,6 @@ def idempotent_append(
     return target_df.unionByName(fresh.localCheckpoint(eager=False))
 
 
-def _arrow_events(rows: list[tuple]) -> pa.Table:
-    """``EVENT_ROWS`` tuples as one Arrow table.  ``created_at`` is an
-    aware UTC instant, so it crosses into Spark without any timezone
-    conversion (Arrow ``timestamp[us, UTC]`` is Spark's own encoding)."""
-    columns = list(zip(*rows))
-    return pa.table(
-        {
-            f.name: pa.array(
-                col,
-                pa.timestamp("us", tz="UTC")
-                if f.name == "created_at"
-                else pa.string(),
-            )
-            for f, col in zip(EVENT_ROWS.fields, columns)
-        }
-    )
-
-
 def ingest_delta(
     rows: Iterable[tuple], store, metrics: MetricsRegistry | None = None
 ) -> int:
@@ -119,9 +100,8 @@ def ingest_delta(
       (``store.overlap_keys``) is removed, however old the source's rows
       are.
 
-    Nothing fresh means no Spark job.  Otherwise the fresh rows go to
-    ``store.append_events`` as one DataFrame built from an Arrow table,
-    in one partition so a parquet append commits one file.
+    Nothing fresh means no store write.  Otherwise the fresh tuples go
+    to ``store.append_events``.
     """
     first: dict[str, tuple] = {}
     rejected = 0
@@ -142,11 +122,7 @@ def ingest_delta(
         stored = store.overlap_keys(floor)
         fresh = [r for g, r in first.items() if g not in stored]
     if fresh:
-        store.append_events(
-            store.spark.createDataFrame(
-                _arrow_events(fresh), EVENT_ROWS
-            ).coalesce(1)
-        )
+        store.append_events(fresh)
     if metrics is not None:
         metrics.inc(REJECTED, float(rejected))
         metrics.inc(COLLECTED, float(len(fresh)))

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 
 def interval_join(
-    events_df: DataFrame,
+    events: DataFrame,
     intervals_df: DataFrame,
     ts_col: str,
     start_col: str,
@@ -45,7 +45,7 @@ def interval_join(
     """
     if how not in ("inner", "left"):
         raise ValueError(f"how={how!r}: only 'inner' and 'left' supported")
-    ev = events_df.withColumn(
+    ev = events.withColumn(
         "__bin", F.floor(F.unix_timestamp(F.col(ts_col)) / bin_width_s)
     )
     iv = intervals_df.withColumn(

@@ -10,9 +10,11 @@ the Spark engine:
 - warehouse init (W5, sources.bootstrap.init_warehouse)
 - collector tick: watermark fetch → ``operators.ingest.ingest_delta``
   over the decoded tuples (validate → dedup → anti-join on the driver →
-  append; only fresh rows reach Spark, in one write job — never a
-  rewrite of history, never a second copy of a stored event)
-- shipper tick: ``streaming.ship.ship_tick`` — cursor query → ordered
+  append of the fresh tuples: one Spark write job on parquet, one
+  transaction on a DB-API store — never a rewrite of history, never a
+  second copy of a stored event)
+- shipper tick: ``streaming.ship.ship_tick`` — cursor query (rows read
+  on the driver: no Spark job) → envelopes built in Python → ordered
   NDJSON batches with retries → a cursor commit after every acknowledged
   batch (on parquet an atomic replace of one JSON file, the stand-in for
   W2's upsert)

@@ -10,24 +10,29 @@ is parquet.  Both are exposed behind one small store surface so
 - ``overlap_keys(floor)``  — the stored guids at or after ``floor``, as a
   Python set: the dedup window of W1/T3, which ``ingest_delta`` applies
   on the driver
-- ``append_events(df)``    — idempotent insert (store.go:73-100) of the
+- ``append_events(rows)``  — idempotent insert (store.go:73-100) of the
   rows ``ingest_delta`` found fresh
 - ``event_count()``        — informer count (store.go:310-329 reads
   pg_class.reltuples)
 - ``effective_cursor(name)`` / ``upsert_cursor(...)`` — W2
   (store.go:191-199, 262-287); the shipper commits after every
   acknowledged HEC batch, so a commit must cost milliseconds
-- ``unshipped_events(cursor_ts, shipped_id, cap)`` — the shipper CTE
-  (store.go:191-225)
+- ``unshipped_events(name, cap)`` — the shipper CTE (store.go:191-225)
+
+Every method takes and returns plain Python values: ``EVENT_ROWS``
+tuples (``created_at`` aware UTC going in, naive UTC wall clock coming
+out), naive UTC wall-clock datetimes, sets, counts.  The batches are
+small — the rows of one collector tick, at most ``cap`` (8192) rows to
+ship — so the stores are the sink code of the service path, as the
+reference's Go store is, and the shipper builds its envelopes from the
+returned tuples.
 
 **Where the relational work runs differs by backend, deliberately.**
-``DbApiStore`` pushes the cursor CTE, the count and the watermark MAX
-down to the database — exactly like the reference, whose Postgres does
-this work — because the database has the indexes and the result sets are
-tiny (1 row, the overlap window's keys, or ≤8192 rows).  Bulk writes
-still flow through Spark partitions (``execute_partitionwise``: one
-connection + transaction per partition, ON CONFLICT DO NOTHING — W1 under
-task retries).
+``DbApiStore`` pushes the cursor CTE, the count, the watermark MAX and
+the insert down to the database — exactly like the reference, whose
+Postgres does this work — because the database has the indexes.  Its
+append is one ``INSERT … ON CONFLICT (guid) DO NOTHING`` ``executemany``
+in one transaction on the driver (W1).
 
 ``ParquetStore`` answers the per-tick reads from file operations, in the
 place of Postgres's ``created_at`` index and ``reltuples``.  Its layout:
@@ -58,18 +63,18 @@ place of Postgres's ``created_at`` index and ``reltuples``.  Its layout:
 
 The watermark is then the log's max, the count its row sum (exact), and
 ``overlap_keys`` and ``unshipped_events`` read only the files whose
-logged max reaches their floor — one or two near the tail.
-``overlap_keys`` reads their ``guid`` and ``created_at`` columns with
-pyarrow, so the anti-join runs no Spark job; ``unshipped_events`` reads
-them with Spark and the pinned schema, so Spark runs no listing or
-schema-inference job.  The events table is not partitioned: pruning is by
-the per-file max.  The cursors are one small JSON file replaced
-atomically, with no Spark job.
+logged max reaches their floor — one or two near the tail — with
+pyarrow, so neither runs a Spark job.  The events table is not
+partitioned: pruning is by the per-file max.  The cursors are one small
+JSON file replaced atomically, with no Spark job.  An append is the one
+Spark job: the fresh rows become one Arrow-built DataFrame in one
+partition, written as one file.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import importlib
 import json
 import os
 import shutil
@@ -80,25 +85,25 @@ from typing import NamedTuple
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
 from paas_auditor_spark.functions.timecross import (
-    arrow_wall,
     parse_wall,
-    to_ts,
     ts_string,
     wall_string,
 )
-from paas_auditor_spark.operators.cursor import (
-    EPOCH_TS,
-    unshipped_events as _unshipped_events_df,
-)
-from paas_auditor_spark.schemas import CF_AUDIT_EVENT
-from paas_auditor_spark.sinks.jdbc import execute_partitionwise
+from paas_auditor_spark.operators.cursor import EPOCH_TS
 from paas_auditor_spark.sources.bootstrap import EVENTS_TABLE, init_warehouse
+from paas_auditor_spark.sources.paginated_http import EVENT_ROWS
 
-EVENT_COLUMNS = [f.name for f in CF_AUDIT_EVENT.fields]
+EVENT_COLUMNS = EVENT_ROWS.names
+# the events as pyarrow reads them: created_at naive UTC wall clock
+ARROW_EVENTS = pa.schema(
+    [
+        (c, pa.timestamp("us") if c == "created_at" else pa.string())
+        for c in EVENT_COLUMNS
+    ]
+)
 # {name: [updated_at wall-clock string, shipped_id]}
 CURSORS_FILE = "shipper_cursors.json"
 STAGING = "_staging"
@@ -121,33 +126,52 @@ def _visible(name: str) -> bool:
 
 
 def _read_events(path: str, columns: list[str]) -> pa.Table:
-    """``columns`` of one events file with pyarrow, ``created_at`` in
-    microseconds: INT96 is read as ``us`` and a finer unit truncated,
-    which keeps every ``>= floor`` test at microsecond floors.  A zoned
-    column keeps its zone; its values are UTC instants either way."""
+    """``columns`` of one events file with pyarrow, typed as in
+    ``ARROW_EVENTS``.  ``created_at`` becomes naive UTC microseconds:
+    INT96 (Spark) is read as ``us`` and a finer unit truncated, which
+    keeps every ``>= floor`` test at microsecond floors; a zoned column
+    (pyarrow writers) keeps its instant.  It passes through int64
+    because pyarrow casts a zoned column to naive as the zone's local
+    wall clock; the process timezone never enters."""
     table = pq.read_table(
         path, columns=columns, coerce_int96_timestamp_unit="us"
     )
     i = table.schema.get_field_index("created_at")
     col = table.column(i)
-    if col.type.unit != "us":
-        col = col.cast(pa.timestamp("us", col.type.tz), safe=False)
-        table = table.set_column(i, "created_at", col)
-    return table
+    utc = col.cast(pa.timestamp("us", col.type.tz), safe=False)
+    table = table.set_column(i, "created_at", utc.cast(pa.int64()))
+    return table.cast(pa.schema([ARROW_EVENTS.field(c) for c in columns]))
+
+
+def _arrow_events(rows: list[tuple]) -> pa.Table:
+    """``EVENT_ROWS`` tuples as one Arrow table.  ``created_at`` is an
+    aware UTC instant, so it crosses into Spark without any timezone
+    conversion (Arrow ``timestamp[us, UTC]`` is Spark's own encoding).
+    It must be UTC: pyarrow builds this array from the wall clock and
+    drops any other offset."""
+    return pa.table(
+        {
+            c: pa.array(
+                col,
+                pa.timestamp("us", tz="UTC")
+                if c == "created_at"
+                else pa.string(),
+            )
+            for c, col in zip(EVENT_COLUMNS, zip(*rows))
+        }
+    )
 
 
 def file_stats(path: str) -> FileStats:
     """Stats of one events file from its ``created_at`` column alone."""
     col = _read_events(path, ["created_at"]).column(0)
     bounds = pc.min_max(col)
-    return FileStats(
-        len(col), arrow_wall(bounds["min"]), arrow_wall(bounds["max"])
-    )
+    return FileStats(len(col), bounds["min"].as_py(), bounds["max"].as_py())
 
 
 class ParquetStore:
     """Local/lakehouse store: parquet events with a per-file stats log,
-    Spark-side relational work over the files near the tail, cursors in
+    pyarrow reads of the files near the tail, cursors in
     ``<warehouse>/shipper_cursors.json``."""
 
     def __init__(self, spark: SparkSession, warehouse_dir: str) -> None:
@@ -290,13 +314,17 @@ class ParquetStore:
             if s.rows and (floor is None or s.hi is not None and s.hi >= floor)
         ]
 
-    def events_df(self, floor: dt.datetime | None = None) -> DataFrame:
-        """The events of ``files(floor)``, read with the pinned schema:
-        no listing or schema-inference job."""
-        files = self.files(floor)
-        if not files:
-            return self.spark.createDataFrame([], CF_AUDIT_EVENT)
-        return self.spark.read.schema(CF_AUDIT_EVENT).parquet(*files)
+    def _since(self, floor: dt.datetime, columns: list[str]) -> pa.Table:
+        """``columns`` of the rows at or after ``floor`` (naive UTC wall
+        clock), read with pyarrow from ``files(floor)``: no Spark job."""
+        at = pa.scalar(floor, pa.timestamp("us"))
+        parts = [ARROW_EVENTS.empty_table().select(columns)]
+        for path in self.files(floor):
+            table = _read_events(path, columns)
+            parts.append(
+                table.filter(pc.greater_equal(table.column("created_at"), at))
+            )
+        return pa.concat_tables(parts)
 
     def latest_event_time(self) -> dt.datetime:
         """The log's max ``created_at``, epoch when the table is empty."""
@@ -306,20 +334,9 @@ class ParquetStore:
         )
 
     def overlap_keys(self, floor: dt.datetime) -> set[str]:
-        """Stored guids at or after ``floor`` (naive UTC wall clock),
-        read with pyarrow from ``files(floor)``: no Spark job.  The
-        ``created_at`` values compare as UTC epoch microseconds — a naive
-        column (Spark's INT96) holds the UTC wall clock, a zoned one the
-        instant — so the process timezone never enters."""
-        at = (floor - EPOCH_TS) // dt.timedelta(microseconds=1)
-        keys: set[str] = set()
-        for path in self.files(floor):
-            table = _read_events(path, ["guid", "created_at"])
-            since = pc.greater_equal(
-                table.column("created_at").cast(pa.int64()), at
-            )
-            keys.update(table.column("guid").filter(since).to_pylist())
-        return keys
+        """Stored guids at or after ``floor`` (naive UTC wall clock)."""
+        keys = self._since(floor, ["guid", "created_at"])["guid"]
+        return set(keys.to_pylist())
 
     def event_count(self) -> int:
         """The log's row sum: exact, with no Spark job."""
@@ -327,13 +344,17 @@ class ParquetStore:
 
     # -- writes -----------------------------------------------------------
 
-    def append_events(self, fresh_df: DataFrame) -> int:
-        """Stage, commit by rename, then log; returns the rows stored.  A
-        staged file without rows is deleted, never committed.  The files
-        of one append commit one by one, as Spark's own job commit moves
-        them."""
+    def append_events(self, rows: list[tuple]) -> int:
+        """Store ``EVENT_ROWS`` tuples (aware UTC ``created_at``): stage
+        them as one file, commit it by rename, then log it; returns the
+        rows stored.  The rows reach Spark as one Arrow-built DataFrame in
+        one partition, so the write is one Spark job and one file."""
+        if not rows:
+            return 0
         staged = os.path.join(self.staging_dir, uuid.uuid4().hex)
-        fresh_df.write.parquet(staged)
+        self.spark.createDataFrame(
+            _arrow_events(rows), EVENT_ROWS
+        ).coalesce(1).write.parquet(staged)
         stats = {}
         for name in sorted(filter(_visible, os.listdir(staged))):
             path = os.path.join(staged, name)
@@ -354,15 +375,20 @@ class ParquetStore:
         entry = self._cursors().get(name)
         return (parse_wall(entry[0]), entry[1]) if entry else (EPOCH_TS, "")
 
-    def unshipped_events(self, name: str, cap: int) -> DataFrame:
-        """The shipper CTE computed Spark-side: the cursor from the
-        cursors file, then the capped chronological window (P6/P7/O3/O4)
-        as a range filter + TakeOrdered top-k over the files whose logged
-        max reaches the cursor."""
+    def unshipped_events(self, name: str, cap: int) -> list[tuple]:
+        """The shipper CTE on the driver: the cursor from the cursors
+        file, the rows at or after it in ship order (``created_at``,
+        ``guid``), capped at ``cap``, and only then the last-shipped guid
+        dropped (P6/P7/O3/O4), so a saturated window yields ``cap - 1``
+        rows as the reference's does."""
         cursor_ts, shipped_id = self.effective_cursor(name)
-        return _unshipped_events_df(
-            self.events_df(cursor_ts), cursor_ts, shipped_id, cap
+        window = (
+            self._since(cursor_ts, EVENT_COLUMNS)
+            .sort_by([("created_at", "ascending"), ("guid", "ascending")])
+            .slice(0, cap)
         )
+        window = window.filter(pc.not_equal(window["guid"], shipped_id))
+        return list(zip(*(col.to_pylist() for col in window.columns)))
 
     def upsert_cursor(
         self, name: str, updated_at: dt.datetime, shipped_id: str
@@ -444,35 +470,34 @@ ORDER BY created_at ASC, guid ASC
 """
 
 
+def dbapi_factory(module_name: str, *args, **kwargs) -> Callable[[], object]:
+    """A DB-API connection factory: ``module_name``'s ``connect`` called
+    with ``args``, resolved when a connection is opened, so a driver that
+    is not installed fails only where it is used."""
+
+    def _connect() -> object:
+        return importlib.import_module(module_name).connect(*args, **kwargs)
+
+    return _connect
+
+
 class DbApiStore:
     """Relational store over any DB-API driver (Postgres, DuckDB, ...).
 
-    ``conn_factory`` must be picklable (see ``sinks.jdbc.dbapi_factory``):
-    it is shipped into executor tasks for the partition-wise ON CONFLICT
-    writes.  Driver-side statements (cursor CTE, MAX, COUNT) open their
-    own short-lived connection per tick — the reference equally runs one
-    transaction per statement (store.go:185-191).
+    Every statement opens its own short-lived connection from
+    ``conn_factory`` (see ``dbapi_factory``) on the driver — the
+    reference equally runs one transaction per statement
+    (store.go:185-191).
     """
 
     def __init__(
-        self,
-        spark: SparkSession,
-        conn_factory: Callable[[], object],
-        paramstyle: str = "qmark",
-        write_partitions: int | None = None,
+        self, conn_factory: Callable[[], object], paramstyle: str = "qmark"
     ) -> None:
         """``paramstyle``: DB-API placeholder dialect of the driver —
         ``qmark`` (duckdb) keeps statements as-is, ``format``/``pyformat``
-        (psycopg2) rewrites ``?`` to ``%s``.
-
-        ``write_partitions`` caps the concurrent writer connections
-        (connection-stampede guard; REQUIRED as 1 for single-writer
-        engines like a DuckDB file — Postgres takes N happily).
-        """
-        self.spark = spark
+        (psycopg2) rewrites ``?`` to ``%s``."""
         self.conn_factory = conn_factory
         self._ph = "%s" if paramstyle in ("format", "pyformat") else "?"
-        self.write_partitions = write_partitions
         self._exec_ddl()
 
     def _q(self, sql: str) -> str:
@@ -520,21 +545,29 @@ class DbApiStore:
 
     # -- writes -----------------------------------------------------------
 
-    def append_events(self, fresh_df: DataFrame) -> None:
-        """W1 strict parity: partition-wise ``INSERT … ON CONFLICT (guid)
-        DO NOTHING`` — one connection + transaction per Spark partition,
-        idempotent under task retries."""
-        # created_at crosses the executor boundary as the JVM-rendered
-        # wall-clock string (the DB casts it back): a datetime OBJECT
-        # row would be converted with the executor's process tz and a
-        # non-UTC host would store shifted wall clocks
-        fresh = fresh_df.withColumn(
-            "created_at", ts_string(F.col("created_at"))
-        )
-        execute_partitionwise(
-            fresh, self._q(INSERT_EVENT), self.conn_factory,
-            columns=EVENT_COLUMNS, max_partitions=self.write_partitions,
-        )
+    def append_events(self, rows: list[tuple]) -> None:
+        """W1 strict parity: one ``INSERT … ON CONFLICT (guid) DO
+        NOTHING`` ``executemany`` in one transaction (store.go:73-100).
+        ``created_at`` (aware UTC) is bound as the naive UTC wall clock: a
+        driver binds an aware datetime to a ``TIMESTAMP`` column through
+        the process timezone."""
+        utc = dt.timezone.utc
+        conn = self.conn_factory()
+        try:
+            cur = conn.cursor()
+            # explicit: DuckDB autocommits every row otherwise (psycopg2,
+            # which opens a transaction itself, only warns)
+            cur.execute("BEGIN TRANSACTION")
+            cur.executemany(
+                self._q(INSERT_EVENT),
+                [
+                    (r[0], r[1].astimezone(utc).replace(tzinfo=None), *r[2:])
+                    for r in rows
+                ],
+            )
+            cur.execute("COMMIT")
+        finally:
+            conn.close()  # an uncommitted transaction rolls back
 
     # -- cursor / ship ----------------------------------------------------
 
@@ -550,24 +583,11 @@ class DbApiStore:
         )
         return rows[0][0], rows[0][1]
 
-    def unshipped_events(self, name: str, cap: int) -> DataFrame:
+    def unshipped_events(self, name: str, cap: int) -> list[tuple]:
         """The shipper CTE delegated verbatim to the database — exactly
         the reference's plan (its Postgres resolves the cursor subqueries
-        and the capped index scan); the bounded result (≤ cap rows) lifts
-        into a DataFrame for envelope serialization."""
-        rows = self._fetch(UNSHIPPED_SQL, (name, cap))
-        # the DB returns wall-clock naive datetimes; they must NOT cross
-        # into Spark as objects (createDataFrame converts via the
-        # process tz) — render to strings and parse JVM-side instead
-        str_rows = [
-            (r[0], wall_string(r[1]), *r[2:]) for r in rows
-        ]
-        schema = ", ".join(
-            f"{f.name} {'string' if f.name == 'created_at' else f.dataType.simpleString()}"
-            for f in CF_AUDIT_EVENT.fields
-        )
-        df = self.spark.createDataFrame(str_rows, schema=schema)
-        return df.withColumn("created_at", to_ts("created_at"))
+        and the capped index scan)."""
+        return self._fetch(UNSHIPPED_SQL, (name, cap))
 
     def upsert_cursor(
         self, name: str, updated_at: dt.datetime, shipped_id: str
@@ -581,4 +601,4 @@ class DbApiStore:
             conn.close()
 
 
-__all__ = ["DbApiStore", "ParquetStore"]
+__all__ = ["DbApiStore", "ParquetStore", "dbapi_factory"]

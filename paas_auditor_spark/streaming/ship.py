@@ -25,27 +25,22 @@ re-expresses the reference shipper
 
 Scale notes (SURVEY.md §7 hard-part 3): total ship order + stop-on-failure
 implies sequential delivery of the ≤8192-event batch, so the loop runs
-driver-side over the collected batch — single-threaded like the
-reference's shipper.  Payload serialization stays distributed (the
-envelope column is computed by executors before collect); the envelope
-expression is built once per deploy env and column set and reused by
-every tick, since building it costs more py4j calls than the tick's
-collect.
+driver-side — single-threaded like the reference's shipper.  The store
+returns the batch as Python tuples and ``hec_envelope`` serializes each
+one on the driver, as the reference marshals each event in-process
+(shipper.go:117-192): a tick runs no Spark job.
 """
 
 from __future__ import annotations
 
-import functools
+import json
 import random
 import time
 import urllib.request
 from collections.abc import Callable, Iterable, Iterator
 from typing import TypeVar
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-
-from paas_auditor_spark.functions.json_utils import event_json, splunk_envelope
+from paas_auditor_spark.functions.timecross import epoch_utc
 from paas_auditor_spark.streaming.metrics import MetricsRegistry
 
 Sender = Callable[[str], None]  # raises on delivery failure
@@ -130,53 +125,48 @@ def send_with_retry(
             backoff *= BACKOFF_FACTOR
 
 
-def build_payloads(batch_df: DataFrame, deploy_env: str) -> DataFrame:
-    """(guid, created_at_s, payload) for a ship batch — the full-fidelity
-    P13 envelope (all 13 event fields + raw metadata, json.Marshal order;
-    shipper.go:24-28,187-192).  Missing columns (synthetic test frames)
-    default to ''.  Serialization is JVM column expressions on executors;
-    only the bounded ready-to-send rows reach the driver.
+def hec_envelope(row: tuple, deploy_env: str) -> str:
+    """The HEC payload of one ``EVENT_ROWS`` tuple (``created_at`` naive
+    UTC): the full 13-field ``cfclient.Event`` in ``json.Marshal`` order
+    inside the P13 envelope (shipper.go:24-28,187-192).
+
+    A NULL string field is written as ``""`` (a Go string is never nil)
+    and the raw ``metadata`` JSON is spliced in unchanged, NULL as
+    ``null`` (store.go:171-176,251-256).  The JVM twin is
+    ``json_utils.event_json`` + ``splunk_envelope``.  The two agree byte
+    for byte but for one case: a C0 control other than ``\\b \\f \\n \\r
+    \\t`` is escaped with lowercase hex here (``\\u001f``, as Go writes
+    it) and with uppercase hex by Jackson (``\\u001F``).  Both parse to
+    the same JSON.
     """
-    return batch_df.select(
-        *_payload_columns(deploy_env, frozenset(batch_df.columns))
-    )
-
-
-@functools.lru_cache(maxsize=16)
-def _payload_columns(
-    deploy_env: str, cols: frozenset[str]
-) -> tuple[Column, ...]:
-    """The ``build_payloads`` projection for one deploy env and column set;
-    the Columns are unresolved expressions, valid for any frame with those
-    columns."""
-    from paas_auditor_spark.functions.timecross import ts_string
-
-    def _c(name: str) -> Column:
-        return F.col(name) if name in cols else F.lit("")
-
-    evt = event_json(
-        F.col("guid"),
-        F.col("created_at"),
-        F.col("event_type"),
-        _c("actor"),
-        _c("actor_type"),
-        _c("actor_name"),
-        _c("actor_username"),
-        _c("actee"),
-        _c("actee_type"),
-        _c("actee_name"),
-        organization_guid=_c("organization_guid"),
-        space_guid=_c("space_guid"),
-        metadata=F.col("metadata") if "metadata" in cols else None,
+    (guid, created_at, event_type, actor, actor_type, actor_name,
+     actor_username, actee, actee_type, actee_name, organization_guid,
+     space_guid, metadata) = row
+    fields = {
+        "guid": guid,
+        "type": event_type,
+        "created_at": created_at and created_at.strftime("%Y-%m-%dT%H:%M:%SZ"),
+        "actor": actor,
+        "actor_type": actor_type,
+        "actor_name": actor_name,
+        "actor_username": actor_username,
+        "actee": actee,
+        "actee_type": actee_type,
+        "actee_name": actee_name,
+        "organization_guid": organization_guid,
+        "space_guid": space_guid,
+    }
+    scalars = json.dumps(
+        {k: "" if v is None else v for k, v in fields.items()},
+        ensure_ascii=False,
+        separators=(",", ":"),
     )
     return (
-        F.col("guid").cast("string").alias("guid"),
-        # the event time travels ONLY as the JVM-rendered wall-clock
-        # string: no driver-side consumer reads a datetime object, and
-        # collecting one would convert via the process tz — the exact
-        # bug functions/timecross.py exists to prevent
-        ts_string(F.col("created_at")).alias("created_at_s"),
-        splunk_envelope(evt, deploy_env).alias("payload"),
+        '{"sourcetype":"cf-audit-event","source":'
+        + json.dumps(deploy_env, ensure_ascii=False)
+        + ',"event":' + scalars[:-1]
+        + ',"metadata":' + ("null" if metadata is None else metadata)
+        + "}}"
     )
 
 
@@ -201,18 +191,16 @@ def ship_tick(
     session) observes the first failure — the reference logs it before
     breaking (shipper.go:125-130).
     """
-    from paas_auditor_spark.functions.timecross import epoch_utc, parse_wall
-
     t0 = time.perf_counter()
-    rows = build_payloads(
-        store.unshipped_events(name, cap), deploy_env
-    ).collect()  # ≤ cap rows, ship order preserved
+    # ≤ cap rows in ship order, each with its envelope
+    items = [
+        (row, hec_envelope(row, deploy_env))
+        for row in store.unshipped_events(name, cap)
+    ]
     shipped = 0
-    for batch in hec_batches(rows, lambda row: row["payload"]):
+    for batch in hec_batches(items, lambda item: item[1]):
         try:
-            send_with_retry(
-                sender, "\n".join(row["payload"] for row in batch), sleep
-            )
+            send_with_retry(sender, "\n".join(p for _, p in batch), sleep)
         except Exception as ex:
             if metrics:
                 metrics.inc(f"{_mname(name)}_errors_total")
@@ -221,22 +209,20 @@ def ship_tick(
                     "ship.failed",
                     ex,
                     {
-                        "guid": batch[0]["guid"],
+                        "guid": batch[0][0][0],
                         "batch_events": len(batch),
                         "shipped_before_failure": shipped,
                     },
                 )
             break
         shipped += len(batch)
-        # the timestamp comes from the wall-clock string twin, not a
-        # process-tz-converted datetime object
-        last_ts = parse_wall(batch[-1]["created_at_s"])
+        last = batch[-1][0]
         if metrics:
             metrics.inc(f"{_mname(name)}_events_shipped_total", len(batch))
             metrics.set(
-                f"{_mname(name)}_latest_event_timestamp", epoch_utc(last_ts)
+                f"{_mname(name)}_latest_event_timestamp", epoch_utc(last[1])
             )
-        store.upsert_cursor(name, last_ts, batch[-1]["guid"])
+        store.upsert_cursor(name, last[1], last[0])
     if metrics:
         metrics.inc(
             f"{_mname(name)}_ship_duration_total", time.perf_counter() - t0
@@ -254,8 +240,8 @@ __all__ = [
     "HEC_BATCH_BYTES",
     "HEC_BATCH_EVENTS",
     "Sender",
-    "build_payloads",
     "hec_batches",
+    "hec_envelope",
     "hec_sender",
     "send_with_retry",
     "ship_tick",

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 
 def windowed_event_counts(
-    events_df: DataFrame,
+    events: DataFrame,
     window_duration: str = "1 hour",
     slide_duration: str | None = None,
     watermark_delay: str = "5 seconds",
@@ -37,15 +37,15 @@ def windowed_event_counts(
     mirroring the reference's 5s overlap tolerance T2); on a batch
     DataFrame the watermark is a no-op and the result is exact.
     """
-    if events_df.isStreaming:
-        events_df = events_df.withWatermark(ts_col, watermark_delay)
+    if events.isStreaming:
+        events = events.withWatermark(ts_col, watermark_delay)
     win = (
         F.window(ts_col, window_duration, slide_duration)
         if slide_duration
         else F.window(ts_col, window_duration)
     )
     return (
-        events_df.groupBy(win.alias("win"), F.col(type_col))
+        events.groupBy(win.alias("win"), F.col(type_col))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(F.sum(value_col), 2).alias("total_value"),

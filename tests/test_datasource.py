@@ -238,15 +238,14 @@ def test_native_api_to_store_pipeline(registered, tmp_path):
     once in the database across triggers despite the overlap re-read."""
     import duckdb
 
-    from paas_auditor_spark.sinks.jdbc import dbapi_factory
-    from paas_auditor_spark.stores import DbApiStore
+    from paas_auditor_spark.stores import DbApiStore, dbapi_factory
     from paas_auditor_spark.streaming.metrics import MetricsRegistry
     from paas_auditor_spark.streaming.pipeline import stream_api_to_store
 
     spark = registered
     server = PagedEventsServer(n_events=6, page_size_cap=10)
     db = str(tmp_path / "native.duckdb")
-    store = DbApiStore(spark, dbapi_factory("duckdb", db), write_partitions=1)
+    store = DbApiStore(dbapi_factory("duckdb", db))
     metrics = MetricsRegistry()
     try:
         q = stream_api_to_store(
@@ -463,7 +462,7 @@ def test_decoder_stores_utc_under_non_utc_process_tz(spark, tmp_path):
         store = ParquetStore(spark, str(tmp_path / "wh"))
         rows = list(decode_pages([{"resources": [_resource(0)]}]))
         assert ingest_delta(rows, store) == 1
-        got = store.events_df().select(
+        got = spark.read.parquet(store.events_dir).select(
             F.date_format("created_at", "yyyy-MM-dd HH:mm:ss").alias("s")
         ).first()["s"]
     finally:
@@ -528,7 +527,7 @@ def test_both_collector_modes_store_and_ship_the_same_rows(registered, tmp_path)
         server.close()
 
     def rows(store):
-        df = store.events_df()
+        df = spark.read.parquet(store.events_dir)
         assert len(df.columns) == 13
         return [tuple(r) for r in df.orderBy("guid").collect()]
 

@@ -1,8 +1,9 @@
 """The parquet store's events stats log (``stores.ParquetStore``).
 
 The per-tick reads trust a log of per-file stats: the watermark and the
-count come from it without Spark, and the shipper's and the anti-join's
-scans read only the files whose logged max reaches their floor.  The
+count come from it without Spark, and the shipper's window and the
+anti-join's keys are read with pyarrow from only the files whose logged
+max reaches their floor.  The
 directory listing stays the authority on which rows exist, so files the
 log never saw are reconciled, and staged files that were never renamed
 in are neither read nor shipped.  These tests count files and jobs, not
@@ -23,7 +24,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from paas_auditor_spark.functions.timecross import ts_string
-from paas_auditor_spark.stores import EVENT_COLUMNS, ParquetStore, file_stats
+from paas_auditor_spark.operators.cursor import unshipped_events
+from paas_auditor_spark.sources.paginated_http import EVENT_ROWS
+from paas_auditor_spark.stores import (
+    EVENT_COLUMNS,
+    DbApiStore,
+    ParquetStore,
+    dbapi_factory,
+    file_stats,
+)
 from paas_auditor_spark.streaming.ship import ship_tick
 
 from test_runner import spark_jobs_of
@@ -51,20 +60,19 @@ def arrow_events(guids: list[str], times: list[dt.datetime]) -> pa.Table:
     return pa.table(cols)
 
 
+def event_rows(rows: list[tuple[str, dt.datetime]]) -> list[tuple]:
+    """``EVENT_ROWS`` tuples for (guid, UTC wall clock) pairs, as the
+    decoder makes them: ``created_at`` aware UTC."""
+    return [
+        (g, t.replace(tzinfo=dt.timezone.utc), *["x"] * 10, "{}")
+        for g, t in rows
+    ]
+
+
 def spark_events(spark, rows: list[tuple[str, dt.datetime]]):
-    """Events as a Spark frame, ``created_at`` parsed JVM-side from
-    wall-clock strings so no process timezone touches it."""
-    df = spark.createDataFrame(
-        [(g, t.isoformat(sep=" ")) for g, t in rows],
-        "guid string, created_at string",
-    ).withColumn("created_at", F.to_timestamp("created_at"))
-    return df.select(
-        *(
-            F.col(c) if c in df.columns
-            else F.lit("{}" if c == "metadata" else "x").alias(c)
-            for c in EVENT_COLUMNS
-        )
-    )
+    """``event_rows`` as a Spark frame; the aware ``created_at``
+    converts without the process timezone."""
+    return spark.createDataFrame(event_rows(rows), EVENT_ROWS)
 
 
 def data_files(path: str) -> list[str]:
@@ -94,13 +102,6 @@ def test_tail_scans_touch_at_most_two_of_400_files(spark, tmp_path, monkeypatch)
         )
     last = B + dt.timedelta(seconds=10 * 399 + 2)
 
-    store.upsert_cursor("s", B + dt.timedelta(seconds=10 * 398 + 1), "398-1")
-    unshipped = store.unshipped_events("s", 8192)
-    assert len(unshipped.inputFiles()) <= 2
-    assert [r["guid"] for r in unshipped.collect()] == [
-        "398-2", "399-0", "399-1", "399-2"
-    ]
-
     read: list[str] = []
     real = stores._read_events
 
@@ -108,6 +109,17 @@ def test_tail_scans_touch_at_most_two_of_400_files(spark, tmp_path, monkeypatch)
         read.append(path)
         return real(path, columns)
 
+    cursor_ts = B + dt.timedelta(seconds=10 * 398 + 1)
+    store.upsert_cursor("s", cursor_ts, "398-1")
+    tail = store.files(cursor_ts)  # reconciles the 400 unlogged files
+    monkeypatch.setattr(stores, "_read_events", recording)
+    unshipped = store.unshipped_events("s", 8192)
+    monkeypatch.undo()
+    assert 1 <= len(read) <= 2
+    assert read == tail
+    assert [r[0] for r in unshipped] == ["398-2", "399-0", "399-1", "399-2"]
+
+    read.clear()
     monkeypatch.setattr(stores, "_read_events", recording)
     keys = store.overlap_keys(last - dt.timedelta(seconds=5))
     monkeypatch.undo()
@@ -126,7 +138,7 @@ def test_staged_leftover_is_swept_and_never_shipped(spark, tmp_path):
     start removes it."""
     wh = str(tmp_path / "wh")
     store = ParquetStore(spark, wh)
-    assert store.append_events(spark_events(spark, [("a", B)])) == 1
+    assert store.append_events(event_rows([("a", B)])) == 1
     leftover = os.path.join(store.staging_dir, "killed")
     os.makedirs(leftover)
     pq.write_table(
@@ -136,7 +148,7 @@ def test_staged_leftover_is_swept_and_never_shipped(spark, tmp_path):
 
     assert store.event_count() == 1
     assert store.latest_event_time() == B
-    assert [r["guid"] for r in store.unshipped_events("s", 10).collect()] == ["a"]
+    assert [r[0] for r in store.unshipped_events("s", 10)] == ["a"]
 
     again = ParquetStore(spark, wh)
     assert not os.path.exists(store.staging_dir)
@@ -152,7 +164,7 @@ def test_file_renamed_in_but_not_logged_is_reconciled(spark, tmp_path):
     watermark, in the same store and after a restart."""
     wh = str(tmp_path / "wh")
     store = ParquetStore(spark, wh)
-    store.append_events(spark_events(spark, [("a", B)]))
+    store.append_events(event_rows([("a", B)]))
     spark_events(spark, [("b", B + dt.timedelta(hours=1))]).coalesce(1).write.parquet(
         str(tmp_path / "elsewhere")
     )
@@ -181,7 +193,7 @@ def test_int96_file_stats_do_not_depend_on_process_tz(spark, tmp_path):
     wh = str(tmp_path / "wh")
     lo, hi = B - dt.timedelta(minutes=20), B + dt.timedelta(minutes=20, microseconds=5)
     store = ParquetStore(spark, wh)
-    store.append_events(spark_events(spark, [("a", lo), ("b", hi)]).coalesce(1))
+    store.append_events(event_rows([("a", lo), ("b", hi)]))
     (part,) = [n for n in data_files(store.events_dir) if file_stats(
         os.path.join(store.events_dir, n)).rows]
     path = os.path.join(store.events_dir, part)
@@ -216,9 +228,9 @@ def test_int96_file_stats_do_not_depend_on_process_tz(spark, tmp_path):
 
 def test_empty_append_commits_no_file(spark, tmp_path):
     store = ParquetStore(spark, str(tmp_path / "wh"))
-    store.append_events(spark_events(spark, [("a", B)]))
+    store.append_events(event_rows([("a", B)]))
     files, entries = data_files(store.events_dir), os.listdir(store.log_dir)
-    assert store.append_events(spark_events(spark, [("a", B)]).limit(0)) == 0
+    assert store.append_events([]) == 0
     assert data_files(store.events_dir) == files
     assert os.listdir(store.log_dir) == entries
     assert store.event_count() == 1
@@ -228,24 +240,26 @@ def test_informer_and_watermark_run_no_spark_job(spark, tmp_path):
     from paas_auditor_spark.runner import Service
 
     svc = Service(spark, warehouse_dir=str(tmp_path / "wh"))
-    svc.store.append_events(spark_events(spark, [("a", B), ("b", B)]))
+    svc.store.append_events(event_rows([("a", B), ("b", B)]))
     assert spark_jobs_of(spark, svc.informer_tick) == []
     assert spark_jobs_of(spark, svc.store.latest_event_time) == []
     assert svc.metrics.get("informer_cf_audit_events_total") == 2
     # the probe sees jobs where there are some
-    assert spark_jobs_of(spark, lambda: svc.store.events_df().count())
+    full_scan = spark.read.parquet(svc.store.events_dir)
+    assert spark_jobs_of(spark, full_scan.count)
 
 
 @pytest.mark.parametrize("floor_s", [0, 30, 60])
 def test_pruned_reads_match_full_scan(spark, tmp_path, floor_s):
     """The anti-join keys and the shipper window over the pruned files
-    equal the same filters over every file."""
+    equal the same filter and the Spark cursor operator over every
+    file."""
     store = ParquetStore(spark, str(tmp_path / "wh"))
     for k in range(4):
         store.append_events(
-            spark_events(
-                spark, [(f"{k}-{j}", B + dt.timedelta(seconds=20 * k + j)) for j in range(5)]
-            ).coalesce(1)
+            event_rows(
+                [(f"{k}-{j}", B + dt.timedelta(seconds=20 * k + j)) for j in range(5)]
+            )
         )
     floor = B + dt.timedelta(seconds=floor_s)
     everything = spark.read.parquet(store.events_dir)
@@ -257,7 +271,78 @@ def test_pruned_reads_match_full_scan(spark, tmp_path, floor_s):
     )
     assert sorted(store.overlap_keys(floor)) == want
     store.upsert_cursor("s", floor, "")
-    assert [r["guid"] for r in store.unshipped_events("s", 100).collect()] == want
+    window = [
+        r["guid"] for r in unshipped_events(everything, floor, "", 100).collect()
+    ]
+    assert window == want
+    assert [r[0] for r in store.unshipped_events("s", 100)] == window
+
+
+def make_store(kind: str, spark, tmp_path):
+    if kind == "parquet":
+        return ParquetStore(spark, str(tmp_path / "wh"))
+    return DbApiStore(dbapi_factory("duckdb", str(tmp_path / "store.duckdb")))
+
+
+@pytest.mark.parametrize("kind", ["parquet", "dbapi"])
+def test_mixed_encodings_ship_one_window(spark, tmp_path, kind):
+    """History in a pyarrow file whose ``created_at`` is zoned (here
+    Asia/Kolkata, the same instants as UTC), as the benchmark seeds its
+    warehouse, beside Spark's INT96 appends interleaved with it in time:
+    the shipper's window is one ship order of naive UTC wall clocks, equal
+    to the Spark cursor operator's over the directory.  ``DbApiStore``,
+    given the same rows through ``append_events``, returns the same
+    window."""
+    history = [(f"h{i}", B + dt.timedelta(seconds=10 * i)) for i in range(6)]
+    appends = [
+        [("a0", B + dt.timedelta(seconds=5)), ("a1", B + dt.timedelta(seconds=20))],
+        [("a2", B + dt.timedelta(seconds=45, microseconds=7))],
+    ]
+    store = make_store(kind, spark, tmp_path)
+    if kind == "parquet":
+        table = arrow_events(*map(list, zip(*history)))
+        zoned = table.column("created_at").cast(pa.timestamp("us", "Asia/Kolkata"))
+        pq.write_table(
+            table.set_column(1, "created_at", zoned),
+            os.path.join(store.events_dir, "part-history.parquet"),
+        )
+    else:
+        store.append_events(event_rows(history))
+    for rows in appends:
+        store.append_events(event_rows(rows))
+    store.upsert_cursor("s", B + dt.timedelta(seconds=10), "h1")
+
+    got = store.unshipped_events("s", 100)
+    assert [(r[0], r[1]) for r in got] == [
+        ("a1", B + dt.timedelta(seconds=20)),
+        ("h2", B + dt.timedelta(seconds=20)),
+        ("h3", B + dt.timedelta(seconds=30)),
+        ("h4", B + dt.timedelta(seconds=40)),
+        ("a2", B + dt.timedelta(seconds=45, microseconds=7)),
+        ("h5", B + dt.timedelta(seconds=50)),
+    ]
+    assert all(len(r) == len(EVENT_COLUMNS) for r in got)
+    if kind == "parquet":
+        everything = spark.read.parquet(store.events_dir)
+        want = unshipped_events(everything, B + dt.timedelta(seconds=10), "h1")
+        assert [r[0] for r in got] == [r["guid"] for r in want.collect()]
+
+
+@pytest.mark.parametrize("kind", ["parquet", "dbapi"])
+def test_saturated_window_drops_the_shipped_guid_after_the_cap(
+    spark, tmp_path, kind
+):
+    """The cap applies before the last-shipped guid is dropped, as in the
+    reference's CTE: with more rows than the cap from the cursor on, cap
+    N yields N - 1 rows."""
+    store = make_store(kind, spark, tmp_path)
+    store.append_events(
+        event_rows([(f"e{i}", B + dt.timedelta(seconds=i)) for i in range(10)])
+    )
+    store.upsert_cursor("s", B, "e0")
+    assert [r[0] for r in store.unshipped_events("s", 5)] == ["e1", "e2", "e3", "e4"]
+    store.upsert_cursor("s", B + dt.timedelta(seconds=8), "e8")
+    assert [r[0] for r in store.unshipped_events("s", 5)] == ["e9"]
 
 
 def test_concurrent_readers_and_writer_lose_no_stats(spark, tmp_path):

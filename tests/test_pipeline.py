@@ -6,9 +6,13 @@
 from __future__ import annotations
 
 import datetime as dt
+import functools
+import json
 import uuid
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 
 from paas_auditor_spark.operators.cursor import EPOCH_TS
 from paas_auditor_spark.operators.ingest import (
@@ -108,7 +112,7 @@ def test_envelope_normalization(spark, tmp_path):
     pages = list(fetch_event_pages(server, "http://cc", BASE, wait_s=0))
     store = ParquetStore(spark, str(tmp_path / "wh"))
     assert ingest_delta(list(decode_pages(pages)), store) == 3
-    df = store.events_df()
+    df = spark.read.parquet(store.events_dir)
     rows = {r["guid"]: r for r in df.collect()}
     assert len(rows) == 3
     r0 = rows[str(uuid.UUID(int=0))]
@@ -166,7 +170,7 @@ def test_service_collect_then_overlap_reingest(spark, tmp_path):
     server2 = PageServer(make_pages([[3, 4, 5, 6]]))
     svc.transport = server2
     assert svc.collector_tick() == 2  # only the genuinely new events land
-    events = svc.store.events_df()
+    events = spark.read.parquet(svc.store.events_dir)
     assert events.count() == 7
     assert events.select("guid").distinct().count() == 7
     # source-side pushdown (S2) of watermark = max - 5s (collector.go:36)
@@ -193,7 +197,7 @@ def test_validate_events_quarantines_epoch(spark, tmp_path):
     assert metrics.get(REJECTED) == 1
     assert ingest_delta(rows, store, metrics) == 0
     assert metrics.get(REJECTED) == 2
-    assert [r["guid"] for r in store.events_df().collect()] == [
+    assert [r["guid"] for r in spark.read.parquet(store.events_dir).collect()] == [
         str(uuid.UUID(int=1))
     ]
 
@@ -205,20 +209,44 @@ def test_service_watermark_empty_is_epoch(spark, tmp_path):
 # --- shipper (reference cf_audit_events_to_splunk_shipper_test.go) --------
 
 
+def _events(n=3) -> list[tuple]:
+    """Events 0..n-1 as decoded ``EVENT_ROWS`` tuples (aware UTC
+    ``created_at``)."""
+    return list(decode_pages(make_pages([list(range(n))])))
+
+
 def _events_df(spark, n=3):
-    """Events 0..n-1 as a frame of decoded rows; ``created_at`` is aware,
-    so it converts without the process timezone."""
-    pages = make_pages([list(range(n))])
-    return spark.createDataFrame(list(decode_pages(pages)), EVENT_ROWS)
+    """``_events(n)`` as a frame; the aware ``created_at`` converts
+    without the process timezone."""
+    return spark.createDataFrame(_events(n), EVENT_ROWS)
+
+
+def _jvm_envelopes(df, deploy_env: str) -> list[str]:
+    """The HEC payloads of ``df``'s rows from the JVM projection
+    (``event_json`` + ``splunk_envelope``), in ``df``'s order."""
+    from pyspark.sql import functions as F
+
+    from paas_auditor_spark.functions.json_utils import event_json, splunk_envelope
+
+    evt = event_json(
+        *(F.col(c) for c in EVENT_ROWS.names[:10]),
+        organization_guid=F.col("organization_guid"),
+        space_guid=F.col("space_guid"),
+        metadata=F.col("metadata"),
+    )
+    return [
+        r["p"]
+        for r in df.select(splunk_envelope(evt, deploy_env).alias("p")).collect()
+    ]
 
 
 SHIPPER = "cf-audit-events-to-splunk"
 ERRORS = "cf_audit_events_to_splunk_shipper_errors_total"
 
 
-def _stored(spark, tmp_path, events) -> ParquetStore:
+def _stored(spark, tmp_path, rows) -> ParquetStore:
     store = ParquetStore(spark, str(tmp_path / "wh"))
-    store.append_events(events)
+    store.append_events(rows)
     return store
 
 
@@ -234,7 +262,7 @@ def _envelopes(bodies: list[str]) -> list[str]:
 def test_ship_happy_path(spark, tmp_path):
     metrics = MetricsRegistry()
     sent: list[str] = []
-    store = _stored(spark, tmp_path, _events_df(spark))
+    store = _stored(spark, tmp_path, _events())
     shipped = ship_tick(
         store, sent.append, SHIPPER, "test", 8192,
         sleep=no_sleep, metrics=metrics,
@@ -278,7 +306,7 @@ def test_ship_stop_on_failure_then_reship(spark, tmp_path):
     """250 events ship as batches 0-99, 100-199, 200-249; batch 2 fails
     after its retries, so the tick stops there (W4) with the cursor at
     the last event of batch 1, and the next tick re-ships from event 100."""
-    store = _stored(spark, tmp_path, _events_df(spark, 250))
+    store = _stored(spark, tmp_path, _events(250))
     metrics = MetricsRegistry()
     calls: list[str] = []
 
@@ -316,20 +344,19 @@ def test_ship_stop_on_failure_then_reship(spark, tmp_path):
 
 def test_ship_batch_bounds(spark, tmp_path):
     """Batches end at HEC_BATCH_EVENTS events or before HEC_BATCH_BYTES of
-    body; order holds across bodies and every envelope is the
-    ``build_payloads`` payload, byte for byte."""
+    body; order holds across bodies and every envelope is the JVM
+    ``event_json`` + ``splunk_envelope`` payload, byte for byte."""
     import json as _json
 
     from paas_auditor_spark.streaming.ship import (
         HEC_BATCH_BYTES,
         HEC_BATCH_EVENTS,
-        build_payloads,
         hec_batches,
     )
 
     assert HEC_BATCH_EVENTS == 100
     events = _events_df(spark, 250)
-    store = _stored(spark, tmp_path, events)
+    store = _stored(spark, tmp_path, _events(250))
     metrics = MetricsRegistry()
     sent: list[str] = []
     shipped = ship_tick(
@@ -339,11 +366,7 @@ def test_ship_batch_bounds(spark, tmp_path):
     assert shipped == 250
     assert metrics.get(ERRORS) == 0
     assert [len(b.split("\n")) for b in sent] == [100, 100, 50]
-    want = [
-        r["payload"]
-        for r in build_payloads(events.orderBy("created_at", "guid"), "test")
-        .collect()
-    ]
+    want = _jvm_envelopes(events.orderBy("created_at", "guid"), "test")
     assert _envelopes(sent) == want
     assert [_json.loads(e)["event"]["guid"] for e in _envelopes(sent)] == [
         str(uuid.UUID(int=i)) for i in range(250)
@@ -426,7 +449,7 @@ def test_cursor_upsert_and_monotonic(spark, tmp_path):
 def test_informer_gauges(spark, tmp_path):
     from paas_auditor_spark.runner import Service
 
-    svc = Service(spark, store=_stored(spark, tmp_path, _events_df(spark, 4)))
+    svc = Service(spark, store=_stored(spark, tmp_path, _events(4)))
     svc.informer_tick()
     metrics = svc.metrics
     assert metrics.get("informer_cf_audit_events_total") == 4.0
@@ -536,7 +559,7 @@ def test_event_json_emits_empty_string_for_null_fields(spark):
     from paas_auditor_spark.functions.json_utils import event_json
 
     df = spark.createDataFrame(
-        [("g1", dt.datetime(2024, 3, 1), "audit.x", None)],
+        [("g1", dt.datetime(2024, 3, 1, tzinfo=dt.timezone.utc), "audit.x", None)],
         "guid string, created_at timestamp, event_type string,"
         " actor_name string",
     )
@@ -557,14 +580,73 @@ def test_event_json_emits_empty_string_for_null_fields(spark):
             metadata=F.lit(None).cast("string"),
         ).alias("j")
     ).first()["j"]
-    ev = _json.loads(payload)
-    assert ev["actor_name"] == ""  # present, not dropped
-    assert ev["organization_guid"] == ""
-    assert list(ev.keys()) == [
-        "guid", "type", "created_at", "actor", "actor_type", "actor_name",
-        "actor_username", "actee", "actee_type", "actee_name",
-        "organization_guid", "space_guid", "metadata",
+    from paas_auditor_spark.streaming.ship import hec_envelope
+
+    row = ("g1", dt.datetime(2024, 3, 1), "audit.x", "a", "t", None, "u",
+           "e", "et", "en", None, "sp", None)
+    python = _json.loads(hec_envelope(row, "test"))["event"]
+    for ev in (_json.loads(payload), python):
+        assert ev["actor_name"] == ""  # present, not dropped
+        assert ev["organization_guid"] == ""
+        assert ev["metadata"] is None
+        assert list(ev.keys()) == [
+            "guid", "type", "created_at", "actor", "actor_type", "actor_name",
+            "actor_username", "actee", "actee_type", "actee_name",
+            "organization_guid", "space_guid", "metadata",
+        ]
+    assert python == _json.loads(payload)
+
+
+# text that JSON escaping must handle: quotes, backslashes, every C0
+# control, DEL, non-ASCII, astral characters and the JS line separators
+_TRICKY = st.text(
+    st.sampled_from(
+        ['"', "\\", "/", "\x7f", "\u2028", "\u2029", "é", "中", "😀", "𝄞"]
+        + [chr(i) for i in range(32)]
+    )
+    | st.characters(exclude_categories=("Cs",)),
+    max_size=12,
+)
+_ROW = st.tuples(
+    st.none() | _TRICKY,  # guid
+    st.none() | st.datetimes(
+        min_value=dt.datetime(1970, 1, 2), max_value=dt.datetime(9999, 12, 30)
+    ),
+    *([st.none() | _TRICKY] * 10),  # event_type … space_guid
+    st.none() | st.dictionaries(
+        _TRICKY,
+        st.none() | st.booleans() | st.integers() | _TRICKY
+        | st.lists(_TRICKY, max_size=3),
+        max_size=3,
+    ).map(functools.partial(json.dumps, ensure_ascii=False)),
+)
+_SHORT_ESCAPES = "\b\f\n\r\t"
+
+
+@settings(
+    max_examples=30, deadline=None,
+    suppress_health_check=[HealthCheck.too_slow],
+)
+@given(rows=st.lists(_ROW, min_size=1, max_size=8))
+def test_python_envelope_parses_like_the_jvm_envelope(spark, rows):
+    """For any text, ``hec_envelope`` and the JVM ``event_json`` +
+    ``splunk_envelope`` projection parse to the same JSON.  They are
+    byte-identical unless a field holds a C0 control other than
+    ``\\b \\f \\n \\r \\t``, which Python escapes with lowercase
+    hex and Jackson with uppercase."""
+    from paas_auditor_spark.streaming.ship import hec_envelope
+
+    aware = [
+        (r[0], r[1] and r[1].replace(tzinfo=dt.timezone.utc), *r[2:])
+        for r in rows
     ]
+    jvm = _jvm_envelopes(spark.createDataFrame(aware, EVENT_ROWS), "test")
+    for row, want in zip(rows, jvm):
+        got = hec_envelope(row, "test")
+        assert json.loads(got) == json.loads(want)
+        texts = "".join(v for v in row[:12] if isinstance(v, str))
+        if not any(c < " " and c not in _SHORT_ESCAPES for c in texts):
+            assert got == want
 
 
 def test_orc_and_json_round_trip_preserve_events(spark, sf_dir, tmp_path):
@@ -641,4 +723,4 @@ def test_null_guid_rows_quarantined_and_never_reappended(spark, tmp_path):
     assert ingest_delta(batch, store, metrics) == 0
     assert metrics.get(REJECTED) == 2
     # the null-guid row lands zero times; event 1 exactly once
-    assert store.events_df().count() == 1
+    assert spark.read.parquet(store.events_dir).count() == 1

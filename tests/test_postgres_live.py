@@ -2,7 +2,7 @@
 
 The reference's actual store is Postgres (pkg/db/store.go:73-100), and
 until now ON CONFLICT parity was e2e-proven only against DuckDB's DB-API
-driver (test_jdbc_sink.py / test_runner.py) — the r8 verdict's residual
+driver (test_runner.py) — the r8 verdict's residual
 #1.  No psycopg driver is installed here, but the container DOES ship
 the PostgreSQL server binaries and a ``postgres`` system user, so this
 module runs the statements the engine's ``DbApiStore`` actually issues

@@ -4,9 +4,10 @@ The reference's Makefile exposes the same knob (``Makefile:4``,
 ``TEST_DATABASE_URL ?= postgres://postgres:@localhost:5432/``) — and, like
 this suite, its CI never actually exercises the DB layer (SURVEY.md §5:
 store.go is untested).  The engine does better: the full relational-store
-contract (DDL bootstrap, partition-wise ON CONFLICT insert, shipper CTE,
-cursor upsert) is e2e-tested against DuckDB's DB-API driver on every run
-(test_jdbc_sink.py, test_runner.py::test_service_jdbc_store_end_to_end) —
+contract (DDL bootstrap, ON CONFLICT insert, shipper CTE, cursor
+upsert) is e2e-tested against DuckDB's DB-API driver on every run
+(test_runner.py::test_dbapi_append_is_on_conflict_do_nothing and
+test_service_jdbc_store_end_to_end) —
 DuckDB is the documented, always-tested stand-in; this module replays the
 SAME service flow over psycopg whenever a real Postgres is available:
 
@@ -43,8 +44,7 @@ def test_postgres_service_end_to_end(spark):
 
     from paas_auditor_spark.config import EngineConfig
     from paas_auditor_spark.runner import SHIPPER_NAME, Service
-    from paas_auditor_spark.sinks.jdbc import dbapi_factory
-    from paas_auditor_spark.stores import DbApiStore
+    from paas_auditor_spark.stores import DbApiStore, dbapi_factory
 
     factory = dbapi_factory("psycopg2", TEST_DATABASE_URL)
     # clean slate: the engine's tables only (idempotent DDL re-creates)
@@ -54,7 +54,7 @@ def test_postgres_service_end_to_end(spark):
     con.commit()
     con.close()
 
-    store = DbApiStore(spark, factory, paramstyle="pyformat")
+    store = DbApiStore(factory, paramstyle="pyformat")
     transport = PageServer([0, 1, 2])
     sent: list[str] = []
     cfg = EngineConfig()

@@ -489,7 +489,7 @@ def test_service_delivery_contract_under_faults(spark, tmp_path, fault):
             svc.run_loops(max_ticks=1)
         cursors.append(svc.store.effective_cursor(SHIPPER_NAME))
 
-    events = svc.store.events_df()
+    events = spark.read.parquet(svc.store.events_dir)
     assert events.count() == events.select("guid").distinct().count() == 250
     counts = Counter(e["event"]["guid"] for e in hec_events(delivered))
     assert set(counts) == {str(uuid.UUID(int=i)) for i in range(250)}
@@ -688,7 +688,8 @@ def test_parquet_cursor_runs_no_spark_job(spark, tmp_path):
     ) == []
     assert got == [(at, "g7")]
     # the probe sees jobs where there are some
-    assert spark_jobs_of(spark, lambda: store.events_df().count())
+    full_scan = spark.read.parquet(store.events_dir)
+    assert spark_jobs_of(spark, full_scan.count)
 
 
 def _data_files(store) -> int:
@@ -791,19 +792,16 @@ def test_parquet_store_imports_cursor_table(spark, tmp_path, layout):
 
 def test_service_jdbc_store_end_to_end(spark, tmp_path):
     """ENGINE_STORE=jdbc path: the reference-shaped relational store —
-    DDL bootstrap (W5), partition-wise ON CONFLICT ingest (W1), the
+    DDL bootstrap (W5), ON CONFLICT ingest in one transaction (W1), the
     shipper CTE delegated to the database (store.go:191-225), ON CONFLICT
     DO UPDATE cursor (W2) — one service run, DuckDB as the DB-API
     destination."""
     import duckdb
 
-    from paas_auditor_spark.sinks.jdbc import dbapi_factory
-    from paas_auditor_spark.stores import DbApiStore
+    from paas_auditor_spark.stores import DbApiStore, dbapi_factory
 
     db = str(tmp_path / "store.duckdb")
-    store = DbApiStore(
-        spark, dbapi_factory("duckdb", db), write_partitions=1
-    )
+    store = DbApiStore(dbapi_factory("duckdb", db))
     transport = PageServer([0, 1, 2])
     sent: list[str] = []
     cfg = EngineConfig()
@@ -817,8 +815,8 @@ def test_service_jdbc_store_end_to_end(spark, tmp_path):
     assert svc.totals.shipped == 3
 
     # cursor row landed in the database (W2), at the last shipped event
-    # (connection must be closed before the next tick: a DuckDB file is
-    # single-writer, and the store's appends run from executor processes)
+    # (connection closed before the next tick: a DuckDB file is
+    # single-writer)
     con = duckdb.connect(db)
     cur = con.execute("SELECT name, shipped_id FROM shipper_cursors").fetchall()
     con.close()
@@ -843,6 +841,71 @@ def test_service_jdbc_store_end_to_end(spark, tmp_path):
     # informer gauges read through the store
     svc.informer_tick()
     assert svc.metrics.get("informer_cf_audit_events_total") == 5.0
+
+
+def test_dbapi_append_is_on_conflict_do_nothing(tmp_path):
+    """W1 on ``DbApiStore``: one ``INSERT … ON CONFLICT (guid) DO
+    NOTHING`` batch swallows in-batch duplicates, a full replay changes
+    nothing, and the first insert of a guid wins."""
+    import duckdb
+
+    from paas_auditor_spark.stores import DbApiStore, dbapi_factory
+
+    db = str(tmp_path / "dest.duckdb")
+    store = DbApiStore(dbapi_factory("duckdb", db))
+    at = BASE.replace(tzinfo=dt.timezone.utc)
+
+    def row(i: int, actor: str) -> tuple:
+        return (str(i), at + dt.timedelta(seconds=i), "t", actor,
+                *["x"] * 8, None)
+
+    rows = [row(i, f"p{i}") for i in range(50)] + [row(7, "dup"), row(9, "dup")]
+    store.append_events(rows)
+    con = duckdb.connect(db)
+    before = con.execute("SELECT * FROM cf_audit_events ORDER BY guid").fetchall()
+    con.close()
+    store.append_events(rows)  # replay: the overlap re-read analog
+
+    con = duckdb.connect(db)
+    after = con.execute("SELECT * FROM cf_audit_events ORDER BY guid").fetchall()
+    first7, = con.execute(
+        "SELECT actor FROM cf_audit_events WHERE guid = '7'"
+    ).fetchone()
+    con.close()
+    assert len(before) == 50  # ON CONFLICT swallowed the in-batch dups
+    assert after == before  # and the full replay
+    assert first7 == "p7"  # first insert wins, conflicting rows ignored
+    assert store.event_count() == 50
+
+
+@pytest.mark.parametrize("kind", ["parquet", "dbapi"])
+def test_ship_tick_runs_no_spark_job(spark, tmp_path, kind):
+    """The shipper reads its window and builds its envelopes on the
+    driver: a tick that ships runs no Spark job on either store, and on
+    ``DbApiStore`` neither does a collector tick that stores rows."""
+    from paas_auditor_spark.stores import DbApiStore, ParquetStore, dbapi_factory
+
+    if kind == "parquet":
+        store = ParquetStore(spark, str(tmp_path / "wh"))
+    else:
+        store = DbApiStore(dbapi_factory("duckdb", str(tmp_path / "s.duckdb")))
+    cfg = EngineConfig()
+    cfg.pagination_wait_s = 0.0
+    sent: list[str] = []
+    svc = Service(
+        spark, transport=PageServer(range(30)), sender=sent.append, cfg=cfg,
+        store=store,
+    )
+    stored: list[int] = []
+    jobs = spark_jobs_of(spark, lambda: stored.append(svc.collector_tick()))
+    assert stored == [30]
+    assert len(jobs) == (1 if kind == "parquet" else 0)
+    shipped: list[int] = []
+    assert spark_jobs_of(spark, lambda: shipped.append(svc.shipper_tick())) == []
+    assert shipped == [30]
+    assert len(hec_events(sent)) == 30
+    # the probe sees jobs where there are some
+    assert spark_jobs_of(spark, lambda: spark.range(3).count())
 
 
 def test_run_threaded_loop_subset_for_streaming_mode(spark, tmp_path):

@@ -59,7 +59,7 @@ def test_stream_to_store_dedups_across_microbatches(spark, tmp_path):
     finally:
         q.stop()  # graceful shutdown (T7)
 
-    out = store.events_df()
+    out = spark.read.parquet(store.events_dir)
     assert out.count() == 5
     assert out.select("guid").distinct().count() == 5
 
@@ -115,19 +115,18 @@ def test_windowed_counts_streaming_matches_batch(spark, tmp_path):
 
 def test_stream_to_jdbc_store_dedups_and_upserts(spark, tmp_path):
     """North-star path end-to-end in streaming mode: file micro-batches →
-    dedup → DbApiStore (partition-wise ON CONFLICT inserts into DuckDB).
+    dedup → DbApiStore (ON CONFLICT inserts into DuckDB).
     Overlapping guids across micro-batches land exactly once."""
     import duckdb
 
-    from paas_auditor_spark.sinks.jdbc import dbapi_factory
-    from paas_auditor_spark.stores import DbApiStore
+    from paas_auditor_spark.stores import DbApiStore, dbapi_factory
     from paas_auditor_spark.streaming.metrics import MetricsRegistry
     from paas_auditor_spark.streaming.pipeline import store_sink
 
     src = str(tmp_path / "jsrc")
     ckpt = str(tmp_path / "jckpt")
     db = str(tmp_path / "jstore.duckdb")
-    store = DbApiStore(spark, dbapi_factory("duckdb", db), write_partitions=1)
+    store = DbApiStore(dbapi_factory("duckdb", db))
     metrics = MetricsRegistry()
 
     spark.createDataFrame(_rows([0, 1, 2]), schema=CF_AUDIT_EVENT).coalesce(

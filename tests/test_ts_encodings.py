@@ -138,54 +138,36 @@ def test_unshipped_boundary_immune_to_python_process_tz(spark, sf_dir):
     assert before == after == 900
 
 
-def test_cursor_roundtrip_immune_to_process_tz_both_directions(spark, tmp_path):
-    """Non-vacuous tz regression: events sit INSIDE the tz-offset window
-    on both sides of the cursor, so any process-tz leak in the cursor
-    round trip (commit → cursor file → literal) moves the boundary and
-    changes the result set.  Run the full ``ParquetStore`` cycle
-    upsert_cursor → unshipped_events under UTC, America/New_York (west)
-    and Asia/Kolkata (east, half-hour offset): identical batches
-    required."""
-    import datetime as dt
+def _store(kind: str, spark, path):
+    """A fresh ``ParquetStore`` or ``DbApiStore`` over DuckDB at ``path``.
+
+    DuckDB reads the local timezone once, when it loads, and converts an
+    aware datetime bound to a ``TIMESTAMP`` column through it.  Each
+    connection is therefore set to the current ``TZ``, as in a process
+    started under it."""
+    import os
+
+    import duckdb
+
+    from paas_auditor_spark.stores import DbApiStore, ParquetStore
+
+    if kind == "parquet":
+        return ParquetStore(spark, str(path / "wh"))
+    path.mkdir(parents=True, exist_ok=True)
+
+    def connect():
+        con = duckdb.connect(str(path / "store.duckdb"))
+        con.execute(f"SET GLOBAL TimeZone = '{os.environ.get('TZ', 'UTC')}'")
+        return con
+
+    return DbApiStore(connect)
+
+
+def _under_each_tz(fn) -> dict:
+    """``fn(tz)`` under the UTC, America/New_York (west) and Asia/Kolkata
+    (east, half-hour offset) process timezones."""
     import os
     import time
-
-    from pyspark.sql import functions as F
-
-    from paas_auditor_spark.stores import EVENT_COLUMNS, ParquetStore
-
-    B = dt.datetime(2024, 3, 1, 12, 0, 0)
-    # events every 30 min across ±6 h around the noon cursor
-    events = spark.createDataFrame(
-        [
-            (str(i), B + dt.timedelta(minutes=30 * (i - 12)))
-            for i in range(25)
-        ],
-        "guid string, created_at timestamp",
-    )
-    store = ParquetStore(spark, str(tmp_path / "wh"))
-    store.append_events(
-        events.select(
-            *(
-                F.col(c) if c in events.columns else F.lit("x").alias(c)
-                for c in EVENT_COLUMNS
-            )
-        )
-    )
-
-    def run_cycle():
-        from paas_auditor_spark.functions.timecross import ts_string
-
-        store.upsert_cursor("s", B, "12")
-        got = (
-            store.unshipped_events("s", 8192)
-            # compare JVM-rendered wall clocks: collecting the datetime
-            # OBJECTS would re-introduce the process-tz rendering this
-            # test exists to exclude from engine semantics
-            .select("guid", ts_string("created_at").alias("ca"))
-            .collect()
-        )
-        return [(r["guid"], r["ca"]) for r in got]
 
     old_tz = os.environ.get("TZ")
     results = {}
@@ -193,20 +175,50 @@ def test_cursor_roundtrip_immune_to_process_tz_both_directions(spark, tmp_path):
         for tz in ("UTC", "America/New_York", "Asia/Kolkata"):
             os.environ["TZ"] = tz
             time.tzset()
-            results[tz] = run_cycle()
+            results[tz] = fn(tz)
     finally:
         if old_tz is None:
             os.environ.pop("TZ", None)
         else:
             os.environ["TZ"] = old_tz
         time.tzset()
+    return results
 
+
+def test_cursor_roundtrip_immune_to_process_tz_both_directions(spark, tmp_path):
+    """Non-vacuous tz regression: events sit INSIDE the tz-offset window
+    on both sides of the cursor, so any process-tz leak in the round trip
+    (append → stored instant, commit → cursor → window bound) moves the
+    boundary and changes the result set.  Run the full cycle
+    append_events → upsert_cursor → unshipped_events on a fresh store of
+    each kind under each process timezone: identical batches required."""
+    import datetime as dt
+
+    B = dt.datetime(2024, 3, 1, 12, 0, 0)
+    # events every 30 min across ±6 h around the noon cursor
+    rows = [
+        (str(i), (B + dt.timedelta(minutes=30 * (i - 12))).replace(
+            tzinfo=dt.timezone.utc), *["x"] * 10, "{}")
+        for i in range(25)
+    ]
+
+    def run_cycle(tz: str) -> dict:
+        out = {}
+        for kind in ("parquet", "dbapi"):
+            store = _store(kind, spark, tmp_path / tz.replace("/", "_") / kind)
+            store.append_events(rows)
+            store.upsert_cursor("s", B, "12")
+            out[kind] = [(r[0], r[1]) for r in store.unshipped_events("s", 8192)]
+        return out
+
+    results = _under_each_tz(run_cycle)
     # cursor at noon, shipped id '12' excluded: exactly the 12 events
-    # at/after noon minus the shipped one
-    assert len(results["UTC"]) == 12
-    assert "12" not in {g for g, _ in results["UTC"]}
-    assert results["America/New_York"] == results["UTC"]
-    assert results["Asia/Kolkata"] == results["UTC"]
+    # after noon, as naive UTC wall clocks
+    want = [
+        (str(i), B + dt.timedelta(minutes=30 * (i - 12))) for i in range(13, 25)
+    ]
+    for tz, kinds in results.items():
+        assert kinds == {"parquet": want, "dbapi": want}, tz
 
 
 def test_both_ingest_paths_store_and_ship_the_same_instants_under_any_process_tz(
@@ -216,12 +228,14 @@ def test_both_ingest_paths_store_and_ship_the_same_instants_under_any_process_tz
     datetimes; ``store_sink`` collects the micro-batch as wall-clock
     strings.  Under UTC, America/New_York and Asia/Kolkata process
     timezones both paths store the same ``created_at`` instants, derive
-    the same watermark and ship byte-identical payloads.  The events sit
-    around midnight UTC, one with a +05:30 offset and microseconds, so a
-    shift by either offset would show."""
+    the same watermark and ship byte-identical payloads, on
+    ``ParquetStore`` and on ``DbApiStore`` over DuckDB.
+    The events sit around midnight UTC, one with a +05:30 offset and
+    microseconds, so a shift by either offset would show."""
     import datetime as dt
-    import os
-    import time
+    import itertools
+
+    import duckdb
 
     from paas_auditor_spark.config import EngineConfig
     from paas_auditor_spark.functions.timecross import ts_string
@@ -239,7 +253,17 @@ def test_both_ingest_paths_store_and_ship_the_same_instants_under_any_process_tz
         "resources": [
             {
                 "metadata": {"guid": f"g{i}", "created_at": c},
-                "entity": {"type": "audit.app.create", "metadata": {"i": i}},
+                # every NOT NULL column of the relational store filled
+                "entity": {
+                    "type": "audit.app.create",
+                    **{
+                        f: f"{f}-{i}"
+                        for f in ("actor", "actor_type", "actor_name",
+                                  "actor_username", "actee", "actee_type",
+                                  "actee_name")
+                    },
+                    "metadata": {"i": i},
+                },
             }
             for i, c in enumerate(created)
         ],
@@ -247,16 +271,35 @@ def test_both_ingest_paths_store_and_ship_the_same_instants_under_any_process_tz
     cfg = EngineConfig()
     cfg.pagination_wait_s = 0.0
 
+    def stored_rows(kind, store, path) -> list:
+        if kind == "parquet":
+            return sorted(
+                (r["guid"], r["ca"])
+                for r in spark.read.parquet(store.events_dir)
+                .select("guid", ts_string("created_at").alias("ca"))
+                .collect()
+            )
+        con = duckdb.connect(str(path / "store.duckdb"))
+        rows = con.execute("SELECT guid, created_at FROM cf_audit_events").fetchall()
+        con.close()
+        return sorted(
+            (g, c.isoformat(sep=" ", timespec="microseconds")) for g, c in rows
+        )
+
     def run(tz: str) -> dict:
         out = {}
-        for mode in ("collector_tick", "store_sink"):
+        for kind, mode in itertools.product(
+            ("parquet", "dbapi"), ("collector_tick", "store_sink")
+        ):
             sent: list[str] = []
+            path = tmp_path / tz.replace("/", "_") / kind / mode
+            store = _store(kind, spark, path)
             svc = Service(
                 spark,
-                warehouse_dir=str(tmp_path / tz.replace("/", "_") / mode),
                 transport=lambda url: page,
                 sender=sent.append,
                 cfg=cfg,
+                store=store,
             )
             if mode == "collector_tick":
                 assert svc.collector_tick() == 3
@@ -267,35 +310,18 @@ def test_both_ingest_paths_store_and_ship_the_same_instants_under_any_process_tz
                 store_sink(svc.store, svc.metrics)(batch, 0)
                 assert svc.store.event_count() == 3
             assert svc.shipper_tick() == 3
-            stored = sorted(
-                (r["guid"], r["ca"])
-                for r in svc.store.events_df()
-                .select("guid", ts_string("created_at").alias("ca"))
-                .collect()
+            out[kind, mode] = (
+                stored_rows(kind, store, path), svc._watermark(), sent
             )
-            out[mode] = (stored, svc._watermark(), sent)
         return out
 
-    old_tz = os.environ.get("TZ")
-    results = {}
-    try:
-        for tz in ("UTC", "America/New_York", "Asia/Kolkata"):
-            os.environ["TZ"] = tz
-            time.tzset()
-            results[tz] = run(tz)
-    finally:
-        if old_tz is None:
-            os.environ.pop("TZ", None)
-        else:
-            os.environ["TZ"] = old_tz
-        time.tzset()
-
+    results = _under_each_tz(run)
     want_stored = [
         ("g0", "2024-03-01 23:40:00.000000"),
         ("g1", "2024-03-02 00:05:00.250001"),
         ("g2", "2024-03-02 00:20:00.000000"),
     ]
-    want = results["UTC"]["collector_tick"]
+    want = results["UTC"]["parquet", "collector_tick"]
     assert want[0] == want_stored
     assert want[1] == dt.datetime(2024, 3, 2, 0, 19, 55)
     assert '"created_at":"2024-03-02T00:05:00Z"' in want[2][0]
