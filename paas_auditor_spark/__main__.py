@@ -7,7 +7,7 @@ The CF transport for both collector modes is
 ``sources.paginated_http.resolve_transport`` (re-exported here); the
 Splunk sender is ``streaming.ship.hec_sender``.  Every piece is the same
 injectable the test fakes use.  The process exits 1 when the collector
-fails.
+fails, the scheduled loop and the streaming query alike.
 """
 
 from __future__ import annotations
@@ -112,6 +112,10 @@ def main() -> int:
     else:
         threads = service.run_threaded()
     try:
+        if collector_query is not None:
+            # returns when the service stops or the query ends; a failed
+            # query stops the service as a failed collector loop does
+            service.await_collector(collector_query)
         for t in threads:
             t.join()
     finally:

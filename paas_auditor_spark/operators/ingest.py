@@ -14,10 +14,9 @@ Where the work runs: a tick's rows are already Python tuples on the
 driver in both collector modes (the loop-mode pager decodes them, and so
 does the streaming source), a few thousand at most.  ``ingest_delta``
 therefore validates, deduplicates and anti-joins them in plain Python
-and hands the fresh tuples to the store: ``ParquetStore`` writes them as
-one Arrow batch in one file (one Spark job), ``DbApiStore`` inserts them
-in one transaction (no Spark job).  A tick that re-read only the overlap
-runs no Spark job.
+and hands the fresh tuples to the store: ``ParquetStore`` writes them
+with pyarrow as one file, ``DbApiStore`` inserts them in one
+transaction.  Neither runs a Spark job, so neither does the step.
 
 Scale notes (SURVEY.md §7 hard-part 1): the anti-join against the store
 must not scan full history.  ``ingest_delta`` asks the store only for the

@@ -10,9 +10,9 @@ the Spark engine:
 - warehouse init (W5, sources.bootstrap.init_warehouse)
 - collector tick: watermark fetch → ``operators.ingest.ingest_delta``
   over the decoded tuples (validate → dedup → anti-join on the driver →
-  append of the fresh tuples: one Spark write job on parquet, one
+  append of the fresh tuples: one pyarrow file on parquet, one
   transaction on a DB-API store — never a rewrite of history, never a
-  second copy of a stored event)
+  second copy of a stored event); no Spark job on either store
 - shipper tick: ``streaming.ship.ship_tick`` — cursor query (rows read
   on the driver: no Spark job) → envelopes built in Python → ordered
   NDJSON batches with retries → a cursor commit after every acknowledged
@@ -23,7 +23,9 @@ the Spark engine:
 - /metrics (Prometheus text) and /health endpoints on a ThreadingHTTPServer
 - error policies per loop (T8): a collector error raises out of
   ``run_loops`` and stops every ``run_threaded`` loop — the process-exit
-  analog; shipper/informer errors are logged and the loop continues
+  analog, also when the collector is a streaming query
+  (``await_collector``); shipper/informer errors are logged and the loop
+  continues
 """
 
 from __future__ import annotations
@@ -34,7 +36,9 @@ import threading
 import time
 from dataclasses import dataclass
 
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import SparkSession
+from pyspark.sql.streaming import StreamingQuery
 
 from paas_auditor_spark.config import EngineConfig
 from paas_auditor_spark.logs import JsonLogger
@@ -226,6 +230,18 @@ class Service:
         the failure instead of running on without a collector."""
         self._tick_failed(self.collector_tick, ex)
         self.collector_error = ex
+        self.stop()
+
+    def await_collector(self, query: StreamingQuery) -> None:
+        """Block while the streaming collector ``query`` runs and the
+        service has not been stopped.  A failed query takes the threaded
+        collector's fail-fast path; any end of the query stops the
+        service, whose shipper and informer have nothing left to serve."""
+        try:
+            while not self._stop.is_set() and not query.awaitTermination(1):
+                pass
+        except StreamingQueryException as ex:
+            self._collector_failed(ex)
         self.stop()
 
     def run_threaded(

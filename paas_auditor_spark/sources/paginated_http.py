@@ -29,8 +29,8 @@ callable as the transport, like the reference's httpmock suite
 
 Scale notes: pagination is inherently sequential (next_url chaining), so
 the pager runs driver-side — the same boundary the reference draws with
-its fetch goroutine + channel — and so does the ingest step that follows
-it: only the rows it finds fresh reach Spark, to be written.
+its fetch goroutine + channel — and so do the ingest step that follows
+it and the store's append of the rows it finds fresh.
 """
 
 from __future__ import annotations

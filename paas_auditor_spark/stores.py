@@ -43,10 +43,11 @@ place of Postgres's ``created_at`` index and ``reltuples``.  Its layout:
     <warehouse>/cf_audit_events/_events_log/<n>.json
                                            per-file stats of one append
 
-- An append writes its parquet files under ``_staging/<id>/``, renames
-  every file that holds rows into the table directory — the rename is the
-  commit — and then writes one log entry with each file's name, rows,
-  ``min_created_at`` and ``max_created_at`` (UTC wall-clock strings).
+- An append writes its rows with pyarrow on the driver as one file under
+  ``_staging/``, fsyncs it, renames it into the table directory — the
+  rename is the commit — fsyncs that directory, and then writes one log
+  entry with the file's name, rows, ``min_created_at`` and
+  ``max_created_at`` (UTC wall-clock strings).
 - The directory listing stays the only authority on which rows exist;
   the log only caches stats.  Each read lists the table once and reads
   and logs the stats of any file the log lacks: a crash between the
@@ -54,8 +55,10 @@ place of Postgres's ``created_at`` index and ``reltuples``.  Its layout:
   written into the table by another tool.  Entries are keyed by file
   name, so a second entry for a file is harmless.
 - Stats come from each file's ``created_at`` column read with pyarrow,
-  not from footer min/max: Spark writes the column as INT96, which has
-  no footer statistics.
+  not from footer min/max: the appends write it as INT64
+  ``TIMESTAMP(MICROS, isAdjustedToUTC)`` with footer min/max, but Spark
+  (the appends of earlier versions, the warehouse init) writes INT96,
+  which has no footer statistics.
 - Leftovers under ``_staging/`` are swept when the store opens: one
   writer (the collector) per warehouse.
 - Spark's and pyarrow's directory reads skip both underscore-prefixed
@@ -66,9 +69,9 @@ The watermark is then the log's max, the count its row sum (exact), and
 logged max reaches their floor — one or two near the tail — with
 pyarrow, so neither runs a Spark job.  The events table is not
 partitioned: pruning is by the per-file max.  The cursors are one small
-JSON file replaced atomically, with no Spark job.  An append is the one
-Spark job: the fresh rows become one Arrow-built DataFrame in one
-partition, written as one file.
+JSON file replaced atomically, and an append is one pyarrow file write,
+so no per-tick operation of the store runs a Spark job; only opening a
+new warehouse does (``init_warehouse``).
 """
 
 from __future__ import annotations
@@ -145,10 +148,11 @@ def _read_events(path: str, columns: list[str]) -> pa.Table:
 
 def _arrow_events(rows: list[tuple]) -> pa.Table:
     """``EVENT_ROWS`` tuples as one Arrow table.  ``created_at`` is an
-    aware UTC instant, so it crosses into Spark without any timezone
-    conversion (Arrow ``timestamp[us, UTC]`` is Spark's own encoding).
-    It must be UTC: pyarrow builds this array from the wall clock and
-    drops any other offset."""
+    aware UTC instant, so parquet stores it as INT64
+    ``TIMESTAMP(MICROS, isAdjustedToUTC)``, which Spark reads as its
+    ``timestamp`` without any timezone conversion.  It must be UTC:
+    pyarrow builds this array from the wall clock and drops any other
+    offset."""
     return pa.table(
         {
             c: pa.array(
@@ -160,6 +164,24 @@ def _arrow_events(rows: list[tuple]) -> pa.Table:
             for c, col in zip(EVENT_COLUMNS, zip(*rows))
         }
     )
+
+
+def _fsync(path: str) -> None:
+    fd = os.open(path, os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
+
+
+def _commit(written: str, path: str) -> None:
+    """Durable atomic rename of the closed file ``written`` to ``path``:
+    its bytes are synced first, so a power loss cannot leave a torn file
+    under ``path``, and ``path``'s directory after, so the rename itself
+    survives one."""
+    _fsync(written)
+    os.replace(written, path)
+    _fsync(os.path.dirname(path))
 
 
 def file_stats(path: str) -> FileStats:
@@ -231,14 +253,7 @@ class ParquetStore:
         tmp = self.cursor_path + ".tmp"
         with open(tmp, "w") as fh:
             json.dump(cursors, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, self.cursor_path)
-        fd = os.open(os.path.dirname(self.cursor_path), os.O_RDONLY)
-        try:
-            os.fsync(fd)  # the rename itself is durable
-        finally:
-            os.close(fd)
+        _commit(tmp, self.cursor_path)
 
     # -- events stats log -------------------------------------------------
 
@@ -345,27 +360,19 @@ class ParquetStore:
     # -- writes -----------------------------------------------------------
 
     def append_events(self, rows: list[tuple]) -> int:
-        """Store ``EVENT_ROWS`` tuples (aware UTC ``created_at``): stage
-        them as one file, commit it by rename, then log it; returns the
-        rows stored.  The rows reach Spark as one Arrow-built DataFrame in
-        one partition, so the write is one Spark job and one file."""
+        """Store ``EVENT_ROWS`` tuples (aware UTC ``created_at``): write
+        them with pyarrow as one staged file, commit it by a durable
+        rename, then log it; returns the rows stored.  No Spark job."""
         if not rows:
             return 0
-        staged = os.path.join(self.staging_dir, uuid.uuid4().hex)
-        self.spark.createDataFrame(
-            _arrow_events(rows), EVENT_ROWS
-        ).coalesce(1).write.parquet(staged)
-        stats = {}
-        for name in sorted(filter(_visible, os.listdir(staged))):
-            path = os.path.join(staged, name)
-            s = file_stats(path)
-            if s.rows:
-                os.rename(path, os.path.join(self.events_dir, name))
-                stats[name] = s
-        shutil.rmtree(staged)
-        if stats:
-            self._log(stats)
-        return sum(s.rows for s in stats.values())
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        staged = os.path.join(self.staging_dir, name)
+        os.makedirs(self.staging_dir, exist_ok=True)
+        pq.write_table(_arrow_events(rows), staged)
+        stats = file_stats(staged)
+        _commit(staged, os.path.join(self.events_dir, name))
+        self._log({name: stats})
+        return stats.rows
 
     # -- cursor / ship ----------------------------------------------------
 

@@ -13,8 +13,9 @@ the decoded tuples.  Here the same ``operators.ingest.ingest_delta`` runs
 as a ``foreachBatch`` sink (``store_sink``) under the CF API streaming
 source (``stream_api_to_store``, whose ``cf_events`` source fetches with
 the loop's CF client, ``sources/paginated_http.py``): the sink collects
-the micro-batch to the driver as tuples and hands them over, so only the
-fresh rows go back to Spark.  Deduplication is the store anti-join in
+the micro-batch to the driver as tuples and hands them over, so the
+collect is its only Spark job; the store writes the fresh rows on the
+driver.  Deduplication is the store anti-join in
 ``ingest_delta`` in both modes; there is no separate streaming dedup
 state.  Sink errors fail the query — the collector's fail-fast policy
 (T8).

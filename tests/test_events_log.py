@@ -185,15 +185,19 @@ def test_file_renamed_in_but_not_logged_is_reconciled(spark, tmp_path):
 
 
 def test_int96_file_stats_do_not_depend_on_process_tz(spark, tmp_path):
-    """Spark writes ``created_at`` as INT96, which has no footer min/max;
-    the stats come from the column itself and are the UTC wall clock
-    under any process timezone, and so is the anti-join's key read, to
-    the microsecond.  The instants sit around midnight, so a
-    shift by the New York or Kolkata offset would change them."""
+    """Spark writes ``created_at`` as INT96, which has no footer min/max:
+    the table of a warehouse whose appends an earlier version wrote with
+    Spark holds such files.  Their stats come from the column itself and
+    are the UTC wall clock under any process timezone, and so is the
+    anti-join's key read, to the microsecond.  The instants sit around
+    midnight, so a shift by the New York or Kolkata offset would change
+    them."""
     wh = str(tmp_path / "wh")
     lo, hi = B - dt.timedelta(minutes=20), B + dt.timedelta(minutes=20, microseconds=5)
     store = ParquetStore(spark, wh)
-    store.append_events(event_rows([("a", lo), ("b", hi)]))
+    spark_events(spark, [("a", lo), ("b", hi)]).coalesce(1).write.mode(
+        "append"
+    ).parquet(store.events_dir)
     (part,) = [n for n in data_files(store.events_dir) if file_stats(
         os.path.join(store.events_dir, n)).rows]
     path = os.path.join(store.events_dir, part)
@@ -224,6 +228,30 @@ def test_int96_file_stats_do_not_depend_on_process_tz(spark, tmp_path):
     assert got["UTC"] == (lo, hi, hi, ["a", "b"], ["b"])
     assert got["America/New_York"] == got["UTC"]
     assert got["Asia/Kolkata"] == got["UTC"]
+
+
+def test_append_writes_int64_created_at_with_footer_stats(spark, tmp_path):
+    """A store append writes ``created_at`` as INT64 microseconds adjusted
+    to UTC, with footer min/max equal to the file's logged stats."""
+    lo, hi = B - dt.timedelta(minutes=20), B + dt.timedelta(minutes=20, microseconds=5)
+    store = ParquetStore(spark, str(tmp_path / "wh"))
+    before = data_files(store.events_dir)
+    assert store.append_events(event_rows([("a", lo), ("b", hi)])) == 2
+    (part,) = set(data_files(store.events_dir)) - set(before)
+    path = os.path.join(store.events_dir, part)
+    meta = pq.ParquetFile(path).metadata
+    column = meta.row_group(0).column(1)
+    assert column.path_in_schema == "created_at"
+    assert column.physical_type == "INT64"
+    logical = json.loads(meta.schema.column(1).logical_type.to_json())
+    assert (logical["Type"], logical["isAdjustedToUTC"], logical["timeUnit"]) == (
+        "Timestamp", True, "microseconds"
+    )
+    assert column.is_stats_set and column.statistics.has_min_max
+    utc = dt.timezone.utc
+    assert column.statistics.min == lo.replace(tzinfo=utc)
+    assert column.statistics.max == hi.replace(tzinfo=utc)
+    assert file_stats(path) == (2, lo, hi)
 
 
 def test_empty_append_commits_no_file(spark, tmp_path):
@@ -288,12 +316,18 @@ def make_store(kind: str, spark, tmp_path):
 def test_mixed_encodings_ship_one_window(spark, tmp_path, kind):
     """History in a pyarrow file whose ``created_at`` is zoned (here
     Asia/Kolkata, the same instants as UTC), as the benchmark seeds its
-    warehouse, beside Spark's INT96 appends interleaved with it in time:
-    the shipper's window is one ship order of naive UTC wall clocks, equal
-    to the Spark cursor operator's over the directory.  ``DbApiStore``,
-    given the same rows through ``append_events``, returns the same
-    window."""
+    warehouse, a Spark-written INT96 file, as an earlier version's
+    appends wrote them, and the store's own INT64 UTC appends, all
+    interleaved in time: the shipper's window is one ship order of naive
+    UTC wall clocks, equal to the Spark cursor operator's over the
+    directory.  ``DbApiStore``, given the same rows through
+    ``append_events``, returns the same window."""
     history = [(f"h{i}", B + dt.timedelta(seconds=10 * i)) for i in range(6)]
+    legacy = [
+        ("s0", B + dt.timedelta(seconds=8)),
+        ("s1", B + dt.timedelta(seconds=25, microseconds=3)),
+        ("s2", B + dt.timedelta(seconds=50)),
+    ]
     appends = [
         [("a0", B + dt.timedelta(seconds=5)), ("a1", B + dt.timedelta(seconds=20))],
         [("a2", B + dt.timedelta(seconds=45, microseconds=7))],
@@ -306,8 +340,12 @@ def test_mixed_encodings_ship_one_window(spark, tmp_path, kind):
             table.set_column(1, "created_at", zoned),
             os.path.join(store.events_dir, "part-history.parquet"),
         )
+        spark_events(spark, legacy).coalesce(1).write.mode("append").parquet(
+            store.events_dir
+        )
     else:
         store.append_events(event_rows(history))
+        store.append_events(event_rows(legacy))
     for rows in appends:
         store.append_events(event_rows(rows))
     store.upsert_cursor("s", B + dt.timedelta(seconds=10), "h1")
@@ -316,13 +354,20 @@ def test_mixed_encodings_ship_one_window(spark, tmp_path, kind):
     assert [(r[0], r[1]) for r in got] == [
         ("a1", B + dt.timedelta(seconds=20)),
         ("h2", B + dt.timedelta(seconds=20)),
+        ("s1", B + dt.timedelta(seconds=25, microseconds=3)),
         ("h3", B + dt.timedelta(seconds=30)),
         ("h4", B + dt.timedelta(seconds=40)),
         ("a2", B + dt.timedelta(seconds=45, microseconds=7)),
         ("h5", B + dt.timedelta(seconds=50)),
+        ("s2", B + dt.timedelta(seconds=50)),
     ]
     assert all(len(r) == len(EVENT_COLUMNS) for r in got)
     if kind == "parquet":
+        encodings = {
+            pq.ParquetFile(path).schema.column(1).physical_type
+            for path in store.files()
+        }
+        assert encodings == {"INT64", "INT96"}
         everything = spark.read.parquet(store.events_dir)
         want = unshipped_events(everything, B + dt.timedelta(seconds=10), "h1")
         assert [r[0] for r in got] == [r["guid"] for r in want.collect()]

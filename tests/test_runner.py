@@ -702,11 +702,11 @@ def _data_files(store) -> int:
     )
 
 
-def test_collector_tick_runs_one_spark_job_per_append(spark, tmp_path):
-    """Validation, dedup, the batch floor and the anti-join run on the
-    driver: a collector tick with fresh rows runs exactly one Spark job
-    (the write) and commits exactly one file, and a tick that re-reads
-    only the overlap runs none."""
+def test_collector_tick_runs_no_spark_job(spark, tmp_path):
+    """Validation, dedup, the batch floor, the anti-join and the append
+    run on the driver: a collector tick with fresh rows runs no Spark job
+    and commits exactly one file, and a tick that re-reads only the
+    overlap runs none and commits none."""
     cfg = EngineConfig()
     cfg.pagination_wait_s = 0.0
     transport = PageServer(range(50))
@@ -716,11 +716,11 @@ def test_collector_tick_runs_one_spark_job_per_append(spark, tmp_path):
     stored: list[int] = []
     tick = lambda: stored.append(svc.collector_tick())  # noqa: E731
     files = _data_files(svc.store)
-    assert len(spark_jobs_of(spark, tick)) == 1
+    assert spark_jobs_of(spark, tick) == []
     assert _data_files(svc.store) == files + 1
 
     transport.ids = range(45, 120)  # the overlap re-read plus 70 new rows
-    assert len(spark_jobs_of(spark, tick)) == 1
+    assert spark_jobs_of(spark, tick) == []
     assert _data_files(svc.store) == files + 2
 
     transport.ids = range(115, 120)  # only the overlap
@@ -731,8 +731,9 @@ def test_collector_tick_runs_one_spark_job_per_append(spark, tmp_path):
 
 
 def test_store_sink_micro_batch_runs_at_most_two_spark_jobs(spark, tmp_path):
-    """The streaming sink collects the micro-batch (one job) and writes
-    its fresh rows (one job, one file); a replayed batch writes nothing."""
+    """The streaming sink's only Spark work is the collect of the
+    micro-batch: its fresh rows are written on the driver as one file, so
+    a batch runs exactly the jobs of its replay, which writes nothing."""
     from paas_auditor_spark.sources.paginated_http import EVENT_ROWS, decode_pages
     from paas_auditor_spark.stores import ParquetStore
     from paas_auditor_spark.streaming.pipeline import store_sink
@@ -744,10 +745,11 @@ def test_store_sink_micro_batch_runs_at_most_two_spark_jobs(spark, tmp_path):
     )
     sink = store_sink(store)
     files = _data_files(store)
-    assert 1 <= len(spark_jobs_of(spark, lambda: sink(batch, 0))) <= 2
+    fresh = spark_jobs_of(spark, lambda: sink(batch, 0))
     assert _data_files(store) == files + 1
-    assert len(spark_jobs_of(spark, lambda: sink(batch, 1))) <= 1
+    replay = spark_jobs_of(spark, lambda: sink(batch, 1))
     assert _data_files(store) == files + 1
+    assert len(fresh) == len(replay) <= 1
     assert store.event_count() == 30
 
 
@@ -881,8 +883,8 @@ def test_dbapi_append_is_on_conflict_do_nothing(tmp_path):
 @pytest.mark.parametrize("kind", ["parquet", "dbapi"])
 def test_ship_tick_runs_no_spark_job(spark, tmp_path, kind):
     """The shipper reads its window and builds its envelopes on the
-    driver: a tick that ships runs no Spark job on either store, and on
-    ``DbApiStore`` neither does a collector tick that stores rows."""
+    driver: a tick that ships runs no Spark job on either store, and
+    neither does a collector tick that stores rows."""
     from paas_auditor_spark.stores import DbApiStore, ParquetStore, dbapi_factory
 
     if kind == "parquet":
@@ -899,7 +901,7 @@ def test_ship_tick_runs_no_spark_job(spark, tmp_path, kind):
     stored: list[int] = []
     jobs = spark_jobs_of(spark, lambda: stored.append(svc.collector_tick()))
     assert stored == [30]
-    assert len(jobs) == (1 if kind == "parquet" else 0)
+    assert jobs == []
     shipped: list[int] = []
     assert spark_jobs_of(spark, lambda: shipped.append(svc.shipper_tick())) == []
     assert shipped == [30]
@@ -969,9 +971,62 @@ def test_collector_failure_stops_threaded_service(spark, tmp_path):
         svc.stop()
 
 
-def test_main_exits_1_when_collector_fails(spark, tmp_path, monkeypatch):
-    """``python -m paas_auditor_spark`` returns 1 after its collector
-    fails, instead of waiting on the other loops forever."""
+def test_failed_streaming_collector_stops_threaded_service(spark, tmp_path):
+    """ENGINE_MODE=streaming parity of main.go:92-97: when the collector
+    query fails (here its store raises on append), ``await_collector``
+    stops the shipper and informer loops beside it, records the failure
+    and counts it once."""
+    import threading
+
+    from pyspark.errors import StreamingQueryException
+
+    from paas_auditor_spark.sources.paginated_http import EVENT_ROWS, decode_pages
+    from paas_auditor_spark.stores import ParquetStore
+    from paas_auditor_spark.streaming.pipeline import store_sink
+
+    class DiskGone(ParquetStore):
+        def append_events(self, rows):
+            raise OSError("disk gone")
+
+    cfg = EngineConfig()
+    cfg.shipper_schedule_s = 0.2
+    cfg.informer_schedule_s = 0.2
+    store = DiskGone(spark, str(tmp_path / "wh"))
+    svc = Service(spark, store=store, sender=[].append, cfg=cfg)
+    src = str(tmp_path / "src")
+    spark.createDataFrame(
+        list(decode_pages([{"resources": [_resource(i) for i in range(5)]}])),
+        EVENT_ROWS,
+    ).write.parquet(src)
+    query = (
+        spark.readStream.schema(EVENT_ROWS)
+        .parquet(src)
+        .writeStream.foreachBatch(store_sink(store, svc.metrics))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    threads = svc.run_threaded(loops=("shipper", "informer"))
+    watcher = threading.Thread(target=svc.await_collector, args=(query,))
+    try:
+        watcher.start()
+        watcher.join(timeout=120)
+        assert not watcher.is_alive()
+        for t in threads:
+            t.join(timeout=30)
+        assert [t.is_alive() for t in threads] == [False, False]
+        assert not query.isActive
+        assert isinstance(svc.collector_error, StreamingQueryException)
+        assert "disk gone" in str(svc.collector_error)
+        assert svc.metrics.get("cf_audit_event_collector_errors_total") == 1
+    finally:
+        svc.stop()
+        query.stop()
+
+
+def _run_main_against_gone_cf(monkeypatch, tmp_path, **env) -> list[int]:
+    """Run ``python -m paas_auditor_spark`` against a CF API that answers
+    404 (not retried by the CF client) with ``env`` set; returns
+    ``[exit code]`` once it has ended, within 60 s."""
     import http.server
     import threading
 
@@ -996,6 +1051,8 @@ def test_main_exits_1_when_collector_fails(spark, tmp_path, monkeypatch):
     monkeypatch.setenv("PORT", "0")
     monkeypatch.setenv("COLLECTOR_SCHEDULE", "200ms")
     monkeypatch.setenv("INFORMER_SCHEDULE", "200ms")
+    for name, value in env.items():
+        monkeypatch.setenv(name, value)
     # the CLI installs SIGINT/SIGTERM handlers; keep pytest's own
     monkeypatch.setattr(cli.signal, "signal", lambda *args: None)
 
@@ -1006,10 +1063,27 @@ def test_main_exits_1_when_collector_fails(spark, tmp_path, monkeypatch):
         runner.start()
         runner.join(timeout=60)
         assert not runner.is_alive()
-        assert codes == [1]
     finally:
         cf.shutdown()
         cf.server_close()
+    return codes
+
+
+def test_main_exits_1_when_collector_fails(spark, tmp_path, monkeypatch):
+    """``python -m paas_auditor_spark`` returns 1 after its collector
+    fails, instead of waiting on the other loops forever."""
+    assert _run_main_against_gone_cf(monkeypatch, tmp_path) == [1]
+
+
+def test_main_exits_1_when_streaming_collector_fails(spark, tmp_path, monkeypatch):
+    """With ENGINE_MODE=streaming the CLI waits on the collector query:
+    when the query fails it returns 1, instead of running the shipper
+    and informer on without a collector."""
+    codes = _run_main_against_gone_cf(
+        monkeypatch, tmp_path,
+        ENGINE_MODE="streaming", ENGINE_CHECKPOINT=str(tmp_path / "ckpt"),
+    )
+    assert codes == [1]
 
 
 def test_service_soak_ticks_restart(spark, tmp_path):
