@@ -15,7 +15,8 @@ boundary as objects:
 
 - COLLECT via :func:`ts_string` + :func:`parse_wall` — the JVM renders
   the session-tz wall clock (``date_format``), correct for both
-  TIMESTAMP and TIMESTAMP_NTZ columns;
+  TIMESTAMP and TIMESTAMP_NTZ columns — or, for a TIMESTAMP column, via
+  ``toArrow``, which hands it over as ``timestamp[us, tz=UTC]`` instants;
 - SEND via :func:`wall_string` + a JVM-side parse (``to_timestamp`` or
   a string cast), which interprets in session tz;
 - EPOCH SECONDS via :func:`epoch_utc` — a naive wall clock is UTC by

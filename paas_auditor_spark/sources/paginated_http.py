@@ -57,6 +57,11 @@ TIMEOUT_S = 30.0
 RETRIES = 3  # transient failures retried this many times per request
 BACKOFF_S = 0.5  # first retry delay, doubled on each further retry
 
+# the stored metadata JSON: compact, sorted keys, ASCII-escaped; one
+# encoder for every row, where a json.dumps call with these options
+# would build a new one per row
+_METADATA_JSON = json.JSONEncoder(sort_keys=True, separators=(",", ":"))
+
 # the reference's CF credential env vars (main_config.go:42-47), read by
 # resolve_transport from the process env or from cf_events source options
 CF_AUTH_ENV = (
@@ -305,7 +310,7 @@ def decode_resource(resource: dict) -> tuple:
         ent.get("space_guid") or None,
         None
         if metadata is None
-        else json.dumps(metadata, sort_keys=True, separators=(",", ":")),
+        else _METADATA_JSON.encode(metadata),
     )
 
 

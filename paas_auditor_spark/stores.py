@@ -351,7 +351,7 @@ class ParquetStore:
     def overlap_keys(self, floor: dt.datetime) -> set[str]:
         """Stored guids at or after ``floor`` (naive UTC wall clock)."""
         keys = self._since(floor, ["guid", "created_at"])["guid"]
-        return set(keys.to_pylist())
+        return set(keys.to_numpy(zero_copy_only=False))
 
     def event_count(self) -> int:
         """The log's row sum: exact, with no Spark job."""
@@ -387,7 +387,12 @@ class ParquetStore:
         file, the rows at or after it in ship order (``created_at``,
         ``guid``), capped at ``cap``, and only then the last-shipped guid
         dropped (P6/P7/O3/O4), so a saturated window yields ``cap - 1``
-        rows as the reference's does."""
+        rows as the reference's does.
+
+        Each column is converted whole through numpy, several times
+        faster than ``to_pylist``: a string column becomes an object
+        array of ``str``/``None``, ``created_at`` (``timestamp[us]``) one
+        of naive ``datetime``s through ``datetime64[us]``."""
         cursor_ts, shipped_id = self.effective_cursor(name)
         window = (
             self._since(cursor_ts, EVENT_COLUMNS)
@@ -395,7 +400,10 @@ class ParquetStore:
             .slice(0, cap)
         )
         window = window.filter(pc.not_equal(window["guid"], shipped_id))
-        return list(zip(*(col.to_pylist() for col in window.columns)))
+        columns = [col.to_numpy(zero_copy_only=False) for col in window.columns]
+        at = EVENT_COLUMNS.index("created_at")
+        columns[at] = columns[at].astype(object)
+        return list(zip(*columns))
 
     def upsert_cursor(
         self, name: str, updated_at: dt.datetime, shipped_id: str

@@ -23,11 +23,8 @@ state.  Sink errors fail the query — the collector's fail-fast policy
 
 from __future__ import annotations
 
-import datetime as dt
-
 from pyspark.sql import DataFrame, SparkSession
 
-from paas_auditor_spark.functions.timecross import parse_wall, ts_string
 from paas_auditor_spark.operators.ingest import ingest_delta
 from paas_auditor_spark.sources.paginated_http import EVENT_ROWS
 from paas_auditor_spark.streaming.metrics import MetricsRegistry
@@ -37,26 +34,21 @@ def store_sink(store, metrics: MetricsRegistry | None = None):
     """foreachBatch sink into a pluggable store: ``ingest_delta`` per
     micro-batch, over the batch collected as ``EVENT_ROWS`` tuples.
 
-    ``created_at`` is collected as the JVM-rendered wall-clock string and
-    parsed back as aware UTC (the session is pinned to UTC): a collected
-    datetime object would be converted with the process timezone."""
-    columns = [
-        ts_string(f.name).alias(f.name) if f.name == "created_at" else f.name
-        for f in EVENT_ROWS.fields
-    ]
+    The batch is collected with ``toArrow`` (one Spark job), where
+    ``created_at`` is ``timestamp[us, tz=UTC]`` whatever the session
+    timezone: ``to_pylist`` turns it into the aware UTC datetimes
+    ``ingest_delta`` takes, and each string column becomes ``str``/``None``
+    values in one numpy conversion."""
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        rows = [
-            (
-                r[0],
-                None
-                if r[1] is None
-                else parse_wall(r[1]).replace(tzinfo=dt.timezone.utc),
-                *r[2:],
-            )
-            for r in batch_df.select(*columns).collect()
+        table = batch_df.select(*EVENT_ROWS.names).toArrow()
+        columns = [
+            col.to_pylist()
+            if name == "created_at"
+            else col.to_numpy(zero_copy_only=False)
+            for name, col in zip(table.column_names, table.columns)
         ]
-        ingest_delta(rows, store, metrics)
+        ingest_delta(list(zip(*columns)), store, metrics)
 
     return sink
 

@@ -26,18 +26,19 @@ re-expresses the reference shipper
 Scale notes (SURVEY.md §7 hard-part 3): total ship order + stop-on-failure
 implies sequential delivery of the ≤8192-event batch, so the loop runs
 driver-side — single-threaded like the reference's shipper.  The store
-returns the batch as Python tuples and ``hec_envelope`` serializes each
-one on the driver, as the reference marshals each event in-process
-(shipper.go:117-192): a tick runs no Spark job.
+returns the batch as Python tuples and ``hec_envelope`` turns each one
+into its envelope on the driver with one string template, as the
+reference marshals each event in-process (shipper.go:117-192): a tick
+runs no Spark job and builds no per-row dict or JSON encoder.
 """
 
 from __future__ import annotations
 
-import json
 import random
 import time
 import urllib.request
 from collections.abc import Callable, Iterable, Iterator
+from json.encoder import encode_basestring as _quote
 from typing import TypeVar
 
 from paas_auditor_spark.functions.timecross import epoch_utc
@@ -125,48 +126,61 @@ def send_with_retry(
             backoff *= BACKOFF_FACTOR
 
 
+# one HEC envelope: the P13 wrapper around the 13 ``cfclient.Event``
+# fields in ``json.Marshal`` order, each ``%s`` an escaped JSON string
+# but for the raw ``metadata``
+_ENVELOPE = (
+    '{"sourcetype":"cf-audit-event","source":%s,"event":{'
+    '"guid":%s,"type":%s,"created_at":%s,"actor":%s,"actor_type":%s,'
+    '"actor_name":%s,"actor_username":%s,"actee":%s,"actee_type":%s,'
+    '"actee_name":%s,"organization_guid":%s,"space_guid":%s,'
+    '"metadata":%s}}'
+)
+# ``created_at.strftime("%Y-%m-%dT%H:%M:%SZ")`` as a JSON string, at
+# under half the cost; the year's ``%d`` leaves a year below 1000
+# unpadded, as glibc's ``%Y`` does
+_CREATED_AT = '"%d-%02d-%02dT%02d:%02d:%02dZ"'
+
+
 def hec_envelope(row: tuple, deploy_env: str) -> str:
     """The HEC payload of one ``EVENT_ROWS`` tuple (``created_at`` naive
     UTC): the full 13-field ``cfclient.Event`` in ``json.Marshal`` order
     inside the P13 envelope (shipper.go:24-28,187-192).
 
-    A NULL string field is written as ``""`` (a Go string is never nil)
-    and the raw ``metadata`` JSON is spliced in unchanged, NULL as
-    ``null`` (store.go:171-176,251-256).  The JVM twin is
-    ``json_utils.event_json`` + ``splunk_envelope``.  The two agree byte
-    for byte but for one case: a C0 control other than ``\\b \\f \\n \\r
-    \\t`` is escaped with lowercase hex here (``\\u001f``, as Go writes
-    it) and with uppercase hex by Jackson (``\\u001F``).  Both parse to
-    the same JSON.
+    One ``%``-format of the ``_ENVELOPE`` template, with no per-row dict
+    or ``JSONEncoder``: each string is escaped by the C
+    ``json.encoder.encode_basestring`` that ``json.dumps(s,
+    ensure_ascii=False)`` calls, so non-ASCII text stays raw and the
+    bytes are those of a dict + ``json.dumps`` build.  A NULL string
+    field is written as ``""`` (a Go string is never nil) and the raw
+    ``metadata`` JSON is spliced in unchanged, NULL as ``null``
+    (store.go:171-176,251-256).  The JVM twin is ``json_utils.event_json``
+    + ``splunk_envelope``.  The two agree byte for byte but for one case:
+    a C0 control other than ``\\b \\f \\n \\r \\t`` is escaped with
+    lowercase hex here (``\\u001f``, as Go writes it) and with uppercase
+    hex by Jackson (``\\u001F``).  Both parse to the same JSON.
     """
     (guid, created_at, event_type, actor, actor_type, actor_name,
      actor_username, actee, actee_type, actee_name, organization_guid,
      space_guid, metadata) = row
-    fields = {
-        "guid": guid,
-        "type": event_type,
-        "created_at": created_at and created_at.strftime("%Y-%m-%dT%H:%M:%SZ"),
-        "actor": actor,
-        "actor_type": actor_type,
-        "actor_name": actor_name,
-        "actor_username": actor_username,
-        "actee": actee,
-        "actee_type": actee_type,
-        "actee_name": actee_name,
-        "organization_guid": organization_guid,
-        "space_guid": space_guid,
-    }
-    scalars = json.dumps(
-        {k: "" if v is None else v for k, v in fields.items()},
-        ensure_ascii=False,
-        separators=(",", ":"),
-    )
-    return (
-        '{"sourcetype":"cf-audit-event","source":'
-        + json.dumps(deploy_env, ensure_ascii=False)
-        + ',"event":' + scalars[:-1]
-        + ',"metadata":' + ("null" if metadata is None else metadata)
-        + "}}"
+    return _ENVELOPE % (
+        _quote(deploy_env),
+        _quote(guid or ""),
+        _quote(event_type or ""),
+        '""' if created_at is None
+        else _CREATED_AT % (created_at.year, created_at.month, created_at.day,
+                            created_at.hour, created_at.minute,
+                            created_at.second),
+        _quote(actor or ""),
+        _quote(actor_type or ""),
+        _quote(actor_name or ""),
+        _quote(actor_username or ""),
+        _quote(actee or ""),
+        _quote(actee_type or ""),
+        _quote(actee_name or ""),
+        _quote(organization_guid or ""),
+        _quote(space_guid or ""),
+        "null" if metadata is None else metadata,
     )
 
 

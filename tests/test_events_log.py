@@ -306,6 +306,62 @@ def test_pruned_reads_match_full_scan(spark, tmp_path, floor_s):
     assert [r[0] for r in store.unshipped_events("s", 100)] == window
 
 
+def test_window_tuples_hold_the_values_and_types_of_to_pylist(spark, tmp_path):
+    """``unshipped_events`` turns the window's columns into Python values
+    through numpy: the tuples equal ``to_pylist``'s of the same window,
+    value and type, over a pyarrow append, a Spark INT96 file and a
+    zoned file, with NULL guids of org and space, NULL metadata and
+    microsecond instants.  Strings stay ``str`` (never ``numpy.str_``)
+    and ``created_at`` a naive ``datetime`` (never ``datetime64``)."""
+    def rows(prefix: str, seconds: list[int]) -> list[tuple]:
+        return [
+            (
+                f"{prefix}{i}",
+                (B + dt.timedelta(seconds=s, microseconds=i + 1)).replace(
+                    tzinfo=dt.timezone.utc
+                ),
+                "audit.ü", f"actor-{i}", "user", "名前", "u", "e", "app", "n",
+                None if i % 2 else f"org-{i}",
+                None if i % 2 else f"space-{i}",
+                None if i % 2 else '{"k":"v\\u00e9"}',
+            )
+            for i, s in enumerate(seconds)
+        ]
+
+    store = ParquetStore(spark, str(tmp_path / "wh"))
+    store.append_events(rows("a", [1, 4, 7]))
+    spark.createDataFrame(rows("s", [2, 5]), EVENT_ROWS).coalesce(1).write.mode(
+        "append"
+    ).parquet(store.events_dir)
+    table = arrow_events(["z0", "z1"], [B + dt.timedelta(seconds=3), B])
+    zoned = table.column("created_at").cast(pa.timestamp("us", "Asia/Kolkata"))
+    pq.write_table(
+        table.set_column(1, "created_at", zoned),
+        os.path.join(store.events_dir, "part-zoned.parquet"),
+    )
+
+    got = store.unshipped_events("s", 100)
+    window = store._since(B, EVENT_COLUMNS).sort_by(
+        [("created_at", "ascending"), ("guid", "ascending")]
+    )
+    want = list(zip(*(c.to_pylist() for c in window.columns)))
+    assert len(got) == len(want) == 7
+    assert [r[0] for r in got] == ["z1", "a0", "s0", "z0", "a1", "s1", "a2"]
+    for g, w in zip(got, want):
+        assert g == w
+        assert [type(v) for v in g] == [type(v) for v in w]
+    assert {type(v) for r in got for v in r} == {str, type(None), dt.datetime}
+    assert all(r[1].tzinfo is None for r in got)
+    assert got[4][10:] == got[5][10:] == (None, None, None)
+    assert got[0][10:] == (None, None, "{}")
+
+    store.upsert_cursor("s", B + dt.timedelta(days=1), "none")
+    assert store.unshipped_events("s", 100) == []
+    keys = store.overlap_keys(B + dt.timedelta(seconds=4))
+    assert type(keys) is set and keys == {"a1", "s1", "a2"}
+    assert {type(k) for k in keys} == {str}
+
+
 def make_store(kind: str, spark, tmp_path):
     if kind == "parquet":
         return ParquetStore(spark, str(tmp_path / "wh"))

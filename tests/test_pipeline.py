@@ -145,6 +145,26 @@ def test_decoder_keeps_nested_metadata_and_missing_fields():
     assert all(f.nullable for f in EVENT_ROWS.fields)
 
 
+@pytest.mark.parametrize(
+    "metadata",
+    [
+        {"request": {"b": [1, {"z": None, "a": True}], "a": 2.5}, "index": 3},
+        {"naïve": "中文 😀", "\u2028": "tab\there", "ctl": "\x1f"},
+        {},
+    ],
+    ids=["nested", "non_ascii", "empty"],
+)
+def test_decoder_metadata_bytes_match_json_dumps(metadata):
+    """The decoder's one shared encoder stores the bytes a per-row
+    ``json.dumps(m, sort_keys=True, separators=(",", ":"))`` gives:
+    sorted keys, compact, non-ASCII escaped."""
+    event = make_event(1)
+    event["entity"]["metadata"] = metadata
+    assert decode_resource(event)[12] == json.dumps(
+        metadata, sort_keys=True, separators=(",", ":")
+    )
+
+
 # --- collector (reference cf_audit_event_collector_test.go) ---------------
 
 
@@ -647,6 +667,70 @@ def test_python_envelope_parses_like_the_jvm_envelope(spark, rows):
         texts = "".join(v for v in row[:12] if isinstance(v, str))
         if not any(c < " " and c not in _SHORT_ESCAPES for c in texts):
             assert got == want
+
+
+def _oracle_envelope(row: tuple, deploy_env: str) -> str:
+    """The dict + ``json.dumps`` envelope builder that ``hec_envelope``'s
+    template replaced, kept as its byte-level oracle."""
+    (guid, created_at, event_type, actor, actor_type, actor_name,
+     actor_username, actee, actee_type, actee_name, organization_guid,
+     space_guid, metadata) = row
+    fields = {
+        "guid": guid,
+        "type": event_type,
+        "created_at": created_at and created_at.strftime("%Y-%m-%dT%H:%M:%SZ"),
+        "actor": actor,
+        "actor_type": actor_type,
+        "actor_name": actor_name,
+        "actor_username": actor_username,
+        "actee": actee,
+        "actee_type": actee_type,
+        "actee_name": actee_name,
+        "organization_guid": organization_guid,
+        "space_guid": space_guid,
+    }
+    scalars = json.dumps(
+        {k: "" if v is None else v for k, v in fields.items()},
+        ensure_ascii=False,
+        separators=(",", ":"),
+    )
+    return (
+        '{"sourcetype":"cf-audit-event","source":'
+        + json.dumps(deploy_env, ensure_ascii=False)
+        + ',"event":' + scalars[:-1]
+        + ',"metadata":' + ("null" if metadata is None else metadata)
+        + "}}"
+    )
+
+
+@settings(max_examples=300, deadline=None)
+@given(rows=st.lists(_ROW, min_size=1, max_size=8), deploy_env=_TRICKY)
+def test_envelope_template_is_byte_identical_to_json_dumps(rows, deploy_env):
+    """``hec_envelope``'s one-template build gives the bytes of the dict
+    + ``json.dumps`` build for any text, C0 controls included, and for
+    NULL fields and metadata."""
+    from paas_auditor_spark.streaming.ship import hec_envelope
+
+    for row in rows:
+        for env in (deploy_env, "prod-ü-中-😀\u2028"):
+            assert hec_envelope(row, env) == _oracle_envelope(row, env)
+
+
+@pytest.mark.parametrize(
+    "created_at",
+    [dt.datetime(1, 1, 1), dt.datetime(999, 12, 31, 23, 59, 59, 999999),
+     dt.datetime(1000, 1, 2, 3, 4, 5), dt.datetime(9999, 12, 31, 23, 59, 59),
+     dt.datetime(2024, 2, 29, 9, 8, 7, 6, tzinfo=dt.timezone.utc)],
+    ids=["year1", "year999", "year1000", "year9999", "aware"],
+)
+def test_envelope_created_at_matches_strftime_at_the_year_edges(created_at):
+    """The envelope's ``created_at`` is ``strftime``'s at every year,
+    unpadded below 1000 as glibc writes ``%Y``, and ignores a zone as
+    ``strftime`` does."""
+    from paas_auditor_spark.streaming.ship import hec_envelope
+
+    row = ("g", created_at, *["x"] * 10, None)
+    assert hec_envelope(row, "prod") == _oracle_envelope(row, "prod")
 
 
 def test_orc_and_json_round_trip_preserve_events(spark, sf_dir, tmp_path):

@@ -225,8 +225,8 @@ def test_both_ingest_paths_store_and_ship_the_same_instants_under_any_process_tz
     spark, tmp_path
 ):
     """The collector tick hands ``ingest_delta`` the decoder's aware
-    datetimes; ``store_sink`` collects the micro-batch as wall-clock
-    strings.  Under UTC, America/New_York and Asia/Kolkata process
+    datetimes; ``store_sink`` collects the micro-batch with ``toArrow``
+    as UTC instants.  Under UTC, America/New_York and Asia/Kolkata process
     timezones both paths store the same ``created_at`` instants, derive
     the same watermark and ship byte-identical payloads, on
     ``ParquetStore`` and on ``DbApiStore`` over DuckDB.
