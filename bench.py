@@ -3,21 +3,17 @@
 Prints TWO JSON lines to stdout:
   1. the full record (metric/value/unit/queries/sf) — the complete
      per-query map, ALSO written verbatim to BENCH_DETAIL.json next to
-     this script on EVERY run (VERDICT r11 #2: the driver's PERF reads
-     the sidecar the summary points at; official-only writes left two
-     rounds of ad-hoc driver runs with no per-query data at all).  The
-     record carries ``"official": true/false`` so a committed official
-     close is distinguishable from an ad-hoc control run that
-     overwrote the working-tree copy (the VERDICT r7 #4 concern —
-     resolved by self-identification instead of by not writing);
+     this script on EVERY run, so an ad-hoc run leaves per-query data
+     too.  The record carries ``"official": true/false`` so a committed
+     official close is distinguishable from an ad-hoc control run that
+     overwrote the working-tree copy;
   2. LAST, a compact summary (metric/value/unit/n_queries/slowest/sf)
      small enough (<1 KB) that a bounded tail-capture of stdout always
      retains one intact, parseable line carrying total_wall.
-The capture window that records official runs keeps the final ~2000
-bytes of stdout; round 6's single 3.5 KB line was cut mid-record
-(parsed: null, first 46 queries lost), and the full 143-query map is
-~3.4 KB even at 2-decimal compact encoding — it can never fit the
-tail window, hence sidecar + compact-summary layout.
+A capture window that keeps only the final ~2000 bytes of stdout cuts
+a longer line mid-record, and the full 143-query map is ~3.4 KB even at
+2-decimal compact encoding — it can never fit the tail window, hence
+sidecar + compact-summary layout.
 
 Each query is fully materialized through the noop sink (so limits/projections
 can't short-circuit the measurement) after a small JVM warm-up.
@@ -79,9 +75,9 @@ HEADLINE = [
     "minhash_near_dup_md5",
     "minhash_gate_md5",
     # minhash_gate_folded_md5 supersedes minhash_gate_tombstoned_md5 in
-    # the headline (r10 verdict task #1): a probe-per-ingest-tick
-    # deployment measures the post-fold zero-reconciliation plan — the
-    # adversarial read-time reconciliation stays oracle-registered as
+    # the headline: a probe-per-ingest-tick deployment measures the
+    # post-fold zero-reconciliation plan — the adversarial read-time
+    # reconciliation stays oracle-registered as
     # minhash_gate_tombstoned_md5 (same oracle) and equality-pinned in
     # tests/test_dedup.py, just not charged to the headline
     "minhash_gate_folded_md5",
@@ -115,7 +111,7 @@ HEADLINE = [
     "lm_perplexity_interp",
     "lm_perplexity_persisted",
     # the per-ingest-batch deployment twin (broadcast-semi probe of the
-    # persisted model — zero model shuffles); r12 candidate #5
+    # persisted model — zero model shuffles)
     "lm_perplexity_sharded",
     "lm_perplexity_retracted",
     "temperature_sample",
@@ -195,7 +191,7 @@ HEADLINE = [
     "bloom_decontaminate",
     "bloom_decontaminate_persisted",
     # the per-ingest-batch deployment twin (range-pruned batch scan
-    # against the persisted filter literal); r12 candidate #5
+    # against the persisted filter literal)
     "bloom_decontaminate_sharded",
     "bloom_pruned_join",
     "token_entropy",
@@ -211,24 +207,22 @@ HEADLINE = [
 ]
 
 
-# Paired drift controls (r10 verdict task #6): three stable, plan-simple
-# queries re-timed at the START (right after JVM warm-up, before the
-# headline sweep) and at the END of the run, emitted alongside their
-# in-sequence headline timings plus loadavg — so a cross-round record
-# carries its own contention calibration (r10 needed a separate
-# tools/drift_control.py session to explain a 164 s vs 148 s face-value
-# gap whose per-query median was 0.998).  Two ratios (VERDICT r11 #7 —
-# the old single ratio conflated JVM warm-up with CPU steal because the
-# three controls are the FIRST headline entries):
+# Paired drift controls: three stable, plan-simple queries re-timed at
+# the START (right after JVM warm-up, before the headline sweep) and at
+# the END of the run, emitted alongside their in-sequence headline
+# timings plus loadavg — so each record carries its own contention
+# calibration.  Two ratios, because a single ratio would conflate JVM
+# warm-up with CPU steal (the three controls are the FIRST headline
+# entries):
 #   ``inflation``       = controls_headline / controls_end — how much
 #     slower the controls ran in-sequence than at the quiet tail;
 #   ``inflation_start`` = controls_start / controls_end — box drift
 #     between the two bracketing re-times, warm-up-free on both sides.
-# ≈ 1 on both means an uncontended sweep; a prior round's control block
-# normalizes cross-round totals.  NOTE the start re-time warms the three
+# ≈ 1 on both means an uncontended sweep; an earlier run's control block
+# normalizes totals across runs.  NOTE the start re-time warms the three
 # control queries before their in-sequence headline pass; best-of-2
 # already takes the warm minimum, so the headline number's meaning is
-# unchanged (measured: within noise of the r11 protocol).
+# unchanged (measured: within noise of timing without the start block).
 CONTROLS = ["unshipped_events", "pricing_summary", "dedup_exact"]
 
 
@@ -267,9 +261,9 @@ def main() -> None:
     # warm up the JVM / codegen path so query 1 isn't charged for startup
     spark.range(1_000_000).selectExpr("sum(id)").collect()
 
-    # start-of-run control re-time (VERDICT r11 #7): same protocol, same
-    # session, AFTER warm-up but BEFORE the sweep — pairs with the end
-    # block so drift is measured warm-up-free at both ends
+    # start-of-run control re-time: same protocol, same session, AFTER
+    # warm-up but BEFORE the sweep — pairs with the end block so drift
+    # is measured warm-up-free at both ends
     controls_start = {
         name: _best_of_two(REGISTRY[name].fn, spark, sf_dir)
         for name in CONTROLS
@@ -323,10 +317,8 @@ def main() -> None:
     full_line = json.dumps(full)
     print(full_line)
     # sidecar: the complete per-query map, immune to tail truncation —
-    # written on EVERY run (VERDICT r11 #2: the driver benches ad hoc, and
-    # official-only writes meant PERF never saw per-query data; the
-    # ``official`` flag inside the record preserves the r7 #4 distinction
-    # between a committed official close and an ad-hoc overwrite).
+    # written on EVERY run; the ``official`` flag inside the record tells
+    # a committed official close from an ad-hoc overwrite.
     detail_path = os.environ.get("SPARK_GRAFT_BENCH_DETAIL") or os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
     )
@@ -339,7 +331,7 @@ def main() -> None:
     # retains intact — this is the line the official record parses.
     slowest = dict(
         sorted(timings.items(), key=lambda kv: -kv[1])[:6]
-    )  # 6 (was 8): the control block joined the summary; stay <1 KB
+    )  # 6, so the summary stays <1 KB with the control block in it
     print(
         json.dumps(
             {

@@ -32,7 +32,10 @@ def _env_seconds(name: str, default: float) -> float:
 
 @dataclass
 class EngineConfig:
-    """Defaults match reference main_config.go:34-65 and store.go:206."""
+    """Defaults match reference main_config.go:34-65.  The values the
+    reference fixes in code are module constants next to their use:
+    ``paginated_http.PAGE_SIZE``, ``paginated_http.WATERMARK_OVERLAP_S``
+    and ``ship.SHIP_BATCH_CAP``."""
 
     # collector tick (reference main_config.go:56, default 2m)
     collector_schedule_s: float = field(
@@ -50,12 +53,6 @@ class EngineConfig:
     pagination_wait_s: float = field(
         default_factory=lambda: _env_seconds("FETCHER_PAGINATION_WAIT_TIME", 0.2)
     )
-    # page size (reference cf_audit_event_fetcher.go:29, fixed 100)
-    page_size: int = 100
-    # ship batch cap (reference store.go:206, fixed 8192)
-    ship_batch_cap: int = 8192
-    # watermark overlap (reference cf_audit_event_collector.go:36, fixed 5s)
-    watermark_overlap_s: float = 5.0
     # deploy env tag for the ship envelope (reference main_config.go:36,
     # default "dev")
     deploy_env: str = field(

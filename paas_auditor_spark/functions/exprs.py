@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 def _scan_split_estimate(df) -> int | None:
     """Estimated scan task count from input-file sizes (parquet footer
     listing only — NO job, NO physical planning), mirroring Spark's own
-    split arithmetic (FilePartition.maxSplitBytes, ADVICE r11 #1):
+    split arithmetic (FilePartition.maxSplitBytes):
 
       totalBytes   = Σ (file_size + openCostInBytes)
       bytesPerCore = totalBytes / defaultParallelism
@@ -61,9 +61,9 @@ def _scan_split_estimate(df) -> int | None:
 def _parse_byte_conf(v: str) -> int | None:
     """Parse a Spark byte conf value ("128m", "1g", "134217728b", plain
     int) into bytes.  Returns ``None`` on unparseable or non-positive
-    values (ADVICE r11 #4: silently mapping a misconfigured conf to the
-    128 MB default masked the problem — callers fall back to the exact
-    partition probe instead)."""
+    values (silently mapping a misconfigured conf to the 128 MB default
+    would mask the problem — callers fall back to the exact partition
+    probe instead)."""
     s = v.strip().lower()
     units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
     if s.endswith("b") and not s[:-1].isdigit():
@@ -92,7 +92,7 @@ def fan_out(df, min_partitions: int | None = None):
     no-op — no extra Exchange ever appears in the large-input plan.
 
     The split count is ESTIMATED from input-file sizes when the relation
-    is file-backed (r11 optimization: the exact probe —
+    is file-backed (the exact probe —
     ``df.rdd.getNumPartitions()`` — forces full physical planning +
     codegen of the subtree at plan-BUILD time, measured 0.1-0.4 s per
     call; the size estimate is ~2 ms and mirrors Spark's own

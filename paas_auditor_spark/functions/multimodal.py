@@ -99,11 +99,11 @@ def synth_ppm(
     height: int = 12,
 ) -> DataFrame:
     """Deterministic binary-PPM (netpbm ``P6``) image synthesis from a
-    float-vector column — the image twin of ``synth_wav`` (r9: it
-    retires the 'real image decode is PIL-gated' residual the same way
-    the WAV path retired audio's in r8).  P6 is a REAL image format —
-    ``P6\\n<w> <h>\\n255\\n`` header + raw big-endian RGB bytes — openable
-    by standard tools, yet dependency-free to read and write.
+    float-vector column — the image twin of ``synth_wav``, so real image
+    decode needs no PIL, as the WAV path needs no audio library.  P6 is
+    a REAL image format — ``P6\\n<w> <h>\\n255\\n`` header + raw
+    big-endian RGB bytes — openable by standard tools, yet
+    dependency-free to read and write.
 
     Pixel (p, channel c) byte = floor((clip(v, −1, 1) + 1)·127.5 + 0.5)
     where v = vec[(3p + c) mod dim] — round-half-up ``floor`` form on

@@ -117,7 +117,7 @@ def segment_dedup(
     # segments (empty/whitespace/NULL) would otherwise vanish from the
     # inner pipeline; left-join them back with an all-clean zero row.
     # spine = an id-only relation equal to docs_df.select(id_col); see
-    # bigram_lm_perplexity (r11 verdict #1)
+    # bigram_lm_perplexity
     if spine is None:
         spine = docs_df.select(id_col)
     return (
@@ -228,10 +228,10 @@ def bigram_lm_perplexity(
     # spine = an id-only relation equal to docs_df.select(id_col).  The
     # caller should pass a bare column-pruned scan when docs_df carries
     # lineage the id projection doesn't need — e.g. a fan_out rebalance
-    # Exchange added for the tokenizer (r11 verdict #1: deriving the
-    # spine from the rebalanced docs_df re-paid the scan AND the
-    # repartition; from the fat (id, toks) checkpoint it re-read whole
-    # rows just to project ids).
+    # Exchange added for the tokenizer (deriving the spine from the
+    # rebalanced docs_df re-pays the scan AND the repartition; from the
+    # fat (id, toks) checkpoint it re-reads whole rows just to project
+    # ids).
     if spine is None:
         spine = docs_df.select(F.col(id_col))
     return (
@@ -296,7 +296,7 @@ def trigram_interp_perplexity(
     the big relation — then shuffles exactly once, joining the enriched
     c3 on (w1, w2, w3); the naive formulation re-shuffles it five
     times, once per marginal key (measured 1.9 s vs 1.5 s at sf0.1).
-    Second (the r6-verdict marginal-join fusion): of the four marginal
+    Second (the marginal-join fusion): of the four marginal
     joins onto c3, the two BIGRAM-keyed ones ((w1,w2) and (w2,w3)) ride
     the very exchanges that build c3ctx/b23 (identical child plans →
     ReusedExchange, no extra shuffle), while the two UNIGRAM-keyed ones
@@ -326,7 +326,7 @@ def trigram_interp_perplexity(
         .agg(F.count(F.lit(1)).alias("m"))
         .localCheckpoint(eager=False)
     )
-    # c3 and b23 stay localCheckpoint'd: an r11 A/B removed them hoping
+    # c3 and b23 stay localCheckpoint'd: an A/B that removed them hoping
     # AQE stage reuse would dedupe the shared Exchange-rooted aggregates,
     # but exec time rose MORE than the ~0.28 s/call build-time planning
     # fell (interp exec 1.54 → 2.15 s, jobs 72 → 96 at sf0.1) — the
@@ -373,7 +373,7 @@ def trigram_interp_perplexity(
     # spine = an id-only relation equal to docs_df.select(id_col); see
     # bigram_lm_perplexity — callers pass a bare pruned scan so the id
     # projection doesn't re-pay a rebalance Exchange or re-read fat
-    # checkpoint rows (r11 verdict #1)
+    # checkpoint rows
     if spine is None:
         spine = docs_df.select(F.col(id_col))
     return (
@@ -469,8 +469,8 @@ def lm_index_finalize(
     model_path: str,
 ) -> None:
     """Materialize the SCORING MODEL from accumulated lm_counts_collector
-    batches — the train-once step of the persisted LM (VERDICT r7 #3:
-    the bm25_persisted treatment for the slowest headline family).
+    batches — the train-once step of the persisted LM (the
+    bm25_persisted treatment for the slowest headline family).
 
     Folds the additive trigram counts (one sum groupBy), derives every
     marginal the Jelinek–Mercer interpolation needs, and writes four
@@ -645,7 +645,7 @@ def trigram_interp_perplexity_from_model(
     l3, l2, l1 = lambdas
     # cached-schema reads: a probe-per-ingest-tick deployment re-reads
     # the same immutable finalized model every tick — four schema
-    # inference jobs per probe for metadata that cannot change (r12)
+    # inference jobs per probe for metadata that cannot change
     model = read_parquet_cached(spark, f"{model_path}/model")
     b2 = read_parquet_cached(spark, f"{model_path}/b2")
     u3 = read_parquet_cached(spark, f"{model_path}/u3")
@@ -658,7 +658,7 @@ def trigram_interp_perplexity_from_model(
         # broadcast build and the scored stream) — checkpoint so the
         # tokenizer runs once.  On the non-batch path occ has a single
         # consumer chain (the spine below reads the raw input), so the
-        # checkpoint would be pure build-time planning cost (r11).
+        # checkpoint would be pure build-time planning cost.
         toked = toked.localCheckpoint(eager=False)
     occ = toked.select(
         id_col, F.explode(_tri_structs(F.col("toks"))).alias("g")
@@ -672,9 +672,9 @@ def trigram_interp_perplexity_from_model(
         # batch-bounded key sets drive map-side semi-joins: the model
         # and marginal relations are scanned once each, never shuffled.
         # keys feeds three broadcasts — checkpoint the distinct once so
-        # the explode+distinct isn't re-run per consumer (r11 A/B: the
-        # reuse-instead-of-checkpoint variant re-ran it per broadcast,
-        # sharded exec 0.59 → 1.70 s)
+        # the explode+distinct isn't re-run per consumer (the
+        # reuse-instead-of-checkpoint variant re-runs it per broadcast,
+        # measured sharded exec 0.59 → 1.70 s)
         keys = (
             occ.select("w1", "w2", "w3")
             .distinct()
@@ -717,7 +717,7 @@ def trigram_interp_perplexity_from_model(
         # so the static plan carries zero sort-merge joins
         per_doc = F.broadcast(per_doc)
     # spine = an id-only relation equal to docs_df.select(id_col); see
-    # bigram_lm_perplexity (r11 verdict #1)
+    # bigram_lm_perplexity
     if spine is None:
         spine = docs_df.select(F.col(id_col))
     return (
@@ -918,7 +918,7 @@ def dsir_scores(
     # totals fold out of the ≤buckets-row distribution tables — summing
     # them is free, while counting the token relations again would be
     # two more corpus-sized aggregation jobs
-    # the dist checkpoints stay: an r11 A/B dropped them in favor of AQE
+    # the dist checkpoints stay: an A/B that dropped them in favor of AQE
     # stage reuse and the corpus-sized explode+count recomputed per
     # consumer instead (exec 1.16 → 1.86 s at sf0.1, dwarfing the
     # ~0.28 s/call build-time planning saved)

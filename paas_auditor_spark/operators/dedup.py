@@ -367,7 +367,7 @@ def _content_key(arr: Column, ordered: bool = False) -> Column:
     """128-bit content key of a bigint array: a struct of two
     differently-salted xxhash64 values over the canonical form (sorted
     for SETS, as-is for ordered arrays like signatures).  128 bits on
-    purpose (r9 review): a 64-bit key merges two genuinely DIFFERENT
+    purpose: a 64-bit key merges two genuinely DIFFERENT
     documents at ~n²/2⁶⁵ odds — ~10⁴ false groups at the brief's
     10¹²-doc posture, each emitting fabricated jaccard-1.0 pairs that
     bypass the exact-verify stage; the salted pair pushes that to
@@ -386,13 +386,12 @@ def _content_key(arr: Column, ordered: bool = False) -> Column:
 def _min_rep_collapse(slim: DataFrame, id_col: str) -> DataFrame:
     """(id, _ckey, _rep) with the min-id representative per STORED
     content key — the ONE collapse body shared by the collector write
-    path, the maintenance fold, and the legacy probe (the r9
-    ``_collapse_identical`` lesson: inline copies of exactly this shape
-    drifted once already).  NULL content keys — rows from a pre-_ckey
-    index layout surfacing through a mergeSchema read — are coalesced
-    to a per-row synthetic key, so each such row is its OWN
-    representative: never collapsed into one bogus NULL group, never
-    dropped by the null-unsafe equi-join (either failure silently
+    path, the maintenance fold, and the legacy probe, so no inline
+    copy of this shape can drift from the others.  NULL content keys —
+    rows from a pre-_ckey index layout surfacing through a mergeSchema
+    read — are coalesced to a per-row synthetic key, so each such row
+    is its OWN representative: never collapsed into one bogus NULL
+    group, never dropped by the null-unsafe equi-join (either failure silently
     un-gates every pre-upgrade document)."""
     keyed = slim.select(
         F.col(id_col),
@@ -415,8 +414,7 @@ def _collapse_identical(
 ) -> tuple[DataFrame, DataFrame]:
     """Collapse rows with identical content (``key``) to one
     representative — the shared guard core for the shingle-set AND
-    signature paths (r9 review: the signature path had drifted into an
-    inline copy).
+    signature paths.
 
     Returns ``(membership, rep_rows)``: ``membership`` maps every id to
     its group representative (min id among identical-content rows);
@@ -651,9 +649,9 @@ def jaccard_pairs_hashed(
     collisions; the bigint array_intersect/union is far cheaper than string
     comparison, which matters because verification touches every candidate.
 
-    ``sets_b``: optional separate relation for the id_b side (r9 review:
-    the incremental gates have disjoint sides, and unioning both into one
-    relation made the id_a join scan the whole — at deployment scale,
+    ``sets_b``: optional separate relation for the id_b side: the
+    incremental gates have disjoint sides, and unioning both into one
+    relation would make the id_a join scan the whole — at deployment scale,
     corpus-sized — index sets for zero possible matches).
 
     The returned jaccard is 4dp-ROUNDED, and downstream threshold
@@ -753,7 +751,7 @@ def minhash_near_duplicates(
     # star: a single verified (rep_a, rep_b) edge stands for the whole
     # group×group pair block — each group is already connected by its
     # star edges, so components are identical (test-pinned) and the
-    # cross-group output stays LINEAR (r9 review: expanding members here
+    # cross-group output stays LINEAR (expanding members here
     # would re-create the quadratic blowup for two near-identical — not
     # byte-identical — mega-groups, e.g. 10⁶ copies of page A × 10⁶
     # copies of a one-token variant B)
@@ -785,20 +783,19 @@ def _incremental_gate(
     hash_fn: str = "xxhash64",
     idx_precapped: bool = False,
 ) -> DataFrame:
-    """The shared gate core (r9 review: the in-memory and persisted
-    gates had drifted into copies): NEW documents collapsed, banded and
-    equi-joined against an index-side REPRESENTATIVE band relation, the
-    candidates exact-verified against the two sides' own sets relations,
-    both sides fanned back out through their memberships.  The index
-    side arrives pre-collapsed (``banded_idx``/``idx_rep_sets`` hold
-    representatives only — or a superset keyed so only representatives
-    can be candidate partners, ``m_idx`` maps every index id to its
-    rep), so occupancy caps count DISTINCT contents on both sides
-    regardless of where the index came from.  ``idx_precapped`` skips
-    the index-side occupancy window (the materialized-``_occ`` probe
-    path).  ``hash_fn`` MUST match the hash the index side was shingled
-    with (band keys from different hash families would silently never
-    match)."""
+    """The gate core the in-memory and persisted gates share: NEW
+    documents collapsed, banded and equi-joined against an index-side
+    REPRESENTATIVE band relation, the candidates exact-verified against
+    the two sides' own sets relations, both sides fanned back out
+    through their memberships.  The index side arrives pre-collapsed
+    (``banded_idx``/``idx_rep_sets`` hold representatives only — or a
+    superset keyed so only representatives can be candidate partners,
+    ``m_idx`` maps every index id to its rep), so occupancy caps count
+    DISTINCT contents on both sides regardless of where the index came
+    from.  ``idx_precapped`` skips the index-side occupancy window (the
+    materialized-``_occ`` probe path).  ``hash_fn`` MUST match the hash
+    the index side was shingled with (band keys from different hash
+    families would silently never match)."""
     new_sets = hashed_shingle_sets(
         new_df, text_col, id_col, shingle_k, hash_fn
     ).localCheckpoint(eager=False)
@@ -967,10 +964,10 @@ def minhash_index_collector(
       banding parameters carried per row (the bloom m/k/scheme
       convention — RLE-compressed to nothing by parquet) so a probe
       with MISMATCHED parameters fails loudly instead of silently
-      matching almost no band keys (r9 review);
+      matching almost no band keys;
     - ``sets``: (id, hset, _ckey) — the hashed shingle sets the
       exact-Jaccard verify touches only for candidate representative
-      ids, plus the 128-bit content key (r9 review: without a stored
+      ids, plus the 128-bit content key (without a stored
       key, cross-batch duplicate contents would band uncollapsed and the
       occupancy cap would count copies instead of distinct contents,
       silently dropping a flooded page's buckets exactly where the
@@ -979,8 +976,8 @@ def minhash_index_collector(
       content membership relation, batch-LOCAL at write time
       (``_rep`` = min id within the batch's own rows) and rewritten to
       the GLOBAL collapse by ``minhash_fold`` (``_global=true``), so a
-      probe never re-aggregates the whole index per gate call (r9
-      verdict: the per-probe index-wide ``groupBy(_ckey)`` was the
+      probe never re-aggregates the whole index per gate call (a
+      per-probe index-wide ``groupBy(_ckey)`` would be the
       gate's scale ceiling at the reference's 15 s shipper cadence);
       the probe reconciles only the DELTA — batches committed since the
       last fold — plus tombstone-touched groups, both O(delta).
@@ -1071,9 +1068,9 @@ def minhash_fold(
     target_files: int = 1,
 ) -> int:
     """The MinHash gate index's maintenance fold: generic compaction
-    PLUS materialization of the probe's two global artifacts (r9
-    verdict task #1 — the per-probe index-wide ``groupBy(_ckey)`` was
-    the gate's scale ceiling at the reference's 15 s shipper cadence,
+    PLUS materialization of the probe's two global artifacts (a
+    per-probe index-wide ``groupBy(_ckey)`` would be the gate's scale
+    ceiling at the reference's 15 s shipper cadence,
     ``pkg/shippers/cf_audit_events_to_splunk_shipper.go:104``):
 
     - ``collapse``: ``_rep`` rewritten from batch-local to the GLOBAL
@@ -1172,8 +1169,8 @@ def minhash_incremental_persisted(
     """Ingestion-time near-dup gate against a PERSISTED band index —
     the deployment shape of ``minhash_near_duplicates_incremental``:
     the corpus is never re-shingled at gate time, and after a
-    ``minhash_fold`` it is never re-AGGREGATED either (r9 verdict: the
-    per-probe global collapse rebuild was an index-sized shuffle per
+    ``minhash_fold`` it is never re-AGGREGATED either (a per-probe
+    global collapse rebuild would be an index-sized shuffle per
     gate call at the reference's 15 s shipper cadence).  The fold
     materializes the global collapse (``collapse._rep``/``_global``)
     and the band-side representative flag + bucket occupancy
@@ -1227,8 +1224,8 @@ def minhash_incremental_persisted(
         band_paths = batch_data_paths(index_path, "bands")
         set_paths = batch_data_paths(index_path, "sets")
     except ValueError:
-        # bootstrap: nothing indexed yet → nothing can gate (the r9
-        # review's first-batch case; the in-memory twin over an empty
+        # bootstrap: nothing indexed yet → nothing can gate (the
+        # first-batch case; the in-memory twin over an empty
         # index_df returns the same empty relation)
         return new_df.select(
             F.col(id_col).alias("id_a"),
@@ -1354,7 +1351,7 @@ def _gate_persisted_materialized(
     # schemas are uniform today (the collector and the fold write the
     # same four columns), but a future fold-added collapse column must
     # not be silently dropped depending on which file Spark happens to
-    # infer the schema from (r10 advice)
+    # infer the schema from
     collapse = read_parquet_cached(
         spark, *collapse_paths, merge_schema=True
     )
@@ -1604,11 +1601,10 @@ def connected_components(
             .groupBy("s")
             .agg(F.min("component").alias("nbr_min"))
         )
-        # convergence flag computed INLINE (r11 optimization): labels
-        # only ever decrease, so new != old ⇔ nbr_min < component — no
-        # separate join-back against the old labels per round.  The one
-        # action per round both materializes the checkpoint and folds
-        # the change count.
+        # convergence flag computed INLINE: labels only ever decrease,
+        # so new != old ⇔ nbr_min < component — no separate join-back
+        # against the old labels per round.  The one action per round
+        # both materializes the checkpoint and folds the change count.
         new_labels = (
             labels.join(neighbor_min, labels.node == neighbor_min.s, "left")
             .select(
@@ -1683,7 +1679,7 @@ def connected_components_star(
     )
     # carry the canonical edge count across rounds: e was counted when
     # it was last round's `contracted`, so re-counting it every round
-    # was one redundant job per round (r11)
+    # would be one redundant job per round
     n_e = e.count()
     for _ in range(max_iter):
         # -- large-star: neighborhoods over BOTH orientations
@@ -1796,7 +1792,7 @@ def _dup_span_intervals(
         )
         .select("id", F.col("pg.pos").alias("pos"), F.col("pg.gh").alias("gh"))
     )
-    # grams deliberately NOT checkpointed (r11 A/B): it feeds both the
+    # grams deliberately NOT checkpointed: it feeds both the
     # dup-count groupBy and the LEFT SEMI probe side, but materializing
     # the corpus-sized (id, pos, gh) stream costs far more than running
     # the codegen'd concat+hash map twice (span_removal 2.5 → 5.1 s

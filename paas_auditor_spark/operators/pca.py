@@ -36,13 +36,13 @@ def _sums(df: DataFrame, vec_col: str, dim: int) -> DataFrame:
     j = 0 rows carry the mean sums, j ≥ i the upper-triangle product
     sums (1-based).
 
-    Shape (r8): each partition accumulates its PARTIAL GRAM MATRIX as
+    Shape: each partition accumulates its PARTIAL GRAM MATRIX as
     one numpy ``Xᵀ·X`` per Arrow batch and emits ≤ d(d+3)/2 rows total
     (mapInPandas over the whole partition iterator), so the reduce
-    shuffles P·d²-ish rows — a cluster constant.  The previous
-    expression form exploded d(d+3)/2 STRUCTS PER INPUT ROW (2 144 at
-    d=64 — 430M exploded rows at the 100×-rehearsal corpus, measured
-    23.8× wall) — the covariance twin of the IVF-assignment lesson:
+    shuffles P·d²-ish rows — a cluster constant.  An expression form
+    explodes d(d+3)/2 STRUCTS PER INPUT ROW (2 144 at d=64 — 430M
+    exploded rows at the 100×-rehearsal corpus, measured 23.8× wall),
+    the covariance twin of the IVF-assignment lesson:
     per-row O(d²) interpreted work belongs in one BLAS call.  Summation
     regroups (per-batch matmul partials vs one global fold), which is
     inside the 4dp rounding every consumer applies — the same
@@ -51,11 +51,11 @@ def _sums(df: DataFrame, vec_col: str, dim: int) -> DataFrame:
     import pandas as pd
 
     # rows with NULL ELEMENTS or off-dimension arrays are excluded up
-    # front (r8 review): Arrow hands a null element to numpy as NaN,
-    # which one gram update would spread into every (i, j) sum — an
-    # all-NaN covariance and a LinAlgError out of eigh — and a ragged
-    # length crashes np.vstack.  The defined contract: the statistics
-    # cover exactly the complete dim-wide vectors.
+    # front: Arrow hands a null element to numpy as NaN, which one gram
+    # update would spread into every (i, j) sum — an all-NaN covariance
+    # and a LinAlgError out of eigh — and a ragged length crashes
+    # np.vstack.  The defined contract: the statistics cover exactly the
+    # complete dim-wide vectors.
     base = (
         df.where(F.col(vec_col).isNotNull())
         .select(F.col(vec_col).cast("array<double>").alias("v"))

@@ -106,12 +106,12 @@ def _lloyd_numpy(X, k: int, iters: int):
     whole trajectory a CROSS-ENGINE CLOSED FORM: numpy-mean vs SQL-avg
     summation-order noise is ~1e-15, four orders below the rounding
     grain, so the DuckDB oracle replaying the same rounded recurrence
-    reproduces every codebook bit-for-bit (what upgrades pq_codes from
-    rows-only to an exact oracle — VERDICT r7 #8).  9dp is ~1e5× finer
+    reproduces every codebook bit-for-bit (what gives pq_codes an
+    exact oracle rather than a rows-only check).  9dp is ~1e5× finer
     than any subspace distance that decides an assignment, so codes and
     recall are unaffected.
 
-    Known asymmetry (ADVICE r8, documented deliberately): numpy's
+    Known asymmetry (documented deliberately): numpy's
     ``.round(9)`` is round-HALF-EVEN while the oracle's
     ``round(avg(..), 9)`` in DuckDB is half-AWAY-from-zero, and the two
     sides also use different distance forms (full (x−c)² here vs the

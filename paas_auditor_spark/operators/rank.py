@@ -70,7 +70,7 @@ def with_global_order_stats(
     spark = df.sparkSession
     # the four working columns are injected and dropped internally; an
     # input that already carries one would be silently overwritten and
-    # then dropped from the output (ADVICE r7) — refuse loudly instead
+    # then dropped from the output — refuse loudly instead
     reserved = {"_pid", "_wt", "_rank_off", "_w_off"}
     clash = reserved.intersection(df.columns)
     if clash:

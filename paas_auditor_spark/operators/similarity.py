@@ -199,15 +199,14 @@ def _empty_ids_udf():
 def _assign_matrix(vs: "pd.Series", dim: int) -> "np.ndarray":
     """Validated (batch × dim) matrix for the assignment UDFs.
 
-    ADVICE r8: ``np.vstack`` on a raw Arrow column turns a NULL or
-    wrong-dimension embedding row into an opaque numpy broadcast error
-    deep in a task — a tolerance regression vs the replaced join+window
-    form (which yielded null sims).  Assignment must produce a list id
-    for EVERY row (silently dropping bad vectors would lose corpus rows
-    from an index build), so unlike pca's pre-filter the contract here
-    is reject-loudly: the good path costs nothing (one try), and on
-    failure the batch is scanned to name the offending row and the
-    contract explicitly."""
+    ``np.vstack`` on a raw Arrow column turns a NULL or wrong-dimension
+    embedding row into an opaque numpy broadcast error deep in a task,
+    where a join+window form would yield null sims.  Assignment must
+    produce a list id for EVERY row (silently dropping bad vectors would
+    lose corpus rows from an index build), so unlike pca's pre-filter the
+    contract here is reject-loudly: the good path costs nothing (one
+    try), and on failure the batch is scanned to name the offending row
+    and the contract explicitly."""
     arr = vs.to_numpy()
     try:
         mat = np.vstack(arr)
@@ -255,14 +254,13 @@ def nearest_lists_udf(cent_rows, n_lists: int):
     against the UNIT-normalized centroid matrix (the row's own norm is a
     positive scalar and cannot change its ranking).
 
-    This replaced the r7 expression-side form (a per-row array_sort over
-    n_centroids zip_with+aggregate dot structs) after the corpus-scaled
-    centroid counts landed (VERDICT r7 #1): at 64 lists the HOF form
-    allocates n_centroids temporary zip arrays PER ROW (12.8M × 64-dim
-    at the 200k-corpus rehearsal point — measured 138 s wall, ratio
-    64×), while the matmul runs the identical 820M multiplies in ~0.2 s
-    of BLAS.  The third member of the documented "Python only when
-    vectorization beats built-ins" family (lsh_bucket_keys_udf,
+    The expression-side form (a per-row array_sort over n_centroids
+    zip_with+aggregate dot structs) does not scale with the corpus-scaled
+    centroid counts: at 64 lists the HOF form allocates n_centroids temporary
+    zip arrays PER ROW (12.8M × 64-dim at the 200k-corpus rehearsal point —
+    measured 138 s wall, ratio 64×), while the matmul runs the identical 820M
+    multiplies in ~0.2 s of BLAS.  The third member of the documented "Python
+    only when vectorization beats built-ins" family (lsh_bucket_keys_udf,
     pairwise_dot_udf).
 
     Shared by EVERY assignment site — in-memory ivf/ivfpq operators,
@@ -660,9 +658,9 @@ def embedding_near_duplicates_lsh(
 def ivf_auto_params(
     n: int, max_centroids: int | None = 1024
 ) -> tuple[int, int]:
-    """Corpus-scaled IVF sizing (VERDICT r7 #1: a FIXED n_centroids=8
-    makes every probed list grow linearly with the corpus — the one
-    measured super-drift scaling entry, 10.45× wall at the 100× point).
+    """Corpus-scaled IVF sizing (a FIXED n_centroids=8 makes every probed
+    list grow linearly with the corpus — the one measured super-drift
+    scaling entry, 10.45× wall at the 100× point).
 
     ``n_centroids`` = clamp(p/4, 8, max_centroids) where p is the
     largest power of two with p² ≤ n, i.e. ≈ √n/4 snapped to a power of
@@ -673,10 +671,10 @@ def ivf_auto_params(
     the identical sizing from count(*) with p·p ≤ n arithmetic and the
     cross-engine hash holds at ANY corpus size.  Reproduces the
     historical 8/2 at every committed test SF (n ≤ 4095) and the
-    r7-measured best 64/8 at the 200k-row 100×-rehearsal corpus
+    measured best 64/8 at the 200k-row 100×-rehearsal corpus
     (1.67 s vs 2.12 s).
 
-    ``max_centroids`` (VERDICT r8 #3): the default 1024 cap protects the
+    ``max_centroids``: the default 1024 cap protects the
     IN-MEMORY operators, which re-assign the whole corpus every run —
     beyond it, assignment cost n·nc would grow as n^1.5.  The PERSISTED
     index paths pass ``max_centroids=None``: there assignment is paid
@@ -714,8 +712,8 @@ def ivf_topk(
     deterministic and model-free (a k-means fit would slot in unchanged).
     Assignment is a NARROW Arrow-batched matmul against the collected
     centroid matrix (nearest_lists_udf) — no join, no window, no shuffle
-    of vector payloads: the r7 broadcast-join + per-id window form
-    shuffled n_corpus × n_centroids WIDE rows (full vectors through the
+    of vector payloads: a broadcast-join + per-id window form
+    shuffles n_corpus × n_centroids WIDE rows (full vectors through the
     window exchange), which the corpus-scaled centroid counts
     (ivf_auto_params) turned into the dominant cost.  At 100 TB the
     corpus assignment is precomputed and the table is partitioned by
@@ -769,8 +767,8 @@ def _ivf_assign(
     ``ivf_index_write``.  The centroid relation is collected (bounded,
     ≤ n_centroids rows) and assignment is the shared Arrow-batched matmul
     (nearest_lists_udf) — one narrow map over the corpus, no join, no
-    window: the r7 join+window form made the 200k-corpus index build
-    cost 66 s of wide-row window shuffle."""
+    window: a join+window form made the 200k-corpus index build cost
+    66 s of wide-row window shuffle."""
     nearest = nearest_lists_udf(_cent_rows_from_df(cents), 1)
     return (
         corpus_df.select(
@@ -970,13 +968,13 @@ def semantic_dedup(
     exactly the SemDeDup contract.
     """
     cent_rows = _cent_rows_collect(corpus_df, k, id_col, vec_col)
-    # winner by ROUNDED cosine via the Arrow matmul (the r8 assignment
-    # convention — the HOF argmin this replaces interprets O(k·dim)
-    # work per row, the 138-s-at-64-lists lesson from nearest_lists_udf,
-    # and k now scales with the corpus); the OUTPUT cosine is computed
-    # JVM-side on the winning centroid only, so cos_to_centroid keeps
-    # the exact round()/fold arithmetic the oracle replays — numpy only
-    # RANKS, it never produces a compared value
+    # winner by ROUNDED cosine via the Arrow matmul (the assignment
+    # convention — a HOF argmin interprets O(k·dim) work per row, the
+    # 138-s-at-64-lists lesson from nearest_lists_udf, and k now scales
+    # with the corpus); the OUTPUT cosine is computed JVM-side on the
+    # winning centroid only, so cos_to_centroid keeps the exact
+    # round()/fold arithmetic the oracle replays — numpy only RANKS, it
+    # never produces a compared value
     best_cid = _nearest_rounded_udf(cent_rows, round_digits)
     spark = corpus_df.sparkSession
     cents_rel = spark.createDataFrame(
@@ -1269,7 +1267,7 @@ def ivfpq_topk_persisted(
             "c_n",
             "q_v",
             "q_n",
-            # ADC rounded to 9dp BEFORE the rerank cut (r8 review):
+            # ADC rounded to 9dp BEFORE the rerank cut:
             # unrounded ranking makes shortlist membership a cliff — a
             # 1-ulp cross-engine difference at candidate 32/33 would
             # rerank different sets; at 9dp near-equal values tie
@@ -1349,8 +1347,8 @@ def ivfpq_topk(
     the only shuffles in the whole query are the two per-query top-k
     windows (shortlist + final re-rank).
 
-    Approximate as an ANN answer, deterministic as a computation: since
-    r8 the registry entry carries a FULL exact oracle (the pipeline is
+    Approximate as an ANN answer, deterministic as a computation: the
+    registry entry carries a FULL exact oracle (the pipeline is
     a composition of closed forms — see queries._oracle_ivfpq_topk);
     recall vs the exact baseline is additionally pinned by
     test_similarity.py.
@@ -1418,7 +1416,7 @@ def ivfpq_topk(
             "c_n",
             "q_v",
             "q_n",
-            # ADC rounded to 9dp BEFORE the rerank cut (r8 review):
+            # ADC rounded to 9dp BEFORE the rerank cut:
             # unrounded ranking makes shortlist membership a cliff — a
             # 1-ulp cross-engine difference at candidate 32/33 would
             # rerank different sets; at 9dp near-equal values tie

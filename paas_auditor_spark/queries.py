@@ -658,7 +658,7 @@ def q_value_percentiles_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ceil on a 6-decimal-rounded product, NOT the raw double: when p·n
     # is an exact integer the float product can land a hair above it
     # (0.9*10 → 9.000000000000002 → ceil 10), drifting one row past the
-    # documented type-1 percentile at exact boundaries (ADVICE r7).  The
+    # documented type-1 percentile at exact boundaries.  The
     # oracle computes the identical rounded expression.
     targets = probs.crossJoin(F.broadcast(n_df)).select(
         "p",
@@ -744,15 +744,14 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stratified sampling by event type (training-data curation:
     per-class downsampling) — CONTENT-ADDRESSED Bernoulli: a row is kept
     iff the md5 of its key maps under the stratum's fraction.  Strictly
-    stronger reproducibility than the r7 ``sampleBy`` form (VERDICT r7
-    #8 rows-only→exact): the keep decision depends only on row CONTENT,
-    so it is stable across partitionings, cluster layouts and engines —
-    at 100 TB a repartition or AQE re-plan can reshuffle rows under
-    ``sampleBy``'s per-partition seeded stream and silently change the
-    sample, while the hash form re-selects the identical rows anywhere
-    (the DSIR/train_test_split convention).  That determinism is what
-    upgrades the check from rows-only to a full exact oracle (the md5
-    threshold replays in SQL)."""
+    stronger reproducibility than a ``sampleBy`` form: the keep decision
+    depends only on row CONTENT, so it is stable across partitionings,
+    cluster layouts and engines — at 100 TB a repartition or AQE re-plan
+    can reshuffle rows under ``sampleBy``'s per-partition seeded stream
+    and silently change the sample, while the hash form re-selects the
+    identical rows anywhere (the DSIR/train_test_split convention).
+    That determinism is what upgrades the check from rows-only to a full
+    exact oracle (the md5 threshold replays in SQL)."""
     events = _t(spark, sf_dir, "events")
     u = (
         F.conv(
@@ -761,9 +760,9 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         / F.lit(4294967296.0)
     )
     # unlisted strata keep fraction 0 — sampleBy's semantics for a
-    # missing dict key (r8 review finding: an .otherwise(1.0) silently
-    # flipped every UNLISTED class — sf0.1's 'signup' — from fully
-    # dropped to fully kept, and the oracle replayed the same mistake)
+    # missing dict key (an .otherwise(1.0) would silently flip every
+    # UNLISTED class — sf0.1's 'signup' — from fully dropped to fully
+    # kept, and an oracle replaying it would not notice)
     frac = (
         F.when(F.col("event_type") == "click", 0.5)
         .when(F.col("event_type") == "view", 0.1)
@@ -1018,7 +1017,7 @@ def q_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lloyd's k-means cluster assignment over the embeddings corpus —
     iterative algorithm (broadcast assign + k×dim re-center per round).
-    Since r6 the operator rounds re-centered coordinates to 9dp at each
+    The operator rounds re-centered coordinates to 9dp at each
     iteration barrier (far above float noise, far below geometric
     signal), which makes the whole trajectory a cross-engine closed
     form — so it carries a full exact oracle: _oracle_kmeans unrolls
@@ -1497,18 +1496,17 @@ def q_dedup_pipeline_full(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dedup_pipeline_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The dedup pipeline COMPOSITION under full oracle check (the r6
-    verdict's rows-only→exact suggestion for dedup_pipeline_full): the
-    same stage chain — candidate edges → star connected components →
-    keep-best survivor → per-source removal summary — but with the
-    bounded exact-Jaccard edge set (_jaccard_cc_edges, doc_id < 80)
-    instead of banded MinHash, so every stage INCLUDING the composition
-    is engine-portable and the whole run hash-matches one recursive-CTE
-    oracle.  dedup_pipeline_full stays the 100 TB shape (LSH edges,
-    rows-only by nature); this twin proves the stage wiring — winner
-    per multi-doc cluster, removed = members − winners, kept + removed
-    = corpus — against SQL, not just pytest invariants.  Output:
-    (source, n_docs, n_removed, n_kept)."""
+    """The dedup pipeline COMPOSITION under full oracle check (the exact twin
+    of the rows-only dedup_pipeline_full): the same stage chain — candidate
+    edges → star connected components → keep-best survivor → per-source removal
+    summary — but with the bounded exact-Jaccard edge set (_jaccard_cc_edges,
+    doc_id < 80) instead of banded MinHash, so every stage INCLUDING the
+    composition is engine-portable and the whole run hash-matches one
+    recursive-CTE oracle.  dedup_pipeline_full stays the 100 TB shape (LSH
+    edges, rows-only by nature); this twin proves the stage wiring — winner per
+    multi-doc cluster, removed = members − winners, kept + removed = corpus —
+    against SQL, not just pytest invariants.  Output: (source, n_docs,
+    n_removed, n_kept)."""
     docs = _th(spark, sf_dir, "documents").filter(F.col("doc_id") < 80)
     edges = _jaccard_cc_edges(docs)
     cc = dedup.connected_components_star(
@@ -1684,9 +1682,9 @@ def q_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-k via hyperplane-LSH bucketing.  Deterministic
-    computation (seeded plane family) → exact oracle since r6
-    (_oracle_knn_lsh embeds the plane literals and replays bucketing,
-    probe join and ranking)."""
+    computation (seeded plane family) → exact oracle (_oracle_knn_lsh
+    embeds the plane literals and replays bucketing, probe join and
+    ranking)."""
     emb = _th(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     return similarity.lsh_topk(emb, queries, k=5).withColumnRenamed(
@@ -1706,7 +1704,7 @@ def q_minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     scales, not a guarantee.  Recall IS pinned against brute-force
     ground truth (≥0.9 at j≥0.5) by
     test_dedup.py::test_minhash_recall_floor_vs_exact_jaccard.
-    Hot-bucket posture (r9): identical contents collapse to one banded
+    Hot-bucket posture: identical contents collapse to one banded
     representative, pairs leave the band join once (first-shared-band
     filter, no distinct), buckets above 4096 distinct contents drop
     audited (see minhash_bucket_audit) — on this all-distinct corpus the
@@ -1720,8 +1718,8 @@ def q_minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_minhash_near_dup_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The MinHash pipeline under FULL cross-engine check (r8 verdict
-    task #7: the family's rows-only residual): same operator, same
+    """The MinHash pipeline under FULL cross-engine check (the exact
+    twin of the rows-only minhash_near_dup): same operator, same
     24/12 banding, same exact-Jaccard verify as minhash_near_dup, but
     with the CLOSED-FORM md5 shingle hash (dedup._shingle_hash: first
     15 hex digits of md5 as bigint mod p — bit-identical in DuckDB as
@@ -2226,11 +2224,11 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_simhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash under FULL cross-engine check (r8 verdict task #7, the
-    same move as minhash_near_dup_md5): identical operator — distinct
-    normalized tokens, per-bit majority vote, shifted-bit packing — with
-    the closed-form md5 token hash (60 bits: 15 md5 hex digits parse as
-    a bigint on both engines without sign overflow), so DuckDB replays
+    """SimHash under FULL cross-engine check (the same move as
+    minhash_near_dup_md5): identical operator — distinct normalized
+    tokens, per-bit majority vote, shifted-bit packing — with the
+    closed-form md5 token hash (60 bits: 15 md5 hex digits parse as a
+    bigint on both engines without sign overflow), so DuckDB replays
     tokenize → hash → 60 majority votes → packing bit-for-bit.  Bounded
     slice; the whole-corpus flagship keeps xxhash64."""
     # _t not _th: the dedup operator fans out its own narrow projection
@@ -2294,7 +2292,7 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_embedding_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup via hyperplane-LSH bucketed candidates — the
     scale path.  Approximate as an algorithm but fully DETERMINISTIC as
-    a computation (the plane family is seeded), so since r6 it carries
+    a computation (the plane family is seeded), so it carries
     a full exact oracle: _oracle_embedding_lsh embeds the plane
     coefficients as SQL literals and replays sign tests, OR-amplified
     bucket keys, the bucket join and the rounded-cosine verify."""
@@ -2306,16 +2304,16 @@ def q_embedding_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ivf_params_sql(max_centroids: int | None = 1024) -> str:
     """Corpus-scaled IVF sizing — the ONE integer-exact SQL twin of
-    operators/similarity.py::ivf_auto_params (r8 review: this block was
-    hand-copied into three oracles; a clamp change missed in one would
-    silently break its cross-engine hash): nc = clamp(p/4, 8,
-    max_centroids) where p = largest power of two with p² ≤ count(*);
-    np = clamp(nc/8, 2, 8).  ``max_centroids=None`` is the PERSISTED
-    index paths' unclamped form (VERDICT r8 #3) — assignment there is
-    paid once at build time, so nc keeps growing ≈ √n/4 and probe
-    candidate volume stays sublinear past the in-memory operators'
-    16.8M-vector clamp point.  Identical to the clamped form at every
-    committed test SF (clamp binds only above n ≈ 16.8M)."""
+    operators/similarity.py::ivf_auto_params (three oracles use it; a
+    hand-copied clamp change missed in one would silently break its
+    cross-engine hash): nc = clamp(p/4, 8, max_centroids) where p =
+    largest power of two with p² ≤ count(*); np = clamp(nc/8, 2, 8).
+    ``max_centroids=None`` is the PERSISTED index paths' unclamped
+    form — assignment there is paid once at build time, so nc keeps
+    growing ≈ √n/4 and probe candidate volume stays sublinear past the
+    in-memory operators' 16.8M-vector clamp point.  Identical to the
+    clamped form at every committed test SF (clamp binds only above
+    n ≈ 16.8M)."""
     nc = (
         "greatest(8, p // 4)"
         if max_centroids is None
@@ -2535,9 +2533,9 @@ def q_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ties broken by id), so unlike the LSH/PQ siblings it carries a full
     exact oracle: _IVF_TOPK_ORACLE replays assignment, probing and
     ranking end-to-end in SQL.  n_centroids/nprobe scale with the
-    corpus (ivf_auto_params ≈ √n/4 lists — VERDICT r7 #1: the fixed
-    8-centroid default made probe cost linear in corpus size, the one
-    measured super-drift entry at the 100× rehearsal); the oracle
+    corpus (ivf_auto_params ≈ √n/4 lists — a fixed 8-centroid default
+    makes probe cost linear in corpus size, the one measured
+    super-drift entry at the 100× rehearsal); the oracle
     replays the identical integer-exact sizing from count(*)."""
     emb = _th(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
@@ -2597,16 +2595,15 @@ _COUNT_CACHE: dict[str, int] = {}
 
 
 def _corpus_count(spark: SparkSession, sf_dir: str, table: str) -> int:
-    """Row count of a source table from parquet FOOTER METADATA,
-    memoized on path+mtime.  Used to size corpus-scaled index parameters
-    (ivf_auto_params).  VERDICT r8 #4: the former Spark ``count(*)``
-    was metadata-only but still scheduled an extra job per fresh
-    process; reading ``num_rows`` from the footers driver-side removes
-    the job from the probe path entirely (at 100 TB this is one footer
-    read per file, the same metadata the planner already lists — and
-    the count is paid once per corpus version, the cadence of the index
-    build it parameterizes).  Values are identical by the parquet spec:
-    num_rows IS the row count Spark's metadata-only count returns."""
+    """Row count of a source table from parquet FOOTER METADATA, memoized on
+    path+mtime.  Used to size corpus-scaled index parameters (ivf_auto_params).
+    A Spark ``count(*)`` is metadata-only but still schedules an extra job per
+    fresh process; reading ``num_rows`` from the footers driver-side removes
+    the job from the probe path entirely (at 100 TB this is one footer read per
+    file, the same metadata the planner already lists — and the count is paid
+    once per corpus version, the cadence of the index build it parameterizes).
+    Values are identical by the parquet spec: num_rows IS the row count Spark's
+    metadata-only count returns."""
     key = _src_ident(sf_dir, table)
     n = _COUNT_CACHE.get(key)
     if n is None:
@@ -2654,12 +2651,12 @@ def q_knn_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids are the first n_centroids vectors by id — so unlike the
     sibling ANN entries this one carries a full exact oracle: the DuckDB
     SQL replays assignment, probing and ranking end-to-end.  Index
-    sizing is corpus-scaled (ivf_auto_params, VERDICT r7 #1) and the
-    oracle recomputes the identical sizing from count(*).  The build
-    sizes UNCLAMPED (max_centroids=None — VERDICT r8 #3): assignment is
-    paid once at build time, so nc keeps growing ≈ √n/4 past the
-    in-memory clamp point and probe candidate volume stays sublinear at
-    any corpus size; the oracle replays the same unclamped arithmetic."""
+    sizing is corpus-scaled (ivf_auto_params) and the oracle recomputes
+    the identical sizing from count(*).  The build sizes UNCLAMPED
+    (max_centroids=None): assignment is paid once at build time, so nc
+    keeps growing ≈ √n/4 past the in-memory clamp point and probe
+    candidate volume stays sublinear at any corpus size; the oracle
+    replays the same unclamped arithmetic."""
     nc, npr = similarity.ivf_auto_params(
         _corpus_count(spark, sf_dir, "embeddings"), max_centroids=None
     )
@@ -2731,9 +2728,9 @@ def _ivfpq_index_cached(
     (operators/similarity.py:ivfpq_index_write); same _cached_artifact
     contract as _ivf_index_cached."""
     return _cached_artifact(
-        # ivfpq2: cache-key bump — r8's 9dp iteration-barrier rounding in
-        # _lloyd_numpy changes codebooks microscopically; stale artifacts
-        # from the unrounded training must rebuild
+        # ivfpq2: cache-key bump — the 9dp iteration-barrier rounding in
+        # _lloyd_numpy changed codebooks microscopically; artifacts from
+        # the unrounded training must rebuild
         "ivfpq2:" + _src_ident(sf_dir, "embeddings", n_centroids, m, codes),
         "paas_ivfpq_index_",
         lambda tmp: similarity.ivfpq_index_write(
@@ -2752,11 +2749,11 @@ def q_knn_ivfpq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     list_id, statically pruned), decode/rank narrowly, and fetch full
     floats by id for just the rerank shortlist.  Bit-identical to
     knn_ivfpq at every committed SF (equality + prune plan-asserted in
-    test_similarity.py); EXACT oracle since r8 (_oracle_ivfpq_topk
-    replays the whole pipeline — here with the UNCLAMPED build-time
-    sizing, max_centroids=None, the r8 #3 persisted-path convention:
-    assignment is paid once at build, so nc keeps growing ≈ √n/4 and
-    probe candidate volume stays sublinear past 16.8M vectors)."""
+    test_similarity.py); EXACT oracle (_oracle_ivfpq_topk replays the
+    whole pipeline — here with the UNCLAMPED build-time sizing,
+    max_centroids=None, the persisted-path convention: assignment is
+    paid once at build, so nc keeps growing ≈ √n/4 and probe candidate
+    volume stays sublinear past 16.8M vectors)."""
     nc, npr = similarity.ivf_auto_params(
         _corpus_count(spark, sf_dir, "embeddings"), max_centroids=None
     )
@@ -2775,7 +2772,7 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema/batching/UDF shape is the real thing."""
     from paas_auditor_spark.functions.multimodal import binary_features
 
-    # _t not _th (r11 optimization): the Python stage is cheap per row
+    # _t not _th: the Python stage is cheap per row
     # (one sha256 per blob), so the rebalance shuffle + 32 extra
     # Arrow-boundary task round-trips cost more than the compute they
     # parallelize; at 100 TB rebalance_scan is a no-op anyway
@@ -2789,9 +2786,9 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video-style frame sampling + resize plumbing over binary blobs
     (mapInPandas fan-out, one row per sampled frame).  The stub decode
-    is sha256-deterministic, so since r6 the whole fan-out is
-    hash-certified: the oracle replays sha256(blob || idx_be32) with
-    NUL-safe varchar concatenation."""
+    is sha256-deterministic, so the whole fan-out is hash-certified: the
+    oracle replays sha256(blob || idx_be32) with NUL-safe varchar
+    concatenation."""
     from paas_auditor_spark.functions.multimodal import sample_frames
 
     # _t not _th: cheap-per-row Python stage — see q_multimodal_features
@@ -2895,11 +2892,11 @@ def q_audio_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         synth_wav,
     )
 
-    # _t not _th (r11 optimization, measured 3.5 s → 0.7 s at sf0.1): the
-    # whole synth+decode Python stage is ~0.14 s of compute, so the 32-way
-    # rebalance bought nothing and charged ~20 ms of Arrow-boundary
-    # overhead per (task × python eval) — and the trailing orderBy's
-    # range-sampling pass re-executed all of it a second time
+    # _t not _th (measured 3.5 s → 0.7 s at sf0.1): the whole synth+decode
+    # Python stage is ~0.14 s of compute, so the 32-way rebalance bought
+    # nothing and charged ~20 ms of Arrow-boundary overhead per (task ×
+    # python eval) — and the trailing orderBy's range-sampling pass
+    # re-executed all of it a second time
     emb = _t(spark, sf_dir, "embeddings")
     wavs = synth_wav(emb.select("vec_id", "embedding"), reps=25)
     # window=250 deliberately does NOT divide the 64-sample tile, so
@@ -4018,8 +4015,8 @@ def q_bloom_decontaminate_persisted(spark: SparkSession, sf_dir: str) -> DataFra
 def q_bloom_decontaminate_sharded(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """The PER-INGEST-BATCH shape of Bloom decontamination (SURVEY
-    round-12 candidate #5): same persisted benchmark filter as
+    """The PER-INGEST-BATCH shape of Bloom decontamination: same
+    persisted benchmark filter as
     `bloom_decontaminate_persisted` (O(m) literal assembly, corpus
     never re-shingled), but the probe gates ONE bounded ingest tick —
     a fixed 256-doc id range — instead of the whole corpus.  The
@@ -4711,7 +4708,7 @@ def q_avro_bronze_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     IEEE-754 and engine-independent, resolving the value down to 2⁻¹⁰⁰
     absolute, far below one ulp anywhere in the data's range — a text
     format can't do this cross-engine: Java's %.17e zero-pads past the
-    shortest repr while C's prints true digits; r9 advice).  The oracle
+    shortest repr while C's prints true digits).  The oracle
     computes the SAME digest straight off the parquet events table, so
     the hash certifies round-trip ≡ identity: every id, type, timestamp
     microsecond and value BIT that went into the Avro bytes came back
@@ -5096,7 +5093,7 @@ def q_deterministic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composite Gopher-style document quality gate: token count, average
     token length, stopword ratio, punctuation density and duplicate-bigram
-    fraction combined into one keep/drop verdict.  Every signal is a pure
+    fraction combined into one keep/drop decision.  Every signal is a pure
     column expression over ONE scan of the text column — the full filter
     is a single narrow map stage, embarrassingly parallel at 100 TB."""
     docs = _th(spark, sf_dir, "documents")
@@ -5413,7 +5410,7 @@ def q_ab_test_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-sample z-test between the content-addressed train/val
     splits treated as A/B arms (the md5 split IS a uniform random
     assignment): per event type, mean value difference, pooled
-    standard error, z statistic and the |z| > 1.96 verdict — the
+    standard error, z statistic and the |z| > 1.96 test — the
     experiment-readout machinery that pairs with bootstrap_se.  The
     arm assignment reuses train_test_split's md5 rule so the whole
     readout is engine-exact; one scan, one (type, arm) reduce."""
@@ -5784,7 +5781,7 @@ def q_minhash_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_minhash_bucket_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The banding hot-bucket guard's audit artifact (r8 verdict task #1):
+    """The banding hot-bucket guard's audit artifact:
     per band, bucket count, max/mean occupancy (counting DISTINCT contents
     — the post-collapse view the pair join sees) and what the default
     max_bucket=4096 cap would drop.  On the sf corpora (all-distinct
@@ -5840,15 +5837,14 @@ def q_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_traffic_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pareto concentration curve: the share of all events generated
-    by the top 1 / 5 / 10 / 25 % most-active users — the "is this an
-    80/20 corpus" readout that complements activity_gini's single
-    number.  Ranking is DISTRIBUTED (operators/rank.py — the r6 verdict
-    flagged the old global ``percent_rank`` window as a single-partition
-    sort): under the unique (count desc, user_id) total order,
-    percent_rank ≡ (row_number − 1)/(n − 1), both sides exact, so the
-    range-partitioned rank reproduces the windowed form bit-for-bit
-    (the oracle replays percent_rank)."""
+    """Pareto concentration curve: the share of all events generated by the top
+    1 / 5 / 10 / 25 % most-active users — the "is this an 80/20 corpus" readout
+    that complements activity_gini's single number.  Ranking is DISTRIBUTED
+    (operators/rank.py — a global ``percent_rank`` window is a single-partition
+    sort): under the unique (count desc, user_id) total order, percent_rank ≡
+    (row_number − 1)/(n − 1), both sides exact, so the range-partitioned rank
+    reproduces the windowed form bit-for-bit (the oracle replays
+    percent_rank)."""
     from paas_auditor_spark.operators.rank import with_global_order_stats
 
     ev = _t(spark, sf_dir, "events")
@@ -6010,9 +6006,8 @@ def q_activity_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     G = Σ(2i − n − 1)xᵢ / (n·Σx) = (2Σi·xᵢ − (n+1)Σxᵢ) / (n·Σxᵢ).
 
     The rank is DISTRIBUTED (operators/rank.py — range-partitioned
-    row_number + per-partition offsets): the r6 verdict flagged the old
-    global ``row_number`` window as the one remaining single-partition
-    sort in the headline — users-sized is small at sf0.1, but at 100×
+    row_number + per-partition offsets): a global ``row_number`` window
+    is a single-partition sort — users-sized is small at sf0.1, but at 100×
     a 10⁸-row one-core sort is exactly the scale-killer the plan tests
     exist to catch.  The algebraic form above then folds rank, count
     and total into ONE aggregation (2Σix and (n+1)Σx are exact integer
@@ -6504,7 +6499,7 @@ def q_chunk_quality_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape): score every CONTENT-DEFINED chunk with the shared logistic
     quality score, drop chunks below the classifier's 0.5 gate, and
     re-emit each document's surviving text — finer-grained than
-    quality_prune's whole-document verdict (a good doc keeps its good
+    quality_prune's whole-document decision (a good doc keeps its good
     spans even when its average is dragged down).  Chunking + scoring
     are one narrow map; re-assembly is the chat_assembly per-doc
     aggregate (array_sort inside collect_list, buffer bounded by one
@@ -6520,13 +6515,13 @@ def q_chunk_quality_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_chunk_tokens",
         tx.logistic_quality_score(F.col("chunk_text")).alias("score"),
     )
-    # ONE conditional aggregate instead of base ⟗ kept (r11, guide §2.4):
-    # the base/kept split ran the chunker+scorer narrow map twice (the two
-    # groupBy subtrees differ by the filter, so nothing reuses) and paid a
+    # ONE conditional aggregate instead of base ⟗ kept (guide §2.4): a
+    # base/kept split runs the chunker+scorer narrow map twice (the two
+    # groupBy subtrees differ by the filter, so nothing reuses) and pays a
     # second Exchange plus the join.  when()-guarded aggregates compute
     # the kept-side stats in the same pass — collect_list skips the NULLs
     # the guard produces, and concat_ws over the empty array is "", so
-    # no-chunks-kept docs come out identically to the old left join.
+    # no-chunks-kept docs come out identically to a left join.
     keep = F.col("score") >= 0.5
     return (
         scored.groupBy("doc_id")
@@ -7126,20 +7121,19 @@ HLL_MD5_BOTTOM_K = 64  # binding at sf0.01+ (150+ distinct users/segment)
 def hll_md5_bottom_k_sketches(
     ev: DataFrame, k: int = HLL_MD5_BOTTOM_K
 ) -> DataFrame:
-    """Per-segment BOTTOM-K summary (a KMV sketch with md5 as the hash):
-    the k smallest md5 values' identities per event_type, as one sorted
+    """Per-segment BOTTOM-K summary (a KMV sketch with md5 as the hash): the k
+    smallest md5 values' identities per event_type, as one sorted
     array<struct<h,ident>> row per segment.  The identity is the ACTIVE
-    USER-DAY (``user_id:yyyy-MM-dd``) — the synthetic corpus has every
-    user in every segment, so plain user audiences are degenerate
-    (every pairwise overlap = k); user-days differ per segment and the
-    twin's overlap arithmetic is exercised for real.  O(k) summary
-    bytes at ANY corpus size (r10 verdict task #3 — the previous
-    fixed-rate sample's collect_set grew linearly with distinct users),
-    and exact bottom-k computed in two balanced stages: a
-    per-(segment, salt) rank prunes each of 32 content-addressed salt
-    buckets to its own bottom-k (every global bottom-k element is in
-    its bucket's — no single task ever ranks a whole segment), then the
-    final rank runs over ≤ 32·k survivors per segment."""
+    USER-DAY (``user_id:yyyy-MM-dd``) — the synthetic corpus has every user in
+    every segment, so plain user audiences are degenerate (every pairwise
+    overlap = k); user-days differ per segment and the twin's overlap
+    arithmetic is exercised for real.  O(k) summary bytes at ANY corpus size (a
+    fixed-rate sample's collect_set would grow linearly with distinct users),
+    and exact bottom-k computed in two balanced stages: a per-(segment, salt)
+    rank prunes each of 32 content-addressed salt buckets to its own bottom-k
+    (every global bottom-k element is in its bucket's — no single task ever
+    ranks a whole segment), then the final rank runs over ≤ 32·k survivors per
+    segment."""
     d = (
         ev.select(
             "event_type",
@@ -7175,22 +7169,20 @@ def hll_md5_bottom_k_sketches(
 
 
 def q_hll_overlap_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The overlap composition's CLOSED-FORM twin (r9 verdict task #6 —
-    the minhash_md5 convention applied to the sketch family): the same
-    pipeline shape as ``hll_overlap`` — per-segment bounded mergeable
-    summary, k² pair cross, union evaluated summary-side, inclusion–
-    exclusion overlap = |A∩M| + |B∩M| − |M| — but the summary is a
-    DETERMINISTIC true bottom-k (KMV with md5 as the hash: the k
-    smallest hash values' ids per segment, r10 verdict task #3 — the
-    r10 twin's fixed-rate sample grew with distinct users; this one is
-    O(k) at any corpus size, the scale contract the flagship's HLL
-    registers already have), so every byte is engine-independent and
-    the oracle replays the rank, the sketch merge (M = bottom-k of
-    A ∪ B, the KMV union rule) and the inclusion–exclusion arithmetic
-    EXACTLY via a ranked window.  The flagship keeps HLL (estimates
-    are engine-specific, accuracy pytest-pinned); this twin certifies
-    the composition.  Summary-size bound and binding-k behavior are
-    pinned by tests/test_timeseries_cdc.py::test_hll_md5_bottom_k_bound."""
+    """The overlap composition's CLOSED-FORM twin (the minhash_md5 convention
+    applied to the sketch family): the same pipeline shape as ``hll_overlap`` —
+    per-segment bounded mergeable summary, k² pair cross, union evaluated
+    summary-side, inclusion–exclusion overlap = |A∩M| + |B∩M| − |M| — but the
+    summary is a DETERMINISTIC true bottom-k (KMV with md5 as the hash: the k
+    smallest hash values' ids per segment — unlike a fixed-rate sample, which
+    grows with distinct users, it is O(k) at any corpus size, the scale
+    contract the flagship's HLL registers already have), so every byte is
+    engine-independent and the oracle replays the rank, the sketch merge (M =
+    bottom-k of A ∪ B, the KMV union rule) and the inclusion–exclusion
+    arithmetic EXACTLY via a ranked window.  The flagship keeps HLL (estimates
+    are engine-specific, accuracy pytest-pinned); this twin certifies the
+    composition.  Summary-size bound and binding-k behavior are pinned by
+    tests/test_timeseries_cdc.py::test_hll_md5_bottom_k_bound."""
     k = HLL_MD5_BOTTOM_K
     ev = _t(spark, sf_dir, "events").where(F.col("user_id").isNotNull())
     sk = hll_md5_bottom_k_sketches(ev, k)
@@ -7664,10 +7656,10 @@ def q_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     DISTRIBUTED prefix sum (operators/rank.py — range-partitioned
     running sum + per-partition offsets; prefix sums of exact integer
     weights, so bit-identical to the window form the oracle replays):
-    the old global cumsum window was the vocabulary-sized cousin of the
-    gini/pareto single-partition sort the r6 verdict flagged.  The
-    ranged vocabulary then broadcasts to the anchor frame; 2 slots for
-    the first 50 docs keep the demo output bounded."""
+    a global cumsum window would be the vocabulary-sized cousin of the
+    gini/pareto single-partition sort.  The ranged vocabulary then
+    broadcasts to the anchor frame; 2 slots for the first 50 docs keep
+    the demo output bounded."""
     from paas_auditor_spark.operators.rank import with_global_order_stats
 
     docs = _th(spark, sf_dir, "documents")
@@ -7820,7 +7812,7 @@ def _minhash_index_cached(spark: SparkSession, sf_dir: str) -> str:
     doc_id ≥ 100 — two collector batches, the streaming-ingest shape,
     then ``minhash_fold``: the official probe measures the DEPLOYMENT
     plan (stored collapse + band flags, no index-wide aggregation per
-    gate call — r9 verdict task #1)."""
+    gate call)."""
     from paas_auditor_spark.operators.dedup import (
         minhash_fold,
         minhash_index_collector,
@@ -7835,7 +7827,7 @@ def _minhash_index_cached(spark: SparkSession, sf_dir: str) -> str:
         minhash_fold(spark, tmp)
 
     return _cached_artifact(
-        # mhidx3: cache-key bump — r10 adds the collapse part and the
+        # mhidx3: cache-key bump — the collapse part and the
         # fold-materialized _rep/_is_rep/_occ artifacts; stale mhidx2
         # artifacts would silently probe through the legacy path
         "mhidx3:" + _src_ident(sf_dir, "documents"),
@@ -7846,8 +7838,8 @@ def _minhash_index_cached(spark: SparkSession, sf_dir: str) -> str:
 
 def q_minhash_gate_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The DEPLOYMENT shape of ingestion-time near-dup gating — the
-    dedup member of the persisted family (bm25/bloom/LM/IVF convention;
-    r9): the corpus is shingled ONCE into a persisted two-part band
+    dedup member of the persisted family (bm25/bloom/LM/IVF
+    convention): the corpus is shingled ONCE into a persisted two-part band
     index (minhash_index_collector — the same index a streaming ingest
     maintains batch-by-batch), and gating a new batch joins its banded
     rows against the stored band relation, reading stored shingle sets
@@ -7872,8 +7864,8 @@ def q_minhash_gate_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # +10¹³ id salt: categorically beyond any real or scale-slice id
     # (slices shift by 10⁹ per copy, ≤ ~10¹¹ total), so the gate's
-    # disjoint-ids precondition can never collide (r9 review: +10⁶
-    # could alias a real doc_id once the corpus passes ~1M rows)
+    # disjoint-ids precondition can never collide (+10⁶ could alias a
+    # real doc_id once the corpus passes ~1M rows)
     new = base.select(
         (F.col("doc_id") + F.lit(10_000_000_000_000)).alias("doc_id"),
         F.concat(
@@ -8068,18 +8060,17 @@ def _minhash_md5_folded_index_cached(spark: SparkSession, sf_dir: str) -> str:
 
 def q_minhash_gate_folded_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DELETION support for the persisted near-dup gate in its
-    DEPLOYMENT STEADY STATE (r10 verdict task #1): the tombstones were
-    applied by a fold (minhash_fold(tombstone_path=…), called directly
-    when the index is built), so the probe sees a clean
-    folded index and takes the zero-reconciliation short circuit: band
-    filter on the stored _is_rep/_occ flags + stored membership, no
-    aggregation, no window, no anti-join, no delta stages.  Same gate
-    slice and same oracle as minhash_gate_tombstoned_md5 (deletion ≡
-    never-indexed), which certifies that fold-time physical application
-    and read-time reconciliation agree exactly — the adversarial
-    read-time path stays oracle-registered as
-    minhash_gate_tombstoned_md5 and equality-pinned in
-    tests/test_dedup.py; THIS entry is the bench headline because a
+    DEPLOYMENT STEADY STATE: the tombstones were applied by a fold
+    (minhash_fold(tombstone_path=…), called directly when the index is
+    built), so the probe sees a clean folded index and takes the
+    zero-reconciliation short circuit: band filter on the stored
+    _is_rep/_occ flags + stored membership, no aggregation, no window,
+    no anti-join, no delta stages.  Same gate slice and same oracle as
+    minhash_gate_tombstoned_md5 (deletion ≡ never-indexed), which
+    certifies that fold-time physical application and read-time
+    reconciliation agree exactly — the adversarial read-time path stays
+    oracle-registered as minhash_gate_tombstoned_md5 and equality-pinned
+    in tests/test_dedup.py; THIS entry is the bench headline because a
     probe-per-ingest-tick deployment measures the post-fold plan, not
     the between-folds reconciliation.  Expected shape: 2 pairs per
     rep-deleted or copy-deleted group, 4 per intact group — 220 rows."""
@@ -8739,11 +8730,11 @@ def q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization quality report: codebooks trained on a
     256-vector sample (driver-side deterministic Lloyd's), corpus encoded
     by a pure narrow-map assignment (operators/quantize.py).  EXACT
-    oracle since r8 (VERDICT r7 #8 rows-only→exact): the training rounds
-    every centroid to 9dp at each iteration barrier (the kmeans_assign
-    convention), so _oracle_pq_report unrolls the full per-subspace
-    Lloyd's recurrence as a CTE chain and replays sampling, training,
-    corpus assignment and the error aggregate end-to-end in SQL."""
+    oracle: the training rounds every centroid to 9dp at each iteration
+    barrier (the kmeans_assign convention), so _oracle_pq_report unrolls
+    the full per-subspace Lloyd's recurrence as a CTE chain and replays
+    sampling, training, corpus assignment and the error aggregate
+    end-to-end in SQL."""
     from paas_auditor_spark.operators.quantize import pq_report
 
     emb = _th(spark, sf_dir, "embeddings")
@@ -8861,9 +8852,8 @@ def _oracle_ivfpq_topk(
     rerank: int = 32,
     max_centroids: int | None = 1024,
 ) -> str:
-    """END-TO-END exact SQL replay of ivfpq_topk — the r8 upgrade that
-    retires the last 'PQ internals are engine-specific' rows-only pair:
-    every stage is individually closed-form since this round (corpus-
+    """END-TO-END exact SQL replay of ivfpq_topk, so PQ internals need
+    no rows-only check: every stage is individually closed-form (corpus-
     scaled nc/np from count(*) = ivf_auto_params' integer twin; PQ
     codebooks via the 9dp-barrier Lloyd's chain shared with
     _oracle_pq_report; IVF assignment ranking by raw cosine — the
@@ -8892,7 +8882,7 @@ def _oracle_ivfpq_topk(
     ctes += _pq_lloyd_ctes(m, codes, sub, iters)
     ctes += [
         # centroids = the first nc rows of the SAMPLE PREFIX, matching
-        # _pq_sample_rows(...)[:n_centroids] (r8 review: `vec_id < nc`
+        # _pq_sample_rows(...)[:n_centroids] (`vec_id < nc`
         # silently diverges on any corpus whose ids are not 0-based
         # contiguous; identical on the committed dense-id corpora)
         """cents AS (
@@ -9077,7 +9067,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup: coarse-cluster embeddings, prune within-cluster
     near-duplicates (rounded cosine >= 0.4, keep lowest id).  Fully
     deterministic → exact oracle.  Cluster count scales with the corpus
-    (ivf_auto_params, the r8 convention — the paper's own guidance:
+    (ivf_auto_params, the paper's own guidance:
     k grows so cluster sizes stay bounded; at a FIXED k=8 the
     per-cluster quadratic prune read 44.8× at the 100× rehearsal, the
     (n/k)² growth this removes); the oracle recomputes the identical
@@ -9094,12 +9084,12 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ ANN top-k: IVF probe -> PQ-reconstruction candidate ranking
     -> exact re-rank of the shortlist.  Approximate as an ANN ANSWER but
-    fully deterministic as a computation — EXACT oracle since r8
+    fully deterministic as a computation — EXACT oracle
     (_oracle_ivfpq_topk replays the whole pipeline; recall additionally
-    pinned in test_similarity.py).  List count
-    scales with the corpus (ivf_auto_params — VERDICT r7 #1: fixed
-    n_centroids=8 read 10.45× wall at the 100× rehearsal; the measured
-    64-list/8-probe point on the same 200k corpus ran 1.67 s vs 2.12 s)."""
+    pinned in test_similarity.py).  List count scales with the corpus
+    (ivf_auto_params — a fixed n_centroids=8 read 10.45× wall at the 100×
+    rehearsal; the measured 64-list/8-probe point on the same 200k corpus
+    ran 1.67 s vs 2.12 s)."""
     # _t not _th: the similarity operator fans out its own narrow
     # projection internally; an outer rebalance here would double-shuffle
     emb = _t(spark, sf_dir, "embeddings")
@@ -9121,7 +9111,7 @@ def q_segment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _th(spark, sf_dir, "documents")
     # spine = bare pruned id scan: the fan_out rebalance exists for the
-    # segmenter, not for the id projection (r11 verdict #1)
+    # segmenter, not for the id projection
     spine = _t(spark, sf_dir, "documents").select("doc_id")
     return segment_dedup(docs, width=8, spine=spine)
 
@@ -9228,8 +9218,8 @@ def _lm_model_cached(spark: SparkSession, sf_dir: str) -> str:
 
 
 def q_lm_perplexity_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The DEPLOYMENT shape of the interpolated trigram LM (VERDICT r7
-    #3 — the bm25_persisted treatment for the slowest headline family):
+    """The DEPLOYMENT shape of the interpolated trigram LM (the
+    bm25_persisted treatment for the slowest headline family):
     corpus trigram counts accumulate incrementally at ingest
     (lm_counts_collector, atomic commit protocol), a train-once
     finalize materializes the enriched scoring model
@@ -9252,8 +9242,8 @@ def q_lm_perplexity_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_lm_perplexity_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PER-INGEST-BATCH shape of the persisted trigram LM (SURVEY
-    round-12 candidate #5): the same finalized model as
+    """The PER-INGEST-BATCH shape of the persisted trigram LM: the same
+    finalized model as
     `lm_perplexity_persisted`, scoring ONE bounded ingest tick (a
     fixed 256-doc id range) under the batch-probe join geometry
     (operators/corpus.py: trigram_interp_perplexity_from_model,
@@ -9630,7 +9620,7 @@ def q_source_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     # groupBy + join deliberately kept over the tempting single-lineage
-    # window (r11 A/B): ``count(*) over (partition by gh)`` forces an
+    # window: ``count(*) over (partition by gh)`` forces an
     # Exchange + full SORT of the gram stream, measured 1.41 → 2.17 s at
     # sf0.1 — the hash-aggregate + join shape never sorts, and the
     # gram-keyed shuffles it pays are AQE-coalesced.
@@ -10077,20 +10067,19 @@ def q_chi2_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     a_df = docterm.groupBy("source", "term").agg(
         F.count(F.lit(1)).alias("a")
     )
-    # df_tot and n_all DERIVE from earlier aggregates (r11, guide §2.3
-    # "aggregate before you shuffle" / §1.2 "don't compute things
-    # twice"): each doc has exactly one source, so the per-term doc
-    # frequency is the sum of the per-(source, term) partials —
-    # computed as a window sum over ``term`` ON a_df itself, keeping a
-    # SINGLE lineage for the corpus pass.  The old
-    # ``docterm.groupBy(term)`` + broadcast join ran the corpus-sized
-    # explode+distinct a SECOND time under the broadcast build (plan
-    # showed duplicated scan subtrees — no exchange reuse across the
-    # broadcast boundary).  Post-aggregation the window partition for
-    # ANY term holds at most one row per source, so the hot-key hazard
-    # windows usually carry does not exist here.  Same value by
-    # construction: Σ_source a = count of distinct (doc, term) = old
-    # df_tot; Σ n_src = count(docs) = old n_all.
+    # df_tot and n_all DERIVE from earlier aggregates (guide §2.3 "aggregate
+    # before you shuffle" / §1.2 "don't compute things twice"): each doc has
+    # exactly one source, so the per-term doc frequency is the sum of the
+    # per-(source, term) partials — computed as a window sum over ``term`` ON
+    # a_df itself, keeping a SINGLE lineage for the corpus pass.  A
+    # ``docterm.groupBy(term)`` + broadcast join runs the corpus-sized
+    # explode+distinct a SECOND time under the broadcast build (the plan shows
+    # duplicated scan subtrees — no exchange reuse across the broadcast
+    # boundary).  Post-aggregation the window partition for ANY term holds at
+    # most one row per source, so the hot-key hazard windows usually carry does
+    # not exist here.  Same value by construction: Σ_source a = count of
+    # distinct (doc, term) = the groupBy's df_tot; Σ n_src = count(docs) =
+    # n_all.
     a_df = a_df.withColumn(
         "df_tot", F.sum("a").over(Window.partitionBy("term"))
     )
@@ -10100,8 +10089,8 @@ def q_chi2_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = F.col("n_src") - F.col("a")
     d = F.col("n_all") - F.col("n_src") - b
     # numerator/denominator in DOUBLE: with long arithmetic the square
-    # of (ad−bc) overflows int64 once n_all reaches ~5×10⁵ (found by the
-    # r8 factor-100 headline pass — ANSI mode raises ARITHMETIC_OVERFLOW
+    # of (ad−bc) overflows int64 once n_all reaches ~5×10⁵ (found by a
+    # factor-100 headline pass — ANSI mode raises ARITHMETIC_OVERFLOW
     # mid-query).  At the oracle-checked SF every intermediate stays
     # under 2⁵³, so each double product is exact and parity with
     # DuckDB's auto-promoting HUGEINT arithmetic is unchanged.
@@ -11991,7 +11980,7 @@ REGISTRY: dict[str, QuerySpec] = {
         q_embedding_near_dup_lsh, _oracle_embedding_lsh()
     ),
     "knn_ivf": QuerySpec(q_knn_ivf, _ivf_topk_oracle()),
-    # persisted twin replays the UNCLAMPED build-time sizing (r8 #3)
+    # persisted twin replays the UNCLAMPED build-time sizing
     "knn_ivf_persisted": QuerySpec(q_knn_ivf_persisted, _ivf_topk_oracle(None)),
     "knn_ivf_tombstoned": QuerySpec(
         q_knn_ivf_tombstoned, _ivf_topk_oracle(None, exclude=_EMB_TOMB_PRED)
@@ -12597,9 +12586,9 @@ REGISTRY: dict[str, QuerySpec] = {
         ORDER BY a.vec_id
         """,
     ),
-    # EXACT since r8 (the composition of this round's closed forms —
-    # see _oracle_ivfpq_topk); the persisted twin probes the identical
-    # frozen model, so it shares the oracle (the bm25_persisted rule)
+    # EXACT (a composition of closed forms — see _oracle_ivfpq_topk); the
+    # persisted twin probes the identical frozen model, so it shares the oracle
+    # (the bm25_persisted rule)
     "knn_ivfpq": QuerySpec(q_knn_ivfpq, _oracle_ivfpq_topk()),
     "knn_ivfpq_persisted": QuerySpec(
         q_knn_ivfpq_persisted, _oracle_ivfpq_topk(max_centroids=None)
@@ -12849,69 +12838,47 @@ REGISTRY: dict[str, QuerySpec] = {
 
 # The driver's official CORRECTNESS record hashes the FIRST 50 registry
 # entries, so their order is the certification window.  Curated to span
-# every operator family: the reference-parity core first (unchanged),
-# then the LLM-pipeline flagships (decontamination, span/semantic/exact
-# dedup, graph, DSIR, curation, BM25, chat assembly), ANN/quantization,
-# the text-analysis family, sketches, sampling/packing, a representative
-# TPC-H handful, and time-series joins.  Every window entry is
-# oracle-backed (hash-comparable); the remaining 100+ entries keep their
-# prior relative order and stay covered by tests/driver_check.py.
+# every operator family: the reference-parity core first, then the
+# LLM-pipeline flagships, dedup/similarity/ANN, the text-analysis
+# family, sketches, sampling/packing, a representative TPC-H handful,
+# and time-series joins.  Every window entry is oracle-backed
+# (hash-comparable); the remaining 100+ entries keep their relative
+# order, stay oracle-checked in the full registry and are covered by
+# tests/driver_check.py.
 _CERTIFICATION_WINDOW = [
     # reference-parity core (SURVEY §2, store.go semantics)
     "unshipped_events", "latest_event_time", "count_and_max",
     "raw_events_page", "null_boundary", "time_format", "epoch_seconds",
     "props_json", "props_variant", "splunk_envelope", "validity_filter",
     "idempotent_reingest", "ordered_export",
-    # LLM-pipeline flagships (r10 rotation, r9 verdict task #2: the r9
-    # oracle-exact wave gets official rows — avro_bronze_roundtrip [the
-    # full-bit bronze round-trip digest] takes bloom_decontaminate's
-    # slot [bloom keeps its persisted + pruned-join members],
-    # image_tiles [the real PPM-decode multimodal path] takes
-    # hybrid_search_rrf's, and the dedup md5 twins below take
-    # duplicate_spans' / dsir_sample's / semantic_dedup's /
-    # chat_assembly_sessions' — every rotated-out entry stays
-    # oracle-checked in the full registry)
+    # LLM-pipeline flagships: the full-bit Avro bronze round-trip digest,
+    # decontamination, span removal, the WAV and PPM multimodal paths,
+    # curation and persisted BM25
     "avro_bronze_roundtrip", "bloom_decontaminate_persisted",
     "bloom_pruned_join", "span_removal",
     "audio_windows", "image_tiles", "curation_pipeline",
     "bm25_persisted",
-    # dedup / similarity / ANN (r10: minhash_near_dup_md5 [the LSH
-    # flagship's closed-form twin — banding arithmetic itself under the
-    # cross-engine oracle], simhash_md5 [the 60-bit closed-form
-    # fingerprint], minhash_gate_tombstoned_md5 [the persisted gate's
-    # deletion semantics against the FOLDED index — read-time rep-shift
-    # reconciliation under oracle] and knn_ivf_tombstoned [ANN
-    # deletion] join; r9's knn_ivfpq/pq_codes keep their rows)
+    # dedup / similarity / ANN, with the closed-form md5 twins of the
+    # MinHash and SimHash flagships and the deletion semantics of the
+    # folded gate index and of IVF
     "dedup_exact", "dedup_clusters_star",
     "dedup_pipeline_exact", "cdc_near_dup", "auto_skew_join",
     "minhash_near_dup_md5", "simhash_md5",
     "minhash_gate_tombstoned_md5", "knn_ivf_tombstoned",
     "knn_ivfpq", "embedding_near_dup_lsh", "pq_codes",
-    # text analysis / corpus diagnostics (r9: lm_perplexity_persisted —
-    # the train-once/probe-only deployment shape, value-identical to the
-    # in-query form under the same oracle — takes lm_perplexity's slot;
-    # earlier rotations' phrase_search / ewma_daily / lang_id /
-    # cms_estimate / quality_filter / token_stats / chi2_keywords all
-    # stay oracle-checked in the full registry)
+    # text analysis / corpus diagnostics (lm_perplexity_persisted is the
+    # train-once/probe-only deployment shape, value-identical to the
+    # in-query form under the same oracle)
     "text_quality", "type_correlation", "time_to_convert",
     "lm_perplexity_persisted", "bpe_merges", "quality_classifier",
-    # sketches / quantiles / graph / drift (r8: value_percentiles_exact
-    # — the distributed-rank exact percentile, the quantile family's
-    # third member — takes quantile_sketch's slot [the approx sketch
-    # had its official round in r7 and stays oracle-checked]; r11
-    # rotation, r10 verdict task #2: hll_overlap_md5 — the sketch
-    # family's overlap composition, now a true bottom-k/KMV twin with
-    # O(k) per-segment state — takes heavy_hitters' slot [long-
-    # certified since r7; stays oracle-checked in the full registry])
+    # sketches / quantiles / graph / drift (hll_overlap_md5 is the
+    # bottom-k/KMV twin of the overlap composition, O(k) per-segment
+    # state; value_percentiles_exact the distributed-rank percentile)
     "hll_overlap_md5", "join_size_sketch", "value_percentiles_exact",
     "pagerank", "source_novelty",
-    # sampling / packing (r9: stratified_sample — content-addressed md5
-    # keep decisions, rows-only→exact in r8 — takes temperature_sample's
-    # slot)
+    # sampling / packing (content-addressed md5 keep decisions)
     "stratified_sample", "train_test_split", "sequence_pack",
-    # TPC-H representative handful + time series (r6: min_cost_supplier
-    # out in favor of the newly oracle-certified embedding_near_dup_lsh;
-    # still oracle-checked in the full registry)
+    # TPC-H representative handful + time series
     "pricing_summary", "sessionization", "asof_join",
 ]
 assert len(_CERTIFICATION_WINDOW) == 50

@@ -44,6 +44,7 @@ from paas_auditor_spark.config import EngineConfig
 from paas_auditor_spark.logs import JsonLogger
 from paas_auditor_spark.operators.ingest import ingest_delta
 from paas_auditor_spark.sources.paginated_http import (
+    PAGE_SIZE,
     Transport,
     decode_pages,
     fetch_event_pages,
@@ -51,7 +52,7 @@ from paas_auditor_spark.sources.paginated_http import (
 )
 from paas_auditor_spark.stores import ParquetStore
 from paas_auditor_spark.streaming.metrics import MetricsRegistry
-from paas_auditor_spark.streaming.ship import Sender, ship_tick
+from paas_auditor_spark.streaming.ship import SHIP_BATCH_CAP, Sender, ship_tick
 
 SHIPPER_NAME = "cf-audit-events-to-splunk"
 # ship_tick's count of acknowledged events for SHIPPER_NAME
@@ -119,9 +120,7 @@ class Service:
     def _watermark(self) -> dt.datetime:
         """max(created_at) − overlap over the store (T2, reference
         cf_audit_event_collector.go:36,92-104)."""
-        return watermark(
-            self.store.latest_event_time(), self.cfg.watermark_overlap_s
-        )
+        return watermark(self.store.latest_event_time())
 
     def collector_tick(self) -> int:
         """Fetch since the watermark and store ONLY the fresh delta."""
@@ -134,7 +133,7 @@ class Service:
                 self.transport,
                 self.base_url,
                 watermark,
-                self.cfg.page_size,
+                PAGE_SIZE,
                 self.cfg.pagination_wait_s,
             )
         )
@@ -162,7 +161,7 @@ class Service:
                 self.sender,
                 SHIPPER_NAME,
                 self.cfg.deploy_env,
-                self.cfg.ship_batch_cap,
+                SHIP_BATCH_CAP,
                 metrics=self.metrics,
                 logger=self._loop_logs[self.shipper_tick],
             )

@@ -55,10 +55,10 @@ def _sync_marker(schema: dict, salt: bytes = b"") -> bytes:
     marker is shared by EVERY same-schema file — so a bronze zone
     re-ingesting its own containers into a bytes column reproduces the
     marker inside a payload non-adversarially and misleads the split
-    scanner's marker search (r9 advice).  ``avro_write`` therefore
-    salts with the per-file part uuid: each landing file gets its own
-    128-bit marker (stored in the header, so readers are unaffected),
-    and embedded bytes of ANY other file can no longer collide except
+    scanner's marker search.  ``avro_write`` therefore salts with the
+    per-file part uuid: each landing file gets its own 128-bit marker
+    (stored in the header, so readers are unaffected), and embedded
+    bytes of ANY other file can no longer collide except
     adversarially."""
     import hashlib
 
@@ -111,7 +111,7 @@ def _read_long(view: memoryview, pos: int) -> tuple[int, int]:
         shift += 7
         if shift > 63:  # canonical readers cap varints at 10 bytes —
             # fail fast on corruption instead of growing an unbounded
-            # Python int until some later length check trips (r9 advice)
+            # Python int until some later length check trips
             raise ValueError("Avro varint longer than 10 bytes (corrupt)")
 
 
@@ -431,9 +431,9 @@ def avro_write(df, out_dir: str, codec: str = "null") -> int:
                 yield from zip(*cols)
 
         with open(path, "wb") as fh:
-            # per-file marker entropy: the part uuid (r9 advice — a
-            # schema-only marker recurs in any same-schema container
-            # bytes a payload might embed, confusing the split scan)
+            # per-file marker entropy: the part uuid (a schema-only
+            # marker recurs in any same-schema container bytes a payload
+            # might embed, confusing the split scan)
             n = write_container(
                 fh, sch, rows(), codec=codec, sync_salt=part.encode()
             )
@@ -464,30 +464,27 @@ def avro_scan(
     split_threshold_bytes: int = 256 * 1024 * 1024,
     split_bytes: int = 128 * 1024 * 1024,
 ):
-    """Distributed Avro scan with SIZE-BASED ROUTING (r10 verdict task
-    #4): files at or under ``split_threshold_bytes`` decode one task
-    per file via ``binaryFile`` + an Arrow-batched ``mapInArrow`` (the
-    bronze-zone granularity — a landing file is one writer's commit),
-    and files ABOVE it route to the sync-marker split scanner
-    (``avro_scan_split``), which carves each into ``split_bytes``
-    ranges — so one multi-GB container becomes many parallel tasks
-    instead of a single task-memory hazard.  The routing decision reads
-    binaryFile METADATA only (one ``length > threshold`` existence
-    probe; content bytes are never touched), and a mixed-size zone
-    unions the two shapes — equality with a pure whole-file scan is
-    test-pinned (test_avro.py::test_split_scan_equals_whole_file_scan,
-    mixed-size case included).  ``spark_schema`` is the DDL the caller
-    expects; timestamp columns are rebuilt from the
-    ``timestamp-micros`` longs.  Writer/reader schema RESOLUTION per
-    the spec on BOTH routes: files carrying extra fields decode
-    (matched by name, extras dropped), reader fields the writer lacks
-    null-fill when nullable, and only a missing non-nullable field
-    refuses — the tolerance an evolving bronze zone needs.  The listing
-    is RECURSIVE with a ``*.avro`` name filter: ``avro_write``
-    publishes whole ``job-<id>`` directories by one atomic rename,
-    hand-dropped flat files work too, and a torn job's dot-prefixed
-    attempt dir is invisible by Spark's hidden-path rule — so a reader
-    can never see a partial job.
+    """Distributed Avro scan with SIZE-BASED ROUTING: files at or under
+    ``split_threshold_bytes`` decode one task per file via ``binaryFile`` + an
+    Arrow-batched ``mapInArrow`` (the bronze-zone granularity — a landing file
+    is one writer's commit), and files ABOVE it route to the sync-marker split
+    scanner (``avro_scan_split``), which carves each into ``split_bytes``
+    ranges — so one multi-GB container becomes many parallel tasks instead of a
+    single task-memory hazard.  The routing decision reads binaryFile METADATA
+    only (one ``length > threshold`` existence probe; content bytes are never
+    touched), and a mixed-size zone unions the two shapes — equality with a
+    pure whole-file scan is test-pinned
+    (test_avro.py::test_split_scan_equals_whole_file_scan, mixed-size case
+    included).  ``spark_schema`` is the DDL the caller expects; timestamp
+    columns are rebuilt from the ``timestamp-micros`` longs.  Writer/reader
+    schema RESOLUTION per the spec on BOTH routes: files carrying extra fields
+    decode (matched by name, extras dropped), reader fields the writer lacks
+    null-fill when nullable, and only a missing non-nullable field refuses —
+    the tolerance an evolving bronze zone needs.  The listing is RECURSIVE with
+    a ``*.avro`` name filter: ``avro_write`` publishes whole ``job-<id>``
+    directories by one atomic rename, hand-dropped flat files work too, and a
+    torn job's dot-prefixed attempt dir is invisible by Spark's hidden-path
+    rule — so a reader can never see a partial job.
 
     Routing runs ONE metadata-only listing job at plan time (one
     (path, length) row per landing file — the same driver-side listing
@@ -619,7 +616,7 @@ def _assemble_batch(columns: dict, n_rows: int, arrow_schema):
     JVM-side.
 
     Reader nullability is enforced on VALUES here, not just on missing
-    fields (r9 advice): a writer field that exists but carries NULLs
+    fields: a writer field that exists but carries NULLs
     would otherwise flow into a NOT NULL reader column unchecked —
     Spark does not re-validate an Arrow batch against the declared
     schema, and null-aware optimizations can then miscompute."""
@@ -872,12 +869,12 @@ def avro_scan_split(
         with open(local, "rb") as fh:
             schema, codec, sync, first = _read_header(fh)
         got = [f["name"] for f in schema["fields"]]
-        # the same writer/reader RESOLUTION as the whole-file scan (r9
-        # verdict residual #1: an evolving bronze zone must not lose
-        # split scanning): extra writer fields decode and drop, reader
-        # fields the writer lacks null-fill when nullable, a missing
-        # NON-nullable field refuses — validated per file at planning
-        # time so the job fails before any task runs
+        # the same writer/reader RESOLUTION as the whole-file scan (an
+        # evolving bronze zone must not lose split scanning): extra
+        # writer fields decode and drop, reader fields the writer lacks
+        # null-fill when nullable, a missing NON-nullable field refuses —
+        # validated per file at planning time so the job fails before any
+        # task runs
         hard = [n for n in names if n not in got and not nullable[n]]
         if hard:
             raise ValueError(

@@ -6,11 +6,11 @@ each micro-batch fetches through the same transport, ``next_url`` pager,
 decoder and watermark rule as the loop-mode collector, so both modes
 store the same rows.  Options:
 
-- ``base_url`` (required), ``page_size`` (default 100);
+- ``base_url`` (required), ``page_size`` (default ``PAGE_SIZE``, 100);
 - ``wait_s``: pause between pages (default 0; the CLI passes
   ``FETCHER_PAGINATION_WAIT_TIME``);
-- ``since``: first watermark (default the epoch), ``overlap_s``: the
-  watermark overlap (default 5 s);
+- ``since``: first watermark (default the epoch); the overlap is
+  ``paginated_http.WATERMARK_OVERLAP_S``;
 - the CLI's credential names (``CF_TOKEN``, ``CF_CLIENT_ID``,
   ``CF_CLIENT_SECRET``, ``CF_USERNAME``, ``CF_PASSWORD``,
   ``CF_TOKEN_URL``), resolved by ``paginated_http.resolve_transport``.
@@ -25,6 +25,7 @@ from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from paas_auditor_spark.operators.cursor import EPOCH_TS
 from paas_auditor_spark.sources.paginated_http import (
     EVENT_ROWS,
+    PAGE_SIZE,
     TIME_FORMAT,
     decode_pages,
     fetch_event_pages,
@@ -50,12 +51,11 @@ class CfEventsStreamReader(SimpleDataSourceStreamReader):
 
     def __init__(self, options):
         self.base_url = options["base_url"].rstrip("/")
-        self.page_size = int(options.get("page_size", 100))
+        self.page_size = int(options.get("page_size", PAGE_SIZE))
         self.wait_s = float(options.get("wait_s", 0.0))
         self.since = options.get("since", EPOCH_TS.strftime(TIME_FORMAT))
         if parse_created(self.since) is None:
             raise ValueError(f"cf_events: unparseable since {self.since!r}")
-        self.overlap_s = float(options.get("overlap_s", 5.0))
         self.transport = resolve_transport(options, self.base_url)
 
     def initialOffset(self) -> dict:  # noqa: N802
@@ -89,7 +89,7 @@ class CfEventsStreamReader(SimpleDataSourceStreamReader):
         if max_seen <= prev_max and len(rows) == start.get("n", 0):
             return iter(()), start
         hi = max(max_seen, prev_max)
-        wm = watermark(hi, self.overlap_s)
+        wm = watermark(hi)
         end = {
             "since": wm.strftime(TIME_FORMAT),
             "max_seen": hi.strftime(TIME_FORMAT),

@@ -234,9 +234,12 @@ def resolve_transport(environ, base_url: str) -> Transport:
 
 # -- pager ------------------------------------------------------------------
 
+# page size (reference cf_audit_event_fetcher.go:29, fixed 100)
+PAGE_SIZE = 100
+
 
 def build_events_url(
-    base_url: str, since: dt.datetime, page_size: int = 100
+    base_url: str, since: dt.datetime, page_size: int = PAGE_SIZE
 ) -> str:
     """First-page URL with the watermark pushed down as a source predicate
     (reference cf_audit_event_fetcher.go:25-31)."""
@@ -248,7 +251,7 @@ def fetch_event_pages(
     transport: Transport,
     base_url: str,
     since: dt.datetime,
-    page_size: int = 100,
+    page_size: int = PAGE_SIZE,
     wait_s: float = 0.2,
     sleep: Callable[[float], None] = time.sleep,
 ) -> Iterator[dict]:
@@ -321,12 +324,15 @@ def decode_pages(pages: Iterable[dict]) -> Iterator[tuple]:
 
 # -- watermark --------------------------------------------------------------
 
+# watermark overlap (reference cf_audit_event_collector.go:36, fixed 5s)
+WATERMARK_OVERLAP_S = 5.0
 
-def watermark(latest: dt.datetime, overlap_s: float) -> dt.datetime:
-    """Next fetch floor: ``latest`` − overlap, never before the epoch (T2,
-    reference cf_audit_event_collector.go:36,92-104).  Keeps ``latest``'s
-    tzinfo."""
-    wm = latest - dt.timedelta(seconds=overlap_s)
+
+def watermark(latest: dt.datetime) -> dt.datetime:
+    """Next fetch floor: ``latest`` − ``WATERMARK_OVERLAP_S``, never before
+    the epoch (T2, reference cf_audit_event_collector.go:36,92-104).  Keeps
+    ``latest``'s tzinfo."""
+    wm = latest - dt.timedelta(seconds=WATERMARK_OVERLAP_S)
     return EPOCH_TS.replace(tzinfo=wm.tzinfo) if wm.year < 1970 else wm
 
 
@@ -334,9 +340,11 @@ __all__ = [
     "BACKOFF_S",
     "CF_AUTH_ENV",
     "EVENT_ROWS",
+    "PAGE_SIZE",
     "RETRIES",
     "TIME_FORMAT",
     "Transport",
+    "WATERMARK_OVERLAP_S",
     "build_events_url",
     "decode_pages",
     "decode_resource",

@@ -24,15 +24,14 @@ from pyspark.sql import types as T
 NANOS_TS_COLS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 
 
-# Inferred parquet schemas memoized on (paths, mtimes) — METADATA, not
-# results: every query still scans the parquet data (r12, VERDICT r11
-# #3).  Schema inference schedules a 1-task footer-read job per
-# ``spark.read.parquet`` call (measured 326 ms/read vs 100 ms with an
-# explicit schema at sf0.1); across a 143-query best-of-2 bench the
-# same immutable files were re-inferred several hundred times.  The
-# mtime key means regenerated testdata or a rebuilt artifact re-infers
-# — the `_corpus_count` footer-count convention (VERDICT r8 #4),
-# applied to the schema half of the same footer.
+# Inferred parquet schemas memoized on (paths, mtimes) — METADATA, not results:
+# every query still scans the parquet data.  Schema inference schedules a
+# 1-task footer-read job per ``spark.read.parquet`` call (measured 326 ms/read
+# vs 100 ms with an explicit schema at sf0.1); across a 143-query best-of-2
+# bench the same immutable files were re-inferred several hundred times.  The
+# mtime key means regenerated testdata or a rebuilt artifact re-infers — the
+# `_corpus_count` footer-count convention, applied to the schema half of the
+# same footer.
 _SCHEMA_CACHE: dict[str, T.StructType] = {}
 
 

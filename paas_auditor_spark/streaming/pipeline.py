@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from paas_auditor_spark.operators.ingest import ingest_delta
-from paas_auditor_spark.sources.paginated_http import EVENT_ROWS
+from paas_auditor_spark.sources.paginated_http import EVENT_ROWS, PAGE_SIZE
 from paas_auditor_spark.streaming.metrics import MetricsRegistry
 
 
@@ -59,8 +59,7 @@ def stream_api_to_store(
     store,
     checkpoint_dir: str,
     since: str | None = None,
-    page_size: int = 100,
-    overlap_s: float = 5.0,
+    page_size: int = PAGE_SIZE,
     trigger_processing_time: str | None = None,
     metrics: MetricsRegistry | None = None,
     extra_options: dict | None = None,
@@ -82,7 +81,6 @@ def stream_api_to_store(
         spark.readStream.format("cf_events")
         .option("base_url", base_url)
         .option("page_size", page_size)
-        .option("overlap_s", overlap_s)
     )
     if since:
         reader = reader.option("since", since)

@@ -47,6 +47,8 @@ from paas_auditor_spark.streaming.metrics import MetricsRegistry
 Sender = Callable[[str], None]  # raises on delivery failure
 T = TypeVar("T")
 
+# ship batch cap: events one tick reads (reference store.go:206, fixed 8192)
+SHIP_BATCH_CAP = 8192
 HEC_BATCH_EVENTS = 100
 # Splunk Cloud rejects HEC bodies over 1 MB; half that leaves room for
 # a batch of large-metadata events
@@ -65,12 +67,11 @@ TIMEOUT_S = 2.0
 def hec_batches(
     items: Iterable[T],
     envelope: Callable[[T], str] = lambda item: item,
-    max_events: int = HEC_BATCH_EVENTS,
 ) -> Iterator[list[T]]:
     """Cut ``items`` into consecutive, order-preserving batches for one
-    NDJSON POST each: a batch ends at ``max_events`` items or before its
-    ``"\\n"``-joined envelopes would pass ``HEC_BATCH_BYTES`` (UTF-8),
-    whichever comes first.  A larger envelope goes alone."""
+    NDJSON POST each: a batch ends at ``HEC_BATCH_EVENTS`` items or
+    before its ``"\\n"``-joined envelopes would pass ``HEC_BATCH_BYTES``
+    (UTF-8), whichever comes first.  A larger envelope goes alone."""
     batch: list[T] = []
     size = 0
     for item in items:
@@ -80,7 +81,7 @@ def hec_batches(
             batch, size = [], 0
         size += n + 1 if batch else n
         batch.append(item)
-        if len(batch) >= max_events:
+        if len(batch) >= HEC_BATCH_EVENTS:
             yield batch
             batch, size = [], 0
     if batch:
@@ -253,6 +254,7 @@ def _mname(shipper_name: str) -> str:
 __all__ = [
     "HEC_BATCH_BYTES",
     "HEC_BATCH_EVENTS",
+    "SHIP_BATCH_CAP",
     "Sender",
     "hec_batches",
     "hec_envelope",

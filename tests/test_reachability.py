@@ -9,6 +9,8 @@ class body in the package.  A top-level definition anywhere in the
 package that no root reaches is code only tests run.  Names are followed
 without resolving imports, so a collision can only make a definition
 look used, never flag a used one.
+
+Likewise every script under ``tools/`` must be loaded by some test.
 """
 
 from __future__ import annotations
@@ -79,3 +81,31 @@ def test_package_code_is_reachable():
         "top-level definitions that no registry query, the CLI, the "
         f"Service or the benchmark reaches: {dead}"
     )
+
+
+def _loaded_tools() -> set[str]:
+    """Stems of ``tools/*.py`` that some test names: as a string
+    literal (``"scale_rehearsal"``, ``"tools/scale_rehearsal.py"``) or
+    as an import of ``tools.<stem>``."""
+    out: set[str] = set()
+    for path in glob.glob(os.path.join(ROOT, "tests", "*.py")):
+        for n in ast.walk(_parse(path)):
+            if isinstance(n, ast.Constant) and isinstance(n.value, str):
+                out.add(os.path.basename(n.value).removesuffix(".py"))
+            elif isinstance(n, ast.Import):
+                out |= {a.name.split(".")[-1] for a in n.names}
+            elif isinstance(n, ast.ImportFrom) and n.module:
+                out.add(n.module.split(".")[-1])
+    return out
+
+
+def test_every_tool_is_loaded_by_a_test():
+    """A script under ``tools/`` that no test loads is a one-off: it
+    rots unrun, so it belongs in the history, not in the tree."""
+    tools = sorted(
+        os.path.basename(p)
+        for p in glob.glob(os.path.join(ROOT, "tools", "*.py"))
+    )
+    loaded = _loaded_tools()
+    unloaded = [t for t in tools if t.removesuffix(".py") not in loaded]
+    assert unloaded == [], f"tools/ scripts no test loads: {unloaded}"

@@ -1,6 +1,5 @@
 """Generate a larger-SF slice by key-remapped replication of an existing
-testdata directory — the sf1 scaling-rehearsal input (SURVEY §7 / r6
-verdict task #2).
+testdata directory — the sf1 scaling-rehearsal input (SURVEY §7).
 
 /root/testdata is read-only and tops out at sf0.1 (~600k lineitem), so
 the 10× slice is built by unioning FACTOR copies of each fact table with

@@ -1,6 +1,6 @@
-"""sf0.1 → sf1 scaling rehearsal (r6 verdict task #2): run the most
-expensive headline queries plus the dedup/ANN flagships at both scale
-factors, measure wall-time scaling, and diff physical-plan shapes.
+"""sf0.1 → sf1 scaling rehearsal: run the most expensive headline
+queries plus the dedup/ANN flagships at both scale factors, measure
+wall-time scaling, and diff physical-plan shapes.
 
 The claim under test: the engine's plans are SCALE-INVARIANT — 10× the
 data changes partition counts and task sizes, never the plan shape (no
@@ -8,32 +8,31 @@ new Exchanges, pruning/broadcasts intact, no single-partition stages) —
 and wall time grows ≈ linearly (ratio ≲ factor; sub-linear where fixed
 scheduling overhead dominates at sf0.1).
 
+Each side is timed with bench.py's best-of-2 noop-sink protocol.
+
 Usage: PYTHONPATH=. python tools/scale_rehearsal.py
            [--small /root/testdata/sf0.1] [--big /root/repo/.scale/sf1]
-           [--runs 2]
 Prints one JSON line per query and a final markdown table for SURVEY §6.
 """
 
 from __future__ import annotations
 
 import argparse
-import gc
 import json
 import re
-import time
 
 QUERIES = [
     # reference-parity ship path
     "unshipped_events",
     # TPC-H / relational
     "pricing_summary", "sessionization",
-    # the most expensive headline queries (judge's r6 slowest list)
+    # the most expensive headline queries
     "lm_perplexity", "lm_perplexity_interp", "bloom_decontaminate",
     "cdc_near_dup", "knn_ivfpq", "segment_dedup", "curation_pipeline",
     # dedup / ANN flagships
     "dedup_exact", "dedup_clusters_star", "semantic_dedup",
     "embedding_near_dup_lsh", "duplicate_spans", "bm25_search",
-    # the r7 distributed-rank rewrites (formerly single-partition windows)
+    # the distributed-rank queries (no single-partition window)
     "activity_gini", "traffic_pareto",
 ]
 
@@ -58,94 +57,24 @@ def plan_shape(df) -> dict[str, int]:
     return counts
 
 
-def rehearse_probe(spark, fn, slice_dirs, slices, runs, query_label):
-    """Build-then-probe scale curve shared by the probe rehearsal tools
-    (ann/persisted): at each slice, run 1 pays the cached-artifact build
-    through the registered query itself, subsequent runs are probe-only
-    best-of-N, and the plan-shape fingerprint is diffed against the
-    FIRST slice in ``slices`` (the labels follow it — a run that skips
-    the smallest slice reports ratios against its own baseline, not a
-    mislabeled sf0.1).  One JSON line per slice plus a markdown table
-    for SURVEY §6; returns the result records."""
-    import gc
-    import json
-    import time
-
-    results, shapes = [], {}
-    for name in slices:
-        sf_dir = slice_dirs[name]
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        build_s = round(time.perf_counter() - t0, 3)  # includes build
-        best = float("inf")
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-            df = None
-            gc.collect()
-        shapes[name] = plan_shape(fn(spark, sf_dir))
-        rec = {
-            "query": query_label,
-            "slice": name,
-            "first_run_incl_build_s": build_s,
-            "probe_s": round(best, 3),
-        }
-        results.append(rec)
-        print(json.dumps(rec), flush=True)
-
-    base = results[0]
-    bname = base["slice"]
-    print(f"\n### {query_label}")
-    print(f"| slice | probe (warm) | vs {bname} | plan Δ vs {bname} |")
-    print("|---|---|---|---|")
-    for r in results:
-        nm = r["slice"]
-        diff = {
-            k: (shapes[nm].get(k, 0), shapes[bname].get(k, 0))
-            for k in set(shapes[nm]) | set(shapes[bname])
-            if shapes[nm].get(k, 0) != shapes[bname].get(k, 0)
-        }
-        print(
-            f"| {nm} | {r['probe_s']} s "
-            f"| {round(r['probe_s'] / base['probe_s'], 2)}x "
-            f"| {diff if diff else 'invariant'} |"
-        )
-    return results
-
-
-def time_query(fn, spark, sf_dir: str, runs: int) -> float:
-    best = float("inf")
-    for _ in range(runs):
-        t0 = time.perf_counter()
-        df = fn(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        best = min(best, time.perf_counter() - t0)
-        df = None
-        gc.collect()
-    return round(best, 3)
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--small", default="/root/testdata/sf0.1")
     ap.add_argument("--big", default="/root/repo/.scale/sf1")
-    ap.add_argument("--runs", type=int, default=2)
     ap.add_argument(
         "--queries", default=None,
         help="comma-separated subset of the default query list",
     )
     ap.add_argument(
         "--headline", action="store_true",
-        help="run bench.py's FULL headline list (r7 verdict task #6: "
-        "every headline query measured at the 10x slice once, not just "
-        "the expensive/flagship subset)",
+        help="run bench.py's FULL headline list (every headline query "
+        "measured at the 10x slice once, not just the expensive/flagship "
+        "subset)",
     )
     args = ap.parse_args()
-    if args.headline:
-        import bench
+    import bench
 
+    if args.headline:
         QUERIES[:] = bench.HEADLINE
     elif args.queries:
         QUERIES[:] = args.queries.split(",")
@@ -167,8 +96,8 @@ def main() -> None:
             for k in sorted(set(shape_s) | set(shape_b))
             if shape_s.get(k, 0) != shape_b.get(k, 0)
         }
-        t_s = time_query(fn, spark, args.small, args.runs)
-        t_b = time_query(fn, spark, args.big, args.runs)
+        t_s = bench._best_of_two(fn, spark, args.small)
+        t_b = bench._best_of_two(fn, spark, args.big)
         rec = {
             "query": name,
             "sf0.1_sec": t_s,
